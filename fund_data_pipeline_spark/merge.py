@@ -48,11 +48,11 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import dedup_keyed
@@ -65,10 +65,16 @@ _ISIN_PRUNE_MAX = 64
 
 @dataclass
 class MergeStats:
+    """Row counts of one :func:`merge_upsert`. They are always returned and
+    come from the write's own execution: one ``Observation`` on the frame the
+    writer writes, so they cannot disagree with the rows on disk and cost no
+    extra job. ``unchanged`` counts matched rows the hash guard left alone
+    plus target rows the batch did not match (of the touched partitions, on
+    a partition-pruned merge)."""
+
     inserted: int
     updated: int
     unchanged: int
-    deleted_by_retention: int = 0
     #: Partition values this merge touched (partition-pruned merges only).
     #: The merge already collects them for its isin prune, so callers that
     #: need them next (rollup refresh, compaction targeting) read them here
@@ -94,13 +100,15 @@ def merge_upsert(
     unconditional: bool = False,
     precedence_col: str | None = None,
     dedupe_order: Sequence[str] | None = None,
-    collect_stats: bool = False,
     partition_col: str | None = None,
     layout: str = "rename",
     allow_new_columns: bool = False,
     history: int | None = None,
 ) -> MergeStats:
-    """Upsert ``source`` into the Parquet table at ``target_path``.
+    """Upsert ``source`` into the Parquet table at ``target_path`` and return
+    its :class:`MergeStats`. The counts are always returned and come from the
+    write's own execution (an ``Observation`` on the written frame), so they
+    cost no separate job and match the rows on disk.
 
     - ``preserve_cols``: target wins on matched rows (e.g. ``first_seen`` — L1).
     - ``always_update_cols``: source wins on matched rows even when the hash
@@ -181,144 +189,159 @@ def merge_upsert(
         heal_backup_swap(path)
         if partition_col is not None:
             _heal_partition_backups(path, partition_col)
-    exists = _table_exists(path, layout)
-    if not exists:
-        # pin the source when more than one consumer will evaluate it (the
-        # stats count, the write, the touched-partition collect): without
-        # this a non-deterministic or mid-job-changing source could make
-        # the reported stats/partitions disagree with the rows actually
-        # written — the hazard the merge path's result.persist() already
-        # guards (review r11)
-        pinned = source if (not collect_stats and partition_col is None) else source.persist()
-        try:
-            stats = MergeStats(
-                inserted=pinned.count() if collect_stats else -1, updated=0, unchanged=0
-            )
-            _write_table(pinned, path, layout, partition_col, history)
-            if partition_col is not None:
-                # same capped collect as the merge path below, so the create
-                # batch reports its touched partitions too (a streaming
-                # loader's FIRST micro-batch must not be the one case the
-                # field is absent)
-                created = [
-                    r[0]
-                    for r in pinned.select(partition_col)
-                    .distinct()
-                    .limit(_ISIN_PRUNE_MAX + 1)
-                    .collect()
-                ]
-                if len(created) <= _ISIN_PRUNE_MAX:
-                    stats.touched_partitions = created
-        finally:
-            if pinned is not source:
-                pinned.unpersist()
-        return stats
-
+    touched = None
     if partition_col is not None:
-        src_dtype = dict(source.dtypes)[partition_col]
-        distinct_parts = source.select(partition_col).distinct()
         # Daily-batch fast path: collect the touched partition values (capped)
         # so the isin filter resolves at planning time against the hive dir
-        # names — only touched partitions are ever listed or scanned. The
-        # partition col is cast back to the source's dtype so partition-value
-        # inference can't change the merge key's type. A backfill touching
-        # more than _ISIN_PRUNE_MAX partitions would bloat the plan with a
-        # giant literal list instead, so it switches to a broadcast semi-join
-        # prune: the scan keeps the bare partition column (dynamic partition
-        # pruning stays eligible) and no unbounded collect hits the driver.
-        touched = [
-            r[0] for r in distinct_parts.limit(_ISIN_PRUNE_MAX + 1).collect()
-        ]
-        # mergeSchema: a prior allow_new_columns merge rewrites only touched
-        # partitions, so partition files can legitimately carry different
-        # widths; a single-footer schema sample would nondeterministically
-        # drop the evolved column. Footer-merging is a distributed
-        # metadata-only job bounded by file count — correct first, and cheap
-        # relative to the merge itself.
-        # both prune paths are NULL-safe: a batch row with a NULL partition
-        # value lives in __HIVE_DEFAULT_PARTITION__, and that partition's
-        # existing target rows must enter the merge like any other touched
-        # partition's (plain isin / == would silently drop them and the
-        # swap would overwrite the NULL partition with source-only content)
-        if len(touched) <= _ISIN_PRUNE_MAX:
-            # Read ONLY the touched partition directories (r16 optimization):
-            # a root-path read pays file listing + footer mergeSchema for the
-            # WHOLE table at DataFrame-creation time — driver-side planning
-            # work proportional to TOTAL partitions, not touched ones
-            # (measured 0.42 s of the ~1.3 s sf0.1 bench merge at 84
-            # partitions; a years-deep production table pays far more for a
-            # one-partition daily batch). basePath keeps the partition column
-            # derived from dir names; dir names come from hive_partition_dir,
-            # the same value->dir contract the swap and stale-partition drops
-            # already rely on (NULL -> __HIVE_DEFAULT_PARTITION__). The merge
-            # therefore conforms to the TOUCHED partitions' merged schema: a
-            # column evolved only in untouched partitions is invisible here —
-            # matched rows keep their partition's physical width, exactly
-            # what the swap rewrites (pinned by
-            # test_pruned_merge_conforms_to_touched_partition_schema). A
-            # touched value with no dir yet is a brand-new partition (no
-            # target rows); if NO touched dir exists the root read supplies
-            # the table schema for an empty target (rare: all-new backfill).
-            part_dirs = [
-                path / hive_partition_dir(partition_col, v) for v in touched
-            ]
-            existing = [str(d) for d in part_dirs if d.is_dir()]
-            if existing:
-                target = (
-                    spark.read.option("mergeSchema", "true")
-                    .option("basePath", str(path))
-                    .parquet(*existing)
-                )
-            else:
-                target = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(str(path))
-                    .filter(F.lit(False))
-                )
-            target = (
-                target.filter(
-                    touched_partition_filter(
-                        F.col(partition_col).cast(src_dtype), touched
-                    )
-                )
-                .withColumn(partition_col, F.col(partition_col).cast(src_dtype))
-            )
-        else:
-            raw = spark.read.option("mergeSchema", "true").parquet(str(path))
-            tgt_dtype = dict(raw.dtypes)[partition_col]
-            probe = F.broadcast(
-                distinct_parts.select(
-                    F.col(partition_col).cast(tgt_dtype).alias("__touched_part")
-                ).distinct()
-            )
-            target = (
-                raw.join(
-                    probe,
-                    raw[partition_col].eqNullSafe(probe["__touched_part"]),
-                    "left_semi",
-                )
-                .withColumn(partition_col, F.col(partition_col).cast(src_dtype))
-            )
-        touched_out = touched if len(touched) <= _ISIN_PRUNE_MAX else None
+        # names — only touched partitions are ever listed or scanned. A
+        # backfill touching more than _ISIN_PRUNE_MAX partitions would bloat
+        # the plan with a giant literal list instead, so it switches to a
+        # broadcast semi-join prune and no unbounded collect hits the driver.
+        # The create path reports the list too, so a streaming loader's
+        # FIRST micro-batch is not the one case the field is absent.
+        parts = source.select(partition_col).distinct()
+        touched = [r[0] for r in parts.limit(_ISIN_PRUNE_MAX + 1).collect()]
+        if len(touched) > _ISIN_PRUNE_MAX:
+            touched = None
+    if not _table_exists(path, layout):
+        _refuse_reserved(source.columns)
+        result = source.withColumn("__action", F.lit("insert"))
     else:
-        target = read_table(spark, str(path))
-        touched_out = None
-    out_cols = target.columns
-    new_cols = [c for c in source.columns if c not in out_cols]
-    if allow_new_columns:
-        out_cols = out_cols + new_cols
+        if partition_col is not None:
+            target = _touched_target(spark, path, source, partition_col, touched)
+        else:
+            target = read_table(spark, str(path))
+        result = _merge_kernel(
+            target,
+            source,
+            keys,
+            hash_col,
+            preserve_cols,
+            always_update_cols=always_update_cols,
+            unconditional=unconditional,
+            precedence_col=precedence_col,
+            allow_new_columns=allow_new_columns,
+        )
 
-    reserved = {"__t_present", "__s_present", "__action"}
-    clash = reserved & (set(target.columns) | set(source.columns))
+    action = F.col("__action")
+    obs = Observation()
+    _write_table(
+        result,
+        path,
+        layout,
+        partition_col,
+        history,
+        observe=lambda df: df.observe(
+            obs,
+            F.count(F.when(action == "insert", 1)).alias("inserted"),
+            F.count(F.when(action == "update", 1)).alias("updated"),
+            F.count(F.when(action.isin("unchanged", "keep"), 1)).alias("unchanged"),
+        ).drop("__action"),
+    )
+    got = obs.get
+    return MergeStats(
+        got["inserted"], got["updated"], got["unchanged"], touched_partitions=touched
+    )
+
+
+def _touched_target(
+    spark: SparkSession, path: Path, source: DataFrame, partition_col: str, touched: list | None
+) -> DataFrame:
+    """The target rows of the partitions ``source`` touches, with the
+    partition column cast back to the source's dtype so partition-value
+    inference can't change the merge key's type. ``touched`` is the
+    collected value list, or None above _ISIN_PRUNE_MAX (semi-join prune:
+    the scan keeps the bare partition column, so dynamic partition pruning
+    stays eligible).
+
+    mergeSchema: a prior allow_new_columns merge rewrites only touched
+    partitions, so partition files can legitimately carry different widths;
+    a single-footer schema sample would nondeterministically drop the
+    evolved column. Footer-merging is a distributed metadata-only job
+    bounded by file count — correct first, and cheap relative to the merge.
+
+    Both prune paths are NULL-safe: a batch row with a NULL partition value
+    lives in __HIVE_DEFAULT_PARTITION__, and that partition's existing
+    target rows must enter the merge like any other touched partition's
+    (plain isin / == would silently drop them and the swap would overwrite
+    the NULL partition with source-only content)."""
+    src_dtype = dict(source.dtypes)[partition_col]
+    if touched is None:
+        raw = spark.read.option("mergeSchema", "true").parquet(str(path))
+        tgt_dtype = dict(raw.dtypes)[partition_col]
+        probe = F.broadcast(
+            source.select(
+                F.col(partition_col).cast(tgt_dtype).alias("__touched_part")
+            ).distinct()
+        )
+        return raw.join(
+            probe, raw[partition_col].eqNullSafe(probe["__touched_part"]), "left_semi"
+        ).withColumn(partition_col, F.col(partition_col).cast(src_dtype))
+    # Read ONLY the touched partition directories: a
+    # root-path read pays file listing + footer mergeSchema for the WHOLE
+    # table at DataFrame-creation time — driver-side planning work
+    # proportional to TOTAL partitions, not touched ones (measured 0.42 s of
+    # the ~1.3 s sf0.1 bench merge at 84 partitions; a years-deep production
+    # table pays far more for a one-partition daily batch). basePath keeps
+    # the partition column derived from dir names; dir names come from
+    # hive_partition_dir, the same value->dir contract the swap and
+    # stale-partition drops already rely on (NULL ->
+    # __HIVE_DEFAULT_PARTITION__). The merge therefore conforms to the
+    # TOUCHED partitions' merged schema: a column evolved only in untouched
+    # partitions is invisible here — matched rows keep their partition's
+    # physical width, exactly what the swap rewrites (pinned by
+    # test_pruned_merge_conforms_to_touched_partition_schema). A touched
+    # value with no dir yet is a brand-new partition (no target rows); if NO
+    # touched dir exists the root read supplies the table schema for an
+    # empty target (rare: all-new backfill).
+    existing = [
+        str(d)
+        for d in (path / hive_partition_dir(partition_col, v) for v in touched)
+        if d.is_dir()
+    ]
+    reader = spark.read.option("mergeSchema", "true")
+    if existing:
+        target = reader.option("basePath", str(path)).parquet(*existing)
+    else:
+        target = reader.parquet(str(path)).filter(F.lit(False))
+    return target.filter(
+        touched_partition_filter(F.col(partition_col).cast(src_dtype), touched)
+    ).withColumn(partition_col, F.col(partition_col).cast(src_dtype))
+
+
+def _refuse_reserved(columns: Sequence[str]) -> None:
+    clash = sorted({"__t_present", "__s_present", "__action"} & set(columns))
     if clash:
-        raise ValueError(f"column names reserved by merge_upsert: {sorted(clash)}")
+        raise ValueError(f"column names reserved by the merge: {clash}")
+
+
+def _merge_kernel(
+    target: DataFrame,
+    source: DataFrame,
+    keys: Sequence[str],
+    hash_col: str,
+    preserve_cols: Sequence[str] = (),
+    always_update_cols: Sequence[str] = (),
+    unconditional: bool = False,
+    precedence_col: str | None = None,
+    allow_new_columns: bool = False,
+    null_safe_keys: bool = True,
+) -> DataFrame:
+    """The MERGE rules, shared by :func:`merge_upsert` and
+    :func:`merge_as_dataframe`: the keyed full-outer join of ``target`` and
+    ``source`` projected to the post-merge columns plus ``__action``
+    (``insert`` / ``update`` / ``unchanged`` / ``keep``)."""
+    _refuse_reserved([*target.columns, *source.columns])
     # Presence must be decided by explicit markers, not key-null tests: the
     # join is eqNullSafe precisely so NULL key values can match, and a target
     # row whose first key is NULL would otherwise be misclassified as an
     # insert (preserve_cols taken from source, stats wrong).
     t = target.withColumn("__t_present", F.lit(True)).alias("t")
     s = source.withColumn("__s_present", F.lit(True)).alias("s")
-    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+    if null_safe_keys:
+        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+    else:
+        cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
     joined = t.join(s, cond, "full_outer")
 
     s_present = F.col("s.__s_present").isNotNull()
@@ -343,6 +366,10 @@ def merge_upsert(
         )
         changed = changed & ~stale
 
+    out_cols = target.columns
+    new_cols = [c for c in source.columns if c not in out_cols]
+    if allow_new_columns:
+        out_cols = out_cols + new_cols
     preserve = set(preserve_cols)
     always = set(always_update_cols)
     src_dtypes = dict(source.dtypes)
@@ -378,30 +405,7 @@ def merge_upsert(
         .when(changed, F.lit("update"))
         .otherwise(F.lit("unchanged"))
     )
-    result = joined.select(*merged_cols, action.alias("__action"))
-
-    stats = MergeStats(-1, -1, -1, touched_partitions=touched_out)
-    if collect_stats:
-        # persist across the stats pass AND the write: without it the
-        # dominant full-outer shuffle runs twice per merge, and a
-        # non-deterministic source could make the reported counts disagree
-        # with the rows actually written
-        result = result.persist()
-        try:
-            counts = {r["__action"]: r["n"] for r in result.groupBy("__action").agg(F.count(F.lit(1)).alias("n")).collect()}
-            stats = MergeStats(
-                inserted=counts.get("insert", 0),
-                updated=counts.get("update", 0),
-                unchanged=counts.get("unchanged", 0) + counts.get("keep", 0),
-                touched_partitions=touched_out,
-            )
-            _write_table(result.drop("__action"), path, layout, partition_col, history)
-        finally:
-            result.unpersist()
-        return stats
-
-    _write_table(result.drop("__action"), path, layout, partition_col, history)
-    return stats
+    return joined.select(*merged_cols, action.alias("__action"))
 
 
 # ---------------------------------------------------------------------------
@@ -600,14 +604,22 @@ def _table_exists(path: Path, layout: str) -> bool:
 
 
 def _write_table(
-    df: DataFrame, path: Path, layout: str, partition_col: str | None, history: int | None = None
+    df: DataFrame,
+    path: Path,
+    layout: str,
+    partition_col: str | None,
+    history: int | None,
+    observe: Callable[[DataFrame], DataFrame],
 ) -> None:
+    """Write ``observe(df)``. The partition swap applies ``observe`` after
+    its repartition: below it, an ``Observation`` over a statically empty
+    batch raises on ``get`` instead of returning zeros."""
     if layout == "manifest":
-        _manifest_write(df, path, history=history)
+        _manifest_write(observe(df), path, history=history)
     elif partition_col is not None:
-        _partition_swap_write(df, path, partition_col)
+        _partition_swap_write(df, path, partition_col, observe)
     else:
-        _atomic_write(df, path)
+        _atomic_write(observe(df), path)
 
 
 def _atomic_write(df: DataFrame, path: Path, partition_by: str | None = None) -> None:
@@ -834,14 +846,20 @@ def diff_frames(
     )
 
 
-def _partition_swap_write(df: DataFrame, path: Path, partition_col: str) -> set[str]:
+def _partition_swap_write(
+    df: DataFrame,
+    path: Path,
+    partition_col: str,
+    observe: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> set[str]:
     """Swap ONLY the partition directories present in ``df`` into the table
     root; every other partition's files are left byte-untouched. The merge
     result contains exactly the touched partitions (pruned target subset
     full-outer source), so staging emits exactly those ``<pcol>=`` dirs.
     Returns the set of swapped partition dir names (``<pcol>=<escaped>``) so
     callers can reason about what was actually written — the staging glob is
-    the ground truth, not a second evaluation of ``df``."""
+    the ground truth, not a second evaluation of ``df``. ``observe`` maps
+    the repartitioned frame to the one written (see :func:`_write_table`)."""
     staging = path.with_name(path.name + ".__staging__")
     if staging.exists():
         shutil.rmtree(staging)
@@ -850,9 +868,9 @@ def _partition_swap_write(df: DataFrame, path: Path, partition_col: str) -> set[
     # small files — the classic scan-killer). One task per partition is right
     # for daily-merge-sized partitions; a table with huge partitions would
     # add a within-partition split key here.
-    df.repartition(F.col(partition_col)).write.mode("overwrite").partitionBy(
-        partition_col
-    ).parquet(str(staging))
+    observe(df.repartition(F.col(partition_col))).write.mode(
+        "overwrite"
+    ).partitionBy(partition_col).parquet(str(staging))
     path.mkdir(parents=True, exist_ok=True)
     # heal EVERY orphaned backup first, not just this batch's partitions: a
     # crash between the two renames of some earlier batch leaves only the
@@ -888,7 +906,8 @@ def merge_as_dataframe(
     """Pure-DataFrame MERGE (no I/O): returns the post-merge relation.
 
     Used by the oracle-checked queries and anywhere the caller manages
-    persistence itself. Same semantics as :func:`merge_upsert`.
+    persistence itself. Same semantics as :func:`merge_upsert`: both build
+    the merged relation with one kernel.
 
     ``null_safe_keys=False`` joins on plain equality instead of ``<=>``:
     required to reuse a bucketed target's layout (null-safe equality blocks
@@ -896,38 +915,14 @@ def merge_as_dataframe(
     correct when key columns are non-null by construction, which a
     natural-key table guarantees.
     """
-    keys = list(keys)
-    reserved = {"__t_present", "__s_present"}
-    clash = reserved & (set(target.columns) | set(source.columns))
-    if clash:
-        raise ValueError(f"column names reserved by merge_as_dataframe: {sorted(clash)}")
-    # explicit presence markers: with eqNullSafe keys a NULL key can match,
-    # so key-null tests would misclassify a matched null-keyed target row
-    t = target.withColumn("__t_present", F.lit(True)).alias("t")
-    s = source.withColumn("__s_present", F.lit(True)).alias("s")
-    if null_safe_keys:
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    else:
-        cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
-    joined = t.join(s, cond, "full_outer")
-    t_present = F.col("t.__t_present").isNotNull()
-    s_present = F.col("s.__s_present").isNotNull()
-    changed = _null_safe_ne(F.col(f"t.{hash_col}"), F.col(f"s.{hash_col}"))
-    preserve = set(preserve_cols)
-    cols = []
-    for c in target.columns:
-        s_c = F.col(f"s.{c}") if c in source.columns else F.lit(None)
-        t_c = F.col(f"t.{c}")
-        if c in keys:
-            expr = F.coalesce(t_c, s_c)
-        elif c in preserve:
-            expr = F.when(t_present, t_c).otherwise(s_c)
-        else:
-            expr = (
-                F.when(~t_present, s_c).when(~s_present, t_c).when(changed, s_c).otherwise(t_c)
-            )
-        cols.append(expr.alias(c))
-    return joined.select(*cols)
+    return _merge_kernel(
+        target,
+        source,
+        list(keys),
+        hash_col,
+        preserve_cols,
+        null_safe_keys=null_safe_keys,
+    ).drop("__action")
 
 
 def apply_changes(

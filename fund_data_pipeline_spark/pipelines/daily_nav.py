@@ -104,7 +104,6 @@ def run(
         batch,
         DAILY_NAV_KEY,
         dedupe_order=["scrape_date"] if "scrape_date" in batch.columns else None,
-        collect_stats=True,
     )
     return stats, errors
 

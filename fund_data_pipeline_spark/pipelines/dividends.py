@@ -46,4 +46,4 @@ def run(spark: SparkSession, landing_root: str, target_path: str) -> merge.Merge
     """One scan over per-ticker dividend files, one hash-guarded merge (H8)."""
     raw = read_per_entity_csvs(spark, landing_root, infer_date=False)
     batch = hash_batch(clean(raw))
-    return merge.merge_upsert(spark, target_path, batch, DIVIDEND_HISTORY_KEY, collect_stats=True)
+    return merge.merge_upsert(spark, target_path, batch, DIVIDEND_HISTORY_KEY)

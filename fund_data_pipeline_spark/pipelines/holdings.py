@@ -90,7 +90,7 @@ def run(
     if holdings_raw is not None:
         stats["stg_fund_holdings"] = merge.merge_upsert(
             spark, f"{warehouse}/stg_fund_holdings", clean_holdings(holdings_raw),
-            FUND_HOLDINGS_KEY, collect_stats=True,
+            FUND_HOLDINGS_KEY,
         )
     alloc_batches = [clean_allocations(df, kind) for kind, df in allocations_raw.items()]
     if alloc_batches:
@@ -98,6 +98,6 @@ def run(
         for b in alloc_batches[1:]:
             batch = batch.unionByName(b)
         stats["stg_allocations"] = merge.merge_upsert(
-            spark, f"{warehouse}/stg_allocations", batch, ALLOCATIONS_KEY, collect_stats=True
+            spark, f"{warehouse}/stg_allocations", batch, ALLOCATIONS_KEY
         )
     return stats

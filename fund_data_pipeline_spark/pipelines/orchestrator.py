@@ -68,11 +68,9 @@ class RunReport:
         agg = MergeStats(0, 0, 0)
         for st in self.stages:
             for ms in st.tables.values():
-                if ms.inserted >= 0:
-                    agg.inserted += ms.inserted
-                    agg.updated += ms.updated
-                    agg.unchanged += ms.unchanged
-                    agg.deleted_by_retention += ms.deleted_by_retention
+                agg.inserted += ms.inserted
+                agg.updated += ms.updated
+                agg.unchanged += ms.unchanged
         return agg
 
     def summary_lines(self) -> list[str]:
@@ -80,14 +78,7 @@ class RunReport:
         lines = ["== pipeline run summary =="]
         for st in self.stages:
             detail = "; ".join(
-                # MergeStats(-1,...) is the collect_stats=False sentinel —
-                # print it as such, not as negative row counts (review r9)
-                (
-                    f"{t}: +{m.inserted} ~{m.updated} ={m.unchanged}"
-                    if m.inserted >= 0
-                    else f"{t}: counts not collected"
-                )
-                for t, m in st.tables.items()
+                f"{t}: +{m.inserted} ~{m.updated} ={m.unchanged}" for t, m in st.tables.items()
             )
             extra = "; ".join(f"{k}={v}" for k, v in st.side_counts.items())
             parts = [p for p in (detail, extra) if p]

@@ -69,5 +69,4 @@ def run(
         target_path,
         batch,
         PRICE_HISTORY_KEY,
-        collect_stats=True,
     )

@@ -169,7 +169,7 @@ def run(
     try:
         for table, (fn, key) in loads.items():
             stats[table] = merge.merge_upsert(
-                spark, f"{warehouse}/{table}", fn(cleaned), key, collect_stats=True
+                spark, f"{warehouse}/{table}", fn(cleaned), key
             )
     finally:
         cleaned.unpersist()

@@ -57,7 +57,7 @@ def test_partition_pruned_merge_leaves_other_partitions_untouched(spark, tmp_pat
         ],
     )
     stats = merge_upsert(
-        spark, str(path), batch, keys=["ticker", "dt"], partition_col="dt", collect_stats=True
+        spark, str(path), batch, keys=["ticker", "dt"], partition_col="dt"
     )
     assert stats.inserted == 1 and stats.updated == 1
 
@@ -74,6 +74,27 @@ def test_partition_pruned_merge_leaves_other_partitions_untouched(spark, tmp_pat
         ("AAA", "2024-01-02"): 99.0,
         ("CCC", "2024-01-03"): 13.0,
     }
+
+
+@pytest.mark.parametrize(
+    "layout_kw", [{"partition_col": "dt"}, {}, {"layout": "manifest"}], ids=["hive", "flat", "manifest"]
+)
+def test_merge_empty_batch_counts_zero(spark, tmp_path, layout_kw):
+    """An empty batch reports zero counts and changes nothing, both as the
+    create and merged into an existing table. Its plan is statically empty:
+    the observed counts must still come back as zeros, not raise."""
+    path = str(tmp_path / "t")
+    keys = ["ticker", "dt"]
+    empty = _snapshot(spark, [])
+    created = merge_upsert(spark, path, empty, keys=keys, **layout_kw)
+    assert (created.inserted, created.updated, created.unchanged) == (0, 0, 0)
+
+    base = _snapshot(spark, [("AAA", "2024-01-01", 10.0), ("BBB", "2024-01-02", 11.0)])
+    assert merge_upsert(spark, path, base, keys=keys, **layout_kw).inserted == 2
+    before = sorted(read_table(spark, path).collect())
+    stats = merge_upsert(spark, path, empty, keys=keys, **layout_kw)
+    assert stats.inserted == stats.updated == 0
+    assert sorted(read_table(spark, path).collect()) == before
 
 
 def test_partition_pruned_merge_is_idempotent(spark, tmp_path):
@@ -141,10 +162,16 @@ def test_connected_components_unconverged_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "src long, dst long"
     )
+    # driver_collect_max_edges=0 keeps the distributed path: the driver
+    # union-find would solve the chain outright and never hit the cap
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(nodes, chain, max_iterations=1).collect()
+        connected_components(
+            nodes, chain, max_iterations=1, driver_collect_max_edges=0
+        ).collect()
     with pytest.warns(UserWarning, match="fixpoint"):
-        labels = connected_components(nodes, chain, max_iterations=1, strict=False)
+        labels = connected_components(
+            nodes, chain, max_iterations=1, strict=False, driver_collect_max_edges=0
+        )
         labels.collect()
 
 
@@ -196,7 +223,7 @@ def test_merge_null_key_target_row_is_matched_not_inserted(spark, tmp_path):
     batch = _hashed(spark, [(None, 9.0, "day5")])  # same NULL key, new value
     stats = merge_upsert(
         spark, str(path), batch, keys=["ticker"],
-        preserve_cols=["first_seen"], collect_stats=True,
+        preserve_cols=["first_seen"],
     )
     assert stats.inserted == 0 and stats.updated == 1 and stats.unchanged == 1
 
@@ -314,7 +341,7 @@ def test_backfill_prune_switches_to_semi_join(spark, tmp_path, monkeypatch):
     )
     stats = merge_upsert(
         spark, str(path), batch, keys=["ticker", "dt"],
-        partition_col="dt", collect_stats=True,
+        partition_col="dt",
     )
     assert stats.inserted == 1 and stats.updated == 4
 
@@ -882,7 +909,7 @@ def test_merge_precedence_col_stale_source_loses(spark, tmp_path):
 
     stale = _sd_snapshot(spark, [("A", "2024-01-02", 99.0)])
     stats = merge_upsert(
-        spark, path, stale, keys=["ticker"], precedence_col="sd", collect_stats=True
+        spark, path, stale, keys=["ticker"], precedence_col="sd"
     )
     assert (stats.inserted, stats.updated, stats.unchanged) == (0, 0, 1)
     row = read_table(spark, path).collect()[0]
@@ -917,7 +944,7 @@ def test_merge_precedence_col_fresh_and_null_pass(spark, tmp_path):
         ],
     )
     stats = merge_upsert(
-        spark, path, batch, keys=["ticker"], precedence_col="sd", collect_stats=True
+        spark, path, batch, keys=["ticker"], precedence_col="sd"
     )
     assert (stats.inserted, stats.updated, stats.unchanged) == (1, 3, 0)
     got = {r.ticker: (r.sd, r.value) for r in read_table(spark, path).collect()}

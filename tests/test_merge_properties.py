@@ -274,18 +274,29 @@ def test_merge_precedence_matches_dict_model(_spark, tmp_path_factory, target, s
     spark = _spark
     schema = "k int, v int, row_hash string, prec int"
     path = str(tmp_path_factory.mktemp("prec") / uuid.uuid4().hex)
-    merge_upsert(spark, path, spark.createDataFrame(target, schema), ["k"])
-    merge_upsert(
+    created = merge_upsert(spark, path, spark.createDataFrame(target, schema), ["k"])
+    merged = merge_upsert(
         spark, path, spark.createDataFrame(source, schema), ["k"], precedence_col="prec"
     )
 
     got = {r.k: (r.v, r.row_hash, r.prec) for r in spark.read.parquet(path).collect()}
     model = {k: (v, h, p) for k, v, h, p in target}
+    inserted = updated = 0
     for k, v, h, p in source:
         if k not in model:
             model[k] = (v, h, p)
+            inserted += 1
         else:
             stale = p is not None and model[k][2] is not None and p < model[k][2]
             if model[k][1] != h and not stale:
                 model[k] = (v, h, p)
+                updated += 1
     assert got == model
+    # the observed counts: matched-but-guarded and unmatched target rows
+    # both count as unchanged
+    assert (created.inserted, created.updated, created.unchanged) == (len(target), 0, 0)
+    assert (merged.inserted, merged.updated, merged.unchanged) == (
+        inserted,
+        updated,
+        len(target) - updated,
+    )

@@ -255,21 +255,20 @@ def test_allocations_load_without_holdings_feed(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "wh" / "stg_allocations")).count() == 1
 
 
-def test_summary_reports_wall_time_and_uncollected_counts():
-    """summary_lines: the -1 MergeStats sentinel prints as 'counts not
-    collected', and TOTAL uses run_all's recorded wall time (stage-duration
-    sum overstates concurrent groups) — review r9."""
+def test_summary_reports_wall_time():
+    """summary_lines: TOTAL uses run_all's recorded wall time (the
+    stage-duration sum overstates concurrent groups)."""
     import time
 
     from fund_data_pipeline_spark.merge import MergeStats
 
     def slow_ok():
         time.sleep(0.3)
-        return MergeStats(-1, -1, -1)
+        return MergeStats(2, 1, 0)
 
     report = orchestrator.run_all([[("a", slow_ok), ("b", slow_ok)]])
     text = "\n".join(report.summary_lines())
-    assert "counts not collected" in text and "+-1" not in text
+    assert "a: +2 ~1 =0" in text and "inserted 4, updated 2, unchanged 0" in text
     assert report.wall_sec is not None
     # two 0.3s stages ran concurrently: wall must be well under their sum
     assert report.wall_sec < sum(s.duration_sec for s in report.stages)
