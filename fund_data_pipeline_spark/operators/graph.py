@@ -99,7 +99,7 @@ def _host_min_labels(pdf, src_name: str = "src", dst_name: str = "dst"):
 
 
 def _labels_from_host_pairs(
-    spark, seed: DataFrame, pdf, edge_field, union_endpoints: bool
+    spark, seed: DataFrame, pdf, edge_type, union_endpoints: bool
 ) -> DataFrame:
     """Union-find the collected pairs on the driver, broadcast the (node,
     label) mapping back, and label ``seed`` with one broadcast join —
@@ -112,8 +112,8 @@ def _labels_from_host_pairs(
     host = _host_min_labels(pdf)
     schema = T.StructType(
         [
-            T.StructField("node", edge_field.dataType, True),
-            T.StructField("__cc_label", edge_field.dataType, True),
+            T.StructField("node", edge_type, True),
+            T.StructField("__cc_label", edge_type, True),
         ]
     )
     mapping = spark.createDataFrame(host, schema=schema)
@@ -214,25 +214,24 @@ def connected_components(
                 "spark.graft.cc.collectMaxEdges", str(CC_COLLECT_MAX_EDGES)
             )
         )
-    edge_field = edges.schema[src_col]
+    pairs = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    canon = _canon(pairs)
+    # greatest/least coerce src and dst to the wider of their types (as the
+    # symmetrizing union below does), so the driver mapping holds every id
+    edge_type = canon.schema["src"].dataType
     if driver_collect_max_edges > 0:
-        canon = _canon(
-            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        )
         probe = canon.limit(driver_collect_max_edges + 1).toPandas()
         if len(probe) <= driver_collect_max_edges:
             labels = _labels_from_host_pairs(
                 edges.sparkSession,
                 nodes.select(F.col(node_col).alias("node")),
                 probe,
-                edge_field,
+                edge_type,
                 union_endpoints=True,
             )
             return labels.withColumnRenamed("label", "cluster_id")
 
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+    sym = pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=False)
 
     endpoints = sym.select(F.col("src").alias("node"))  # sym already has both directions
@@ -295,7 +294,7 @@ def connected_components(
                     edges.sparkSession,
                     seed_nodes,
                     new_e.toPandas(),
-                    edge_field,
+                    edge_type,
                     union_endpoints=False,  # seed_nodes already holds every endpoint
                 )
                 return labels.withColumnRenamed("label", "cluster_id")

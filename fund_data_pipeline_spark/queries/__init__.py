@@ -6,6 +6,10 @@ SQL-expressible) an equivalent ANSI-SQL string for the DuckDB oracle.
 Column names are aliased identically on both sides; aggregates over doubles
 go through explicit DECIMAL casts so both engines produce bit-identical
 values (float summation order is otherwise engine-dependent).
+
+Catalog order is deterministic: the headline (benched) queries first, then
+everything else, each group in registration order. Every entry is gated
+against its oracle by ``tests/test_catalog_oracle.py``.
 """
 
 from __future__ import annotations
@@ -20,302 +24,10 @@ from . import vectors  # noqa: E402,F401
 from . import stream_queries  # noqa: E402,F401
 from . import mlops  # noqa: E402,F401
 
-#: The harness checks the FIRST 50 registered queries against the DuckDB
-#: oracle (CORRECTNESS_r01.json had exactly the first 50 entries). This list
-#: pins the window to one representative per distinct capability — every
-#: operator family from SURVEY §2 plus every LLM-pipeline/streaming/vector
-#: component gets a driver-checked row.
-#:
-#: Window-rotation policy (codified r11 per the r10 VERDICT; r10 applied
-#: it by hand). At every rotation:
-#:
-#:   1. The 8 headline (benched) queries keep their slots.
-#:   2. Queries with ZERO driver evidence (late additions registered after
-#:      the previous rotation) take the next slots — the late-addition
-#:      contract their ``_OUT_OF_WINDOW_WHY`` entries promise.
-#:   3. Remaining slots fill strictly OLDEST-latest-green-first (latest
-#:      green driver round ascending, ties alphabetical).
-#:   4. Any query that has EVER failed a driver check stays in the window
-#:      until it has a green driver row (round-2 rule; never yet
-#:      triggered — no catalog query has finished a round red).
-#:   5. No registered query's latest green evidence may be older than
-#:      ``MAX_EVIDENCE_AGE`` rounds as of ``ROTATION_ROUND`` —
-#:      ``tests/test_core.py::test_window_rotation_staleness_policy``
-#:      recomputes both sides from the committed CORRECTNESS_r*.json
-#:      history, so a rotation that parks a stale query past position 50
-#:      fails the suite, not just the judge's audit.
-#:   6. Tie-break (codified r12 per the r11 VERDICT): when rules 1+2+5
-#:      together claim MORE than ``DRIVER_WINDOW`` slots, the excess is
-#:      deferred from the due (oldest) cohort — choosing the query(ies)
-#:      whose kernels are most completely exercised by members of the NEW
-#:      window (ideally a permanent headliner). Each deferral carries a
-#:      ``rule-6 deferral at r{ROTATION_ROUND}`` marker in
-#:      _OUT_OF_WINDOW_WHY naming the covering in-window queries, and takes
-#:      the first non-headline slot at the NEXT rotation (ahead of rule-3
-#:      refills, behind rule-2 zero-evidence queries). The staleness test
-#:      verifies the deferral count equals exactly the oversubscription
-#:      excess — rule 6 can never park a query that would have fit.
-#:   7. Family-coverage tie-break on rule 3 (codified r16): when the
-#:      strictly-alphabetical rule-3 refill would leave a kernel family
-#:      with ZERO in-window representatives, the alphabetically-first due
-#:      member of that family is promoted into the refill ahead of the
-#:      alphabetical order (displacing the alphabetically-last non-sole
-#:      refill member). This preserves the header's "every operator family
-#:      gets a driver-checked row" invariant, which the r16 alphabetical
-#:      cut would otherwise break for the streaming family (all three due
-#:      streaming queries sat in the left-out tail). At most one member per
-#:      family is promoted; rules 5/6 are unaffected (the displaced member
-#:      is age < MAX_EVIDENCE_AGE by construction, else it had a rule-5
-#:      slot already).
-#:
-#:   7b. Cross-cohort family promotion (codified r17, extending rule 7):
-#:      when an uncovered family has NO member in the oldest cohort rule 3
-#:      is refilling from, the promotion draws the family's alphabetically-
-#:      first member from the NEXT-oldest cohort instead (still displacing
-#:      the alphabetically-last non-sole refill member). First applied at
-#:      r17: the merge, hyperplane-LSH and pivot/reshape families each had
-#:      every member aged <= 2 (so rule 7 proper had nothing to promote)
-#:      yet would have ended the rotation with zero in-window reps.
-#:
-#: Round-17 rotation: IN — ``semantic_dedup_codebook_sliced`` (the r16 late
-#: addition, zero driver evidence, first non-headline slot per rule 2); the
-#: 8 r13-latest queries (age 4 at r17, due per rule 5:
-#: running_revenue_by_supplier, source_frequency_cap, stratified_hash_sample,
-#: streaming_session_counts, streaming_tumbling_counts, string_compose_format,
-#: temperature_rebalance_mixture, top_orders_per_customer); and 33 refill
-#: slots from the 42-member r14-latest cohort (rule 3 oldest-evidence
-#: refill): the first 29 alphabetically plus 4 family promotions —
-#: ``simhash_wide_pairs`` (rule 7: the simhash family's only due member;
-#: simhash_near_dup/simhash_df_capped are r15/r16-latest) and, per rule 7b,
-#: ``repair_feed_merge`` (merge family — hash_guarded_merge and
-#: retention_cutoff_prune are both r16-latest), ``embedding_ann_bucketed_topk``
-#: (hyperplane-LSH family — lsh_buckets r16, cosine_near_dup and
-#: random_projection r15, alphabetically-first r15 member) and
-#: ``pivot_status_by_segment`` (pivot/reshape family — unpivot_part_metrics
-#: is r16-latest). The 4 displaced alphabetically-last non-sole refill
-#: members (rolling_30d_revenue, rollup_revenue, running_distinct_users,
-#: salted_join_revenue — scd2_priority_history, alphabetically last, is the
-#: SOLE in-window CDC/status-history rep and is not displaceable) each keep
-#: a covering in-window rep named in their _OUT_OF_WINDOW_WHY entries. The
-#: window is NOT oversubscribed: rules 1+2+5 claim 17 slots, so no rule-6
-#: deferral. OUT — the 42 non-headline members of the r16 window (age 1),
-#: the r15-latest cohort minus the three rule-7b promotions (age 2), and
-#: 12 r14-latest queries (age 3; due at r18 under rule 5). Every excluded
-#: query is listed in _OUT_OF_WINDOW_WHY below with the CORRECTNESS
-#: round(s) that checked it green, still registered, and still gated by
-#: scripts/verify_local.py + tests/test_catalog_oracle.py.
-ROTATION_ROUND = 17
-MAX_EVIDENCE_AGE = 4
-DRIVER_WINDOW = 50
-_CHECKED_FIRST = [
-    # headline queries (benched) — stay in-window every round (rule 1)
-    "pricing_summary",
-    "top_unshipped_orders",
-    "regional_supplier_volume",
-    "asof_last_click_before_purchase",
-    "embedding_topk_cosine",
-    "tumbling_window_stats",
-    "text_statistics",
-    "exact_dedup",
-    # ---- rule 2: r16 late addition, zero driver evidence ----
-    "semantic_dedup_codebook_sliced",
-    # ---- rule 5: latest green r13, age 4 at r17 — due ----
-    "running_revenue_by_supplier",
-    "source_frequency_cap",
-    "stratified_hash_sample",
-    "streaming_session_counts",
-    "streaming_tumbling_counts",
-    "string_compose_format",
-    "temperature_rebalance_mixture",
-    "top_orders_per_customer",
-    # ---- rule 3: the r14-latest cohort, oldest-evidence refill (first
-    # 29 alphabetically + 4 family promotions per rules 7/7b:
-    # simhash_wide_pairs, repair_feed_merge, embedding_ann_bucketed_topk,
-    # pivot_status_by_segment — displacing rolling_30d_revenue,
-    # rollup_revenue, running_distinct_users and salted_join_revenue, the
-    # alphabetically-last non-sole refill members) ----
-    "audio_quality_gate",
-    "boilerplate_scrub",
-    "bpe_encode_token_stats",
-    "bpe_train_merges",
-    "characteristic_terms",
-    "churned_buyers_except",
-    "cohort_retention",
-    "daily_order_anomaly",
-    "deterministic_shuffle_order",
-    "distinct_counts",
-    "duplicate_key_stats",
-    "embedding_ann_bucketed_topk",
-    "embedding_centroid_stats",
-    "gap_fill_locf_capped",
-    "grouping_sets_revenue",
-    "hierarchy_flatten",
-    "incremental_near_dup",
-    "key_skew_profile",
-    "nation_pair_revenue",
-    "ngram_jaccard_pairs",
-    "null_sentinel_cleanup",
-    "order_fulfillment_outer",
-    "order_price_lead_lag",
-    "pivot_status_by_segment",
-    "price_histogram",
-    "price_quartiles_by_segment",
-    "priority_orders_exists",
-    "promo_revenue_share",
-    "record_linkage_fuzzy",
-    "repair_feed_merge",
-    "repeat_buyers_intersect",
-    "scd2_priority_history",
-    "simhash_wide_pairs",
-]
-
-
-#: Every query excluded from the driver window, with its justification —
-#: structurally enforced by :func:`_pin_driver_window` (an undocumented
-#: exclusion is a hard error at import, so a failing query cannot be quietly
-#: parked past position 50). "driver-green rN" cites the CORRECTNESS
-#: round(s) that checked the query itself green (mechanically audited by
-#: tests/test_core.py::test_out_of_window_citations_match_correctness_records);
-#: "family in-window via X" names its kernel representative in the CURRENT
-#: (r16) window (mechanically audited by
-#: tests/test_core.py::test_out_of_window_family_reps_are_in_window).
-_OUT_OF_WINDOW_WHY = {
-    # ---- rotated out of the r16 window (latest green r16, age 1; all
-    # reps below are r17-window members) ----
-    "active_customers_semi": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; semi-join family in-window via priority_orders_exists (same EXISTS/semi form) + repeat_buyers_intersect (set-membership twin)",
-    "bm25_doc_search": "driver-green r10+r13+r16; token-df/idf family in-window via characteristic_terms (same token-df/idf kernel)",
-    "bpe_pair_stats": "driver-green r10+r13+r16; BPE family in-window via bpe_train_merges (same BPE pair-count kernel) + bpe_encode_token_stats (encode stats)",
-    "conform_master_list": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; conform family in-window via null_sentinel_cleanup (same schema-conform kernel)",
-    "content_defined_chunking": "driver-green r10+r13+r16; chunking family in-window via boilerplate_scrub (same scan+explode segment kernel)",
-    "corpus_mix_drift": "driver-green r10+r13+r16; corpus-profiling family in-window via key_skew_profile (same stratum-stats kernel)",
-    "customers_without_orders": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; anti-join family in-window via churned_buyers_except (same EXCEPT/anti form) + order_fulfillment_outer (outer audit)",
-    "date_parsing_and_arithmetic": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; date-arithmetic family in-window via cohort_retention (same date-bucket arithmetic) + gap_fill_locf_capped (date-spine kernel)",
-    "dedup_keep_last": "driver-green r2+r3+r4+r5+r6+r10+r13+r16; keyed-survivor family in-window via duplicate_key_stats (same duplicate-attribution kernel) + exact_dedup (headline)",
-    "doc_fingerprint": "driver-green r5+r6+r10+r13+r16; signature family in-window via incremental_near_dup (same minhash signature kernel) + record_linkage_fuzzy (candidate-pair signature)",
-    "duplicated_span_dedup": "driver-green r10+r13+r16; shingle-join family in-window via ngram_jaccard_pairs (same shingle-join kernel)",
-    "embedding_int8_quantization": "driver-green r10+r13+r16; vector-transform family in-window via embedding_centroid_stats (same vector linear-algebra agg) + embedding_topk_cosine (headline)",
-    "embedding_ivf_topk": "driver-green r5+r6+r10+r13+r16; ANN family in-window via embedding_ann_bucketed_topk (same cell-assign/pruned-cosine kernel) + embedding_topk_cosine (headline)",
-    "embedding_lsh_buckets": "driver-green r5+r6+r10+r13+r16; hyperplane-projection family in-window via embedding_ann_bucketed_topk (same hyperplane-sign bucket kernel)",
-    "embedding_topk_pandas": "driver-green r5+r6+r10+r13+r16; Arrow mapInPandas family in-window via audio_quality_gate (same Arrow mapInPandas kernel) + embedding_topk_cosine (headline; same oracle)",
-    "fee_rescale_and_repair": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; parse/repair family in-window via null_sentinel_cleanup (same conform/repair chain) + string_compose_format (string-expression kernel)",
-    "group_count_breakdown": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; grouped-count family in-window via distinct_counts (same grouped kernel)",
-    "hash_guarded_merge": "driver-green r2+r3+r4+r5+r6+r10+r13+r16; merge family in-window via repair_feed_merge (same hash-guarded merge_upsert kernel)",
-    "hybrid_bm25_cosine_rerank": "driver-green r10+r13+r16; hybrid-ranking family in-window via characteristic_terms (token-df/idf kernel) + embedding_topk_cosine (headline cosine kernel)",
-    "incremental_rollup_revenue": "driver-green r7+r10+r13+r16; multi-level agg family in-window via grouping_sets_revenue (same ROLLUP/grouping-sets kernel)",
-    "latest_order_per_customer": "driver-green r3+r4+r5+r6+r10+r13+r16; keyed-extreme family in-window via top_orders_per_customer (same keyed extreme-agg kernel) + order_price_lead_lag (keyed window)",
-    "lifecycle_status_transitions": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; status-transition family in-window via scd2_priority_history (same status-history kernel)",
-    "locf_last_valid_value": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; densify/LOCF family in-window via gap_fill_locf_capped (same last(ignorenulls) carry kernel; its scale-capped production form)",
-    "master_validation_issues": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; rule-audit family in-window via order_fulfillment_outer (same unmatched/invalid-row audit kernel) + null_sentinel_cleanup (conform rules)",
-    "model_quality_filter": "driver-green r13+r16; quality-gate family in-window via audio_quality_gate (same quality-gate form) + characteristic_terms (token scoring)",
-    "nav_validation_errors": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; rule-audit family in-window via order_fulfillment_outer (same rule-audit kernel) + daily_order_anomaly (anomaly gate)",
-    "ngram_novelty": "driver-green r10+r13+r16; shingle-index family in-window via ngram_jaccard_pairs (same shingle-set kernel) + record_linkage_fuzzy (candidate join)",
-    "ntile_quartiles": "driver-green r3+r4+r5+r6+r10+r13+r16; percentile family in-window via price_quartiles_by_segment (same percentile kernel) + order_price_lead_lag (keyed-window kernel)",
-    "numeric_string_parsing": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; parse family in-window via string_compose_format (same string-expression chain) + null_sentinel_cleanup (parse/conform kernel)",
-    "price_quantity_stats": "driver-green r7+r10+r13+r16; grouped-stats family in-window via price_quartiles_by_segment (same grouped stats kernel) + daily_order_anomaly (robust stats)",
-    "retention_cutoff_prune": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; merge family in-window via repair_feed_merge (same merge_upsert kernel) + cohort_retention (date cutoff)",
-    "row_hash_change_detection": "driver-green r1+r2+r3+r4+r5+r6+r10+r13+r16; CDC hash-compare family in-window via scd2_priority_history (same hash-compare CDC kernel)",
-    "row_hash_surfaces": "driver-green r10+r13+r16; row-hash family in-window via scd2_priority_history (same row_hash_safe kernel) + deterministic_shuffle_order (md5 derived-key kernel)",
-    "semantic_dedup_codebook_arrow": "driver-green r16; SemDeDup family in-window via semantic_dedup_codebook_sliced (same codebook-assignment kernel under the same exact oracle)",
-    "semantic_dedup_codebook_join": "driver-green r16; SemDeDup family in-window via semantic_dedup_codebook_sliced (same codebook-assignment kernel under the same exact oracle)",
-    "simhash_df_capped": "driver-green r16; simhash family in-window via simhash_wide_pairs (same simhash banding kernel; the df-cap boundary pinned by tests/test_operators.py)",
-    "streaming_dedup_users": "driver-green r5+r6+r10+r13+r16; streaming family in-window via streaming_session_counts (same availableNow drain + streaming-state kernel) + streaming_tumbling_counts (windowed streaming)",
-    "table_profile": "driver-green r5+r6+r8+r12+r16; profiling family in-window via key_skew_profile (same profiling-stats kernel)",
-    "token_count_regex": "driver-green r5+r6+r8+r12+r16; regexp family in-window via string_compose_format (same regexp/string-expression kernel)",
-    "train_val_test_split": "driver-green r2+r3+r4+r8+r12+r16; md5-bucket split family in-window via stratified_hash_sample (same md5-bucket kernel) + source_frequency_cap (deterministic sampling)",
-    "unpivot_part_metrics": "driver-green r1+r2+r3+r4+r5+r8+r12+r16; reshape family in-window via pivot_status_by_segment (the inverse reshape kernel; pivot and stack share the wide<->long plan shape)",
-    "winsorized_price_stats": "driver-green r8+r12+r16; robust-stats family in-window via daily_order_anomaly (same robust-stats kernel) + price_quartiles_by_segment (percentile kernel)",
-    # ---- the r15-latest cohort (age 2; minus the three rule-7b
-    # promotions) ----
-    "benchmark_contamination": "driver-green r5+r6+r8+r12+r15; shingle-index family in-window via ngram_jaccard_pairs (same shingle-set kernel) + record_linkage_fuzzy (candidate-pair join)",
-    "bigram_lm_quality_gate": "driver-green r12+r15; likelihood-gate family in-window via audio_quality_gate (same quality-gate form) + bpe_train_merges (same bigram pair-count kernel)",
-    "buyer_set_ops": "driver-green r2+r3+r4+r5+r8+r12+r15; set-op family in-window via repeat_buyers_intersect (INTERSECT form) + churned_buyers_except (EXCEPT form)",
-    "calendar_gap_fill": "driver-green r8+r12+r15; densify/LOCF family in-window via gap_fill_locf_capped (same last(ignorenulls) carry kernel) + cohort_retention (date-spine arithmetic)",
-    "changelog_compact": "driver-green r8+r12+r15; CDC-compaction family in-window via scd2_priority_history (same hash-compare CDC kernel)",
-    "clicks_before_purchase_range_join": "driver-green r1+r2+r4+r5+r8+r12+r15; range-join family in-window via asof_last_click_before_purchase (headline; same event-time range predicate) + cohort_retention (date cutoff)",
-    "conversion_funnel": "driver-green r5+r6+r8+r12+r15; event-sequence family in-window via asof_last_click_before_purchase (headline event-time ordering) + top_orders_per_customer (keyed ordering)",
-    "corpus_dedup_pipeline": "driver-green r8+r12+r15; dedup-pipeline family in-window via exact_dedup (headline; stage-1 kernel) + incremental_near_dup (minhash signature stage) + duplicate_key_stats (survivor stage)",
-    "cube_order_stats": "driver-green r2+r3+r4+r5+r8+r12+r15; multi-level agg family in-window via grouping_sets_revenue (same CUBE/grouping-sets agg kernel)",
-    "dedup_clusters": "driver-green r2+r3+r4+r5+r6+r8+r12+r15; iterative min-label kernel in-window via hierarchy_flatten (same operators.graph iterative-fixpoint family); property-tested every round (tests/test_operators.py graph suite) and replayed at sf1 by scripts/verify_sf1_clusters.py",
-    "dedup_keep_best_quality": "driver-green r8+r12+r15; keyed-survivor family in-window via duplicate_key_stats (same keyed-survivor attribution kernel) + exact_dedup (headline)",
-    "dedup_keep_list": "driver-green r5+r6+r8+r12+r15; duplicate-attribution family in-window via duplicate_key_stats (same duplicate-attribution kernel) + exact_dedup (headline)",
-    "doc_chunking": "driver-green r6+r8+r12+r15; chunking family in-window via boilerplate_scrub (same scan+explode segment kernel)",
-    "doc_quality_profile": "driver-green r2+r3+r4+r8+r12+r15; profiling family in-window via key_skew_profile (same profiling-stats kernel) + daily_order_anomaly (distribution stats)",
-    "embedding_cosine_near_dup": "driver-green r2+r3+r4+r8+r12+r15; cosine family in-window via embedding_topk_cosine (headline; same cosine kernel) + embedding_ann_bucketed_topk (bucketed pairing)",
-    "embedding_random_projection": "driver-green r8+r12+r15; projection family in-window via embedding_ann_bucketed_topk (same hyperplane-projection kernel) + embedding_centroid_stats (vector transform)",
-    "event_type_summary": "driver-green r2+r4+r8+r12+r15; grouped-count family in-window via distinct_counts (same grouped kernel)",
-    "fk_integrity_audit": "driver-green r8+r12+r15; integrity-audit family in-window via order_fulfillment_outer (same unmatched-row audit kernel) + churned_buyers_except (anti kernel)",
-    "image_decode_features": "driver-green r6+r8+r12+r15; multimodal family in-window via audio_quality_gate (same Arrow mapInPandas kernel)",
-    "json_props_extraction": "driver-green r1+r2+r3+r4+r8+r12+r15; parse/conform family in-window via null_sentinel_cleanup (same conform chain) + string_compose_format (string-expression kernel)",
-    "language_id_heuristic": "driver-green r1+r2+r3+r4+r8+r12+r15; text-scoring family in-window via text_statistics (headline; same text-stats scan) + audio_quality_gate (score gate)",
-    "language_rebalance_mixture": "driver-green r6+r8+r12+r15; mixture-sampling family in-window via temperature_rebalance_mixture (same mixture-sampling kernel) + stratified_hash_sample (md5-bucket kernel)",
-    "leakage_safe_split": "driver-green r6+r8+r12+r15; md5-bucket split family in-window via stratified_hash_sample (same md5-bucket split kernel)",
-    "length_percentile_gate": "driver-green r6+r8+r12+r15; percentile-gate family in-window via price_quartiles_by_segment (same percentile kernel) + daily_order_anomaly (robust stats)",
-    "minhash_lsh_candidates": "driver-green r2+r3+r4+r8+r12+r15; minhash-band family in-window via incremental_near_dup (same minhash signature + band-join kernel) + record_linkage_fuzzy (banded candidates)",
-    "multimodal_binary_meta": "driver-green r6+r8+r12+r15; multimodal family in-window via audio_quality_gate (same Arrow/multimodal plumbing) + key_skew_profile (typed-metadata profiling)",
-    "order_price_percentiles": "driver-green r5+r6+r8+r12+r15; percentile family in-window via price_quartiles_by_segment (same percentile kernel) + price_histogram (distribution stats)",
-    "pii_redaction": "driver-green r8+r12+r15; regexp-redaction family in-window via string_compose_format (same regexp/string-expression kernel) + null_sentinel_cleanup (conform chain)",
-    "pii_scrub_stats": "driver-green r6+r8+r12+r15; regexp-scrub family in-window via string_compose_format (same regexp/string-expression kernel) + distinct_counts (scrub counts)",
-    "quality_score": "driver-green r5+r6+r8+r12+r15; quality-scoring family in-window via audio_quality_gate (same quality-gate form) + text_statistics (headline stats)",
-    "repetition_filter_stats": "driver-green r5+r6+r8+r12+r15; repetition/shingle-stats family in-window via ngram_jaccard_pairs (same shingle-set kernel) + text_statistics (headline scan)",
-    "semantic_dedup_scaled": "driver-green r15; SemDeDup family in-window via semantic_dedup_codebook_sliced (same SemDeDup kernel under the same exact oracle) + embedding_ann_bucketed_topk (cell-assign)",
-    "sequence_packing": "driver-green r6+r8+r12+r15; segment-packing family in-window via boilerplate_scrub (same segment-grid kernel)",
-    "simhash_near_dup": "driver-green r2+r3+r4+r8+r12+r15; simhash family in-window via simhash_wide_pairs (same simhash banding kernel, wide form; sf1 replay scripts/verify_sf1_simhash.py)",
-    "streaming_enriched_purchases": "driver-green r7+r11+r15; streaming family in-window via streaming_session_counts (same availableNow drain + streaming kernel)",
-    "streaming_stateful_user_stats": "driver-green r6+r8+r12+r15; streaming-state family in-window via streaming_session_counts (same streaming-state kernel) + streaming_tumbling_counts (windowed streaming)",
-    "token_vocabulary": "driver-green r7+r11+r15; token-df family in-window via characteristic_terms (same token-df kernel)",
-    "top_supplier_revenue": "driver-green r1+r2+r7+r11+r15; extreme-agg family in-window via top_orders_per_customer (same keyed extreme/top-k kernel) + regional_supplier_volume (headline join-agg)",
-    "video_frame_sample_stats": "driver-green r7+r11+r15; multimodal family in-window via audio_quality_gate (same Arrow mapInPandas kernel)",
-    # ---- the r14-latest cohort left out by the rule-3 refill (age 3;
-    # due at r18 under rule 5) ----
-    "rolling_30d_revenue": "driver-green r7+r11+r14; date-window family in-window via gap_fill_locf_capped (same date-spine window-frame kernel) + cohort_retention (date-bucket arithmetic); displaced by the rule-7/7b promotions at r17",
-    "rollup_revenue": "driver-green r1+r7+r11+r14; multi-level agg family in-window via grouping_sets_revenue (same ROLLUP/grouping-sets kernel); displaced by the rule-7/7b promotions at r17",
-    "running_distinct_users": "driver-green r7+r11+r14; incremental user-state family in-window via streaming_session_counts (same incremental user-state kernel); displaced by the rule-7/7b promotions at r17",
-    "salted_join_revenue": "driver-green r1+r7+r11+r14; skew-join family in-window via ngram_jaccard_pairs (same grid-decomposition skew-bounded join kernel) + simhash_wide_pairs (blocked band join); displaced by the rule-7/7b promotions at r17",
-    "semantic_dedup_cells": "driver-green r7+r11+r14; SemDeDup family in-window via semantic_dedup_codebook_sliced (same cell-assign kernel under this query's exact oracle) + embedding_ann_bucketed_topk (cell-assign ANN)",
-    "sessionization": "driver-green r3+r4+r7+r11+r14; event-sequence family in-window via asof_last_click_before_purchase (headline; same keyed event-ordering kernel) + streaming_session_counts (session-state streaming twin)",
-    "sliding_window_stats": "driver-green r3+r4+r7+r11+r14; time-window family in-window via tumbling_window_stats (headline; same window() kernel, sliding form)",
-    "small_quantity_revenue": "driver-green r1+r2+r7+r11+r14; filtered-agg family in-window via pricing_summary (headline; same filter-agg kernel)",
-    "snapshot_diff": "driver-green r7+r11+r14; hash-compare family in-window via scd2_priority_history (same CDC hash-compare kernel) + repair_feed_merge (merge repair)",
-    "streaming_click_purchase_join": "driver-green r7+r11+r14; stream-join family in-window via streaming_session_counts (same availableNow drain + streaming kernel) + asof_last_click_before_purchase (headline batch twin)",
-    "unigram_likelihood_quality": "driver-green r10+r14; likelihood family in-window via characteristic_terms (same token-likelihood scoring kernel) + audio_quality_gate (quality-gate form)",
-    "union_mixed_schemas": "driver-green r10+r14; schema-conform union family in-window via null_sentinel_cleanup (same schema-coercion/conform chain) + pivot_status_by_segment (schema reshape)",
-}
-
-
-
-def _pin_driver_window() -> None:
-    missing = [n for n in _CHECKED_FIRST if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"driver-window queries not registered: {missing}")
-    if len(_CHECKED_FIRST) != DRIVER_WINDOW:
-        raise RuntimeError(
-            f"driver window holds {DRIVER_WINDOW} queries, got {len(_CHECKED_FIRST)}"
-        )
-    undocumented = [
-        n for n in QUERIES if n not in _CHECKED_FIRST and n not in _OUT_OF_WINDOW_WHY
-    ]
-    if undocumented:
-        raise RuntimeError(
-            f"queries excluded from the driver window without justification: {undocumented}"
-        )
-    stale = [n for n in _OUT_OF_WINDOW_WHY if n not in QUERIES]
-    if stale:
-        raise RuntimeError(
-            f"_OUT_OF_WINDOW_WHY entries for queries no longer registered: {stale}"
-        )
-    both = [n for n in _OUT_OF_WINDOW_WHY if n in _CHECKED_FIRST]
-    if both:
-        raise RuntimeError(
-            f"queries both in-window and excluded: {both}"
-        )
-    head = {n: QUERIES[n] for n in _CHECKED_FIRST}
-    tail = {n: s for n, s in QUERIES.items() if n not in head}
-    QUERIES.clear()
-    QUERIES.update(head)
-    QUERIES.update(tail)
-
-
-_pin_driver_window()
+# stable sort: headliners first, both groups keep registration order
+_ordered = sorted(QUERIES.values(), key=lambda spec: not spec.headline)
+QUERIES.clear()
+QUERIES.update((spec.name, spec) for spec in _ordered)
 
 
 def queries():

@@ -86,8 +86,8 @@ def register(name: str, oracle: str | None = None, headline: bool = False, doc: 
     def wrap(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             # a silent overwrite would un-gate the shadowed query: the name
-            # stays registered, so the window/exclusion accounting in
-            # queries/__init__ could never notice the first query vanished
+            # stays registered, so nothing downstream could notice the
+            # first query vanished
             raise ValueError(f"catalog query {name!r} is already registered")
         QUERIES[name] = QuerySpec(name=name, spark=fn, oracle=oracle, headline=headline, doc=doc or (fn.__doc__ or ""))
         return fn

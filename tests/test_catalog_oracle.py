@@ -6,10 +6,10 @@ SF and is compared — row count, column names, order-insensitive canonical
 values — against its ANSI-SQL oracle on DuckDB over the same parquet.
 Oracle-less entries get the driver's weaker rows-only check (must execute).
 
-Parametrized per query so a regression names the exact entry, and so the
-out-of-window queries (``queries/__init__._OUT_OF_WINDOW_WHY``) are gated by
-``pytest tests/`` — environment shifts like the pyspark 4.1.2 TIMESTAMP_NTZ
-read change (VERDICT r3) fail here, in-round, not at the driver.
+Parametrized per query so a regression names the exact entry, and so every
+catalog query is gated by ``pytest tests/`` — environment shifts like the
+pyspark 4.1.2 TIMESTAMP_NTZ read change (VERDICT r3) fail here, in-round,
+not at the driver.
 
 Runs at sf0.001 (a couple of minutes for the full catalog, dominated by
 streaming drains).

@@ -223,23 +223,30 @@ def test_scd2_apply_versioned_history(spark):
     assert len([r for r in h3c.collect() if not r.is_current]) == 2
 
 
-def test_driver_window_is_first_fifty_registered():
-    """The harness oracle-checks the FIRST 50 registered queries; the pinned
-    window is only effective if _pin_driver_window actually reordered the
-    registry so _CHECKED_FIRST occupies those positions, every window entry
-    has an oracle (a None oracle is a guaranteed red row), and every
-    non-window query carries a documented justification."""
+def test_catalog_order_is_headliners_first_then_registration_order():
+    """queries() lists the headline queries first, then everything else;
+    each group keeps registration order (module import order, then source
+    line). The name set is pinned so a query cannot silently vanish, and
+    every query keeps a DuckDB oracle."""
+    import sys
+
     from fund_data_pipeline_spark import queries as q
 
-    assert list(q.QUERIES)[: q.DRIVER_WINDOW] == q._CHECKED_FIRST
-    missing_oracle = [n for n in q._CHECKED_FIRST if q.QUERIES[n].oracle is None]
-    assert not missing_oracle, f"window queries without an oracle: {missing_oracle}"
-    undocumented = [
-        n
-        for n in list(q.QUERIES)[q.DRIVER_WINDOW :]
-        if n not in q._OUT_OF_WINDOW_WHY
+    names = list(q.queries())
+    headline = list(q.headline_queries())
+    assert names[: len(headline)] == headline
+    module_rank = {m: i for i, m in enumerate(sys.modules)}
+    registered = sorted(
+        q.QUERIES.values(),
+        key=lambda s: (module_rank[s.spark.__module__], s.spark.__code__.co_firstlineno),
+    )
+    assert names == [s.name for s in registered if s.headline] + [
+        s.name for s in registered if not s.headline
     ]
-    assert not undocumented
+    assert len(names) == 143
+    digest = hashlib.sha256("\n".join(sorted(names)).encode()).hexdigest()
+    assert digest == "01c75ab09d850c770faa7d93a9d631b0cc42513de58839e93c0dd591a35286d4"
+    assert set(q.oracle_sql()) == set(names)
 
 
 def test_r11_expression_review_fixes(spark):
@@ -420,225 +427,6 @@ def test_integrity_check_script():
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "0 failures" in proc.stdout
-
-
-def test_out_of_window_citations_match_correctness_records():
-    """Every 'driver-green rN' citation in _OUT_OF_WINDOW_WHY must name a
-    round whose recorded CORRECTNESS row was fully green (rows + schema +
-    hash, no err) for that query — the judge spot-checks these, and r9's
-    audit found 9 citations naming rounds that were rows-green but
-    hash-RED (the r1 canonicalization / r5 HUGEINT-coercion reds)."""
-    import json
-    import re
-    from pathlib import Path
-
-    from fund_data_pipeline_spark.queries import _OUT_OF_WINDOW_WHY
-
-    repo = Path(__file__).resolve().parents[1]
-    green: dict[str, set[int]] = {}
-    rounds = sorted(repo.glob("CORRECTNESS_r*.json"))
-    assert rounds, "no CORRECTNESS files present"
-    for f in rounds:
-        n = int(re.search(r"r(\d+)", f.name).group(1))
-        for q, res in json.loads(f.read_text()).items():
-            if (
-                res.get("rows_match")
-                and res.get("schema_match")
-                and res.get("hash_match") in (True, None)
-                and not res.get("err")
-            ):
-                green.setdefault(q, set()).add(n)
-    bad = []
-    for q, why in _OUT_OF_WINDOW_WHY.items():
-        m = re.match(r"driver-green ((?:r\d+\+?)+)", why)
-        if not m:
-            continue  # non-citation form (e.g. "new rN, queued")
-        for r in (int(x[1:]) for x in m.group(1).split("+")):
-            if r not in green.get(q, set()):
-                bad.append((q, r, sorted(green.get(q, set()))))
-    assert not bad, f"citations naming non-green rounds: {bad}"
-
-
-def _latest_green_before(repo, round_cutoff):
-    """Latest fully-green driver round per query, considering only
-    CORRECTNESS files from rounds strictly BEFORE ``round_cutoff`` — the
-    evidence that existed when the ``round_cutoff`` rotation was decided."""
-    import json
-    import re
-
-    latest_green: dict[str, int] = {}
-    for f in sorted(repo.glob("CORRECTNESS_r*.json")):
-        n = int(re.search(r"r(\d+)", f.name).group(1))
-        if n >= round_cutoff:
-            continue
-        for name, res in json.loads(f.read_text()).items():
-            if (
-                res.get("rows_match")
-                and res.get("schema_match")
-                and res.get("hash_match") in (True, None)
-                and not res.get("err")
-            ):
-                latest_green[name] = max(latest_green.get(name, 0), n)
-    return latest_green
-
-
-def test_rotation_evidence_cutoff_replays_r12():
-    """Regression for the r12 gate-ordering failure: the r12 rotation
-    legally deferred streaming_tumbling_counts (rule 6 — 8 headliners + 1
-    zero-evidence late addition + the 42-member r8-latest cohort = 51
-    claims on 50 slots), but once the driver wrote CORRECTNESS_r12.json the
-    unclamped evidence scan renewed the in-window cohort to r12, recomputed
-    the excess to 0, and flagged the deferral as illegal. Replayed here
-    from the committed (immutable) CORRECTNESS history with the r12
-    rotation facts hard-coded, so the scenario survives later rotations."""
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    r12_files = list(repo.glob("CORRECTNESS_r12.json"))
-    assert r12_files, "CORRECTNESS_r12.json must be committed (r12 verdict item 1)"
-
-    at_rotation = _latest_green_before(repo, 12)
-    after_driver = _latest_green_before(repo, 13)
-
-    # At rotation time: the deferred query's evidence was r8 (age 4, due),
-    # and bigram_lm_quality_gate (new r11) had zero driver evidence.
-    assert at_rotation["streaming_tumbling_counts"] == 8
-    assert "bigram_lm_quality_gate" not in at_rotation
-    # After the driver ran: the in-window r8 cohort renewed to r12 while the
-    # deferred query (out of window) stayed at r8 — so an unclamped scan
-    # sees due_cohort = {streaming_tumbling_counts} alone, excess 0, and
-    # wrongly reads the recorded deferral as illegal.
-    assert after_driver["streaming_tumbling_counts"] == 8
-    assert after_driver["bigram_lm_quality_gate"] == 12
-    renewed = [
-        n for n, r in after_driver.items() if r == 12 and at_rotation.get(n) == 8
-    ]
-    assert len(renewed) >= 40, (
-        "the r8 cohort's renewal to r12 is the evidence that must NOT count "
-        f"when validating the r12 rotation; saw only {len(renewed)} renewals"
-    )
-
-
-def test_out_of_window_family_reps_are_in_window():
-    """Every 'family in-window via X' representative named by an
-    _OUT_OF_WINDOW_WHY entry must actually sit in the CURRENT driver
-    window — a rotation that swaps the window but leaves an entry pointing
-    at a rotated-out representative breaks the kernel-coverage argument
-    the entry exists to make (the judge audits these by hand; r13 made it
-    mechanical after rewriting all 86 entries)."""
-    import re
-
-    from fund_data_pipeline_spark import queries as q
-
-    window = set(q._CHECKED_FIRST)
-    registered = set(q.QUERIES)
-    bad = []
-    for name, why in q._OUT_OF_WINDOW_WHY.items():
-        refs = {m.group(1) for m in re.finditer(r"via ([a-z0-9_]+)", why)}
-        refs |= {m.group(1) for m in re.finditer(r"\+ ([a-z0-9_]+)", why)}
-        for ref in refs:
-            # only names that are registered queries count as reps (the
-            # prose also mentions scripts/tests, which this skips)
-            if ref in registered and ref not in window:
-                bad.append((name, ref))
-    assert not bad, f"why-entries citing rotated-out representatives: {bad}"
-
-
-def test_window_rotation_staleness_policy():
-    """Codified rotation rule 5 (r10 VERDICT item 3): as of ROTATION_ROUND,
-    no out-of-window query's latest green driver evidence may be
-    MAX_EVIDENCE_AGE or more rounds old — it must be rotated back in before
-    its evidence expires. Rule 2: queries with ZERO driver evidence must
-    occupy the first non-headline window slots. Both sides are recomputed
-    from the committed CORRECTNESS_r*.json history so a stale rotation
-    fails the suite, not just the judge's audit."""
-    import json
-    import re
-    from pathlib import Path
-
-    from fund_data_pipeline_spark import queries as q
-
-    repo = Path(__file__).resolve().parents[1]
-    # Evidence cutoff: the rotation at ROTATION_ROUND is decided with the
-    # CORRECTNESS history through ROTATION_ROUND-1 — round ROTATION_ROUND's
-    # own artifact is produced by the driver AFTER the rotation ships, so it
-    # must not retroactively re-judge the decision (r12 verdict item 1: the
-    # unclamped scan read CORRECTNESS_r12.json, recomputed the
-    # oversubscription excess to 0, and flagged the legal rule-6 deferral
-    # the moment the r12 artifacts were committed).
-    latest_green = _latest_green_before(repo, q.ROTATION_ROUND)
-
-    # rule 5: every excluded query's evidence age must be < MAX_EVIDENCE_AGE.
-    # This round's late additions (zero evidence BY DEFINITION — registered
-    # after the rotation) are governed by rule 2 below instead; rule-6
-    # deferrals (explicitly marked, verified below) are the codified
-    # exception when the window is oversubscribed.
-    late_marker = f"new r{q.ROTATION_ROUND}"
-    defer_marker = f"rule-6 deferral at r{q.ROTATION_ROUND}"
-    deferred = sorted(
-        name for name, why in q._OUT_OF_WINDOW_WHY.items() if defer_marker in why
-    )
-    stale = {
-        name: latest_green.get(name)
-        for name, why in q._OUT_OF_WINDOW_WHY.items()
-        if late_marker not in why
-        and defer_marker not in why
-        and q.ROTATION_ROUND - latest_green.get(name, 0) >= q.MAX_EVIDENCE_AGE
-    }
-    assert not stale, (
-        f"out-of-window queries with evidence >= {q.MAX_EVIDENCE_AGE} rounds "
-        f"old at r{q.ROTATION_ROUND} (must rotate in): {stale}"
-    )
-
-    # rule 6: a deferral is legal ONLY when rules 1+2+5 oversubscribe the
-    # window — the deferral count must equal exactly the excess, and every
-    # deferred query must itself be due under rule 5 (a marker with an old
-    # round number fails the stale check above, so deferrals cannot roll
-    # forward silently).
-    headline = [n for n in q._CHECKED_FIRST if q.QUERIES[n].headline]
-    zero_evidence_due = [
-        n
-        for n in q.QUERIES
-        if n not in latest_green
-        and not (n in q._OUT_OF_WINDOW_WHY and late_marker in q._OUT_OF_WINDOW_WHY[n])
-    ]
-    due_cohort = [
-        n
-        for n in q.QUERIES
-        if n in latest_green
-        and n not in headline
-        and q.ROTATION_ROUND - latest_green[n] >= q.MAX_EVIDENCE_AGE
-    ]
-    excess = max(
-        0, len(headline) + len(zero_evidence_due) + len(due_cohort) - q.DRIVER_WINDOW
-    )
-    assert len(deferred) == excess, (
-        f"rule-6 deferrals ({deferred}) must equal the oversubscription "
-        f"excess ({excess}): {len(headline)} headliners + "
-        f"{len(zero_evidence_due)} zero-evidence + {len(due_cohort)} due "
-        f"cohort members on {q.DRIVER_WINDOW} slots"
-    )
-    not_due = [n for n in deferred if n not in due_cohort]
-    assert not not_due, f"rule-6 deferred queries that are not due: {not_due}"
-
-    # rule 2: zero-evidence queries either sit right after the headliners
-    # in the window, or carry a "new r{ROTATION_ROUND}" late-addition
-    # entry (registered after this round's rotation, first slot next
-    # rotation). A zero-evidence query parked under any OTHER entry — e.g.
-    # one still marked new from a PREVIOUS round — is a violation.
-    headline = [n for n in q._CHECKED_FIRST if q.QUERIES[n].headline]
-    never_checked = [n for n in q.QUERIES if n not in latest_green]
-    in_window_zero = sorted(
-        n
-        for n in never_checked
-        if not (n in q._OUT_OF_WINDOW_WHY and late_marker in q._OUT_OF_WINDOW_WHY[n])
-    )
-    expected_head = headline + in_window_zero
-    assert sorted(q._CHECKED_FIRST[: len(expected_head)]) == sorted(expected_head), (
-        f"window head must be headliners + zero-evidence queries (minus "
-        f"this round's late additions); got "
-        f"{q._CHECKED_FIRST[:len(expected_head)]} vs {expected_head}"
-    )
 
 
 def test_dedup_min_deterministic_survivor(spark):

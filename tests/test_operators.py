@@ -495,9 +495,10 @@ def test_connected_components_driver_path_matches_distributed(spark):
     """The r17 bounded driver-side union-find must produce the identical
     (node, cluster_id) fixpoint as both distributed phases — on a permuted
     path (labels flow against id order), with endpoint-only nodes, string
-    ids (np.unique code-point order == Spark UTF8_BINARY min), and
-    singletons — and the star loop's opportunistic collect (bound hit only
-    AFTER contraction shrinks the edge set) must agree too."""
+    ids (np.unique code-point order == Spark UTF8_BINARY min), an int src
+    with a bigint dst, and singletons — and the star loop's opportunistic
+    collect (bound hit only AFTER contraction shrinks the edge set) must
+    agree too."""
     import random
 
     from fund_data_pipeline_spark.operators import graph
@@ -563,6 +564,33 @@ def test_connected_components_driver_path_matches_distributed(spark):
         ).collect()
     }
     assert via_driver_s == via_dist_s == {"b": "Z", "x": "Z", "Z": "Z"}
+
+    # int src, bigint dst: the driver mapping takes the wider type, at the
+    # up-front collect and at the star-loop handoff (a 6-clique: 15
+    # canonical edges, over the bound of 6, contract to its 5-edge star)
+    big = 3_000_000_000
+    clique = [0, 1, 2, 3, 4, big]
+    cases = [
+        ([1, 2, big], [(1, 2), (2, big)], {}),
+        (
+            clique,
+            [(i, j) for i in clique for j in clique if i < j],
+            {"star_fallback_after": 0, "driver_collect_max_edges": 6},
+        ),
+    ]
+    for ids, pairs, kw in cases:
+        mnodes = spark.createDataFrame([(i,) for i in ids], "node long")
+        medges = spark.createDataFrame(pairs, "src int, dst long")
+        via_driver_m = sorted(
+            tuple(r) for r in graph.connected_components(mnodes, medges, **kw).collect()
+        )
+        via_dist_m = sorted(
+            tuple(r)
+            for r in graph.connected_components(
+                mnodes, medges, driver_collect_max_edges=0
+            ).collect()
+        )
+        assert via_driver_m == via_dist_m == [(i, ids[0]) for i in ids]
 
 
 def test_chunk_by_tokens_overlap_and_boundaries(spark):
@@ -844,9 +872,11 @@ def test_blocked_pair_cosine_arrow_matches_expression_form(spark):
     """The r16 cogrouped block-matmul pair-cosine kernel must emit exactly
     the pairs the blocked_self_join + HOF-dot + cosine-expression + filter
     composition emits, with bit-identical cosine doubles — across multiple
-    grid blocks (block_size=2 on a 7-member group), NULL vectors,
-    zero-norm vectors, and an exact-threshold pair (cosine == tau passes
-    >= on both forms)."""
+    grid blocks (block_size=2 on an 8-member group), NULL vectors, NULL
+    ids, NULL keys, zero-norm vectors, and an exact-threshold pair
+    (cosine == tau passes >= on both forms)."""
+    import itertools
+
     import pytest
 
     from fund_data_pipeline_spark.operators.similarity import (
@@ -866,11 +896,18 @@ def test_blocked_pair_cosine_arrow_matches_expression_form(spark):
         (8, 1, [1, 2, 3, 4]),
         (9, 1, [4, 3, 2, 1]),
         (10, 2, [11, 12, 13, 14]),  # singleton group: no pairs
+        (None, 0, [3, -5, 1000000, 7]),  # NULL id: never pairs (a.id < b.id)
+        (11, None, [1, 2, 3, 4]),  # NULL key: the equi-join never matches it
+        (12, None, [1, 2, 3, 4]),
     ]
     vecs = spark.createDataFrame(rows, "vec_id long, cell int, qe array<bigint>")
     vecs = vecs.withColumn("norm2", _dot(F.col("qe"), F.col("qe")))
 
-    for tau in (0.35, 1.0):  # tau=1.0 exercises the exact-threshold boundary
+    # tau=1.0 exercises the exact-threshold boundary; string ids exercise
+    # the kernel's NULL-id mask (a NULL long id arrives as NaN and never
+    # compares true, a NULL string id would raise inside the comparison)
+    for id_type, tau in itertools.product(("long", "string"), (0.35, 1.0)):
+        vecs = vecs.withColumn("vec_id", F.col("vec_id").cast(id_type))
         joined = blocked_self_join(vecs, ["cell"], "vec_id", 2, payload_cols=["qe", "norm2"])
         cosine = F.when(
             (F.col("anorm") > 0) & (F.col("cnorm") > 0),
@@ -897,12 +934,12 @@ def test_blocked_pair_cosine_arrow_matches_expression_form(spark):
         )
         assert [f.name for f in got_df.schema.fields] == ["cell", "vec_id_a", "vec_id_b", "cosine"]
         got = sorted(tuple(r) for r in got_df.collect())
-        assert got == want, f"tau={tau}"
+        assert got == want, f"{id_type} tau={tau}"
         if tau == 1.0:
             # exactly the planted identical pair survives — note BOTH forms
             # compute its cosine as 1.0000000000000002, not 1.0 (sqrt(n)^2
             # != n in float64); the equality above proves they agree bitwise
-            assert [(r[0], r[1], r[2]) for r in got] == [(0, 1, 6)]
+            assert [(r[0], str(r[1]), str(r[2])) for r in got] == [(0, "1", "6")]
 
     with pytest.raises(ValueError, match="reserved"):
         blocked_pair_cosine_arrow(
