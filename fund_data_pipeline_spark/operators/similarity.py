@@ -4,14 +4,14 @@ The expression-based cosine in :mod:`..queries.vectors` stays JVM-side and
 is ideal when similarity is one column among many. When the job IS the
 similarity scan (rank 100 TB of embeddings against a probe), a numpy batch
 kernel over ``mapInPandas`` wins: one BLAS-ish matrix-vector product per
-Arrow batch instead of per-element codegen, and per-batch PARTIAL top-k so
-only k rows per partition ever reach the final ordering.
+Arrow batch instead of interpreted higher-order-function dots, and a
+running PARTIAL top-k so only k rows per partition ever reach the final
+ordering (measured against the JVM form in SCALING.md r18).
 
-Correctness contract: identical quantization to the SQL/JVM path
-(round(x*1e6) as int64, exact integer dot/norms, one double division at the
-end), so the catalog query ``embedding_topk_pandas`` is value-hash-checked
-against the same DuckDB oracle as the JVM variant — the Arrow path itself
-sits under the correctness gate.
+Correctness contract: identical quantization to the SQL path (round(x*1e6)
+as int64, exact integer dot/norms, one double division at the end), so the
+headline catalog query ``embedding_topk_cosine``, which runs
+:func:`topk_cosine`, is value-hash-checked against its DuckDB oracle.
 
 Scale notes:
 - a RUNNING top-k across the partition's Arrow batches bounds the
@@ -341,6 +341,11 @@ def topk_cosine(
 ) -> DataFrame:
     """Exact top-k cosine neighbors of ``query_vec``, Arrow-batched.
 
+    Rows whose ``vec_col`` is NULL are skipped, as the SQL form skips them
+    (their norm is NULL, so ``enorm > 0`` drops them). A NULL or non-finite
+    COMPONENT raises ``ValueError`` naming the column, as ``_quant``'s ANSI
+    cast does on the JVM, instead of quantizing to an arbitrary integer.
+
     Output schema: ``(id_col, label_col, cosine)`` with the id/label
     columns keeping the INPUT's names and Spark types — previously the
     mapInPandas schema was hardcoded to (vec_id long, label int), so any
@@ -357,7 +362,10 @@ def topk_cosine(
             T.StructField("cosine", T.DoubleType(), True),
         ]
     )
-    q = _round_half_away(np.asarray(list(query_vec), dtype="float64") * 1e6)
+    q_raw = np.asarray(list(query_vec), dtype="float64")
+    if not np.isfinite(q_raw).all():
+        raise ValueError("query_vec has a NULL or non-finite component")
+    q = _round_half_away(q_raw * 1e6)
     qnorm = float(np.sqrt(float((q * q).sum())))
     if qnorm == 0.0:
         raise ValueError("query_vec has zero norm; cosine similarity is undefined")
@@ -373,7 +381,12 @@ def topk_cosine(
             # widen float32 -> float64 BEFORE scaling, exactly as Spark's
             # float->double promotion does; quantizing at single precision
             # would round differently
-            mat = _round_half_away(np.stack(pdf[vec_col].to_numpy()).astype("float64") * 1e6)
+            raw = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+            if not np.isfinite(raw).all():
+                raise ValueError(
+                    f"topk_cosine: NULL or non-finite component in column {vec_col!r}"
+                )
+            mat = _round_half_away(raw * 1e6)
             dots = mat @ q
             norms = np.sqrt((mat * mat).sum(axis=1).astype("float64"))
             # a zero-norm vector (padding/default row) has no defined cosine:
@@ -402,7 +415,7 @@ def topk_cosine(
         if best is not None:
             yield best
 
-    src = emb
+    src = emb.filter(F.col(vec_col).isNotNull())
     if exclude_vec_id is not None:
         src = src.filter(F.col(id_col) != exclude_vec_id)
     partial = src.select(id_col, label_col, vec_col).mapInPandas(kernel, out_schema)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .registry import QUERIES, register, table
+from .registry import register, table
 
 _QUERY_VEC_ID = 0
 
@@ -134,8 +134,10 @@ def _dot(a, b):
     "embedding_topk_cosine",
     headline=True,
     doc="Brute-force cosine top-20 against a fixed query vector (vec_id=0): "
-    "quantized integer dot/norms, deterministic tiebreak. One broadcast of "
-    "the query row; scan stays fully parallel.",
+    "one driver fetch of the query row, then the Arrow batch kernel "
+    "(operators.similarity.topk_cosine: quantized integer dot/norms, running "
+    "top-k per partition, deterministic tiebreak). Zero-norm and NULL "
+    "embeddings are excluded, as in the oracle; the scan stays fully parallel.",
     oracle=f"""
 WITH q AS (
   SELECT {_Q} AS qe FROM embeddings WHERE vec_id = {_QUERY_VEC_ID}
@@ -156,48 +158,13 @@ LIMIT 20
 """,
 )
 def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import topk_cosine
+
     emb = table(spark, sf_dir, "embeddings")
-    # qnorm is computed in the ONE-ROW broadcast projection, not once per
-    # candidate row — it costs the same array aggregate as the real dot
-    # product and is identical on every row (review r9)
-    q = (
-        emb.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(_quant("embedding").alias("qe"))
-        .select("qe", _dot(F.col("qe"), F.col("qe")).alias("qnorm"))
-    )
-    cand = emb.filter(F.col("vec_id") != _QUERY_VEC_ID).select(
-        "vec_id", "label", _quant("embedding").alias("qe2")
-    )
-    scored = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        "label",
-        _dot(F.col("qe"), F.col("qe2")).alias("dot"),
-        "qnorm",
-        _dot(F.col("qe2"), F.col("qe2")).alias("enorm"),
-    )
-    # zero-norm guard (review r11): under the session's ANSI default a
-    # double division by zero THROWS (DIVIDE_BY_ZERO), it does not yield
-    # NaN — a zero-quantized padding row would abort the whole query.
-    # NULL-on-zero matches the DuckDB oracle exactly (x/0 is NULL there),
-    # and NULLs rank last under every desc ordering both engines use.
-    cosine = F.when(
-        (F.col("qnorm") > 0) & (F.col("enorm") > 0),
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qnorm").cast("double")) * F.sqrt(F.col("enorm").cast("double"))),
-    )
-    # zero-norm candidates have no defined cosine — and under the session's
-    # ANSI default an unguarded 0/0 double division ABORTS the query
-    # (r11 correction of this comment's old NaN-ranking rationale).
-    # Excluded on BOTH sides (and in the Arrow kernel,
-    # operators/similarity.py), so the three variants agree (review r10:
-    # only the Arrow kernel filtered; one zero vector would have made the
-    # 'identical' variants return different top-20 sets).
-    return (
-        scored.filter(F.col("enorm") > 0)
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(20)
-    )
+    qrow = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()
+    if qrow is None:  # clear error instead of NoneType subscript
+        raise ValueError(f"query vector vec_id={_QUERY_VEC_ID} not found in {sf_dir}/embeddings")
+    return topk_cosine(emb, qrow["embedding"], k=20, exclude_vec_id=_QUERY_VEC_ID)
 
 
 @register(
@@ -400,24 +367,6 @@ def cosine_near_dup(
     )
 
 
-@register(
-    "embedding_topk_pandas",
-    doc="The same brute-force top-20 as embedding_topk_cosine, executed on "
-    "the Arrow path (operators.similarity: numpy batch kernel + partial "
-    "top-k per partition). Shares the JVM variant's oracle verbatim — the "
-    "vectorized kernel itself is under the value-hash gate.",
-    oracle=QUERIES["embedding_topk_cosine"].oracle,
-)
-def embedding_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import topk_cosine
-
-    emb = table(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()
-    if qrow is None:  # clear error instead of NoneType subscript (review r9)
-        raise ValueError(f"query vector vec_id={_QUERY_VEC_ID} not found in {sf_dir}/embeddings")
-    return topk_cosine(emb, qrow["embedding"], k=20, exclude_vec_id=_QUERY_VEC_ID)
-
-
 #: IVF defaults for the registered query (oracle generated at these values)
 N_IVF_CELLS = 16
 N_IVF_PROBE = 2
@@ -472,9 +421,10 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cell_dist_arr(cents):
     """``array<struct<dist,cid>>`` of exact integer distances to each centroid
-    literal — ``array_min(...)['cid']`` is the map-side cell assignment shared
-    by :func:`ivf_topk` and :func:`semantic_dedup`. The row's own qe·qe term
-    is constant across cells and dropped (argmin unchanged)."""
+    literal — ``array_min(...)['cid']`` is :func:`ivf_topk`'s map-side cell
+    assignment and the reference :func:`assign_cells_arrow` is tested
+    against. The row's own qe·qe term is constant across cells and dropped
+    (argmin unchanged)."""
 
     def dist_to(c):
         # Literals must be BIGINT: quantized components fit int32, but their
@@ -505,7 +455,7 @@ def ivf_topk(
 
     Centroids are deliberately tiny (that is the point of a coarse
     quantizer), so they come to the driver once — ``n_cells`` bounded rows,
-    like the single query-vector fetch in ``embedding_topk_pandas`` — and
+    like the single query-vector fetch in ``embedding_topk_cosine`` — and
     re-enter the plan as literals. Cell assignment is then
     ``array_min(array<struct<dist, cid>>)``: per-row exact integer math, no
     join, no shuffle; lexicographic struct comparison gives the same
@@ -677,9 +627,9 @@ WITH e AS (
     "semantic_dedup_cells",
     doc="SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540): "
     f"coarse-quantize every embedding to its nearest of {N_IVF_CELLS} "
-    "centroid cells (map-side argmin against literals — the IVF assignment, "
-    "zero shuffles), then mark a vector a duplicate iff some LOWER-vec_id "
-    f"vector in the SAME cell has cosine >= {SEMDEDUP_TAU}. The pair join is "
+    "centroid cells (exact integer argmin in one Arrow batch kernel, "
+    "assign_cells_arrow — zero shuffles), then mark a vector a duplicate "
+    f"iff some LOWER-vec_id vector in the SAME cell has cosine >= {SEMDEDUP_TAU}. The pair join is "
     "a per-cell equi-join, never corpus-wide all-pairs; at 100 TB the cell "
     "is the storage partition key (cells from train_ivf_codebook, count "
     "sized so a cell fits one partition) and each cell self-joins locally. "
@@ -706,20 +656,11 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup(spark, sf_dir)
 
 
-#: Widest codebook shipped as plan LITERALS (the `_cell_dist_arr` path).
-#: Past this, :func:`semantic_dedup` switches to a codebook-as-data path
-#: automatically, so the cell count is unbounded (real SemDeDup runs
-#: ~100k cells over billions of embeddings).
-MAX_LITERAL_CELLS = 4096
-
-#: Measured per-(row x cell) assignment cost on the sf10-wide fixture
-#: (200k vectors, local[32]): literal ~1.7 us at k=512 (the expression
-#: tree itself is the overhead), interpreted join ~0.45 us, Arrow matmul
-#: ~5 ns. The literal path wins only for SMALL codebooks (no extra
-#: aggregate/broadcast jobs, plans stay pure-JVM for the registered
-#: fixture-sized oracles); from this width on semantic_dedup routes
-#: through the Arrow kernel even below MAX_LITERAL_CELLS.
-ARROW_ASSIGN_MIN_CELLS = 128
+#: Widest codebook :func:`assign_cells_arrow` collects to the driver. The
+#: collect is ~``k * (dim + 1) * 8`` bytes — ~52 MB at 100k cells x 64
+#: dims, the real-SemDeDup width (Abbas et al. 2023) — and is bounded here
+#: so it can never grow with the corpus.
+MAX_CODEBOOK_CELLS = 100_000
 
 
 def cells_for_corpus(n_rows: int, target_cell_rows: int = 1024) -> int:
@@ -727,167 +668,16 @@ def cells_for_corpus(n_rows: int, target_cell_rows: int = 1024) -> int:
     keeps the expected cell population near ``target_cell_rows``, so the
     within-cell work (SemDeDup's pair join, an IVF probe scan) stays
     constant as the corpus grows — the companion of
-    :func:`lsh_bits_for_corpus` for cell-bucketed operators. UNCLAMPED
+    :func:`lsh_bits_for_corpus` for cell-bucketed operators. Unclamped
     (r15; the r14 form capped at 4096 and went quadratic past ~4M
-    vectors): up to :data:`MAX_LITERAL_CELLS` the centroids ship as plan
-    literals for the map-side argmin, past it :func:`semantic_dedup`
-    assigns cells through :func:`assign_cells_join`'s one-row codebook
-    broadcast, so the sizing can track the corpus indefinitely (~100k
-    cells at 100M rows, ~1M at 1B). ``_N_CELLS_SQL`` is the exact-integer
+    vectors); :func:`semantic_dedup` assigns cells through
+    :func:`assign_cells_arrow`, which refuses a codebook wider than
+    :data:`MAX_CODEBOOK_CELLS` (~100M rows at the default target — raise
+    ``target_cell_rows`` past that). ``_N_CELLS_SQL`` is the exact-integer
     DuckDB twin — change both together."""
     if n_rows <= target_cell_rows:
         return 1
     return max(1, round(n_rows / target_cell_rows))
-
-
-def assign_cells_join(
-    emb: DataFrame,
-    codebook: DataFrame,
-    *,
-    qe_col: str = "qe",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Centroid assignment with the codebook as DATA — the past-the-clamp
-    path :func:`cells_for_corpus` relies on (r14 verdict item 2).
-
-    ``codebook`` holds ``(cid bigint, qe array<bigint>)`` rows — any
-    number of them. They are folded into ONE row carrying
-    ``array<struct<ce_sq, ce, cid>>`` (a single ``collect_list`` aggregate
-    over k tiny rows), cross-joined back over the corpus as a one-row
-    broadcast (``BroadcastNestedLoopJoin`` of a 1-row relation — O(n), the
-    plan-gate-allowed shape), and the per-row argmin runs as ``array_min``
-    over a ``transform`` of the attached array. The distance expression
-    (``ce·ce − 2·qe·ce``, the row's own norm dropped) and the lexicographic
-    ``(dist, cid)`` tie-break are EXACTLY the literal path's
-    (:func:`_cell_dist_arr`), so cell ids are bit-identical —
-    ``tests/test_operators.py`` equivalence-checks the two paths on the
-    fixtures.
-
-    Scale: the broadcast row is ~``k * (dim + 1) * 8`` bytes — ~52 MB at
-    100k cells x 64 dims, the real-SemDeDup codebook size; executors hold
-    ONE copy via the broadcast, not one per task, and the corpus never
-    shuffles. Past broadcast size (~1M cells), use
-    :func:`assign_cells_join_sliced`: the codebook slices into B one-row
-    broadcasts, this same kernel runs once per slice in ONE corpus pass,
-    and the per-slice ``(dist, cid)`` minima reduce row-local with
-    ``least`` — still no shuffle and no corpus-wide n x k row expansion.
-
-    Throughput: higher-order functions are expression-INTERPRETED (no
-    whole-stage codegen), measured ~0.5 us per row x cell on the sf10-wide
-    fixture — fine to a few thousand cells, ~50 ms/row at 100k. For wide
-    codebooks use :func:`assign_cells_arrow` (exact numpy matmul, ~100x);
-    this form remains the zero-driver-collect, JVM-only variant and the
-    equivalence anchor both paths are tested against. (The one driver-side
-    job is a 1-row existence probe: an EMPTY codebook would otherwise
-    collect_list into an empty array, ``array_min`` would yield NULL, and
-    every vector would silently land in cell NULL — an empty drop list
-    instead of an error. Mirror :func:`assign_cells_arrow` and fail loudly;
-    r15 ADVICE.)"""
-    if codebook.select(F.lit(1)).limit(1).count() == 0:
-        raise ValueError("assign_cells_join: empty codebook")
-    packed = codebook.select(
-        F.struct(
-            _dot(F.col("qe"), F.col("qe")).alias("ce_sq"),
-            F.col("qe").cast("array<bigint>").alias("ce"),
-            F.col("cid").cast("long").alias("cid"),
-        ).alias("c")
-    ).agg(F.collect_list("c").alias("__cents"))
-    qe = F.col(qe_col)
-    dists = F.transform(
-        F.col("__cents"),
-        lambda c: F.struct(
-            (c["ce_sq"] - 2 * _dot(qe, c["ce"])).alias("dist"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return (
-        emb.crossJoin(F.broadcast(packed))
-        .withColumn(cell_col, F.array_min(dists)["cid"])
-        .drop("__cents")
-    )
-
-
-#: slice count used by semantic_dedup(wide_assignment="join_sliced") — at a
-#: true past-broadcast codebook (~1M cells) the caller sizes B so each slice
-#: stays under the broadcast bound (~B = ceil(codebook_bytes / 64 MB)); the
-#: fixed default keeps the registered fixture query genuinely multi-slice
-#: (the 16-cell fixture codebook splits 4x4).
-N_SLICES_DEFAULT = 4
-
-
-def assign_cells_join_sliced(
-    emb: DataFrame,
-    codebook: DataFrame,
-    *,
-    n_slices: int,
-    qe_col: str = "qe",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """:func:`assign_cells_join` for codebooks past a single broadcast's
-    size (~1M cells at 64 dims): the codebook slices into ``n_slices``
-    one-row packed broadcasts, the join kernel's per-slice ``(dist, cid)``
-    minimum is computed once per slice in ONE chained corpus pass (B
-    1-row ``BroadcastNestedLoopJoin``s — each O(n), the plan-gate-allowed
-    shape), and the B per-row candidates reduce ROW-LOCAL with ``least``
-    over the minima structs. ``least`` on structs compares
-    lexicographically by field order — ``(dist, cid)`` — so the global
-    argmin and its tie-break are EXACTLY :func:`_cell_dist_arr`'s, and
-    min-over-slice-minima equals the global minimum by associativity:
-    cell ids are bit-identical to both sibling kernels
-    (equivalence-tested in tests/test_operators.py). No shuffle, no
-    ``min_by`` aggregate, no corpus-wide n x B row expansion — the corpus
-    is touched once.
-
-    Slicing is ``(row_number over cid order − 1) % n_slices``: exact-
-    balanced (slice sizes differ by at most one), deterministic, and
-    never empty while ``n_slices <= k`` (``n_slices`` is clamped to the
-    codebook's row count, a k-bounded probe). The single-partition window
-    sorts k codebook rows, not the corpus — ~0.5 GB at 1M cells x 64
-    dims, driver-free and far below executor memory."""
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    k = codebook.count()  # k-bounded: the codebook is the SMALL side
-    if k == 0:
-        raise ValueError("assign_cells_join_sliced: empty codebook")
-    n_slices = min(n_slices, k)
-    if n_slices == 1:
-        return assign_cells_join(emb, codebook, qe_col=qe_col, cell_col=cell_col)
-    sliced = codebook.withColumn(
-        "__slice",
-        ((F.row_number().over(Window.orderBy("cid")) - 1) % n_slices).cast("int"),
-    )
-    qe = F.col(qe_col)
-    out = emb
-    minima = []
-    for b in range(n_slices):
-        cents_col = f"__cents_{b}"
-        packed_b = (
-            sliced.filter(F.col("__slice") == b)
-            .select(
-                F.struct(
-                    _dot(F.col("qe"), F.col("qe")).alias("ce_sq"),
-                    F.col("qe").cast("array<bigint>").alias("ce"),
-                    F.col("cid").cast("long").alias("cid"),
-                ).alias("c")
-            )
-            .agg(F.collect_list("c").alias(cents_col))
-        )
-        dists_b = F.transform(
-            F.col(cents_col),
-            lambda c: F.struct(
-                (c["ce_sq"] - 2 * _dot(qe, c["ce"])).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-        out = (
-            out.crossJoin(F.broadcast(packed_b))
-            .withColumn(f"__min_{b}", F.array_min(dists_b))
-            .drop(cents_col)
-        )
-        minima.append(F.col(f"__min_{b}"))
-    return out.withColumn(cell_col, F.least(*minima)["cid"]).drop(
-        *[f"__min_{b}" for b in range(n_slices)]
-    )
 
 
 def _arrow_exact_bound(dim: int) -> int:
@@ -910,33 +700,42 @@ def assign_cells_arrow(
     qe_col: str = "qe",
     cell_col: str = "cell",
 ) -> DataFrame:
-    """Wide-codebook centroid assignment: exact numpy matmul over Arrow
-    batches — the SemDeDup production path (~100k cells over billions of
-    vectors; Abbas et al. 2023 run k-means at this width on GPU).
+    """SemDeDup cell assignment: exact numpy matmul over Arrow batches —
+    the one assignment route at every codebook width, from the registered
+    16-cell fixture codebook to the ~100k-cell production width (Abbas et
+    al. 2023 run k-means at that width on GPU).
 
-    Same argmin semantics as :func:`_cell_dist_arr` and
-    :func:`assign_cells_join` — distance ``ce·ce − 2·qe·ce`` (row's own
-    norm dropped) with lexicographic ``(dist, cid)`` tie-break, here via
-    ``np.argmin``'s first-hit rule over a cid-sorted codebook. All three
-    paths are equivalence-tested bit-identical on the fixtures: every
-    arithmetic intermediate is an integer below 2^53 (components guarded
-    against :func:`_arrow_exact_bound` loudly), so the float64 BLAS is
-    exact regardless of summation order.
+    Same argmin semantics as the plan-literal :func:`_cell_dist_arr` and
+    the oracle's ``ROW_NUMBER() OVER (ORDER BY dist, cid)`` — distance
+    ``ce·ce − 2·qe·ce`` (row's own norm dropped) with lexicographic
+    ``(dist, cid)`` tie-break, here via ``np.argmin``'s first-hit rule over
+    a cid-sorted codebook. Equivalence-tested bit-identical to the literal
+    form on the fixtures: every arithmetic intermediate is an integer below
+    2^53 (components guarded against :func:`_arrow_exact_bound` loudly),
+    so the float64 BLAS is exact regardless of summation order.
 
     The codebook is collected ONCE — k rows, the SMALL side by
-    construction (~52 MB at 100k cells x 64 dims), the same driver-bounded
-    shape the literal path collects at <= MAX_LITERAL_CELLS — and ships to
-    executors as a SparkContext broadcast read by every Arrow batch. The
-    corpus side streams: one ``mapInPandas`` projection, no shuffle, no
-    per-row Python (vectorized ``Q @ C.T`` per batch: measured ~5 ns per
-    row x cell vs ~0.5 us interpreted — the 100x that makes 100k cells a
-    ~0.5 ms/row map, GPU-free)."""
+    construction, bounded by :data:`MAX_CODEBOOK_CELLS` (a wider codebook
+    raises instead of growing the driver collect) — and ships to executors
+    as a SparkContext broadcast read by every Arrow batch. The corpus side
+    streams: one ``mapInPandas`` projection, no shuffle, no per-row Python
+    (vectorized ``Q @ C.T`` per batch: measured ~5 ns per row x cell vs
+    ~0.5 us for an interpreted higher-order-function argmin)."""
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
-    rows = codebook.select("cid", F.col("qe").cast("array<double>").alias("qe")).collect()
+    rows = (
+        codebook.select("cid", F.col("qe").cast("array<double>").alias("qe"))
+        .limit(MAX_CODEBOOK_CELLS + 1)
+        .collect()
+    )
     if not rows:
         raise ValueError("assign_cells_arrow: empty codebook")
+    if len(rows) > MAX_CODEBOOK_CELLS:
+        raise ValueError(
+            f"assign_cells_arrow: codebook has more than {MAX_CODEBOOK_CELLS} "
+            "cells (MAX_CODEBOOK_CELLS bounds the driver collect)"
+        )
     rows.sort(key=lambda r: r["cid"])  # argmin first-hit == lowest cid on ties
     cids = np.asarray([r["cid"] for r in rows], dtype=np.int64)
     C = np.asarray([r["qe"] for r in rows], dtype=np.float64)
@@ -961,11 +760,9 @@ def assign_cells_arrow(
             if any(v is None for v in vals):
                 # corrupt upstream batch: fail LOUDLY with a usable message
                 # (matching _quant's ANSI hard-cast philosophy) instead of
-                # numpy's opaque conversion error. The JVM paths let a NULL
-                # embedding ride with a meaningless cell and it can never
-                # pair (NULL norm fails the cosine guard); either way it
-                # contributes nothing — but data this dirty should stop a
-                # production assignment, not limp through it.
+                # numpy's opaque conversion error. semantic_dedup drops NULL
+                # embeddings before calling here (they can never pair), so
+                # only a direct caller's dirty batch reaches this.
                 raise ValueError("assign_cells_arrow: NULL embedding in batch")
             Q = np.asarray(vals, dtype=np.float64)
             if np.abs(Q).max() >= bound:
@@ -987,9 +784,7 @@ def semantic_dedup(
     *,
     n_cells: int = N_IVF_CELLS,
     threshold: float = SEMDEDUP_TAU,
-    centroids: Sequence[tuple[int, Sequence[int]]] | None = None,
     codebook: DataFrame | None = None,
-    wide_assignment: str = "arrow",
     block_size: int = 4096,
     restrict_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -999,28 +794,18 @@ def semantic_dedup(
     lower-vec_id near-duplicate (quantized cosine >= ``threshold``) in its
     cell — with its cell, lower-id dup count, best cosine, and the smallest
     witnessing vec_id. The keep set is the anti-join of the corpus against
-    this result. Centroids default to the deterministic first-``n_cells``
-    codebook (matching the registered oracle); pass
-    ``train_ivf_codebook(...)`` output as ``centroids`` for a corpus-shaped
-    codebook — the plan is identical, only the literals change. Size
-    ``n_cells`` with :func:`cells_for_corpus` at real corpus sizes.
+    this result. The codebook defaults to the deterministic first-``n_cells``
+    vectors (matching the registered oracle); pass a ``codebook`` DataFrame
+    of ``(cid bigint, qe array<bigint>)`` rows — e.g.
+    :func:`train_codebook_distributed` output — for a corpus-shaped one.
+    Size ``n_cells`` with :func:`cells_for_corpus` at real corpus sizes.
 
-    From :data:`ARROW_ASSIGN_MIN_CELLS` cells up (the measured literal/
-    data-path crossover) the default first-n centroid assignment switches
-    AUTOMATICALLY from plan literals to a codebook-as-data path with
-    bit-identical cell ids, and the cell count is UNBOUNDED (r14 verdict
-    item 2 — the old 4096-literal clamp made SemDeDup quadratic past ~4M
-    vectors): ``wide_assignment="arrow"`` (default) runs
-    :func:`assign_cells_arrow`'s exact-matmul batch kernel, ``"join"``
-    runs :func:`assign_cells_join`'s zero-collect one-row broadcast, and
-    ``"join_sliced"`` runs :func:`assign_cells_join_sliced`'s
-    past-broadcast-size B-slice form (:data:`N_SLICES_DEFAULT` slices). A
-    ``codebook`` DataFrame of ``(cid, qe)`` rows — e.g. a trained k-means
-    codebook of any width — always takes the wide path; an explicit
-    ``centroids`` LIST stays literal up to :data:`MAX_LITERAL_CELLS`
-    (the caller chose literals; plans of the registered fixture-sized
-    oracles stay pure-JVM). ``centroids`` and ``codebook`` are mutually
-    exclusive.
+    Cells are assigned by :func:`assign_cells_arrow` at every width
+    (SCALING.md r18: the Arrow kernel beat the plan-literal and
+    broadcast-join routes from the 16-cell fixture codebook up). NULL
+    embeddings are dropped before the assignment: their norm is NULL, so
+    they can never pair or witness — the oracle's cosine is NULL for them
+    too.
 
     ``restrict_ids`` (one ``vec_id`` column) limits the dedup to a subset
     of the corpus — the pipeline-composition hook: a staged dedup
@@ -1045,55 +830,25 @@ def semantic_dedup(
         blocked_pair_cosine_arrow,
     )
 
-    if centroids is not None and codebook is not None:
-        raise ValueError("semantic_dedup: pass centroids OR codebook, not both")
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", _quant("embedding").alias("qe"))
-    if codebook is None and centroids is None and n_cells >= ARROW_ASSIGN_MIN_CELLS:
-        # medium and wide first-n codebooks stay distributed — no collect
-        # at any width; the assignment runs data-side (arrow/join below)
-        codebook = emb.filter(F.col("vec_id") < n_cells).select(
-            F.col("vec_id").alias("cid"), "qe"
-        )
-    cents = None
+    src = table(spark, sf_dir, "embeddings")
     if codebook is None:
-        if centroids is not None:
-            cents = [{"cid": int(cid), "qe": list(qe)} for cid, qe in centroids]
-            if len(cents) > MAX_LITERAL_CELLS:
-                codebook = spark.createDataFrame(
-                    [(c["cid"], c["qe"]) for c in cents], "cid long, qe array<bigint>"
-                )
-                cents = None
-        else:
-            cents = (
-                emb.filter(F.col("vec_id") < n_cells)
-                .select(F.col("vec_id").alias("cid"), "qe")
-                .collect()
-            )
+        codebook = src.filter(F.col("vec_id") < n_cells).select(
+            F.col("vec_id").alias("cid"), _quant("embedding").alias("qe")
+        )
+    # filter the RAW column: a NULL test on the quantized one is pushed
+    # below the projection and quantizes every row a second time
+    emb = src.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", _quant("embedding").alias("qe")
+    )
     if restrict_ids is not None:
         emb = emb.join(restrict_ids.select("vec_id"), "vec_id", "semi")
+    assigned = assign_cells_arrow(emb, codebook)
     # self-dot once per ROW, carried as pair payload: the pair expression
     # previously recomputed both sides' 64-term self-dots for EVERY pair —
     # at ~1024-row cells the pair relation is ~512x the row relation, so
     # two of the three per-pair dot products were redundant work (review
     # r13, measured ~2.4x on the wide-fixture scaled sweep). Same integer
     # values, so cosine doubles — and the oracle hash — are unchanged.
-    if cents is not None:
-        assigned = emb.withColumn("cell", F.array_min(_cell_dist_arr(cents))["cid"])
-    elif wide_assignment == "join":
-        assigned = assign_cells_join(emb, codebook)
-    elif wide_assignment == "join_sliced":
-        # past-broadcast-size form (r16): B one-row broadcasts, one chained
-        # corpus pass, row-local least over per-slice minima — bit-identical
-        # cell ids. N_SLICES_DEFAULT keeps fixture codebooks multi-slice so
-        # the registered query actually exercises the slicing.
-        assigned = assign_cells_join_sliced(emb, codebook, n_slices=N_SLICES_DEFAULT)
-    elif wide_assignment == "arrow":
-        assigned = assign_cells_arrow(emb, codebook)
-    else:
-        raise ValueError(
-            "wide_assignment must be 'arrow', 'join' or 'join_sliced', "
-            f"got {wide_assignment!r}"
-        )
     cells = assigned.withColumn("norm2", _dot(F.col("qe"), F.col("qe")))
     # a (lower id) is the witness side, b the candidate-duplicate side.
     # The within-cell pair stage runs as the cogrouped block-matmul kernel
@@ -1150,11 +905,11 @@ _N_CELLS_SQL = """
 @register(
     "semantic_dedup_scaled",
     doc="The corpus-sized PRODUCTION form of semantic_dedup_cells: identical "
-    "SemDeDup kernel (deterministic first-k codebook, map-side argmin cell "
+    "SemDeDup kernel (deterministic first-k codebook, Arrow argmin cell "
     "assignment, per-cell lower-id pair join via the grid-blocked self-join) "
     "but with the cell count SIZED BY THE CORPUS — "
     "cells_for_corpus(count(embeddings)), ~1024 expected rows/cell — instead "
-    f"of the fixed {N_IVF_CELLS}-cell literal. The fixed form's pair mass is "
+    f"of the fixed {N_IVF_CELLS}-cell codebook. The fixed form's pair mass is "
     "n^2/32 regardless of cluster structure (measured p=1.44 on the wide "
     "fixture, SCALING.md r13); this form's is n*512 — linear by "
     "construction, measured p=0.24 through sf10-wide (433.1 s, 200k "
@@ -1237,12 +992,11 @@ def train_codebook_distributed(
     dead-center treatment; it can re-acquire members later) so the
     codebook width stays exactly ``k``. Returned as a ``(cid, qe)``
     DataFrame in precisely the shape ``semantic_dedup(codebook=...)`` and
-    :func:`assign_cells_join`/:func:`assign_cells_arrow` consume.
+    :func:`assign_cells_arrow` consume.
 
     Scale: per iteration one Arrow scan + one k x dims-row aggregate; the
-    codebook never exceeds the assignment kernels' broadcast bound
-    (~52 MB at 100k cells), and nothing is ever corpus-sized on the
-    driver."""
+    codebook is bounded by :data:`MAX_CODEBOOK_CELLS` (~52 MB at 100k
+    cells), and nothing is ever corpus-sized on the driver."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if iters < 1:
@@ -1253,7 +1007,7 @@ def train_codebook_distributed(
     # Loud-failure contract (r15 ADVICE): with fewer than k corpus rows the
     # TakeOrdered just yields all rows and the documented "codebook width
     # stays exactly k" promise would silently shrink — downstream
-    # assign_cells_* would quietly use a narrower codebook. The probe is
+    # assign_cells_arrow would quietly use a narrower codebook. The probe is
     # k-bounded (the init sample, never the corpus).
     n_init = init.count()
     if n_init < k:
@@ -1305,64 +1059,6 @@ def train_codebook_distributed(
             .localCheckpoint(eager=True)
         )
     return cb
-
-
-@register(
-    "semantic_dedup_codebook_join",
-    doc="The SemDeDup drop list computed through the codebook-as-DATA "
-    "JOIN assignment path (assign_cells_join: one-row packed-codebook "
-    "broadcast + higher-order-function argmin, zero driver collect) with "
-    "the same first-16 codebook as semantic_dedup_cells — shares that "
-    "query's oracle verbatim, so the r15 uncapped-assignment kernel "
-    "itself sits under the value-hash gate, not just the pytest "
-    "equivalence test. This is the path semantic_dedup takes for "
-    "codebooks wider than MAX_LITERAL_CELLS when a pure-JVM plan is "
-    "required.",
-    oracle=QUERIES["semantic_dedup_cells"].oracle,
-)
-def semantic_dedup_codebook_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", _quant("embedding").alias("qe"))
-    cb = emb.filter(F.col("vec_id") < N_IVF_CELLS).select(F.col("vec_id").alias("cid"), "qe")
-    return semantic_dedup(spark, sf_dir, codebook=cb, wide_assignment="join")
-
-
-@register(
-    "semantic_dedup_codebook_arrow",
-    doc="The SemDeDup drop list computed through the Arrow assignment "
-    "kernel (assign_cells_arrow: k-bounded codebook broadcast + exact "
-    "float64 matmul per batch — every intermediate an integer below "
-    "2^53, lowest-cid ties preserved) with the same first-16 codebook as "
-    "semantic_dedup_cells; shares that oracle verbatim. This is "
-    "semantic_dedup's default assignment from ARROW_ASSIGN_MIN_CELLS "
-    "cells up — the ~100k-cell production SemDeDup path — so its exact "
-    "arithmetic is hash-checked cross-engine, not just numpy-replayed.",
-    oracle=QUERIES["semantic_dedup_cells"].oracle,
-)
-def semantic_dedup_codebook_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", _quant("embedding").alias("qe"))
-    cb = emb.filter(F.col("vec_id") < N_IVF_CELLS).select(F.col("vec_id").alias("cid"), "qe")
-    return semantic_dedup(spark, sf_dir, codebook=cb, wide_assignment="arrow")
-
-
-@register(
-    "semantic_dedup_codebook_sliced",
-    doc="The SemDeDup drop list computed through the past-broadcast-size "
-    "SLICED assignment path (r16; assign_cells_join_sliced: the codebook "
-    "splits into N_SLICES_DEFAULT one-row packed broadcasts, the join "
-    "kernel runs once per slice in ONE chained corpus pass, and the "
-    "per-slice (dist, cid) minima reduce row-locally with least — the "
-    "~1M-cell form where a single packed codebook row exceeds the "
-    "broadcast bound) with the same first-16 codebook as "
-    "semantic_dedup_cells; shares that oracle verbatim, so the slicing "
-    "and its cross-slice lowest-cid tie-break sit under the value-hash "
-    "gate, not just the pytest equivalence test. The 16-cell fixture "
-    "codebook splits 4x4, so every slice is genuinely exercised.",
-    oracle=QUERIES["semantic_dedup_cells"].oracle,
-)
-def semantic_dedup_codebook_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", _quant("embedding").alias("qe"))
-    cb = emb.filter(F.col("vec_id") < N_IVF_CELLS).select(F.col("vec_id").alias("cid"), "qe")
-    return semantic_dedup(spark, sf_dir, codebook=cb, wide_assignment="join_sliced")
 
 
 #: reduced dimensionality for the random-projection query

@@ -1050,119 +1050,65 @@ def test_semantic_dedup_drop_rule_and_trained_codebook(spark, sf_dir):
     }
     assert {r["vec_id"] for r in dropped} == expect
 
-    codebook = train_ivf_codebook(spark, sf_dir, seed=7)
-    trained = semantic_dedup(spark, sf_dir, centroids=codebook).collect()
+    codebook = spark.createDataFrame(
+        train_ivf_codebook(spark, sf_dir, seed=7), "cid long, qe array<bigint>"
+    )
+    trained = semantic_dedup(spark, sf_dir, codebook=codebook).collect()
     for r in trained:
         assert r["witness_id"] < r["vec_id"]
         assert r["best_cosine"] >= SEMDEDUP_TAU
 
 
-def test_assign_cells_join_matches_literal_path(spark, sf_dir, monkeypatch):
-    """r14 verdict item 2 (the one named scale-killer): centroid assignment
-    with the codebook as DATA (one-row broadcast + transform/array_min)
-    must produce bit-identical cell ids and drop lists as the plan-literal
-    path at <= MAX_LITERAL_CELLS, and semantic_dedup must auto-switch to it
-    past the clamp — with the first-n codebook staying distributed (no
-    driver collect at any width)."""
-    import contextlib
-    import io
-
+def test_assign_cells_arrow_matches_literal_path(spark, sf_dir, monkeypatch):
+    """semantic_dedup's one cell-assignment route, the Arrow matmul kernel,
+    must give bit-identical cell ids to the plan-literal ``array_min``
+    reference (the oracle's (dist, cid) argmin) — including a tie between
+    two identical centroids, which must resolve to the lowest cid — and
+    must fail loudly on a NULL embedding, an empty codebook, and a codebook
+    wider than the driver-collect bound."""
+    from fund_data_pipeline_spark.queries import vectors
     from fund_data_pipeline_spark.queries.registry import table
     from fund_data_pipeline_spark.queries.vectors import (
-        MAX_LITERAL_CELLS,
         _cell_dist_arr,
         _quant,
         assign_cells_arrow,
-        assign_cells_join,
         semantic_dedup,
     )
+
+    def cells(df):
+        return {r["vec_id"]: r["cell"] for r in df.collect()}
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _quant("embedding").alias("qe")
     )
-    for k in (1, 16, 64):
-        cb = emb.filter(F.col("vec_id") < k).select(F.col("vec_id").alias("cid"), "qe")
-        lit = {
-            r["vec_id"]: r["cell"]
-            for r in emb.withColumn(
-                "cell", F.array_min(_cell_dist_arr(cb.collect()))["cid"]
-            ).collect()
-        }
-        joined = {r["vec_id"]: r["cell"] for r in assign_cells_join(emb, cb).collect()}
-        arrow = {r["vec_id"]: r["cell"] for r in assign_cells_arrow(emb, cb).collect()}
-        assert joined == lit, f"join cell assignment diverges at k={k}"
-        assert arrow == lit, f"arrow cell assignment diverges at k={k}"
-
-    # whole-operator equivalence: the same first-16 codebook through the
-    # literal path (default) and both wide paths must yield the IDENTICAL
-    # drop list
-    cb16 = emb.filter(F.col("vec_id") < 16).select(F.col("vec_id").alias("cid"), "qe")
-    lit_drops = sorted(map(tuple, semantic_dedup(spark, sf_dir, n_cells=16).collect()))
-    for wa in ("arrow", "join", "join_sliced"):
-        wide_drops = sorted(
-            map(
-                tuple,
-                semantic_dedup(
-                    spark, sf_dir, codebook=cb16, wide_assignment=wa
-                ).collect(),
-            )
-        )
-        assert lit_drops == wide_drops and lit_drops, wa
-    with pytest.raises(ValueError, match="wide_assignment"):
-        semantic_dedup(spark, sf_dir, codebook=cb16, wide_assignment="nope")
-
-    # auto-switch past the clamp: the plan carries the one-row packed
-    # codebook broadcast (the gate-allowed BNLJ shape), not 4097 literals.
-    # blocked_self_join eagerly localCheckpoints (lineage truncates to a
-    # Scan ExistingRDD), so no-op it for the plan assertion, as the
-    # catalog-wide hygiene gate does
-    from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-    with monkeypatch.context() as mp:
-        mp.setattr(_DF, "localCheckpoint", lambda self, eager=True: self)
-
-        def plan_of(df):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            return buf.getvalue()
-
-        plan = plan_of(
-            semantic_dedup(
-                spark, sf_dir, n_cells=MAX_LITERAL_CELLS + 1, wide_assignment="join"
-            )
-        )
-        assert "BroadcastNestedLoopJoin" in plan
-        plan = plan_of(semantic_dedup(spark, sf_dir, n_cells=MAX_LITERAL_CELLS + 1))
-        assert "MapInPandas" in plan  # arrow kernel is the wide default
-        assert "BatchEvalPython" not in plan  # never row-at-a-time
-    wide = semantic_dedup(spark, sf_dir, n_cells=MAX_LITERAL_CELLS + 1)
-    for r in wide.collect():  # invariants still hold on the wide layout
-        assert r["witness_id"] < r["vec_id"]
-
-    # an explicit centroid LIST past the clamp routes through
-    # createDataFrame into the same join path as the codebook-DataFrame form
-    wide_list = [(int(r["cid"]), list(r["qe"])) for r in cb16.collect()]
-    wide_list += [
-        (MAX_LITERAL_CELLS + 1 + i, wide_list[i % 16][1]) for i in range(MAX_LITERAL_CELLS)
+    cases = [
+        (emb, emb.filter(F.col("vec_id") < k).select(F.col("vec_id").alias("cid"), "qe"))
+        for k in (1, 16, 64)
     ]
-    via_list = sorted(
-        map(tuple, semantic_dedup(spark, sf_dir, centroids=wide_list).collect())
+    # two IDENTICAL centroids, the higher cid listed first: every vector
+    # must resolve to the lowest cid, 0, as the oracle's ORDER BY dist, cid
+    dup_cb = spark.createDataFrame(
+        [(1, [5, 5, 5, 5]), (0, [5, 5, 5, 5])], "cid long, qe array<bigint>"
     )
-    cb_dup = spark.createDataFrame(wide_list, "cid long, qe array<bigint>")
-    via_df = sorted(
-        map(tuple, semantic_dedup(spark, sf_dir, codebook=cb_dup).collect())
+    vecs = spark.createDataFrame(
+        [(0, [1, 2, 3, 4]), (1, [9, 9, 9, 9])], "vec_id long, qe array<bigint>"
     )
-    # duplicated centroid vectors lose every (dist, cid) tie to the original
-    # cid, so the drop list equals the 16-cell one — on both join forms
-    assert via_list == via_df == lit_drops
+    cases.append((vecs, dup_cb))
+    for vs, cb in cases:
+        lit = cells(vs.withColumn("cell", F.array_min(_cell_dist_arr(cb.collect()))["cid"]))
+        arrow = cells(assign_cells_arrow(vs, cb))
+        assert arrow == lit, f"arrow cell assignment diverges at k={cb.count()}"
+    assert set(arrow.values()) == {0}
 
-    with pytest.raises(ValueError, match="not both"):
-        semantic_dedup(spark, sf_dir, centroids=wide_list, codebook=cb16)
+    # whole operator: the first-16 default and the same codebook passed as
+    # a DataFrame yield the IDENTICAL drop list
+    cb16 = cases[1][1]
+    default_drops = sorted(map(tuple, semantic_dedup(spark, sf_dir, n_cells=16).collect()))
+    df_drops = sorted(map(tuple, semantic_dedup(spark, sf_dir, codebook=cb16).collect()))
+    assert default_drops == df_drops and default_drops
 
-    # dirty-data contract (review r15): a NULL embedding fails the Arrow
-    # kernel LOUDLY with a usable message (the JVM paths let it ride with a
-    # meaningless cell, where the NULL norm keeps it out of every pair)
+    # dirty-data contract: a NULL embedding fails the kernel
+    # LOUDLY with a usable message, and an empty codebook is refused
     dirty = spark.createDataFrame(
         [(0, [1] * 4), (1, None)], "vec_id long, qe array<bigint>"
     )
@@ -1171,65 +1117,14 @@ def test_assign_cells_join_matches_literal_path(spark, sf_dir, monkeypatch):
         assign_cells_arrow(dirty, cb4).collect()
     with pytest.raises(ValueError, match="empty codebook"):
         assign_cells_arrow(dirty, cb4.filter(F.col("cid") < 0))
-    # r15 ADVICE: the JOIN path must mirror that guard — an empty codebook
-    # would otherwise collect_list an empty array, array_min yields NULL,
-    # and every vector silently lands in cell NULL (an empty drop list
-    # instead of an error)
-    from fund_data_pipeline_spark.queries.vectors import assign_cells_join
 
-    with pytest.raises(ValueError, match="empty codebook"):
-        assign_cells_join(dirty, cb4.filter(F.col("cid") < 0))
-
-
-def test_assign_cells_join_sliced_matches_unsliced(spark, sf_dir):
-    """r15 verdict item 5: the past-broadcast-size codebook-slicing path
-    (B one-row broadcasts, one chained corpus pass, row-local least over
-    per-slice (dist, cid) minima) must produce bit-identical cell ids to
-    the single-broadcast join and Arrow kernels — including ties, which
-    must resolve to the lowest cid GLOBALLY, not per-slice. Also pins the
-    clamp (n_slices > k degrades gracefully) and the empty/invalid
-    guards."""
-    from fund_data_pipeline_spark.queries.registry import table
-    from fund_data_pipeline_spark.queries.vectors import (
-        _quant,
-        assign_cells_arrow,
-        assign_cells_join,
-        assign_cells_join_sliced,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quant("embedding").alias("qe")
-    )
-    cb = emb.filter(F.col("vec_id") < 64).select(F.col("vec_id").alias("cid"), "qe")
-    base = {r["vec_id"]: r["cell"] for r in assign_cells_join(emb, cb).collect()}
-    arrow = {r["vec_id"]: r["cell"] for r in assign_cells_arrow(emb, cb).collect()}
-    assert base == arrow
-    # B=1 routes to the unsliced kernel; B=3 (uneven slices), B=64 (one
-    # cell per slice), B=100 (clamped to k=64) all bit-identical
-    for b in (1, 3, 64, 100):
-        got = {
-            r["vec_id"]: r["cell"]
-            for r in assign_cells_join_sliced(emb, cb, n_slices=b).collect()
-        }
-        assert got == base, f"sliced assignment diverges at n_slices={b}"
-
-    # tie-break across slice boundaries: two IDENTICAL centroids land in
-    # different slices (row_number order puts cid 0 in slice 0, cid 1 in
-    # slice 1); every vector must resolve to the GLOBAL lowest cid, 0
-    dup_cb = spark.createDataFrame(
-        [(0, [5, 5, 5, 5]), (1, [5, 5, 5, 5])], "cid long, qe array<bigint>"
-    )
-    vecs = spark.createDataFrame(
-        [(0, [1, 2, 3, 4]), (1, [9, 9, 9, 9])], "vec_id long, qe array<bigint>"
-    )
-    tied = assign_cells_join_sliced(vecs, dup_cb, n_slices=2)
-    assert {r["cell"] for r in tied.collect()} == {0}
-
-    with pytest.raises(ValueError, match="empty codebook"):
-        assign_cells_join_sliced(vecs, dup_cb.filter(F.col("cid") < 0), n_slices=2)
-    with pytest.raises(ValueError, match="n_slices"):
-        assign_cells_join_sliced(vecs, dup_cb, n_slices=0)
-
+    # the driver collect is bounded: a codebook one cell past the bound is
+    # refused before any centroid reaches the kernel; at the bound it runs
+    monkeypatch.setattr(vectors, "MAX_CODEBOOK_CELLS", 2)
+    cb3 = emb.filter(F.col("vec_id") < 3).select(F.col("vec_id").alias("cid"), "qe")
+    with pytest.raises(ValueError, match="more than 2 cells"):
+        assign_cells_arrow(emb, cb3)
+    assert set(cells(assign_cells_arrow(vecs, dup_cb)).values()) == {0}
 
 
 def test_train_codebook_distributed_recovers_planted_blobs(spark):
@@ -1334,13 +1229,14 @@ def test_semantic_dedup_hot_cell_is_skew_bounded_with_identical_drops(spark, sf_
     )
     from fund_data_pipeline_spark.queries.registry import table
 
-    one_cell = [(0, [0] * EMB_DIM)]  # every vector maps to cell 0
+    # every vector maps to cell 0
+    one_cell = spark.createDataFrame([(0, [0] * EMB_DIM)], "cid long, qe array<bigint>")
 
     def drops(block_size):
         return {
             (r.vec_id, r.n_dups, round(r.best_cosine, 12), r.witness_id)
             for r in semantic_dedup(
-                spark, sf_dir, centroids=one_cell, threshold=0.3,
+                spark, sf_dir, codebook=one_cell, threshold=0.3,
                 block_size=block_size,
             ).collect()
         }
@@ -1359,8 +1255,8 @@ def test_semantic_dedup_hot_cell_is_skew_bounded_with_identical_drops(spark, sf_
     assert max_left <= 7 and max_right <= 7
 
     # the sizing helper mirrors lsh_bits_for_corpus: constant expected cell
-    # population, UNCLAMPED (r15 — past MAX_LITERAL_CELLS semantic_dedup
-    # switches to the join assignment instead of capping the codebook)
+    # population, UNCLAMPED (r15 — the codebook is bounded only by
+    # assign_cells_arrow's MAX_CODEBOOK_CELLS driver-collect guard)
     assert cells_for_corpus(500) == 1
     assert cells_for_corpus(1024 * 100) == 100
     assert cells_for_corpus(1024 * 100_000) == 100_000
@@ -1819,13 +1715,24 @@ def test_topk_cosine_excludes_zero_norm_vectors(spark):
         (0, [1.0, 0.0], 0),
         (1, [0.0, 0.0], 0),  # zero-norm: must never appear in results
         (2, [0.5, 0.5], 0),
+        (3, None, 0),  # NULL embedding: skipped, as the SQL form skips it
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    schema = "vec_id long, embedding array<float>, label int"
+    emb = spark.createDataFrame(rows, schema)
     got = [r.vec_id for r in topk_cosine(emb, [1.0, 0.0], k=3).collect()]
-    assert got == [0, 2]  # ranked by cosine, zero vector absent
+    assert got == [0, 2]  # ranked by cosine, zero and NULL vectors absent
 
     with pytest.raises(ValueError, match="zero norm"):
         topk_cosine(emb, [0.0, 0.0], k=3)
+    with pytest.raises(ValueError, match="non-finite"):
+        topk_cosine(emb, [1.0, float("nan")], k=3)
+
+    # a NULL or NaN COMPONENT would quantize to an arbitrary int64: it must
+    # fail loudly and name the column instead
+    for bad in ([float("nan"), 1.0], [None, 1.0]):
+        dirty = spark.createDataFrame(rows[:3] + [(4, bad, 0)], schema)
+        with pytest.raises(Exception, match="non-finite component in column 'embedding'"):
+            topk_cosine(dirty, [1.0, 0.0], k=3).collect()
 
 
 def test_asof_join_null_by_keys_never_match(spark):
@@ -2364,7 +2271,9 @@ def test_vector_queries_survive_zero_norm_embeddings(spark, tmp_path):
     r10 enorm > 0 guard; the ANN/near-dup/SemDeDup variants crashed).
     Each guarded query must also still hash-match its DuckDB oracle on the
     doctored corpus (DuckDB yields NULL for x/0, so NULL-on-zero is the
-    parity-correct form)."""
+    parity-correct form). The corpus also carries a NULL embedding: its
+    norm is NULL, so no oracle pairs it or ranks it above a real vector,
+    and the Arrow top-k and SemDeDup kernels are oracle-checked with one."""
     import os
     import random
 
@@ -2383,12 +2292,13 @@ def test_vector_queries_survive_zero_norm_embeddings(spark, tmp_path):
     rng = random.Random(5)
     vecs = [[rng.uniform(-1.0, 1.0) for _ in range(64)] for _ in range(29)]
     vecs.append([0.0] * 64)  # the zero-norm padding row
+    vecs.append(None)  # a NULL embedding
     pq.write_table(
         pa.table(
             {
-                "vec_id": pa.array(range(30), pa.int64()),
+                "vec_id": pa.array(range(31), pa.int64()),
                 "embedding": pa.array(vecs, pa.list_(pa.float32())),
-                "label": pa.array([i % 3 for i in range(30)], pa.int32()),
+                "label": pa.array([i % 3 for i in range(31)], pa.int32()),
             }
         ),
         d / "embeddings.parquet",

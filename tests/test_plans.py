@@ -56,7 +56,6 @@ def test_regional_supplier_volume_no_cartesian(spark, sf_dir):
         "pricing_summary",
         "text_statistics",
         "exact_dedup",
-        "embedding_topk_cosine",
         "doc_chunking",
         "language_rebalance_mixture",
     ],
@@ -68,6 +67,19 @@ def test_headline_hot_paths_stay_jvm_side(spark, sf_dir, name):
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert node not in plan
     assert "Scan parquet" in plan  # columnar source, not an RDD conversion
+
+
+def test_embedding_topk_cosine_is_one_arrow_pass(spark, sf_dir):
+    """The brute-force top-k headliner runs the Arrow kernel once over the
+    embedding scan — no nested-loop join against the query row, no second
+    Python stage — and only the partial top-k rows reach the final order."""
+    df = QUERIES["embedding_topk_cosine"].spark(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert plan.index("MapInPandas") < plan.index("FileScan parquet")
+    assert "TakeOrderedAndProject" in plan
+    for node in ("BroadcastNestedLoopJoin", "BatchEvalPython", "ArrowEvalPython"):
+        assert node not in plan
 
 
 def test_asof_join_is_single_pass(spark, sf_dir):
@@ -252,7 +264,6 @@ def test_scd2_history_no_cartesian(spark, sf_dir):
 #: shows up here must be justified or fixed.
 _ONE_ROW_BNLJ_OK = {
     "conversion_funnel",
-    "embedding_topk_cosine",
     "key_skew_profile",
     # r9: each crossJoins ONE aggregate row of global stats (N/total_dl/df,
     # total/V, n_total) broadcast back over the scan — O(n), not a pair blowup
@@ -276,15 +287,6 @@ _ONE_ROW_BNLJ_OK = {
     # |suppliers|-sized rev relation — replaces an unpartitioned window
     # that serialized every supplier through a single task
     "top_supplier_revenue",
-    # r15: crossJoins the ONE-row packed-codebook aggregate
-    # (collect_list of k centroid structs folded to a single row) over the
-    # embedding scan — O(n), the assign_cells_join kernel's documented
-    # shape; the arrow twin has no BNLJ (mapInPandas)
-    "semantic_dedup_codebook_join",
-    # r16: the sliced form chains N_SLICES_DEFAULT one-row packed-codebook
-    # broadcasts (one per slice) — each O(n), reduced row-locally; same
-    # 1-row-build shape as the unsliced join kernel, B times
-    "semantic_dedup_codebook_sliced",
 }
 
 
