@@ -19,11 +19,14 @@ src/05_db_synchronization/04_holdings_sync/06_holdings_sync_orchestrator.py:14-2
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import conform, dedup, hashing, merge, parse, validate
 from ..schemas import ALLOCATIONS, ALLOCATIONS_KEY, FUND_HOLDINGS, FUND_HOLDINGS_KEY
+from .orchestrator import _concurrently
 
 #: FT summary rows dropped from holdings (00_holdings_data_cleaner.py:126-127)
 SUMMARY_ROW_MARKER = "per cent of portfolio"
@@ -82,22 +85,23 @@ def run(
     allocations_raw: dict[str, DataFrame],
     warehouse: str,
 ) -> dict[str, merge.MergeStats]:
-    """Holdings + N allocation kinds, each one hash-guarded merge (H8).
+    """Holdings + N allocation kinds, each one hash-guarded merge (H8);
+    the two merges write disjoint tables and run concurrently.
 
     ``holdings_raw`` may be ``None`` (holdings feed delivered nothing) —
     the allocation feeds are independent and still load (review r9)."""
-    stats: dict[str, merge.MergeStats] = {}
+    merges = {}
     if holdings_raw is not None:
-        stats["stg_fund_holdings"] = merge.merge_upsert(
-            spark, f"{warehouse}/stg_fund_holdings", clean_holdings(holdings_raw),
-            FUND_HOLDINGS_KEY,
+        merges["stg_fund_holdings"] = functools.partial(
+            merge.merge_upsert, spark, f"{warehouse}/stg_fund_holdings",
+            clean_holdings(holdings_raw), FUND_HOLDINGS_KEY,
         )
     alloc_batches = [clean_allocations(df, kind) for kind, df in allocations_raw.items()]
     if alloc_batches:
         batch = alloc_batches[0]
         for b in alloc_batches[1:]:
             batch = batch.unionByName(b)
-        stats["stg_allocations"] = merge.merge_upsert(
-            spark, f"{warehouse}/stg_allocations", batch, ALLOCATIONS_KEY
+        merges["stg_allocations"] = functools.partial(
+            merge.merge_upsert, spark, f"{warehouse}/stg_allocations", batch, ALLOCATIONS_KEY
         )
-    return stats
+    return dict(zip(merges, _concurrently(list(merges.values()))))

@@ -17,28 +17,40 @@ module rebuilds both on Spark terms:
   analog: per-stage status, duration, and per-table insert/update/
   unchanged counts, plus run totals.
 
-:func:`default_stages` wires the standard chain — master_sync →
-daily_nav (+ optional repair) → static_details → holdings — off a
-landing-zone directory layout; a stage whose landing directory is absent
-is reported as skipped rather than failing the run (a daily run does not
+:func:`default_stages` wires the standard chain off a landing-zone
+directory layout: master_sync alone first (its failure skips the rest),
+then daily_nav, static_details and holdings as one concurrent group, then
+the optional NAV repair. A stage whose landing directory is absent is a
+no-op reported ok rather than failing the run (a daily run does not
 break because one feed delivered nothing — the reference logs and moves
 on only for empty feeds, but hard-fails on errors, and so does this).
+
+Concurrency has one path, :func:`_concurrently`: a concurrent group in
+:func:`run_all` and the multi-table merges inside static_details and
+holdings each run one worker thread per thunk, and every worker carries
+the caller's Spark local properties (job group, description, scheduler
+pool).
 """
 
 from __future__ import annotations
 
+import functools
 import time
 import traceback
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
+from typing import TypeVar
 
+from pyspark import SparkContext, inheritable_thread_target
 from pyspark.sql import Column, SparkSession
 
 from ..merge import MergeStats
 from .repair import RepairStats
 
 Stage = tuple[str, Callable[[], object]]
+T = TypeVar("T")
 
 
 @dataclass
@@ -139,6 +151,28 @@ def _record(result: StageResult, value: object) -> None:
         result.side_counts["returned"] = 1
 
 
+def _concurrently(thunks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each thunk on its own worker thread and return the results in
+    declared order.
+
+    Every thunk runs to completion; only then is the first failure, in
+    declared order, re-raised. Each thunk is wrapped in
+    ``inheritable_thread_target``, so the jobs it submits carry the
+    calling thread's Spark local properties (job group, description,
+    scheduler pool) — a plain worker thread starts with none, and its jobs
+    would escape the caller's ``cancelJobGroup``.
+    """
+    if SparkContext._active_spark_context is not None:
+        # one wrapper per thunk: each takes its own copy of the caller's
+        # properties; workers sharing one copy overwrite each other's group
+        session = SparkSession.active()
+        thunks = [inheritable_thread_target(session)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as ex:
+        futures = [ex.submit(t) for t in thunks]
+    # the pool has joined: result() re-raises the first failure in order
+    return [f.result() for f in futures]
+
+
 def _run_one(
     name: str,
     thunk: Callable[[], object],
@@ -180,7 +214,6 @@ def _run_one(
 def run_all(
     stages: Sequence[Stage | list[Stage]],
     fail_stop: bool = True,
-    max_workers: int = 4,
     retries: int = 0,
     retry_delay_sec: float = 0.0,
 ) -> RunReport:
@@ -188,12 +221,12 @@ def run_all(
     parallel task groups (O2).
 
     An entry that is a ``list`` of stages is a *concurrent group*: its
-    stages run simultaneously on worker threads against the shared
-    SparkSession (Spark schedules jobs submitted from separate threads
-    concurrently — the in-process form of the reference's independent
-    sync modules, which each own disjoint tables). Results are reported in
-    declared order regardless of completion order, so the summary is
-    deterministic.
+    stages run simultaneously, one worker thread each (:func:`_concurrently`),
+    against the shared SparkSession (Spark schedules jobs submitted from
+    separate threads concurrently — the in-process form of the reference's
+    independent sync modules, which each own disjoint tables). Results are
+    reported in declared order regardless of completion order, so the
+    summary is deterministic.
 
     On a stage exception the stage is recorded failed (with the traceback's
     final line as the error) and, under ``fail_stop`` (default, the
@@ -213,8 +246,6 @@ def run_all(
     (the reference sleeps 10s between its two attempts) so a retry does
     not immediately re-hit the same transient condition.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     t_run0 = time.perf_counter()
     report = RunReport()
     aborted_by: str | None = None
@@ -235,9 +266,9 @@ def run_all(
         if len(group) == 1:
             results = [_run_one(*group[0], retries=retries, retry_delay_sec=retry_delay_sec)]
         else:
-            with ThreadPoolExecutor(max_workers=min(max_workers, len(group))) as ex:
-                futures = [ex.submit(_run_one, n, t, retries, retry_delay_sec) for n, t in group]
-                results = [f.result() for f in futures]
+            results = _concurrently(
+                [functools.partial(_run_one, n, t, retries, retry_delay_sec) for n, t in group]
+            )
         report.stages.extend(results)
         if fail_stop:
             failed = next((r.name for r in results if r.status == "failed"), None)
@@ -270,7 +301,13 @@ def default_stages(
     A stage whose landing directory is empty or absent becomes a no-op
     returning ``None`` (reported ok with no tables) — feeds that delivered
     nothing must not abort the run. ``nav_reprocess`` enables the NAV
-    repair pass (G2) right after the daily load.
+    repair pass (G2) over ``stg_daily_nav``.
+
+    The schedule is ``master_sync``, then ``[daily_nav, static_details,
+    holdings]`` as one concurrent group, then ``nav_repair``. A master
+    failure skips everything after it, like the reference's abort. A
+    failed group member does not stop its in-flight siblings, but it does
+    skip ``nav_repair``.
     """
     from ..sources.csv_landing import name_excluded, read_landing_csvs
     from . import daily_nav, holdings, master_sync, static_details
@@ -337,13 +374,14 @@ def default_stages(
             return None
         return holdings.run(spark, hraw, alloc, warehouse)
 
-    # static_details and holdings own disjoint tables and only depend on the
-    # upstream master/NAV state — they run as a concurrent group (O2)
+    # daily_nav, static_details and holdings each read only their own
+    # landing directory, write disjoint tables and never read
+    # stg_security_master — they run as one concurrent group (O2) behind
+    # the master gate; nav_repair reads stg_daily_nav, so it follows
     stages: list[Stage | list[Stage]] = [
         ("master_sync", _master),
-        ("daily_nav", _nav),
+        [("daily_nav", _nav), ("static_details", _details), ("holdings", _holdings)],
         ("nav_repair", _nav_repair),
-        [("static_details", _details), ("holdings", _holdings)],
     ]
     return stages
 

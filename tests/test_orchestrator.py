@@ -3,9 +3,20 @@ landing-zone fixture (reference main_pipeline.py:16-33 + logger.py:81-117)."""
 
 from __future__ import annotations
 
+from pyspark import TaskContext
 from pyspark.sql import functions as F
 
-from fund_data_pipeline_spark.pipelines import orchestrator, run_pipeline
+from fund_data_pipeline_spark.pipelines import daily_nav, master_sync, orchestrator, run_pipeline
+
+WAREHOUSE_TABLES = (
+    "stg_security_master", "stg_daily_nav", "stg_fund_info",
+    "stg_fund_fees", "stg_fund_risk", "stg_fund_policy",
+    "stg_fund_holdings", "stg_allocations",
+)
+
+
+def _today():
+    return F.lit("2024-03-05").cast("date")
 
 
 def _write_landing(root):
@@ -44,13 +55,11 @@ def test_run_pipeline_full_chain(spark, tmp_path):
     warehouse = tmp_path / "warehouse"
     _write_landing(landing)
 
-    report = run_pipeline(
-        spark, str(landing), str(warehouse), today=F.lit("2024-03-05").cast("date")
-    )
+    report = run_pipeline(spark, str(landing), str(warehouse), today=_today())
     assert report.ok
     by_name = {s.name: s for s in report.stages}
     assert [s.name for s in report.stages] == [
-        "master_sync", "daily_nav", "nav_repair", "static_details", "holdings",
+        "master_sync", "daily_nav", "static_details", "holdings", "nav_repair",
     ]
     assert all(s.status == "ok" for s in report.stages)
 
@@ -62,11 +71,7 @@ def test_run_pipeline_full_chain(spark, tmp_path):
     assert by_name["holdings"].tables["stg_allocations"].inserted == 1
 
     # the warehouse actually has the tables
-    for t in (
-        "stg_security_master", "stg_daily_nav", "stg_fund_info",
-        "stg_fund_fees", "stg_fund_risk", "stg_fund_policy",
-        "stg_fund_holdings", "stg_allocations",
-    ):
+    for t in WAREHOUSE_TABLES:
         assert (warehouse / t).is_dir(), t
     assert spark.read.parquet(str(warehouse / "stg_daily_nav")).count() == 1
 
@@ -80,10 +85,98 @@ def test_run_pipeline_full_chain(spark, tmp_path):
     assert tot.inserted == 2 + 1 + 4 + 2  # master + nav + details x4 + holdings/alloc
 
     # idempotent re-run: hash guards elide everything except the K5 master
-    report2 = run_pipeline(
-        spark, str(landing), str(warehouse), today=F.lit("2024-03-05").cast("date")
-    )
+    report2 = run_pipeline(spark, str(landing), str(warehouse), today=_today())
     assert report2.ok and report2.totals().inserted == 0
+
+
+def test_master_failure_skips_every_later_stage(spark, tmp_path, monkeypatch):
+    """The master gate: a failed master_sync skips the whole concurrent
+    group and the repair pass (the reference's abort)."""
+    landing = tmp_path / "landing"
+    _write_landing(landing)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("master exploded")
+
+    monkeypatch.setattr(master_sync, "run", boom)
+    report = run_pipeline(
+        spark, str(landing), str(tmp_path / "wh"), today=_today(), nav_reprocess=lambda df: df
+    )
+    assert [(s.name, s.status) for s in report.stages] == [
+        ("master_sync", "failed"),
+        ("daily_nav", "skipped"),
+        ("static_details", "skipped"),
+        ("holdings", "skipped"),
+        ("nav_repair", "skipped"),
+    ]
+    assert "master exploded" in report.stages[0].error
+    assert not (tmp_path / "wh").exists()
+
+
+def test_daily_nav_failure_spares_group_siblings_and_skips_repair(spark, tmp_path, monkeypatch):
+    """daily_nav, static_details and holdings are one concurrent group: a
+    failed daily_nav leaves its in-flight siblings to finish and write their
+    tables, and skips only the NAV repair that reads stg_daily_nav."""
+    landing = tmp_path / "landing"
+    warehouse = tmp_path / "wh"
+    _write_landing(landing)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("nav exploded")
+
+    monkeypatch.setattr(daily_nav, "run", boom)
+    report = run_pipeline(
+        spark, str(landing), str(warehouse), today=_today(), nav_reprocess=lambda df: df
+    )
+    by_name = {s.name: s for s in report.stages}
+    assert [(s.name, s.status) for s in report.stages] == [
+        ("master_sync", "ok"),
+        ("daily_nav", "failed"),
+        ("static_details", "ok"),
+        ("holdings", "ok"),
+        ("nav_repair", "skipped"),
+    ]
+    assert "nav exploded" in by_name["daily_nav"].error
+    assert by_name["nav_repair"].error == "fail-stop: daily_nav failed"
+    for t in WAREHOUSE_TABLES:
+        assert (warehouse / t).is_dir() == (t != "stg_daily_nav"), t
+
+
+def test_group_stages_inherit_the_callers_job_group(spark):
+    """Jobs a concurrent group submits from its worker threads carry the
+    caller's Spark local properties, so ``cancelJobGroup`` on the caller's
+    group reaches them; and each worker owns its copy, so a stage that sets
+    its own job group does not relabel a sibling's jobs."""
+    import threading
+
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=30)
+    seen: dict[str, tuple[str | None, str | None]] = {}
+
+    def job_group():
+        return (
+            sc.parallelize([0], 1)
+            .map(lambda _: TaskContext.get().getLocalProperty("spark.jobGroup.id"))
+            .collect()[0]
+        )
+
+    def probe(name):
+        def run():
+            inherited = job_group()
+            sc.setJobGroup(name, name)
+            both_set.wait()
+            seen[name] = (inherited, job_group())
+
+        return run
+
+    sc.setJobGroup("daily-run", "daily run")
+    try:
+        report = orchestrator.run_all([[("a", probe("a")), ("b", probe("b"))]])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert report.ok, report.summary_lines()
+    assert seen == {"a": ("daily-run", "a"), "b": ("daily-run", "b")}
 
 
 def test_run_all_fail_stop(spark):

@@ -9,6 +9,7 @@ expiry, new->active promotion).
 from __future__ import annotations
 
 import datetime as dt
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -240,8 +241,11 @@ def test_dividends_clean_and_merge(spark, tmp_path):
 
 # ------------------------------------------------------------ static details
 
-def test_static_details_parsers_and_four_tables(spark, tmp_path):
-    raw = spark.createDataFrame(
+DETAIL_TABLES = ("stg_fund_info", "stg_fund_fees", "stg_fund_risk", "stg_fund_policy")
+
+
+def _details_raw(spark):
+    return spark.createDataFrame(
         [
             ("vtsax", "FUND", "yf", "Vanguard", "842.33m USD", "0.04%", "45", "1,234",
              "150.5", "2550.0", "12,345", "2500.0", "9999", "2024-03-01"),
@@ -250,8 +254,26 @@ def test_static_details_parsers_and_four_tables(spark, tmp_path):
          "initial_charge", "holdings_count", "total_return_1y", "standard_dev_3y",
          "shares_out", "moving_avg_200", "sharpe_ratio_3y", "as_of_date"],
     )
+
+
+def _merges_meet_at(monkeypatch, parties: int) -> None:
+    """Make every ``merge_upsert`` wait until ``parties`` merges are in
+    flight at once: run one after another, the first wait times out and
+    breaks the barrier."""
+    barrier = threading.Barrier(parties, timeout=30)
+    orig = merge.merge_upsert
+
+    def meet(*args, **kwargs):
+        barrier.wait()
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(merge, "merge_upsert", meet)
+
+
+def test_static_details_parsers_and_four_tables(spark, tmp_path):
+    raw = _details_raw(spark)
     stats = static_details.run(spark, raw, str(tmp_path))
-    assert set(stats) == {"stg_fund_info", "stg_fund_fees", "stg_fund_risk", "stg_fund_policy"}
+    assert set(stats) == set(DETAIL_TABLES)
     assert all(s.inserted == 1 for s in stats.values())
 
     info = spark.read.parquet(str(tmp_path / "stg_fund_info")).first()
@@ -273,9 +295,42 @@ def test_static_details_parsers_and_four_tables(spark, tmp_path):
     assert all(s.updated == 0 and s.inserted == 0 for s in stats2.values())
 
 
+def test_static_details_four_merges_run_concurrently(spark, tmp_path, monkeypatch):
+    _merges_meet_at(monkeypatch, 4)
+    stats = static_details.run(spark, _details_raw(spark), str(tmp_path))
+    assert set(stats) == set(DETAIL_TABLES)
+    assert all(s.inserted == 1 for s in stats.values())
+
+
+def test_static_details_failed_merge_raises_after_siblings_land(spark, tmp_path, monkeypatch):
+    """One table's merge fails: ``run`` re-raises that error, but only once
+    the other three merges have finished and written their tables, so a
+    clean re-run finds them already loaded."""
+    orig = merge.merge_upsert
+
+    def info_fails(spark_, path, *args, **kwargs):
+        if path.endswith("/stg_fund_info"):
+            raise RuntimeError("info merge exploded")
+        return orig(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(merge, "merge_upsert", info_fails)
+    raw = _details_raw(spark)
+    with pytest.raises(RuntimeError, match="info merge exploded"):
+        static_details.run(spark, raw, str(tmp_path))
+    others = DETAIL_TABLES[1:]
+    assert not (tmp_path / "stg_fund_info").exists()
+    for t in others:
+        assert (tmp_path / t).is_dir(), t
+
+    monkeypatch.setattr(merge, "merge_upsert", orig)
+    stats = static_details.run(spark, raw, str(tmp_path))
+    assert stats["stg_fund_info"].inserted == 1
+    assert all(stats[t].inserted == 0 and stats[t].updated == 0 for t in others)
+
+
 # ------------------------------------------------------------------ holdings
 
-def test_holdings_and_allocations(spark, tmp_path):
+def _holdings_raw(spark):
     hraw = spark.createDataFrame(
         [
             ("VTSAX", "FUND", "ft", "Apple Inc", "AAPL", "+5.2%", "2024-03-01"),
@@ -288,6 +343,11 @@ def test_holdings_and_allocations(spark, tmp_path):
         [("VTSAX", "FUND", "ft", "Technology", "45.5%", "2024-03-01")],
         ["ticker", "asset_type", "source", "item_name", "value_net", "as_of_date"],
     )
+    return hraw, araw
+
+
+def test_holdings_and_allocations(spark, tmp_path):
+    hraw, araw = _holdings_raw(spark)
     stats = holdings.run(spark, hraw, {"sector": araw}, str(tmp_path))
     assert stats["stg_fund_holdings"].inserted == 2  # summary row dropped
     assert stats["stg_allocations"].inserted == 1
@@ -298,6 +358,14 @@ def test_holdings_and_allocations(spark, tmp_path):
 
     a = spark.read.parquet(str(tmp_path / "stg_allocations")).first()
     assert a.allocation_type == "sector" and float(a.value_net) == pytest.approx(45.5)
+
+
+def test_holdings_two_merges_run_concurrently(spark, tmp_path, monkeypatch):
+    _merges_meet_at(monkeypatch, 2)
+    hraw, araw = _holdings_raw(spark)
+    stats = holdings.run(spark, hraw, {"sector": araw}, str(tmp_path))
+    assert stats["stg_fund_holdings"].inserted == 2
+    assert stats["stg_allocations"].inserted == 1
 
 
 # --------------------------------------------------------------- maintenance
