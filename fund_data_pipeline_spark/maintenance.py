@@ -274,7 +274,10 @@ def delete_keys(
     (:func:`~fund_data_pipeline_spark.merge._partition_swap_write`); every
     other partition's files stay byte-identical. A partition left empty is
     dropped entirely. At 100 TB an erasure request touches the handful of
-    partitions the subject's rows live in, not the table.
+    partitions the subject's rows live in, not the table. The rewrite is
+    pruned with the same null-safe
+    :func:`~fund_data_pipeline_spark.merge.touched_partition_filter` at any
+    width: the swap already walks the touched list on the driver.
 
     ``keys_df`` is broadcast (erasure batches are small — thousands of
     subjects, not billions); for a huge key set drop the hint and let AQE
@@ -351,26 +354,7 @@ def delete_keys(
     if n_deleted == 0:
         return 0
     touched = [r[partition_col] for r in victim_stats]
-    from .merge import _ISIN_PRUNE_MAX
-
-    if len(touched) <= _ISIN_PRUNE_MAX:
-        pruned = df.filter(touched_partition_filter(partition_col, touched))
-    else:
-        # a subject spread over thousands of partitions would bloat the
-        # plan with a giant literal list — switch to a broadcast semi-join
-        # prune on the partition value (null-safe), mirroring the merge's
-        # backfill path. The touched list itself stays driver-side only
-        # for the stale-directory sweep (O(#touched) local fs ops).
-        probe = F.broadcast(
-            spark.createDataFrame(
-                [(v,) for v in touched], f"__touched_part {dict(df.dtypes)[partition_col]}"
-            )
-        )
-        pruned = df.join(
-            probe,
-            df[partition_col].eqNullSafe(probe["__touched_part"]),
-            "left_semi",
-        )
+    pruned = df.filter(touched_partition_filter(partition_col, touched))
     survivors = pruned.join(F.broadcast(keys_df), key_cols, "left_anti")
     swap_partitions_dropping_absent(survivors, path, partition_col, touched)
     return n_deleted

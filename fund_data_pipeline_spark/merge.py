@@ -33,8 +33,12 @@ Write discipline — three layouts, one merge:
   ONLY the partitions present in the batch — merge cost is proportional to
   the touched partitions, not the table (the reference touches only the
   current day's staging: 02_performance_sync/03_price_history_loader.py:32-63).
-  Requires ``partition_col`` to be one of ``keys`` (true for daily tables
-  keyed (entity, date)) so a key can never silently move partitions.
+  The batch's distinct partition values are collected once and the target
+  read lists only those directories, at any batch width: the swap renames
+  one directory per touched value on the driver anyway, so the list is the
+  same size as work the merge already does there. Requires
+  ``partition_col`` to be one of ``keys`` (true for daily tables keyed
+  (entity, date)) so a key can never silently move partitions.
 
 Scale notes (100 TB):
 - The join shuffles both sides by the natural key — unavoidable for a keyed
@@ -57,12 +61,6 @@ from pyspark.sql import functions as F
 
 from .dedup import dedup_keyed
 
-#: Partition-pruned merge: above this many touched partitions the driver-side
-#: isin literal list is replaced by a broadcast semi-join prune (a multi-year
-#: backfill would otherwise inflate the plan with thousands of literals).
-_ISIN_PRUNE_MAX = 64
-
-
 @dataclass
 class MergeStats:
     """Row counts of one :func:`merge_upsert`. They are always returned and
@@ -75,13 +73,10 @@ class MergeStats:
     inserted: int
     updated: int
     unchanged: int
-    #: Partition values this merge touched (partition-pruned merges only).
-    #: The merge already collects them for its isin prune, so callers that
-    #: need them next (rollup refresh, compaction targeting) read them here
-    #: instead of re-running the distinct+collect the merge just did. None
-    #: when the merge is unpartitioned OR the batch exceeded _ISIN_PRUNE_MAX
-    #: (the backfill path deliberately never collects an unbounded list —
-    #: recompute downstream if genuinely needed).
+    #: Every partition value this merge touched, NULL included as None.
+    #: The merge collects them for its own prune, so callers that need them
+    #: next (rollup refresh, compaction targeting) read them here instead of
+    #: re-running the distinct+collect. None only for an unpartitioned merge.
     touched_partitions: list | None = None
 
 
@@ -191,18 +186,12 @@ def merge_upsert(
             _heal_partition_backups(path, partition_col)
     touched = None
     if partition_col is not None:
-        # Daily-batch fast path: collect the touched partition values (capped)
-        # so the isin filter resolves at planning time against the hive dir
-        # names — only touched partitions are ever listed or scanned. A
-        # backfill touching more than _ISIN_PRUNE_MAX partitions would bloat
-        # the plan with a giant literal list instead, so it switches to a
-        # broadcast semi-join prune and no unbounded collect hits the driver.
-        # The create path reports the list too, so a streaming loader's
-        # FIRST micro-batch is not the one case the field is absent.
+        # Collect the touched partition values so the target read lists only
+        # their directories. The create path reports the list too, so a
+        # streaming loader's FIRST micro-batch is not the one case the field
+        # is absent.
         parts = source.select(partition_col).distinct()
-        touched = [r[0] for r in parts.limit(_ISIN_PRUNE_MAX + 1).collect()]
-        if len(touched) > _ISIN_PRUNE_MAX:
-            touched = None
+        touched = [r[0] for r in parts.collect()]
     if not _table_exists(path, layout):
         _refuse_reserved(source.columns)
         result = source.withColumn("__action", F.lit("insert"))
@@ -245,14 +234,11 @@ def merge_upsert(
 
 
 def _touched_target(
-    spark: SparkSession, path: Path, source: DataFrame, partition_col: str, touched: list | None
+    spark: SparkSession, path: Path, source: DataFrame, partition_col: str, touched: list
 ) -> DataFrame:
-    """The target rows of the partitions ``source`` touches, with the
-    partition column cast back to the source's dtype so partition-value
-    inference can't change the merge key's type. ``touched`` is the
-    collected value list, or None above _ISIN_PRUNE_MAX (semi-join prune:
-    the scan keeps the bare partition column, so dynamic partition pruning
-    stays eligible).
+    """The target rows of the ``touched`` partitions, read from just their
+    directories, with the partition column cast back to the source's dtype
+    so partition-value inference can't change the merge key's type.
 
     mergeSchema: a prior allow_new_columns merge rewrites only touched
     partitions, so partition files can legitimately carry different widths;
@@ -260,32 +246,22 @@ def _touched_target(
     evolved column. Footer-merging is a distributed metadata-only job
     bounded by file count — correct first, and cheap relative to the merge.
 
-    Both prune paths are NULL-safe: a batch row with a NULL partition value
-    lives in __HIVE_DEFAULT_PARTITION__, and that partition's existing
-    target rows must enter the merge like any other touched partition's
-    (plain isin / == would silently drop them and the swap would overwrite
-    the NULL partition with source-only content)."""
+    The prune is NULL-safe: :func:`hive_partition_dir` maps a NULL value
+    to __HIVE_DEFAULT_PARTITION__, so that partition's existing target rows
+    enter the merge like any other touched partition's (a value filter
+    built from plain isin / == would silently drop them, and the swap would
+    overwrite the NULL partition with source-only content)."""
     src_dtype = dict(source.dtypes)[partition_col]
-    if touched is None:
-        raw = spark.read.option("mergeSchema", "true").parquet(str(path))
-        tgt_dtype = dict(raw.dtypes)[partition_col]
-        probe = F.broadcast(
-            source.select(
-                F.col(partition_col).cast(tgt_dtype).alias("__touched_part")
-            ).distinct()
-        )
-        return raw.join(
-            probe, raw[partition_col].eqNullSafe(probe["__touched_part"]), "left_semi"
-        ).withColumn(partition_col, F.col(partition_col).cast(src_dtype))
-    # Read ONLY the touched partition directories: a
-    # root-path read pays file listing + footer mergeSchema for the WHOLE
-    # table at DataFrame-creation time — driver-side planning work
-    # proportional to TOTAL partitions, not touched ones (measured 0.42 s of
-    # the ~1.3 s sf0.1 bench merge at 84 partitions; a years-deep production
-    # table pays far more for a one-partition daily batch). basePath keeps
-    # the partition column derived from dir names; dir names come from
-    # hive_partition_dir, the same value->dir contract the swap and
-    # stale-partition drops already rely on (NULL ->
+    # Read ONLY the touched partition directories: a root-path read pays
+    # file listing + footer mergeSchema for the WHOLE table at
+    # DataFrame-creation time — driver-side planning work proportional to
+    # TOTAL partitions, not touched ones (measured 0.42 s of the ~1.3 s
+    # sf0.1 bench merge at 84 partitions; a years-deep production table
+    # pays far more for a one-partition daily batch). The directory list IS
+    # the prune, so the plan carries no literal list at any batch width.
+    # basePath keeps the partition column derived from dir names; dir names
+    # come from hive_partition_dir, the same value->dir contract the swap
+    # and stale-partition drops already rely on (NULL ->
     # __HIVE_DEFAULT_PARTITION__). The merge therefore conforms to the
     # TOUCHED partitions' merged schema: a column evolved only in untouched
     # partitions is invisible here — matched rows keep their partition's
@@ -304,9 +280,7 @@ def _touched_target(
         target = reader.option("basePath", str(path)).parquet(*existing)
     else:
         target = reader.parquet(str(path)).filter(F.lit(False))
-    return target.filter(
-        touched_partition_filter(F.col(partition_col).cast(src_dtype), touched)
-    ).withColumn(partition_col, F.col(partition_col).cast(src_dtype))
+    return target.withColumn(partition_col, F.col(partition_col).cast(src_dtype))
 
 
 def _refuse_reserved(columns: Sequence[str]) -> None:
@@ -505,13 +479,12 @@ def hive_partition_dir(partition_col: str, value) -> str:
     return f"{partition_col}={escaped}"
 
 
-def touched_partition_filter(partition_col: str | Column, touched) -> Column:
+def touched_partition_filter(partition_col: str, touched) -> Column:
     """Null-safe membership filter over partition values: plain ``isin``
     silently drops a NULL partition value (SQL three-valued logic), so rows
     in ``__HIVE_DEFAULT_PARTITION__`` would be excluded from a rewrite that
-    claims to cover them. Accepts a column name or a prepared Column
-    expression (the pruned merge passes the dtype-cast column)."""
-    col = F.col(partition_col) if isinstance(partition_col, str) else partition_col
+    claims to cover them."""
+    col = F.col(partition_col)
     touched = list(touched)  # consumed twice below; tolerate one-shot iterators
     nonnull = [v for v in touched if v is not None]
     cond = col.isin(nonnull) if nonnull else F.lit(False)
@@ -546,7 +519,6 @@ def swap_partitions_dropping_absent(
 def read_table(
     spark: SparkSession,
     path: str,
-    merge_schema: bool | None = None,
     version: int | None = None,
 ) -> DataFrame:
     """Read a merge-managed table regardless of layout: resolves the
@@ -558,14 +530,13 @@ def read_table(
     :func:`list_versions` enumerates what is readable). Raises if the
     snapshot was never written or already pruned.
 
-    ``merge_schema=None`` (default) auto-enables parquet ``mergeSchema`` for
-    hive-partitioned tables: a partition-pruned ``allow_new_columns`` merge
-    rewrites only touched partitions, so files legitimately differ in width
-    and a one-footer schema sample could silently drop the evolved column
-    (reading it as absent or NULL depending on which file supplies the
-    schema). Rename/manifest layouts rewrite the whole snapshot per merge —
-    uniform schema — so they skip the footer-merge. Pass ``False`` to force
-    the cheap single-footer path, or ``True`` to force merging."""
+    Hive-partitioned tables are read with parquet ``mergeSchema``: a
+    partition-pruned ``allow_new_columns`` merge rewrites only touched
+    partitions, so files legitimately differ in width and a one-footer
+    schema sample could silently drop the evolved column (reading it as
+    absent or NULL depending on which file supplies the schema).
+    Rename/manifest layouts rewrite the whole snapshot per merge — uniform
+    schema — so they skip the footer-merge."""
     p = Path(path)
     live = _live_snapshot(p)
     if version is not None:
@@ -580,17 +551,12 @@ def read_table(
             )
         # snapshot dirs are uniform flat parquet — no footer merge needed
         return spark.read.parquet(str(snap))
-    base = live if live is not None else p
-    if merge_schema is None:
-        merge_schema = (
-            live is None
-            and base.is_dir()
-            and any(d.is_dir() and "=" in d.name for d in base.iterdir())
-        )
+    if live is not None:
+        return spark.read.parquet(str(live))
     reader = spark.read
-    if merge_schema:
+    if p.is_dir() and any(d.is_dir() and "=" in d.name for d in p.iterdir()):
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(str(base))
+    return reader.parquet(str(p))
 
 
 def _table_exists(path: Path, layout: str) -> bool:

@@ -11,8 +11,9 @@
   context-window prep stage; pure scan + explode
 - ``asof``        reusable LEFT as-of join (merge_asof parity: backward/
   forward, tolerance) via the one-shuffle union + window-LOCF pattern
-- ``graph``       connected components (min-label propagation, with
-  large-star/small-star contraction fallback) for dedup cluster assignment
+- ``graph``       connected components for dedup cluster assignment: one
+  driver union-find when the edge set fits a bound, else min-label
+  propagation with a large-star/small-star contraction fallback
 - ``redaction``   PII scrubbing as a map-side ``regexp_replace`` chain —
   the redacting transform behind the ``pii_scrub_stats`` audit query
 - ``timeseries``  daily date-spine gap fill with LOCF carry; spine

@@ -20,9 +20,9 @@ rollup (its directory is removed), which plain keyed upsert cannot express.
 
 Daily flow: ``merge_upsert(base, batch, partition_col=dt)`` returns the
 touched partition values on ``MergeStats.touched_partitions`` (it collects
-them for its own isin prune anyway); pass exactly those to
-:func:`refresh_rollup`. Cost per day = one pruned scan of the touched base
-partitions, independent of table history length.
+them for its own partition prune, at any batch width); pass exactly those
+to :func:`refresh_rollup` in one call. Cost per day = one pruned scan of
+the touched base partitions, independent of table history length.
 """
 
 from __future__ import annotations
@@ -100,8 +100,9 @@ def refresh_rollup(
     ``base`` should be the partitioned base table read (``spark.read.parquet``
     over a ``partition_col=`` layout): the ``isin(touched)`` filter then
     prunes the scan to the touched partitions at the source. ``touched`` is
-    the batch's partition values — bounded (a daily batch touches a handful
-    of partitions), so passing it as literals keeps planning cheap.
+    the batch's partition values, passed as literals in one call at any
+    width (a 300-date refresh in one call beat the same refresh in 64-date
+    chunks; SCALING.md, "one touched-partition route").
 
     ``create_if_missing``: a missing rollup root is refused by default
     (refresh-before-build would mint a table silently missing all history

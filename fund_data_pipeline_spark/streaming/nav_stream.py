@@ -152,10 +152,11 @@ def start_nav_stream(
         from ..merge import read_table
         from ..rollup import refresh_rollup
 
-        # persist once: errors-write, emptiness probe, merge, and the
-        # touched-dates collect all consume this lineage — without the
-        # persist each action would re-read and re-clean every CSV in the
-        # micro-batch from disk (review r9: up to ~5x redundant I/O)
+        # persist once: errors-write, emptiness probe, and the merge's
+        # touched-dates collect and write all consume this lineage —
+        # without the persist each action would re-read and re-clean every
+        # CSV in the micro-batch from disk (review r9: up to ~5x redundant
+        # I/O)
         cleaned = daily_nav.clean(batch_df).persist()
         try:
             valid, errors = daily_nav.validate_split(cleaned)
@@ -185,33 +186,22 @@ def start_nav_stream(
             )
             if rollup_path is None:
                 return
-            # the merge already collected the batch's distinct dates for its
-            # partition prune and reports them on the stats (review r9: this
-            # used to re-run the same distinct+collect); the None fallback is
-            # a backfill batch beyond the merge's isin cap
-            touched = stats.touched_partitions
-            if touched is None:
-                touched = [r[0] for r in batch.select("as_of_date").distinct().collect()]
-            measures = rollup_measures or {"n_quotes": F.count(F.lit(1))}
-            # a backfill batch can touch thousands of dates; refresh in
-            # bounded chunks so no single plan carries an unbounded isin
-            # literal list (review r10 — partition swaps are independent,
-            # so chunked refreshes produce the identical rollup)
-            base = read_table(spark, target_path)
-            for i in range(0, len(touched), 64):
-                refresh_rollup(
-                    base,
-                    rollup_path,
-                    partition_col="as_of_date",
-                    group_cols=list(rollup_group_cols),
-                    measures=measures,
-                    touched=touched[i : i + 64],
-                    # this flow creates the BASE table from the first
-                    # micro-batch too, so the first refresh legitimately
-                    # bootstraps the rollup root (touched covers every
-                    # base partition at that point)
-                    create_if_missing=True,
-                )
+            # the merge reports every date the batch touched (it collects
+            # them for its own partition prune), so the rollup refreshes
+            # exactly those dates in one call, at any batch width
+            refresh_rollup(
+                read_table(spark, target_path),
+                rollup_path,
+                partition_col="as_of_date",
+                group_cols=list(rollup_group_cols),
+                measures=rollup_measures or {"n_quotes": F.count(F.lit(1))},
+                touched=stats.touched_partitions,
+                # this flow creates the BASE table from the first
+                # micro-batch too, so the first refresh legitimately
+                # bootstraps the rollup root (touched covers every
+                # base partition at that point)
+                create_if_missing=True,
+            )
         finally:
             cleaned.unpersist()
 

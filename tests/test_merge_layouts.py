@@ -318,44 +318,51 @@ def test_merge_reserved_column_names_raise(spark, tmp_path):
         merge_upsert(spark, str(path), df, keys=["ticker"])
 
 
-def test_backfill_prune_switches_to_semi_join(spark, tmp_path, monkeypatch):
-    """Above _ISIN_PRUNE_MAX touched partitions the prune must go through the
-    broadcast semi-join path and still produce the same result with untouched
-    partitions byte-identical."""
-    from fund_data_pipeline_spark import merge as M
-
-    monkeypatch.setattr(M, "_ISIN_PRUNE_MAX", 2)
+def test_wide_backfill_reports_every_touched_partition(spark, tmp_path):
+    """A backfill touching 70 partitions, one of them the NULL partition,
+    reports all 70 values on the stats, counts every action right, and
+    leaves the partitions it did not touch byte-identical."""
     path = tmp_path / "backfill"
-    days = [f"2024-01-{d:02d}" for d in range(1, 6)]
-    base = _snapshot(spark, [("AAA", d, float(i)) for i, d in enumerate(days)])
+    days = [f"2024-{i // 28 + 1:02d}-{i % 28 + 1:02d}" for i in range(89)]
+    old, new = days[:80], days[80:]
+    base = _snapshot(
+        spark,
+        [(t, d, float(i)) for i, d in enumerate(old) for t in ("AAA", "BBB")]
+        + [("NUL", None, 1.0), ("NU2", None, 2.0)],
+    )
     merge_upsert(spark, str(path), base, keys=["ticker", "dt"], partition_col="dt")
+    untouched = tuple(f"dt={d}" for d in old[60:])
+    before = {k: v for k, v in _file_state(path).items() if k.startswith(untouched)}
+    assert len({k.split("/")[0] for k in before}) == 20
 
-    untouched_before = {
-        k: v for k, v in _file_state(path).items() if k.startswith("dt=2024-01-01")
-    }
-    # backfill touching 4 partitions (> cap of 2) with updates + one new row
+    # 60 AAA updates (their BBB twins stay), 9 brand-new partitions, and in
+    # the NULL partition one update (NU2 stays) plus one insert
     batch = _snapshot(
         spark,
-        [("AAA", d, 100.0 + i) for i, d in enumerate(days[1:])]
-        + [("ZZZ", "2024-01-03", 7.0)],
+        [("AAA", d, 100.0 + i) for i, d in enumerate(old[:60])]
+        + [("CCC", d, 7.0) for d in new]
+        + [("NUL", None, 9.0), ("NEW", None, 3.0)],
     )
     stats = merge_upsert(
-        spark, str(path), batch, keys=["ticker", "dt"],
-        partition_col="dt",
+        spark, str(path), batch, keys=["ticker", "dt"], partition_col="dt"
     )
-    assert stats.inserted == 1 and stats.updated == 4
+    assert len(stats.touched_partitions) == 70
+    assert set(stats.touched_partitions) == {*old[:60], *new, None}
+    assert (stats.inserted, stats.updated, stats.unchanged) == (10, 61, 61)
 
-    untouched_after = {
-        k: v for k, v in _file_state(path).items() if k.startswith("dt=2024-01-01")
-    }
-    assert untouched_after == untouched_before
+    after = {k: v for k, v in _file_state(path).items() if k.startswith(untouched)}
+    assert after == before
 
     out = {
         (r["ticker"], r["dt"]): r["value"] for r in spark.read.parquet(str(path)).collect()
     }
-    assert out[("AAA", "2024-01-01")] == 0.0
-    assert out[("ZZZ", "2024-01-03")] == 7.0
-    assert all(out[("AAA", d)] == 100.0 + i for i, d in enumerate(days[1:]))
+    assert len(out) == 172
+    assert all(out[("AAA", d)] == 100.0 + i for i, d in enumerate(old[:60]))
+    assert all(out[("BBB", d)] == float(i) for i, d in enumerate(old))
+    assert all(out[("AAA", d)] == float(i) for i, d in enumerate(old) if i >= 60)
+    assert all(out[("CCC", d)] == 7.0 for d in new)
+    assert out[("NUL", None)] == 9.0 and out[("NU2", None)] == 2.0
+    assert out[("NEW", None)] == 3.0
 
 
 def test_manifest_history_time_travel_and_cdc(spark, tmp_path):

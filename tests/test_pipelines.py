@@ -647,6 +647,24 @@ def test_nav_stream_with_incremental_rollup(spark, tmp_path):
     assert got[("2024-03-01", "financial_times")] == 1
     assert got[("2024-03-01", "yahoo_finance")] == 1
 
+    # one micro-batch spanning 70 dates (a backfill) refreshes every one of
+    # them in a single call; day-2 stays untouched
+    wide = [str(dt.date(2024, 4, 1) + dt.timedelta(days=i)) for i in range(70)]
+    (landing / "backfill.csv").write_text(
+        header
+        + "".join(f"DDD,ETF,yf,{40 + i}.0,USD,{d},{d}\n" for i, d in enumerate(wide))
+        + "EEE,FUND,ft,50.0,USD,2024-03-01,2024-03-04\n"
+    )
+    drain()
+    base = spark.read.parquet(target)
+    expect = rollup_frame(base, "as_of_date", ["source"], measures).select(expect_cols)
+    assert rollup_rows() == sorted(tuple(r) for r in expect.collect())
+    assert {r[0] for r in rollup_rows()} >= set(wide)
+    assert {
+        (str(p), p.stat().st_mtime_ns)
+        for p in (rollup / "as_of_date=2024-03-02").rglob("*.parquet")
+    } == d2_files
+
 
 def test_nav_stream_stale_redelivery_does_not_clobber(spark, tmp_path):
     """A re-delivered OLD file drained in a LATER micro-batch must not

@@ -362,29 +362,30 @@ def test_apply_changes_on_partitioned_replica(spark, tmp_path):
     assert _file_state(replica / "dt=2024-02") == before_feb
 
 
-def test_delete_keys_wide_erasure_switches_to_semi_join_prune(spark, tmp_path, monkeypatch):
-    """An erasure spanning more partitions than the isin cap must still
-    delete correctly through the broadcast semi-join prune path."""
-    from fund_data_pipeline_spark import maintenance
-    from fund_data_pipeline_spark import merge as merge_mod
+def test_delete_keys_wide_erasure_prunes_every_touched_partition(spark, tmp_path):
+    """An erasure spanning 70 partitions, the NULL partition among them,
+    deletes every victim row, and a partition holding no victim keeps its
+    files byte-identical."""
     from fund_data_pipeline_spark.maintenance import delete_keys
-
-    monkeypatch.setattr(merge_mod, "_ISIN_PRUNE_MAX", 3)
 
     p = tmp_path / "tbl"
     rows = [
-        (f"u{i % 2}", f"2024-{m:02d}", i * 10 + m) for m in range(1, 7) for i in range(4)
+        (f"u{i % 2}", f"p{m:02d}", i * 10 + m) for m in range(1, 70) for i in range(4)
     ]
+    rows += [("u1", None, 1), ("u0", None, 2), ("u0", "p99", 3)]
     spark.createDataFrame(rows, "user_id string, dt string, v long").write.partitionBy(
         "dt"
     ).parquet(str(p))
+    spared = _file_state(p / "dt=p99")
 
     victims = spark.createDataFrame([("u1",)], "user_id string")
     n = delete_keys(spark, str(p), victims, ["user_id"], partition_col="dt")
-    assert n == 12  # 2 rows x 6 months
+    assert n == 139  # 2 rows x 69 partitions + 1 in the NULL partition
     left = spark.read.parquet(str(p))
     assert left.filter(F.col("user_id") == "u1").count() == 0
-    assert left.count() == 12
+    assert left.count() == 140
+    assert left.filter(F.col("dt").isNull()).count() == 1
+    assert _file_state(p / "dt=p99") == spared
 
 
 def test_refresh_heals_crashed_build_before_swapping(spark, tmp_path):
