@@ -20,45 +20,20 @@ RETENTION_DAYS = 60  # retention_cleaner.py:16
 _DT_DIR = re.compile(r"^dt=(\d{4}-\d{2}-\d{2})$")
 
 
-def _heal_dotted_backup(p: Path) -> None:
-    """Entry heal for the dot-prefixed in-hive-root swap (snapshot/compact):
-    a ``.{name}.__old__`` sibling with no live dir means the previous swap
-    crashed between its renames — the backup IS the table; restore it. A
-    backup alongside a live dir is a post-swap leftover; discard it."""
-    backup = p.with_name("." + p.name + ".__old__")
-    if backup.exists() and not p.exists():
-        backup.rename(p)
-    elif backup.exists():
-        shutil.rmtree(backup)
-
-
 def snapshot(df, root: str, dt: str) -> None:
     """K6/K7: write an immutable dated snapshot partition.
 
-    Staged-then-swap like every other destructive write (review r9: this
-    was the one naive overwrite left — Spark's overwrite deletes the
-    existing partition BEFORE the job commits, so a crashed re-run would
-    destroy the previous good snapshot and could leave an empty directory
-    that reads as a valid empty partition). Staging/backup siblings are
-    dot-prefixed because they live inside a hive root, where a visible
-    ``dt=...__snap__`` sibling would be parsed as a real partition; the
+    Staged-then-swap through :func:`merge._atomic_write` like every other
+    destructive write (review r9: Spark's overwrite deletes the existing
+    partition BEFORE the job commits, so a crashed re-run would destroy the
+    previous good snapshot and could leave an empty directory that reads as
+    a valid empty partition). Its staging and backup siblings are
+    dot-prefixed, so partition discovery over ``root`` never sees them; the
     partition dir name goes through :func:`merge.hive_partition_dir` so an
     escaped-charset ``dt`` lands where partition discovery will read it."""
-    from .merge import hive_partition_dir
+    from .merge import _atomic_write, hive_partition_dir
 
-    p = Path(root) / hive_partition_dir("dt", dt)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    backup = p.with_name("." + p.name + ".__old__")
-    staging = p.with_name("." + p.name + ".__snap__")
-    _heal_dotted_backup(p)
-    if staging.exists():
-        shutil.rmtree(staging)
-    df.write.mode("overwrite").parquet(str(staging))
-    if p.exists():
-        p.rename(backup)
-    staging.rename(p)
-    if backup.exists():
-        shutil.rmtree(backup)
+    _atomic_write(df, Path(root) / hive_partition_dir("dt", dt))
 
 
 def purge_expired_partitions(root: str, today: date | None = None, retention_days: int = RETENTION_DAYS) -> list[str]:
@@ -91,12 +66,12 @@ def compact_partition(
 
     The landing pattern (K2 append sinks, streaming micro-batches) accretes
     many small parquet files; scan cost then becomes file-open-bound. This
-    rewrites with ``coalesce`` (no shuffle — pure task merging) through a
-    staging-then-swap. The swap is two renames, NOT atomic: a reader racing
-    the swap can briefly see a missing directory, and a crash between the
-    renames leaves only the ``.__old__`` backup. Both are handled for the
-    *writer*: on entry a stale backup with no live table is restored, and a
-    stale backup alongside a live table is discarded — so a crashed or
+    rewrites with ``coalesce`` (no shuffle — pure task merging) through
+    :func:`merge._atomic_write`'s staged swap, whose staging and backup
+    siblings are dot-prefixed (a compacted leaf often sits inside a hive
+    root). The swap is two renames, NOT atomic: a reader racing it can
+    briefly see a missing directory, and a crash between the renames leaves
+    only the backup, which the next call restores — so a crashed or
     interrupted compaction is always safe to retry.
 
     Must be pointed at a LEAF directory. Compacting a hive-partitioned root
@@ -104,15 +79,10 @@ def compact_partition(
     the layout (breaking pruning and the retention ops above), so that case
     is refused.
     """
-    import shutil as _shutil
+    from .merge import _atomic_write, heal_backup_swap
 
     p = Path(path)
-    # backup/staging are dot-prefixed: a compacted leaf often sits inside a
-    # hive root, where a visible 'dt=...__old__'/'...__compact__' sibling
-    # would be parsed by partition discovery as a real partition (corrupt
-    # reads of in-flight staging data or of the crash leftover)
-    backup = p.with_name("." + p.name + ".__old__")
-    _heal_dotted_backup(p)
+    heal_backup_swap(p)
     if not p.exists():
         raise FileNotFoundError(
             f"compact_partition target does not exist and no crash backup was "
@@ -134,13 +104,7 @@ def compact_partition(
     df = spark.read.option("mergeSchema", "true").parquet(path)
     total = sum(f.stat().st_size for f in p.rglob("*.parquet"))
     n = max(1, -(-total // target_bytes_per_file))  # exact ceil-div (no float)
-    staging = p.with_name("." + p.name + ".__compact__")
-    if staging.exists():
-        _shutil.rmtree(staging)
-    df.coalesce(n).write.mode("overwrite").parquet(str(staging))
-    p.rename(backup)
-    staging.rename(p)
-    _shutil.rmtree(backup)
+    _atomic_write(df.coalesce(n), p)
     return n
 
 
@@ -283,22 +247,26 @@ def delete_keys(
     subjects, not billions); for a huge key set drop the hint and let AQE
     pick the join side.
 
+    Both rename layouts swap through the merge module's one swap helper,
+    and the entry prologue it shares with ``merge_upsert`` heals a crashed
+    earlier swap before the victims are looked up.
+
     Works on every merge layout: hive-partitioned (pass ``partition_col``),
-    plain directories, and manifest tables — a manifest table's live
-    snapshot is resolved through ``merge.read_table`` (a naive
-    ``spark.read.parquet`` would list zero files: snapshot dirs are
-    underscore-prefixed) and the delete is published as a NEW snapshot
-    version, preserving the pointer-swap atomicity. ``history=None``
-    (default) preserves the retention persisted in the table's manifest
-    pointer, so an erasure cannot silently prune a time-travel window
-    established by earlier merges; an explicit int sets and persists a new
-    retention.
+    plain directories (rewritten whole through ``merge._atomic_write``),
+    and manifest tables — a manifest table's live snapshot is resolved
+    through ``merge.read_table`` (a naive ``spark.read.parquet`` would list
+    zero files: snapshot dirs are underscore-prefixed) and the delete is
+    published as a NEW snapshot version, preserving the pointer-swap
+    atomicity. ``history=None`` (default) preserves the retention persisted
+    in the table's manifest pointer, so an erasure cannot silently prune a
+    time-travel window established by earlier merges; an explicit int sets
+    and persists a new retention.
     """
     from pyspark.sql import functions as F
 
     from .merge import (
         _atomic_write,
-        _check_layout_compatible,
+        _guard_and_heal,
         _manifest_write,
         detect_layout,
         read_table,
@@ -310,24 +278,16 @@ def delete_keys(
     layout = detect_layout(path)
     if layout == "manifest" and partition_col is not None:
         raise ValueError("manifest tables are unpartitioned; drop partition_col")
-    # a mismatched write shape corrupts silently (flat rewrite of a hive
-    # root, partition swap into a flat root) — refuse loudly instead
+    # heal a crashed swap and refuse a mismatched write shape (flat rewrite
+    # of a hive root, partition swap into a flat root) BEFORE reading: past
+    # it the delete would see a missing table/partition and delete against
+    # the wrong state (review r11, same prologue as merge_upsert)
     intended = (
         "hive"
         if partition_col
         else ("manifest" if layout == "manifest" else "flat")
     )
-    _check_layout_compatible(path, intended)
-    # heal orphaned swap backups BEFORE reading (review r11, same as
-    # merge_upsert): a crash between a previous swap's renames leaves only
-    # the backup — reading past it would see a missing table/partition and
-    # delete against the wrong state
-    if layout != "manifest":
-        from .merge import _heal_partition_backups, heal_backup_swap
-
-        heal_backup_swap(path)
-        if partition_col is not None:
-            _heal_partition_backups(path, partition_col)
+    _guard_and_heal(path, intended, partition_col)
     keys_df = keys_df.select(*key_cols).dropDuplicates(key_cols)
     df = read_table(spark, table_path)
     if partition_col is None:

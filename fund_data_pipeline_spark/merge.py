@@ -18,9 +18,11 @@ from a full-outer join, with no transactional-format dependency:
 Write discipline — three layouts, one merge:
 
 - ``layout="rename"`` (default, local fast path): new snapshot goes to
-  ``<path>.__staging__`` then swaps in via rename, so a failed job never
-  corrupts the table (SURVEY §7.4-1). POSIX-atomic; NOT object-store-safe
-  (an S3 "rename" is a non-atomic copy).
+  the hidden sibling ``.<name>.__staging__`` then swaps in via rename, so a
+  failed job never corrupts the table (SURVEY §7.4-1). One swap helper and
+  one heal serve every rename-swap writer in the package (table, partition,
+  snapshot, compaction and rollup rewrites). POSIX-only; NOT
+  object-store-safe (an S3 "rename" is a non-atomic copy).
 - ``layout="manifest"`` (object-store-safe): each merge writes a NEW
   immutable snapshot directory ``_v_NNNNN`` under the table root, then
   atomically repoints the tiny ``_MANIFEST`` pointer file (one small PUT —
@@ -152,9 +154,11 @@ def merge_upsert(
     keys = list(keys)
     if layout not in ("rename", "manifest"):
         raise ValueError(f"unknown layout {layout!r}; use 'rename' or 'manifest'")
-    _check_layout_compatible(
-        Path(target_path),
+    path = Path(target_path)
+    _guard_and_heal(
+        path,
         "manifest" if layout == "manifest" else ("hive" if partition_col else "flat"),
+        partition_col,
     )
     if partition_col is not None:
         if partition_col not in keys:
@@ -170,20 +174,6 @@ def merge_upsert(
         raise ValueError(f"source is missing precedence_col {precedence_col!r}")
     source = dedup_keyed(source, keys, _dedupe_order(source, keys, dedupe_order), keep="last")
 
-    path = Path(target_path)
-    # heal BEFORE existence/read: a crash between a previous swap's two
-    # renames leaves only the backup — without this, _table_exists sees no
-    # table, the merge takes the CREATE branch, and the heal inside the
-    # writer restores the full old table just in time for the source-only
-    # staging to be swapped over it (silent loss of every pre-crash row
-    # not in the batch; review r11 — rollup.refresh_rollup already healed
-    # on entry for exactly this reason). Same for hive partition backups:
-    # a missing live partition dir reads back as empty, misclassifying
-    # every batch row as insert.
-    if layout == "rename":
-        heal_backup_swap(path)
-        if partition_col is not None:
-            _heal_partition_backups(path, partition_col)
     touched = None
     if partition_col is not None:
         # Collect the touched partition values so the target read lists only
@@ -461,6 +451,28 @@ def _check_layout_compatible(path: Path, intended: str) -> None:
         )
 
 
+def _guard_and_heal(path: Path, intended: str, partition_col: str | None) -> None:
+    """Entry prologue of every writer that reads its own target first
+    (:func:`merge_upsert`, ``maintenance.delete_keys``): heal a crashed
+    rename swap of the table root, refuse a cross-layout write, then heal
+    crashed partition swaps, all BEFORE the caller looks at the table. The
+    root heal comes first because a root that exists only as its backup
+    reads as no table at all, which would let any layout through the
+    guard (a crashed hive rollup build, restored and then rewritten flat,
+    loses its partition layout). A crash between a swap's two renames
+    leaves only the backup; without the heal the table reads as missing,
+    the merge takes the CREATE branch and the writer's own heal restores
+    the old table just in time for the source-only staging to be swapped
+    over it (silent loss of every pre-crash row not in the batch; review
+    r11). A missing partition dir likewise reads back as empty,
+    misclassifying every batch row of that partition as an insert.
+    Manifest tables never rename, so they have no backup to heal."""
+    heal_backup_swap(path)
+    _check_layout_compatible(path, intended)
+    if intended != "manifest" and partition_col is not None:
+        _heal_partition_backups(path, partition_col)
+
+
 #: Characters Spark/Hive percent-escape in partition directory names
 #: (org.apache.hadoop.hive.common.FileUtils.escapePathName's charset).
 _HIVE_ESCAPE = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {chr(0x7F)}
@@ -589,27 +601,50 @@ def _write_table(
 
 
 def _atomic_write(df: DataFrame, path: Path, partition_by: str | None = None) -> None:
-    """Write-temp-then-swap: the table directory is replaced via rename.
+    """Write-temp-then-swap: ``df`` is written to the hidden sibling
+    ``.<name>.__staging__`` and swapped over ``path`` by :func:`_swap_in`.
+    Every full rewrite in the package goes through here: flat merges and
+    deletes, the master status rewrite, ``maintenance.snapshot`` and
+    ``compact_partition``, and the rollup full build. Staging and backup
+    are dot-prefixed, so ``path`` may itself be a partition directory
+    inside a hive root.
 
     POSIX fast path only — the two renames are not atomic as a unit and an
     object store copies on rename; use ``layout="manifest"`` there. A crash
     between the renames is self-healed on the next call (backup restored).
 
     ``partition_by`` writes the staging directory hive-partitioned (the
-    rollup full build) — ONE swap discipline for flat and partitioned full
-    rewrites, so crash-heal fixes can never apply to one and not the other."""
-    staging = path.with_name(path.name + ".__staging__")
-    backup = path.with_name(path.name + ".__old__")
+    rollup full build)."""
     heal_backup_swap(path)
-    if staging.exists():
-        shutil.rmtree(staging)
+    staging = _fresh_staging(path)
     writer = df.write.mode("overwrite")
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
     writer.parquet(str(staging))
-    if path.exists():
-        path.rename(backup)
-    staging.rename(path)
+    _swap_in(staging, path)
+
+
+def _fresh_staging(live: Path) -> Path:
+    """The hidden staging sibling ``.<name>.__staging__`` of ``live``,
+    emptied of whatever a crashed earlier write left there. Staging
+    directories under other names, left by a crashed write of an earlier
+    release, are not read by anything and are not removed either."""
+    staging = live.with_name(f".{live.name}.__staging__")
+    if staging.exists():
+        shutil.rmtree(staging)
+    return staging
+
+
+def _swap_in(staged: Path, live: Path) -> None:
+    """Move the directory ``staged`` over ``live``: live →
+    ``.<name>.__old__``, staged → live, then drop the backup. Together with
+    :func:`heal_backup_swap` this holds the package's only directory
+    renames. The backup is dot-prefixed so partition discovery never parses
+    it as a partition when ``live`` sits inside a hive root."""
+    backup = live.with_name(f".{live.name}.__old__")
+    if live.exists():
+        live.rename(backup)
+    staged.rename(live)
     if backup.exists():
         shutil.rmtree(backup)
 
@@ -649,36 +684,36 @@ def _dedupe_order(source: DataFrame, keys: Sequence[str], dedupe_order) -> list:
 
 
 def _heal_partition_backups(path: Path, partition_col: str) -> None:
-    """Restore-or-discard orphaned hive partition backups (both the
-    dot-prefixed and the legacy un-dotted spelling) — shared by the swap
-    writer and the merge/delete entry points, which must heal BEFORE
-    reading the target (review r11)."""
+    """Heal every orphaned hive partition backup under the table root
+    ``path`` with :func:`heal_backup_swap`, whichever partition it belongs
+    to: waiting for the same partition to be touched again would leave the
+    table missing it indefinitely."""
     if not path.exists():
         return
-    for pattern, strip_dot in ((f".{partition_col}=*.__old__", True), (f"{partition_col}=*.__old__", False)):
+    for pattern in (f".{partition_col}=*.__old__", f"{partition_col}=*.__old__"):
         for backup in list(path.glob(pattern)):
-            name = backup.name[1:] if strip_dot else backup.name
-            dest = path / name[: -len(".__old__")]
-            if dest.exists():
-                shutil.rmtree(backup)  # crash after the swap: backup is stale
-            else:
-                backup.rename(dest)  # crash between renames: backup IS the data
+            heal_backup_swap(path / backup.name.removeprefix(".").removesuffix(".__old__"))
 
 
 def heal_backup_swap(path: Path) -> None:
-    """Entry-point crash heal shared by every rename-swap writer AND by
-    readers/refreshers that touch a swap-managed table before writing: a
-    ``<name>.__old__`` sibling with no live ``<name>`` means the previous
-    swap crashed between its two renames — the backup IS the table, so
-    restore it; a backup alongside a live table is a stale leftover from a
-    crash after the swap and is discarded. Without this, an incremental
+    """Restore or discard the swap backup of ``path``, the one heal of
+    every rename-swap writer, also run by readers/refreshers that touch a
+    swap-managed table before writing. A backup with no live ``path`` means
+    the previous swap crashed between its two renames — the backup IS the
+    table, so restore it; a backup alongside a live table is a stale
+    leftover from a crash after the swap and is discarded. Both spellings
+    are healed: :func:`_swap_in`'s hidden ``.<name>.__old__`` and the
+    visible ``<name>.__old__`` that earlier releases wrote for table roots
+    (and, before r9, for partition dirs). Without this, an incremental
     refresher (rollup) that mkdir-creates the missing live path would
     resurrect a PARTIAL table while the intact backup sits ignored."""
-    backup = path.with_name(path.name + ".__old__")
-    if backup.exists() and not path.exists():
-        backup.rename(path)
-    elif backup.exists():
-        shutil.rmtree(backup)
+    for backup in (path.with_name(f".{path.name}.__old__"), path.with_name(f"{path.name}.__old__")):
+        if not backup.exists():
+            continue
+        if path.exists():
+            shutil.rmtree(backup)  # crash after the swap: the backup is stale
+        else:
+            backup.rename(path)  # crash between the renames: the backup IS the data
 
 
 def _manifest_write(df: DataFrame, path: Path, history: int | None = None) -> None:
@@ -826,9 +861,7 @@ def _partition_swap_write(
     callers can reason about what was actually written — the staging glob is
     the ground truth, not a second evaluation of ``df``. ``observe`` maps
     the repartitioned frame to the one written (see :func:`_write_table`)."""
-    staging = path.with_name(path.name + ".__staging__")
-    if staging.exists():
-        shutil.rmtree(staging)
+    staging = _fresh_staging(path)
     # shuffle rows to their partition before the partitioned write: without
     # this every task emits a file into every partition (tasks x partitions
     # small files — the classic scan-killer). One task per partition is right
@@ -838,24 +871,10 @@ def _partition_swap_write(
         "overwrite"
     ).partitionBy(partition_col).parquet(str(staging))
     path.mkdir(parents=True, exist_ok=True)
-    # heal EVERY orphaned backup first, not just this batch's partitions: a
-    # crash between the two renames of some earlier batch leaves only the
-    # backup, and waiting for the same partition to be touched again would
-    # leave the table missing that partition indefinitely. Backup names are
-    # dot-prefixed so Spark's partition discovery never parses one as a
-    # real partition; the legacy un-dotted spelling is healed too (r9).
-    # Shared with the merge/delete entry points, which heal BEFORE reading
-    # the target (review r11).
     _heal_partition_backups(path, partition_col)
     swapped: set[str] = set()
     for part_dir in sorted(staging.glob(f"{partition_col}=*")):
-        dest = path / part_dir.name
-        backup = path / ("." + part_dir.name + ".__old__")
-        if dest.exists():
-            dest.rename(backup)
-        part_dir.rename(dest)
-        if backup.exists():
-            shutil.rmtree(backup)
+        _swap_in(part_dir, path / part_dir.name)
         swapped.add(part_dir.name)
     shutil.rmtree(staging)
     return swapped

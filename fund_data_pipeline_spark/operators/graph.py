@@ -31,9 +31,12 @@ Scale notes:
   O(1) instead of O(iterations) (classic iterative-algorithm pitfall).
 - Above the bound the driver sees only a changed-row *count* per round —
   no row data.
-- Edges are symmetrized once up front; the per-round join shuffles on the
-  node id, so pre-partitioning labels and edges on that key makes every
-  round's shuffle a cheap co-partitioned join on a real cluster.
+- Above the bound edges are canonicalized into one pinned relation that
+  feeds both the symmetric relation and the star seed, and symmetrized
+  once up front;
+  the per-round join shuffles on the node id, so pre-partitioning labels
+  and edges on that key makes every round's shuffle a cheap co-partitioned
+  join on a real cluster.
 """
 
 from __future__ import annotations
@@ -58,8 +61,8 @@ def _canon(e: DataFrame) -> DataFrame:
 #: driver in one numpy pass instead of shuffle-per-round iteration. 2M
 #: bigint pairs cross as ~32 MB of Arrow — the same size class as a
 #: broadcast-join build side (guide §3.1), with the same failure mode
-#: (driver memory), which is why the bound exists and is conf-tunable
-#: (``spark.graft.cc.collectMaxEdges``; 0 disables the driver path).
+#: (driver memory), which is why the bound exists (per call:
+#: ``driver_collect_max_edges``; 0 disables the driver path).
 CC_COLLECT_MAX_EDGES = 2_000_000
 
 
@@ -158,7 +161,7 @@ def connected_components(
     max_iterations: int = 50,
     strict: bool = True,
     star_fallback_after: int = 5,
-    driver_collect_max_edges: int | None = None,
+    driver_collect_max_edges: int = CC_COLLECT_MAX_EDGES,
 ) -> DataFrame:
     """Return (node, cluster_id): min reachable node id per component.
 
@@ -189,12 +192,12 @@ def connected_components(
     id-only PROXY of the corpus — after LSH blocking it is orders of
     magnitude lighter than the rows it deduplicates — and whenever the
     canonical edge set fits ``driver_collect_max_edges`` (default
-    :data:`CC_COLLECT_MAX_EDGES`, conf ``spark.graft.cc.collectMaxEdges``,
-    0 disables), the component structure is resolved in ONE vectorized
-    union-find on the driver and re-attached with ONE broadcast join —
-    replacing shuffle-per-round iteration (propagation paid 3 shuffle
-    boundaries + a checkpoint + a count PER ROUND) with a single bounded
-    collect, the exact cost model of a broadcast hash join build side.
+    :data:`CC_COLLECT_MAX_EDGES`, 0 disables), the component structure is
+    resolved in ONE vectorized union-find on the driver and re-attached
+    with ONE broadcast join — replacing shuffle-per-round iteration
+    (propagation paid 3 shuffle boundaries + a checkpoint + a count PER
+    ROUND) with a single bounded collect, the exact cost model of a
+    broadcast hash join build side.
     Above the bound, propagation and star contraction run as before, and
     every star round's (checkpointed) edge count is probed so the driver
     path also terminates the CONTRACTION loop early: star rounds only
@@ -208,16 +211,12 @@ def connected_components(
     """
     import warnings
 
-    if driver_collect_max_edges is None:
-        driver_collect_max_edges = int(
-            edges.sparkSession.conf.get(
-                "spark.graft.cc.collectMaxEdges", str(CC_COLLECT_MAX_EDGES)
-            )
-        )
     pairs = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    # NULL endpoints and self-loops are dropped once, here
     canon = _canon(pairs)
-    # greatest/least coerce src and dst to the wider of their types (as the
-    # symmetrizing union below does), so the driver mapping holds every id
+    # greatest/least coerce src and dst to the wider of their types (the
+    # symmetric relation below inherits them), so the driver mapping holds
+    # every id
     edge_type = canon.schema["src"].dataType
     if driver_collect_max_edges > 0:
         probe = canon.limit(driver_collect_max_edges + 1).toPandas()
@@ -231,8 +230,12 @@ def connected_components(
             )
             return labels.withColumnRenamed("label", "cluster_id")
 
-    sym = pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=False)
+    # pinned only once the probe overflows, so the driver route caches
+    # nothing; the symmetric relation and the star seed both read the pin.
+    # canon is distinct with src > dst, so it and its mirror are disjoint:
+    # their union is already distinct and loop-free
+    canon = canon.localCheckpoint(eager=True)
+    sym = canon.union(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
     endpoints = sym.select(F.col("src").alias("node"))  # sym already has both directions
     # ONE seed relation for BOTH phases: the star fallback previously
@@ -278,7 +281,7 @@ def connected_components(
         # partial propagation labels are discarded (they cost a few cheap
         # rounds, nothing more). Each round is checkpointed — bounded plans
         # regardless of round count.
-        e = _canon(sym).localCheckpoint(eager=True)
+        e = canon
         while rounds_used < max_iterations:
             rounds_used += 1
             new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)

@@ -44,6 +44,6 @@ def hash_batch(df: DataFrame) -> DataFrame:
 
 def run(spark: SparkSession, landing_root: str, target_path: str) -> merge.MergeStats:
     """One scan over per-ticker dividend files, one hash-guarded merge (H8)."""
-    raw = read_per_entity_csvs(spark, landing_root, infer_date=False)
+    raw = read_per_entity_csvs(spark, landing_root)
     batch = hash_batch(clean(raw))
     return merge.merge_upsert(spark, target_path, batch, DIVIDEND_HISTORY_KEY)

@@ -22,6 +22,7 @@ driver.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -136,12 +137,8 @@ def run(
         always_update_cols=("last_seen", "updated_at"),
         unconditional=True,
     )
-    # layout-aware read + guard: the transition rewrite is flat-layout by
-    # contract; going through the public read path and the layout guard
-    # means a migrated (manifest/hive) table fails loudly instead of being
-    # silently flattened
-    merge._check_layout_compatible(merge.Path(target_path), "flat")
+    # the flat rewrite is safe: merge_upsert refused any non-flat target
     table = merge.read_table(spark, target_path)
     transitioned = lifecycle.apply_status_transitions(table, today=today)
-    merge._atomic_write(transitioned, merge.Path(target_path))
+    merge._atomic_write(transitioned, Path(target_path))
     return stats, invalid

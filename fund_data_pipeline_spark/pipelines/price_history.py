@@ -62,7 +62,7 @@ def run(
     target_path: str,
 ) -> merge.MergeStats:
     """One scan over the whole per-ticker landing tree, one hash-guarded merge."""
-    raw = read_per_entity_csvs(spark, landing_root, infer_date=False)
+    raw = read_per_entity_csvs(spark, landing_root)
     batch = hash_batch(clean(raw))
     return merge.merge_upsert(
         spark,

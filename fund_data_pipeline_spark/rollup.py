@@ -70,10 +70,12 @@ def build_rollup(
     Staging-then-swap like every other write path in the engine: a naive
     delete-then-write would destroy the previous good rollup on a crash
     mid-build and could leave a partial table that READS as valid (a hive
-    root silently missing an arbitrary subset of partitions). A crashed
-    build is self-healed on the next call (backup restored) — the swap and
-    heal are ``merge._atomic_write``'s, not a local copy (review r9: the
-    duplicated dance had already drifted once)."""
+    root silently missing an arbitrary subset of partitions). The build
+    writes through ``merge._atomic_write`` — staged to the hidden
+    ``.<name>.__staging__`` sibling, swapped and healed by the merge
+    module's one swap helper and heal, not a local copy (review r9: a
+    duplicated copy had already drifted once). A crashed build is
+    self-healed on the next call (backup restored)."""
     out = rollup_frame(base, partition_col, group_cols, measures)
     # one task per partition: rollup partitions are aggregate-sized (small),
     # so fan-out to tasks x partitions files would be pure scan overhead
@@ -115,7 +117,7 @@ def refresh_rollup(
     if not touched:
         return
     # crash heal FIRST (review r9): if the last full build died between its
-    # two renames, only `<rollup>.__old__` (the intact previous table)
+    # two renames, only `.<rollup>.__old__` (the intact previous table)
     # exists — the partition swap below would otherwise mkdir a fresh empty
     # root and swap in only this batch's partitions, a rollup that READS as
     # valid but silently misses every other partition, while the next build

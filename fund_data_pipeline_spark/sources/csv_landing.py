@@ -27,7 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..parse import asset_type_from_path, filename_stem_ticker, path_date
+from ..parse import asset_type_from_path, filename_stem_ticker
 
 
 #: default sentinel-name tokens skipped by the landing scans. Matching is
@@ -69,13 +69,14 @@ def name_excluded(basename: str, parts: Sequence[str] = DEFAULT_EXCLUDE_NAME_PAR
 def read_landing_csvs(
     spark: SparkSession,
     paths: Sequence[str],
-    recursive: bool = True,
-    path_glob: str | None = "*.csv",
     exclude_name_parts: Sequence[str] = DEFAULT_EXCLUDE_NAME_PARTS,
-    with_provenance: bool = True,
     schema: str | None = None,
 ) -> DataFrame:
     """S1/S3/S5/S6/S7: one permissive scan over all landing dirs.
+
+    Every ``*.csv`` file under each of ``paths`` is read (recursive lookup;
+    a glob in a path string narrows the scan, S3), and each row carries its
+    source file as ``origin_file``.
 
     ``exclude_name_parts`` reproduces the 'skip files with error/log in the
     name' rule (00_performance_data_cleaner.py:60-61) as a filter on the
@@ -98,7 +99,8 @@ def read_landing_csvs(
     reader = (
         spark.read.option("header", True)
         .option("mode", "PERMISSIVE")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.csv")
     )
     if schema is not None:
         # enforceSchema=false makes Spark VERIFY each file's CSV header
@@ -112,30 +114,25 @@ def read_landing_csvs(
             .option("enforceSchema", "false")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
         )
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
     df = reader.csv(list(paths))
     df = df.withColumn("origin_file", F.input_file_name())
     if exclude_name_parts:
         df = df.filter(~name_excluded_col(F.col("origin_file"), exclude_name_parts))
-    if not with_provenance:
-        df = df.drop("origin_file")
     return df
 
 
 def read_per_entity_csvs(
     spark: SparkSession,
     root: str,
-    ticker_from_stem: bool = True,
     infer_asset_type: bool = True,
-    infer_date: bool = False,
     exclude_name_parts: Sequence[str] = DEFAULT_EXCLUDE_NAME_PARTS,
 ) -> DataFrame:
-    """S2/S4: one scan over per-ticker files, metadata from the path.
+    """S2: one scan over per-ticker files, metadata from the path.
 
     Replaces the reference's rglob loop (00_price_history_cleaner.py:36-64):
     ticker = filename stem before '_', asset_type = 'ETF' if the path
-    contains 'etf', as_of_date = the YYYY-MM-DD directory component.
+    contains 'etf'. (S4 path-date inference is :func:`..parse.path_date`,
+    applied by the holdings loader.)
     (The reference rglobs ALL *.csv and skips files per-file on parse
     failure; the name filter here is the distributed stand-in for that
     skip, and it matches whole basename tokens so a real ticker like
@@ -143,44 +140,31 @@ def read_per_entity_csvs(
     ``exclude_name_parts`` per call for trees with other sentinel names.)
     """
     df = read_landing_csvs(spark, [root], exclude_name_parts=exclude_name_parts)
-    if ticker_from_stem:
-        df = df.withColumn("ticker", F.upper(filename_stem_ticker(F.col("origin_file"))))
+    df = df.withColumn("ticker", F.upper(filename_stem_ticker(F.col("origin_file"))))
     if infer_asset_type:
         df = df.withColumn("asset_type", asset_type_from_path(F.col("origin_file")))
-    if infer_date:
-        df = df.withColumn("as_of_date", path_date(F.col("origin_file")))
     return df
 
 
-def read_landing_jsonl(
-    spark: SparkSession,
-    paths: Sequence[str],
-    recursive: bool = True,
-    path_glob: str | None = "*.jsonl",
-    with_provenance: bool = True,
-    exclude_name_parts: Sequence[str] = DEFAULT_EXCLUDE_NAME_PARTS,
-) -> DataFrame:
-    """JSON-lines landing scan (scraper output beyond CSV): same contract as
+def read_landing_jsonl(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
+    """JSON-lines landing scan (scraper output beyond CSV) over every
+    ``*.jsonl`` file under ``paths``: same contract as
     :func:`read_landing_csvs` — one distributed scan, permissive parse
     (malformed lines land in ``_corrupt_record`` instead of failing the job),
     provenance from ``input_file_name()``, and the SAME error/log sentinel
     filename filter (review r11: 'same contract' previously lacked the
     filter, so an errors.jsonl dropped next to the data files by a scraper
     was ingested as data — the exact class r10 fixed for the CSV stream)."""
-    reader = (
+    file_col = F.input_file_name()
+    return (
         spark.read.option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.jsonl")
+        .json(list(paths))
+        .filter(~name_excluded_col(file_col))
+        .withColumn("origin_file", file_col)
     )
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    df = reader.json(list(paths))
-    file_col = F.input_file_name()
-    if exclude_name_parts:
-        df = df.filter(~name_excluded_col(file_col, exclude_name_parts))
-    if with_provenance:
-        df = df.withColumn("origin_file", file_col)
-    return df
 
 
 def union_conformed(dfs: Sequence[DataFrame]) -> DataFrame:

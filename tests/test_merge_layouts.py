@@ -896,6 +896,160 @@ def test_build_rollup_recovers_from_crashed_swap(spark, tmp_path):
     assert read_rollup(spark, str(path)).count() == 2
     assert not (tmp_path / "r.__old__").exists()
     assert not (tmp_path / "r.__staging__").exists()
+    assert not (tmp_path / ".r.__staging__").exists()
+
+
+def test_merge_heals_crashed_root_swap_before_layout_guard(spark, tmp_path, monkeypatch):
+    """A hive rollup build that crashed between its swap's two renames
+    leaves only the hidden root backup, which alone reads as no table. The
+    heal restores it before the layout guard looks, so a flat merge_upsert
+    on that path is refused instead of rewriting the rollup flat."""
+    from fund_data_pipeline_spark import merge
+    from fund_data_pipeline_spark.rollup import build_rollup, read_rollup
+
+    base = _snapshot(spark, [("A", "2024-01", 1.0), ("B", "2024-02", 2.0)])
+    path = tmp_path / "r"
+
+    def rollup():
+        build_rollup(base, str(path), partition_col="dt", group_cols=["ticker"],
+                     measures={"total": F.sum("value")})
+
+    rollup()
+
+    def crashing_swap(staged, live):
+        live.rename(live.with_name(f".{live.name}.__old__"))
+        raise OSError("injected crash between the swap's renames")
+
+    monkeypatch.setattr(merge, "_swap_in", crashing_swap)
+    with pytest.raises(OSError, match="injected crash"):
+        rollup()
+    monkeypatch.undo()
+    assert not path.exists() and (tmp_path / ".r.__old__").exists()
+
+    with pytest.raises(ValueError, match="existing hive-layout table"):
+        merge_upsert(spark, str(path), _snapshot(spark, [("C", "2024-03", 3.0)]), keys=["ticker"])
+    assert read_rollup(spark, str(path)).count() == 2
+
+
+def _swap_writers(spark, t):
+    """writer -> (first write, second write, read) against the table path
+    ``t``, for every writer that rewrites through merge's one swap helper.
+    Each second write replaces a directory the first one left live."""
+    from fund_data_pipeline_spark.maintenance import compact_partition, delete_keys, snapshot
+    from fund_data_pipeline_spark.rollup import build_rollup, read_rollup
+
+    base = _snapshot(
+        spark, [("AAA", "2024-01", 1.0), ("BBB", "2024-01", 2.0), ("CCC", "2024-02", 3.0)]
+    )
+    # updates partition 2024-01 (swapped first, so the crash hits a live
+    # directory) and creates 2024-03
+    batch = _snapshot(spark, [("BBB", "2024-01", 5.0), ("DDD", "2024-03", 4.0)])
+
+    def table():
+        return read_table(spark, str(t))
+
+    def merge(df, **kw):
+        return lambda: merge_upsert(spark, str(t), df, **kw)
+
+    def rollup(df):
+        return lambda: build_rollup(
+            df, str(t), partition_col="dt", group_cols=["ticker"],
+            measures={"total": F.sum("value")},
+        )
+
+    def delete(ticker):
+        victims = spark.createDataFrame([(ticker,)], "ticker string")
+        return lambda: delete_keys(spark, str(t), victims, ["ticker"])
+
+    def compact_then_append():
+        base.repartition(3).write.parquet(str(t))
+        compact_partition(spark, str(t))
+        batch.repartition(2).write.mode("append").parquet(str(t))
+
+    def merge_then_delete():
+        merge(base, keys=["ticker"])()
+        delete("AAA")()
+
+    hive = {"keys": ["ticker", "dt"], "partition_col": "dt"}
+    return {
+        "merge_upsert_flat": (merge(base, keys=["ticker"]), merge(batch, keys=["ticker"]), table),
+        "merge_upsert_partitioned": (merge(base, **hive), merge(batch, **hive), table),
+        "snapshot": (
+            lambda: snapshot(base, str(t), "2024-03-01"),
+            lambda: snapshot(batch, str(t), "2024-03-01"),
+            lambda: spark.read.parquet(str(t)),
+        ),
+        "compact_partition": (
+            compact_then_append,
+            lambda: compact_partition(spark, str(t)),
+            lambda: spark.read.parquet(str(t)),
+        ),
+        "build_rollup": (rollup(base), rollup(base.unionByName(batch)), lambda: read_rollup(spark, str(t))),
+        "delete_keys_flat": (merge_then_delete, delete("BBB"), table),
+    }
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [
+        "merge_upsert_flat",
+        "merge_upsert_partitioned",
+        "snapshot",
+        "compact_partition",
+        "build_rollup",
+        "delete_keys_flat",
+    ],
+)
+def test_writer_heals_crash_between_swap_renames(spark, tmp_path, monkeypatch, writer):
+    """Every writer sharing merge's swap helper survives a crash between
+    the swap's two renames: the helper is patched to die right after its
+    first rename, so the leftover carries the names the writers actually
+    use (the older crash-heal tests stage that state by hand). A rerun of
+    the crashed write must leave the table exactly as a clean second write
+    does, with no backup or staging entry in either spelling beside or
+    inside it."""
+    from fund_data_pipeline_spark import merge
+
+    def residue(root):
+        return sorted(
+            str(q.relative_to(root))
+            for q in root.rglob("*")
+            if "__old__" in q.name or "__staging__" in q.name
+        )
+
+    def rows(read):
+        return sorted(tuple(r) for r in read().collect())
+
+    first, second, read = _swap_writers(spark, tmp_path / "clean" / "t")[writer]
+    first()
+    second()
+    expected = rows(read)
+
+    first, second, read = _swap_writers(spark, tmp_path / "crash" / "t")[writer]
+    first()
+    real_swap, real_rename = merge._swap_in, Path.rename
+    crashed = []
+
+    def crashing_swap(staged, live):
+        def rename_then_die(self, target):
+            real_rename(self, target)
+            crashed.append(live)
+            raise OSError("injected crash between the swap's renames")
+
+        with monkeypatch.context() as m:
+            m.setattr(Path, "rename", rename_then_die)
+            real_swap(staged, live)
+
+    with monkeypatch.context() as m:
+        m.setattr(merge, "_swap_in", crashing_swap)
+        with pytest.raises(OSError, match="injected crash"):
+            second()
+    assert not crashed[0].exists()  # died between the renames: only the backup is left
+    assert any("__old__" in name for name in residue(tmp_path / "crash"))
+
+    second()
+    assert rows(read) == expected
+    assert residue(tmp_path) == []
 
 
 def _sd_snapshot(spark, rows):

@@ -509,6 +509,9 @@ def test_connected_components_driver_path_matches_distributed(spark):
     # path of 40 + triangle + singleton nodes; only half the path nodes declared
     edges_rows = [(ids[i], ids[i + 1]) for i in range(39)]
     edges_rows += [(ids[40], ids[41]), (ids[41], ids[42]), (ids[42], ids[40])]
+    # NULL endpoints: both routes drop the edge, so the undeclared ids[43]
+    # is absent and the declared ids[44] stays a singleton
+    edges_rows += [(ids[43], None), (None, ids[44]), (None, None)]
     nodes = spark.createDataFrame(
         [(ids[i],) for i in range(0, 60, 2)], "node long"
     )
@@ -524,6 +527,7 @@ def test_connected_components_driver_path_matches_distributed(spark):
         ).collect()
     }
     assert via_driver == via_dist
+    assert ids[43] not in via_driver and via_driver[ids[44]] == ids[44]
 
     # opportunistic star-loop collect needs a graph whose canonical edge
     # set actually SHRINKS under contraction (a path keeps ~n-1 edges every
