@@ -1,0 +1,44 @@
+"""SQL-text spelling of names, string values and types.
+
+The per-column builders (the merge kernel, ``conform``, the row hashes, the
+dedup window) hand their expressions to the JVM as SQL text: in PySpark
+classic every Column call is several py4j round trips, so a projection built
+one Column per table column costs thousands of round trips on a wide table,
+while ``selectExpr`` or one ``F.expr`` costs one message per expression
+string. Catalyst parses the text into the same expression trees. All SQL
+text in the package is quoted here, in one place.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import types as T
+
+
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted identifier: any column name (spaces,
+    dots, backticks, non-ASCII) is one name, never a nested path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def lit(value: str) -> str:
+    """``value`` as a SQL string literal (Spark's default string-literal
+    parsing, where backslash escapes are processed)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """``dt`` as a SQL type for ``CAST``/``try_cast``. Struct field names are
+    quoted (a ``simpleString`` such as ``struct<a b:int>`` does not parse)
+    and non-nullable struct fields keep ``NOT NULL``; SQL has no spelling
+    for non-null array elements or map values, so those read nullable."""
+    if isinstance(dt, T.StructType):
+        fields = ", ".join(
+            f"{ident(f.name)}: {sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+            for f in dt.fields
+        )
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    return dt.simpleString()

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._sql import ident, lit
+
 
 def dedup_keyed(
     df: DataFrame,
@@ -44,28 +46,28 @@ def dedup_keyed(
     clash = {"__rn", "__cnt"} & set(df.columns)
     if clash:
         raise ValueError(f"column names reserved by dedup_keyed: {sorted(clash)}")
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    pk = [F.col(k) for k in keys]
-    if keep == "last" and all(isinstance(c, str) for c in order_by):
-        # fast path (the merge engine's): reverse the ordering, take row 1
-        w = Window.partitionBy(*pk).orderBy(*[F.col(c).desc() for c in order_by])
+    if all(isinstance(c, str) for c in order_by):
+        # the merge engine's route: one window expression as SQL text (a
+        # Column chain costs py4j round trips per order column); keep='last'
+        # reverses the ordering and takes row 1
+        direction = " DESC" if keep == "last" else ""
+        partition = f"PARTITION BY {', '.join(ident(k) for k in keys)} " if keys else ""
+        order = ", ".join(ident(c) + direction for c in order_by)
+        out = df.selectExpr("*", f"row_number() OVER ({partition}ORDER BY {order}) AS __rn")
         pred = F.col("__rn") == 1
-        out = df.withColumn("__rn", F.row_number().over(w))
-    elif keep == "last":
-        # Column entries may already BE sort orders (F.col('x').desc());
-        # calling .desc() on one nests SortOrder(SortOrder(..)) and fails
-        # analysis. Keep the caller's ordering untouched and take the LAST
-        # row instead: rn == partition count. Same exchange + sort; the
-        # count runs as a second window pass over the sorted partition.
-        w = Window.partitionBy(*pk).orderBy(*cols)
-        out = df.withColumn("__rn", F.row_number().over(w)).withColumn(
-            "__cnt", F.count(F.lit(1)).over(Window.partitionBy(*pk))
-        )
-        pred = F.col("__rn") == F.col("__cnt")
     else:
-        w = Window.partitionBy(*pk).orderBy(*cols)
+        pk = [F.col(ident(k)) for k in keys]
+        cols = [F.col(ident(c)) if isinstance(c, str) else c for c in order_by]
+        out = df.withColumn("__rn", F.row_number().over(Window.partitionBy(*pk).orderBy(*cols)))
         pred = F.col("__rn") == 1
-        out = df.withColumn("__rn", F.row_number().over(w))
+        if keep == "last":
+            # Column entries may already BE sort orders (F.col('x').desc());
+            # calling .desc() on one nests SortOrder(SortOrder(..)) and fails
+            # analysis. Keep the caller's ordering untouched and take the
+            # LAST row instead: rn == partition count. Same exchange + sort;
+            # the count runs as a second window pass over the sorted partition.
+            out = out.withColumn("__cnt", F.count(F.lit(1)).over(Window.partitionBy(*pk)))
+            pred = F.col("__rn") == F.col("__cnt")
     return out.filter(pred).drop("__rn", "__cnt")
 
 
@@ -95,17 +97,17 @@ def dedup_min(df: DataFrame, keys: Sequence[str]) -> DataFrame:
         return df.dropDuplicates(list(keys))  # rows are identical per key
     if "__s" in df.columns:
         raise ValueError("column name reserved by dedup_min: '__s'")
-    agg = df.groupBy(*[F.col(k) for k in keys]).agg(
-        F.min(F.struct(*[F.col(c) for c in others])).alias("__s")
+    # the struct and the final projection are as wide as the table: each
+    # goes to the JVM as SQL text, not a Column per column
+    agg = df.groupBy(*[F.col(ident(k)) for k in keys]).agg(
+        F.expr(f"min(struct({', '.join(ident(c) for c in others)})) AS __s")
     )
     # restore the caller's column order (downstream all-columns hashing is
-    # column-order-sensitive); getField, not F.col("__s.<name>") — a dotted
-    # column name would mis-parse as a nested path (review r11)
-    sel = [
-        F.col(c) if c in keys else F.col("__s").getField(c).alias(c)
-        for c in df.columns
-    ]
-    return agg.select(*sel)
+    # column-order-sensitive); `__s`['<name>'] is a field lookup by name, so
+    # a dotted column name cannot mis-parse as a nested path (review r11)
+    return agg.selectExpr(
+        *[ident(c) if c in keys else f"__s[{lit(c)}] AS {ident(c)}" for c in df.columns]
+    )
 
 
 def duplicate_stats(df: DataFrame, keys: Sequence[str]) -> DataFrame:

@@ -2,7 +2,14 @@
 
 All are single Column expressions (md5/sha2 over concat), evaluated
 JVM-side, reproducing the reference's hash SHAPES (same columns, same
-separators, same null coercion rule). Byte-parity scope — what a
+separators, same null coercion rule). The hashes whose width is the
+table's (H2, v2, H6) are sent to the JVM as ONE SQL expression string
+(``F.expr``) when given column names: built as a Column chain they cost
+about 50 py4j round trips per hashed column (about 3,000 for 60 columns,
+before anything runs), as text one message. Catalyst parses the text into
+the same tree, so stored hashes do not change (pinned by
+``tests/test_sql_builders.py`` and the golden values in
+``tests/test_core.py``). Byte-parity scope — what a
 migration comparing hashes across systems must know:
 
 - exact for STRING / integer / date-formatted inputs (the H2/H5/H7
@@ -33,6 +40,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._sql import ident, lit
+
 #: unit-separator used by the v2 (collision-safe) hash
 SAFE_SEP = "\x1f"
 
@@ -46,6 +55,18 @@ def _as_str(col: Column | str) -> Column:
     return F.coalesce(_c(col).cast("string"), F.lit(""))
 
 
+def _md5_over(cols: Sequence[Column | str], sep: str | None) -> Column:
+    """md5 over the str-coerced ``cols``, joined by ``sep`` (None: plain
+    concat). Column names become one SQL expression; a list holding a
+    Column keeps the Column chain, since a Column has no SQL text."""
+    if all(isinstance(c, str) for c in cols):
+        parts = ", ".join(f"coalesce(CAST({ident(c)} AS STRING), '')" for c in cols)
+        joined = f"concat({parts})" if sep is None else f"concat_ws({lit(sep)}, {parts})"
+        return F.expr(f"md5({joined})")
+    strs = [_as_str(c) for c in cols]
+    return F.md5(F.concat(*strs) if sep is None else F.concat_ws(sep, *strs))
+
+
 def row_hash_concat(cols: Sequence[Column | str]) -> Column:
     """H2: md5(''.join(str(a) if a is not None else '')) — byte-compatible.
 
@@ -53,12 +74,12 @@ def row_hash_concat(cols: Sequence[Column | str]) -> Column:
     with ('a','bc'); kept for hash parity. Use :func:`row_hash_safe` for new
     tables.
     """
-    return F.md5(F.concat(*[_as_str(c) for c in cols]))
+    return _md5_over(cols, None)
 
 
 def row_hash_safe(cols: Sequence[Column | str]) -> Column:
     """v2 hash: md5 over unit-separator-joined values (collision-safe)."""
-    return F.md5(F.concat_ws(SAFE_SEP, *[_as_str(c) for c in cols]))
+    return _md5_over(cols, SAFE_SEP)
 
 
 def row_hash_json(df_or_cols: DataFrame | Sequence[str]) -> Column:
@@ -117,8 +138,7 @@ def normalized_key_hash(
 
 def all_columns_hash(df: DataFrame, exclude: Sequence[str] = ("row_hash", "updated_at")) -> Column:
     """H6: hash over every column except audit cols, in current column order."""
-    cols = [c for c in df.columns if c not in set(exclude)]
-    return F.md5(F.concat(*[_as_str(c) for c in cols]))
+    return _md5_over([c for c in df.columns if c not in set(exclude)], None)
 
 
 def master_row_hash() -> Column:
@@ -127,10 +147,10 @@ def master_row_hash() -> Column:
 
 
 def with_row_hash(df: DataFrame, hash_expr: Column | None = None) -> DataFrame:
-    """Attach ``row_hash`` (+ refresh ``updated_at`` — H10) to a DataFrame."""
+    """Attach ``row_hash`` (+ refresh ``updated_at`` — H10) to a DataFrame,
+    in one projection."""
     expr = hash_expr if hash_expr is not None else all_columns_hash(df)
-    out = df.withColumn("row_hash", expr)
-    return out.withColumn("updated_at", F.current_timestamp())
+    return df.withColumns({"row_hash": expr, "updated_at": F.current_timestamp()})
 
 
 def degenerate_hash_guard(df: DataFrame, hash_col: str = "row_hash") -> bool:

@@ -56,11 +56,13 @@ import os
 import shutil
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ._sql import ident, sql_type
 from .dedup import dedup_keyed
 
 @dataclass
@@ -294,82 +296,78 @@ def _merge_kernel(
     """The MERGE rules, shared by :func:`merge_upsert` and
     :func:`merge_as_dataframe`: the keyed full-outer join of ``target`` and
     ``source`` projected to the post-merge columns plus ``__action``
-    (``insert`` / ``update`` / ``unchanged`` / ``keep``)."""
-    _refuse_reserved([*target.columns, *source.columns])
+    (``insert`` / ``update`` / ``unchanged`` / ``keep``).
+
+    The join condition and the projection are built as SQL text — one
+    ``F.expr`` and one ``selectExpr`` — because both grow with the table:
+    in PySpark classic every Column call is several py4j round trips, so
+    as Column chains a 60-column kernel cost about 7,200 round trips of
+    driver time before it ran, as text 84. Catalyst parses the text into
+    the trees the Column chains built, with the conjunction kept
+    left-deep."""
+    # each .columns/.schema is a py4j schema fetch: read them once
+    t_cols, s_cols = target.columns, source.columns
+    _refuse_reserved([*t_cols, *s_cols])
     # Presence must be decided by explicit markers, not key-null tests: the
-    # join is eqNullSafe precisely so NULL key values can match, and a target
+    # join is null-safe precisely so NULL key values can match, and a target
     # row whose first key is NULL would otherwise be misclassified as an
     # insert (preserve_cols taken from source, stats wrong).
     t = target.withColumn("__t_present", F.lit(True)).alias("t")
     s = source.withColumn("__s_present", F.lit(True)).alias("s")
-    if null_safe_keys:
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    else:
-        cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
-    joined = t.join(s, cond, "full_outer")
+    eq = "<=>" if null_safe_keys else "="
+    cond = reduce(
+        lambda a, b: f"({a}) AND ({b})", [f"t.{ident(k)} {eq} s.{ident(k)}" for k in keys]
+    )
+    joined = t.join(s, F.expr(cond), "full_outer")
 
-    s_present = F.col("s.__s_present").isNotNull()
-    t_present = F.col("t.__t_present").isNotNull()
-    if unconditional:
-        changed = F.lit(True)
-    else:
-        changed = _null_safe_ne(F.col(f"t.{hash_col}"), F.col(f"s.{hash_col}"))
+    s_present = "(s.__s_present IS NOT NULL)"
+    t_present = "(t.__t_present IS NOT NULL)"
+    changed = "true" if unconditional else f"(NOT (t.{ident(hash_col)} <=> s.{ident(hash_col)}))"
     # staleness guard: a matched source row older than the stored one loses
     # outright — gates the hash-guard branch AND always-update/new columns
-    stale = F.lit(False)
+    stale = "false"
     if precedence_col is not None:
-        if precedence_col not in target.columns:
+        if precedence_col not in t_cols:
             raise ValueError(
                 f"target is missing precedence_col {precedence_col!r}; the "
                 f"staleness guard needs the stored value to compare against"
             )
-        stale = (
-            F.col(f"s.{precedence_col}").isNotNull()
-            & F.col(f"t.{precedence_col}").isNotNull()
-            & (F.col(f"s.{precedence_col}") < F.col(f"t.{precedence_col}"))
-        )
-        changed = changed & ~stale
+        sp, tp = f"s.{ident(precedence_col)}", f"t.{ident(precedence_col)}"
+        stale = f"((({sp} IS NOT NULL) AND ({tp} IS NOT NULL)) AND ({sp} < {tp}))"
+        changed = f"({changed} AND (NOT {stale}))"
 
-    out_cols = target.columns
-    new_cols = [c for c in source.columns if c not in out_cols]
+    out_cols = t_cols
+    new_cols = [c for c in s_cols if c not in t_cols]
     if allow_new_columns:
         out_cols = out_cols + new_cols
     preserve = set(preserve_cols)
     always = set(always_update_cols)
-    src_dtypes = dict(source.dtypes)
+    src_types = {f.name: f.dataType for f in source.schema.fields}
 
-    merged_cols: list[Column] = []
+    exprs: list[str] = []
     for c in out_cols:
-        s_c = F.col(f"s.{c}") if c in source.columns else F.lit(None)
-        t_c = (
-            F.col(f"t.{c}")
-            if c in target.columns
-            else F.lit(None).cast(src_dtypes[c])
-        )
+        s_c = f"s.{ident(c)}" if c in s_cols else "NULL"
+        t_c = f"t.{ident(c)}" if c in t_cols else f"CAST(NULL AS {sql_type(src_types[c])})"
         if c in keys:
-            expr = F.coalesce(t_c, s_c)
+            expr = f"coalesce({t_c}, {s_c})"
         elif c in preserve:
-            expr = F.when(t_present, t_c).otherwise(s_c)
+            expr = f"CASE WHEN {t_present} THEN {t_c} ELSE {s_c} END"
         elif c in always or c in new_cols:
             # new columns are always-update: the stored hash predates them,
             # so the hash guard must not freeze them at NULL on matched rows
-            expr = F.when(s_present & ~stale, s_c).otherwise(t_c)
+            expr = f"CASE WHEN ({s_present} AND (NOT {stale})) THEN {s_c} ELSE {t_c} END"
         else:
             expr = (
-                F.when(~t_present, s_c)
-                .when(~s_present, t_c)
-                .when(changed, s_c)
-                .otherwise(t_c)
+                f"CASE WHEN (NOT {t_present}) THEN {s_c} WHEN (NOT {s_present}) THEN {t_c} "
+                f"WHEN {changed} THEN {s_c} ELSE {t_c} END"
             )
-        merged_cols.append(expr.alias(c))
+        exprs.append(f"{expr} AS {ident(c)}")
 
     action = (
-        F.when(~t_present, F.lit("insert"))
-        .when(~s_present, F.lit("keep"))
-        .when(changed, F.lit("update"))
-        .otherwise(F.lit("unchanged"))
+        f"CASE WHEN (NOT {t_present}) THEN 'insert' WHEN (NOT {s_present}) THEN 'keep' "
+        f"WHEN {changed} THEN 'update' ELSE 'unchanged' END AS __action"
     )
-    return joined.select(*merged_cols, action.alias("__action"))
+    return joined.selectExpr(*exprs, action)
 
 
 # ---------------------------------------------------------------------------
@@ -815,7 +813,8 @@ def diff_frames(
     keys join null-safely (matching the merge's own semantics)."""
     keys = list(keys)
     reserved = {"__o_present", "__n_present"}
-    clash = reserved & (set(old.columns) | set(new.columns))
+    old_cols, new_cols = set(old.columns), new.columns
+    clash = reserved & (old_cols | set(new_cols))
     if clash:
         raise ValueError(f"column names reserved by diff_frames: {sorted(clash)}")
     cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in keys]
@@ -836,9 +835,9 @@ def diff_frames(
     # old value (caught by the round-trip property test)
     cols = [
         F.when(n_present, F.col(f"n.{c}")).otherwise(F.col(f"o.{c}")).alias(c)
-        if c in old.columns
+        if c in old_cols
         else F.col(f"n.{c}").alias(c)
-        for c in new.columns
+        for c in new_cols
         if c != "__n_present"
     ]
     return (

@@ -91,6 +91,30 @@ def test_row_hash_concat_matches_reference_algorithm(spark):
     assert got == expected
 
 
+def test_stored_hashes_are_stable(spark):
+    """H6 (``all_columns_hash``) and v2 (``row_hash_safe``) are stored in
+    every merged table and compared by the hash guard on the next load, so
+    their bytes may never drift across releases: a drift re-fires the guard
+    on every unchanged row. The golden values were captured from the
+    Column-chain builders these SQL-text builders replaced, over one row with
+    NULL, decimal, date and timestamp values (session time zone UTC)."""
+    row = spark.sql(
+        """SELECT 'VTSAX' AS ticker, CAST(NULL AS STRING) AS name,
+           CAST('1234.5000' AS DECIMAL(18,4)) AS nav_price, DATE'2024-02-29' AS as_of_date,
+           TIMESTAMP'2024-03-01 12:34:56.789' AS scraped_at, CAST(NULL AS DECIMAL(18,4)) AS fee,
+           'x' AS row_hash, TIMESTAMP'2020-01-01 00:00:00' AS updated_at"""
+    )
+    cols = ["ticker", "name", "nav_price", "as_of_date", "scraped_at", "fee"]
+    got = row.select(
+        hashing.all_columns_hash(row).alias("h6"), hashing.row_hash_safe(cols).alias("v2")
+    ).first()
+    values = ["VTSAX", "", "1234.5000", "2024-02-29", "2024-03-01 12:34:56.789", ""]
+    assert got.h6 == "56f5c3508c3e450b8c9960884a4ee8d8"
+    assert got.h6 == hashlib.md5("".join(values).encode()).hexdigest()
+    assert got.v2 == "d7136b1209858495af45be6798c5639b"
+    assert got.v2 == hashlib.md5(hashing.SAFE_SEP.join(values).encode()).hexdigest()
+
+
 def test_ohlcv_hash_matches_reference_algorithm(spark):
     # reference: sha256 over str-concat of OHLCV, missing -> ""
     # (02_performance_sync/02_history_hasher.py:31-36)
