@@ -128,7 +128,8 @@ def conform(
     module docstring).
     """
     df = rename_synonyms(normalize_headers(df), renames)
-    # one schema fetch (each df.columns / df.schema is a py4j round trip)
+    # the schema of the renamed frame: its first read is two py4j round
+    # trips, later reads are cached (the cost is per new DataFrame)
     present = {f.name: f.dataType for f in df.schema.fields}
     exprs: list[str] = []
     for field in schema.fields:

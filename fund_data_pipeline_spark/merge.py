@@ -153,6 +153,34 @@ def merge_upsert(
       Default ``None`` preserves the table's persisted retention (1 for a
       table that never declared one); an explicit int sets and persists it.
     """
+    merged, touched = _build_merge(
+        spark, target_path, source, keys, hash_col, preserve_cols, always_update_cols,
+        unconditional, precedence_col, dedupe_order, partition_col, layout, allow_new_columns,
+    )
+    return _write_merge(merged, target_path, touched, layout, partition_col, history)
+
+
+def _build_merge(
+    spark: SparkSession,
+    target_path: str,
+    source: DataFrame,
+    keys: Sequence[str],
+    hash_col: str = "row_hash",
+    preserve_cols: Sequence[str] = (),
+    always_update_cols: Sequence[str] = (),
+    unconditional: bool = False,
+    precedence_col: str | None = None,
+    dedupe_order: Sequence[str] | None = None,
+    partition_col: str | None = None,
+    layout: str = "rename",
+    allow_new_columns: bool = False,
+) -> tuple[DataFrame, list | None]:
+    """The first half of :func:`merge_upsert`: heal and guard the target,
+    dedup the batch, collect its touched partitions and build the merged
+    relation, which carries ``__action`` for :func:`_write_merge`. Returns
+    ``(merged, touched)``; nothing is written. A caller may map ``merged``
+    row by row (keeping ``__action``) before writing it, as
+    ``master_sync.run`` does with the status transitions."""
     keys = list(keys)
     if layout not in ("rename", "manifest"):
         raise ValueError(f"unknown layout {layout!r}; use 'rename' or 'manifest'")
@@ -186,39 +214,56 @@ def merge_upsert(
         touched = [r[0] for r in parts.collect()]
     if not _table_exists(path, layout):
         _refuse_reserved(source.columns)
-        result = source.withColumn("__action", F.lit("insert"))
+        return source.withColumn("__action", F.lit("insert")), touched
+    if partition_col is not None:
+        target = _touched_target(spark, path, source, partition_col, touched)
     else:
-        if partition_col is not None:
-            target = _touched_target(spark, path, source, partition_col, touched)
-        else:
-            target = read_table(spark, str(path))
-        result = _merge_kernel(
-            target,
-            source,
-            keys,
-            hash_col,
-            preserve_cols,
-            always_update_cols=always_update_cols,
-            unconditional=unconditional,
-            precedence_col=precedence_col,
-            allow_new_columns=allow_new_columns,
-        )
+        target = read_table(spark, str(path))
+    merged = _merge_kernel(
+        target,
+        source,
+        keys,
+        hash_col,
+        preserve_cols,
+        always_update_cols=always_update_cols,
+        unconditional=unconditional,
+        precedence_col=precedence_col,
+        allow_new_columns=allow_new_columns,
+    )
+    return merged, touched
 
+
+def _write_merge(
+    merged: DataFrame,
+    target_path: str,
+    touched: list | None,
+    layout: str = "rename",
+    partition_col: str | None = None,
+    history: int | None = None,
+) -> MergeStats:
+    """The second half of :func:`merge_upsert`: write ``merged`` without its
+    ``__action`` column and return the :class:`MergeStats` that one
+    ``Observation`` on the written frame counts from it. The partition swap
+    observes after its repartition: below it, an ``Observation`` over a
+    statically empty batch raises on ``get`` instead of returning zeros."""
+    path = Path(target_path)
     action = F.col("__action")
     obs = Observation()
-    _write_table(
-        result,
-        path,
-        layout,
-        partition_col,
-        history,
-        observe=lambda df: df.observe(
+
+    def observe(df: DataFrame) -> DataFrame:
+        return df.observe(
             obs,
             F.count(F.when(action == "insert", 1)).alias("inserted"),
             F.count(F.when(action == "update", 1)).alias("updated"),
             F.count(F.when(action.isin("unchanged", "keep"), 1)).alias("unchanged"),
-        ).drop("__action"),
-    )
+        ).drop("__action")
+
+    if layout == "manifest":
+        _manifest_write(observe(merged), path, history=history)
+    elif partition_col is not None:
+        _partition_swap_write(merged, path, partition_col, observe)
+    else:
+        _atomic_write(observe(merged), path)
     got = obs.get
     return MergeStats(
         got["inserted"], got["updated"], got["unchanged"], touched_partitions=touched
@@ -305,7 +350,10 @@ def _merge_kernel(
     driver time before it ran, as text 84. Catalyst parses the text into
     the trees the Column chains built, with the conjunction kept
     left-deep."""
-    # each .columns/.schema is a py4j schema fetch: read them once
+    # PySpark caches a DataFrame's schema (``columns`` derives from it): the
+    # first read costs two py4j round trips, later reads none, so the cost
+    # is per new DataFrame — take the names here, before withColumn/alias
+    # make new frames
     t_cols, s_cols = target.columns, source.columns
     _refuse_reserved([*t_cols, *s_cols])
     # Presence must be decided by explicit markers, not key-null tests: the
@@ -579,33 +627,14 @@ def _table_exists(path: Path, layout: str) -> bool:
     return detect_layout(path) in ("hive", "flat")
 
 
-def _write_table(
-    df: DataFrame,
-    path: Path,
-    layout: str,
-    partition_col: str | None,
-    history: int | None,
-    observe: Callable[[DataFrame], DataFrame],
-) -> None:
-    """Write ``observe(df)``. The partition swap applies ``observe`` after
-    its repartition: below it, an ``Observation`` over a statically empty
-    batch raises on ``get`` instead of returning zeros."""
-    if layout == "manifest":
-        _manifest_write(observe(df), path, history=history)
-    elif partition_col is not None:
-        _partition_swap_write(df, path, partition_col, observe)
-    else:
-        _atomic_write(observe(df), path)
-
-
 def _atomic_write(df: DataFrame, path: Path, partition_by: str | None = None) -> None:
     """Write-temp-then-swap: ``df`` is written to the hidden sibling
     ``.<name>.__staging__`` and swapped over ``path`` by :func:`_swap_in`.
-    Every full rewrite in the package goes through here: flat merges and
-    deletes, the master status rewrite, ``maintenance.snapshot`` and
-    ``compact_partition``, and the rollup full build. Staging and backup
-    are dot-prefixed, so ``path`` may itself be a partition directory
-    inside a hive root.
+    Every full rewrite in the package goes through here: flat merges
+    (the master's, with its status transitions folded in, among them) and
+    deletes, ``maintenance.snapshot`` and ``compact_partition``, and the
+    rollup full build. Staging and backup are dot-prefixed, so ``path`` may
+    itself be a partition directory inside a hive root.
 
     POSIX fast path only — the two renames are not atomic as a unit and an
     object store copies on rename; use ``layout="manifest"`` there. A crash
@@ -859,7 +888,7 @@ def _partition_swap_write(
     Returns the set of swapped partition dir names (``<pcol>=<escaped>``) so
     callers can reason about what was actually written — the staging glob is
     the ground truth, not a second evaluation of ``df``. ``observe`` maps
-    the repartitioned frame to the one written (see :func:`_write_table`)."""
+    the repartitioned frame to the one written (see :func:`_write_merge`)."""
     staging = _fresh_staging(path)
     # shuffle rows to their partition before the partitioned write: without
     # this every task emits a file into every partition (tasks x partitions

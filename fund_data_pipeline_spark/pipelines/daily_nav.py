@@ -92,11 +92,12 @@ def run(
     landing_dirs: Sequence[str],
     target_path: str,
     today: Column | None = None,
-) -> tuple[merge.MergeStats, DataFrame]:
-    """Full flow from landing CSVs; returns (merge stats, error side-channel)."""
+) -> tuple[merge.MergeStats, int]:
+    """Full flow from landing CSVs; returns (merge stats, quarantined row
+    count). The count is observed by the merge's own write."""
     raw = read_landing_csvs(spark, list(landing_dirs))
     cleaned = clean(raw)
-    valid, errors = validate_split(cleaned, today)
+    valid, quarantined = validate._counted_split(cleaned, lambda df: validate_split(df, today))
     batch = prepare_load(valid)
     stats = merge.merge_upsert(
         spark,
@@ -105,7 +106,7 @@ def run(
         DAILY_NAV_KEY,
         dedupe_order=["scrape_date"] if "scrape_date" in batch.columns else None,
     )
-    return stats, errors
+    return stats, quarantined()
 
 
 def latest_nav_per_fund(nav: DataFrame) -> DataFrame:

@@ -12,17 +12,20 @@ src/05_db_synchronization/01_master_sync/07_master_sync_orchestrator.py:30-38):
                     failed rules joined by '; ' (F5), valid/invalid split
 4. ``load``         04_master_list_loader.py:43-85 — H7 row hash, K5
                     unconditional upsert preserving first_seen (L1)
-5. ``transition``   05_status_manager.py:30-45 — L3 expiry + L4 promotion
+5. ``transition``   05_status_manager.py:30-45 — L3 expiry + L4 promotion,
+                    applied row by row to the merged relation before the
+                    load writes it, so the table changes in one swap a day
+                    and no crash can leave merged rows untransitioned
 
 Scale: steps 1-3 are map-side except the two keyed dedups (one shuffle
-each on the natural key); the load is one keyed merge. Nothing touches the
+each on the natural key); the load and the transitions are one keyed merge
+and one write, which also counts the quarantined rows. Nothing touches the
 driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,28 +120,25 @@ def run(
     target_path: str,
     as_of: Column | None = None,
     today: Column | None = None,
-) -> tuple[merge.MergeStats, DataFrame]:
-    """Full flow: returns (merge stats, invalid-row side-channel).
+) -> tuple[merge.MergeStats, int]:
+    """Full flow: returns (merge stats, quarantined row count).
 
     The upsert is K5 (unconditional update, first_seen preserved,
-    last_seen always refreshed — 04_master_list_loader.py:69-85); status
-    transitions then rewrite the table in place (05_status_manager.py).
+    last_seen always refreshed — 04_master_list_loader.py:69-85), and the
+    status transitions (05_status_manager.py) map the merged relation
+    before its one write. The quarantine count is observed by that write.
     """
     cleaned = [clean(s) for s in sources]
-    consolidated = consolidate(cleaned)
-    valid, invalid = validate_split(consolidated)
-    batch = prepare_load(valid, as_of)
-    stats = merge.merge_upsert(
+    valid, quarantined = validate._counted_split(consolidate(cleaned), validate_split)
+    merged, touched = merge._build_merge(
         spark,
         target_path,
-        batch,
+        prepare_load(valid, as_of),
         SECURITY_MASTER_KEY,
         preserve_cols=("first_seen",),
         always_update_cols=("last_seen", "updated_at"),
         unconditional=True,
     )
-    # the flat rewrite is safe: merge_upsert refused any non-flat target
-    table = merge.read_table(spark, target_path)
-    transitioned = lifecycle.apply_status_transitions(table, today=today)
-    merge._atomic_write(transitioned, Path(target_path))
-    return stats, invalid
+    transitioned = lifecycle.apply_status_transitions(merged, today=today)
+    stats = merge._write_merge(transitioned, target_path, touched)
+    return stats, quarantined()

@@ -122,9 +122,9 @@ def _record(result: StageResult, value: object) -> None:
     """Normalize a flow's return value into the report.
 
     Flows return one of: ``MergeStats``, ``dict[str, MergeStats]``,
-    ``(MergeStats, invalid_rows_df)``, or ``RepairStats``. The invalid-row
-    side channel is counted (it is the small quarantine subset, and the
-    reference summary reports failure counts too).
+    ``(MergeStats, quarantined_row_count)``, or ``RepairStats``. The
+    quarantine count is reported as the reference summary reports failure
+    counts; the flow's own write observed it, so recording submits no job.
     """
     if isinstance(value, MergeStats):
         result.tables[result.name] = value
@@ -136,17 +136,9 @@ def _record(result: StageResult, value: object) -> None:
     elif isinstance(value, dict):
         result.tables.update(value)
     elif isinstance(value, tuple) and len(value) == 2:
-        stats, side = value
+        stats, quarantined = value
         result.tables[result.name] = stats
-        try:
-            result.side_counts["rows_quarantined"] = side.count()
-        except AttributeError:
-            pass
-        except Exception:  # noqa: BLE001 — the stage's merge already
-            # committed; a failure recounting the quarantine side channel
-            # (e.g. a landing file deleted after the load) must not mark
-            # the stage failed and fail-stop the rest of the run
-            result.side_counts["rows_quarantined"] = -1
+        result.side_counts["rows_quarantined"] = quarantined
     elif value is not None:
         result.side_counts["returned"] = 1
 
@@ -327,10 +319,9 @@ def default_stages(
         if not _has("master_list"):
             return None
         src = read_landing_csvs(spark, [str(root / "master_list")])
-        stats, invalid = master_sync.run(
+        return master_sync.run(
             spark, [src], f"{warehouse}/stg_security_master", as_of=today, today=today
         )
-        return stats, invalid
 
     def _nav():
         if not _has("daily_nav"):

@@ -16,9 +16,10 @@ Both return (valid_df, invalid_df) and never use Python row loops.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 REASON_COL = "error_reason"
@@ -46,6 +47,34 @@ def validation_split_all_reasons(df: DataFrame, rules: Sequence[Rule]) -> tuple[
     valid = annotated.filter(F.col(ISSUES_COL).isNull()).drop(ISSUES_COL)
     invalid = annotated.filter(F.col(ISSUES_COL).isNotNull())
     return valid, invalid
+
+
+def _counted_split(
+    df: DataFrame, split: Callable[[DataFrame], tuple[DataFrame, DataFrame]]
+) -> tuple[DataFrame, Callable[[], int]]:
+    """``split(df)``'s valid half, and a thunk that returns the size of its
+    invalid half once an action has run the valid half.
+
+    The size is rows in minus rows valid, two ``Observation`` counts that
+    fire in the first action over the valid half — the load's own write —
+    so counting the quarantine runs no job of its own and does not re-read
+    the landing files. One case loses them: when the valid half comes out
+    empty and the load joins it to an existing table, adaptive execution
+    replaces the join with its other side, and the counts go with the
+    pruned side (``get`` then raises instead of returning zeros). Nothing
+    passed validation then, so the thunk counts the invalid half: one job,
+    on a day whose whole batch was quarantined."""
+    seen, kept = Observation(), Observation()
+    valid, invalid = split(df.observe(seen, F.count(F.lit(1)).alias("rows")))
+    valid = valid.observe(kept, F.count(F.lit(1)).alias("rows"))
+
+    def quarantined() -> int:
+        try:
+            return seen.get["rows"] - kept.get["rows"]
+        except Py4JJavaError:
+            return invalid.count()
+
+    return valid, quarantined
 
 
 # ---- canonical rule sets ---------------------------------------------------

@@ -936,6 +936,7 @@ def _swap_writers(spark, t):
     ``t``, for every writer that rewrites through merge's one swap helper.
     Each second write replaces a directory the first one left live."""
     from fund_data_pipeline_spark.maintenance import compact_partition, delete_keys, snapshot
+    from fund_data_pipeline_spark.pipelines import master_sync
     from fund_data_pipeline_spark.rollup import build_rollup, read_rollup
 
     base = _snapshot(
@@ -970,6 +971,14 @@ def _swap_writers(spark, t):
         merge(base, keys=["ticker"])()
         delete("AAA")()
 
+    def master(day, rows):
+        scrape = spark.createDataFrame(
+            rows,
+            "ticker string, asset_type string, name string, status string, source string, date_added string",
+        )
+        as_of = F.lit(day).cast("date")
+        return lambda: master_sync.run(spark, [scrape], str(t), as_of=as_of, today=as_of)
+
     hive = {"keys": ["ticker", "dt"], "partition_col": "dt"}
     return {
         "merge_upsert_flat": (merge(base, keys=["ticker"]), merge(batch, keys=["ticker"]), table),
@@ -986,6 +995,14 @@ def _swap_writers(spark, t):
         ),
         "build_rollup": (rollup(base), rollup(base.unionByName(batch)), lambda: read_rollup(spark, str(t))),
         "delete_keys_flat": (merge_then_delete, delete("BBB"), table),
+        # day 2 expires AAA (unseen for 9 days) and promotes BBB (its name
+        # arrived); updated_at is the run's clock, so the read leaves it out
+        "master_sync": (
+            master("2024-03-01", [("AAA", "ETF", "Alpha", "active", "yf", "2024-03-01"),
+                                  ("BBB", "FUND", None, None, "ft", "2024-03-01")]),
+            master("2024-03-10", [("BBB", "FUND", "Beta", None, "ft", "2024-03-01")]),
+            lambda: table().drop("updated_at"),
+        ),
     }
 
 
@@ -998,6 +1015,7 @@ def _swap_writers(spark, t):
         "compact_partition",
         "build_rollup",
         "delete_keys_flat",
+        "master_sync",
     ],
 )
 def test_writer_heals_crash_between_swap_renames(spark, tmp_path, monkeypatch, writer):

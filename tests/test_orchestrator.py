@@ -89,6 +89,35 @@ def test_run_pipeline_full_chain(spark, tmp_path):
     assert report2.ok and report2.totals().inserted == 0
 
 
+def test_recording_the_report_submits_no_job(spark, tmp_path, monkeypatch):
+    """A stage's counts come from its own write: recording its return value
+    into the run report submits no Spark job. Each record call runs under a
+    job group of its own, and the status tracker finds no job in any."""
+    _write_landing(tmp_path / "landing")
+    sc = spark.sparkContext
+    record = orchestrator._record
+    jobs: dict[str, list[int]] = {}
+
+    def watched(result, value):
+        group = f"record-{result.name}-{tmp_path.name}"
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            record(result, value)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+        jobs[result.name] = list(sc.statusTracker().getJobIdsForGroup(group))
+
+    monkeypatch.setattr(orchestrator, "_record", watched)
+    report = run_pipeline(spark, str(tmp_path / "landing"), str(tmp_path / "wh"), today=_today())
+    assert report.ok
+    quarantined = {s.name: s.side_counts.get("rows_quarantined") for s in report.stages}
+    assert quarantined == {
+        "master_sync": 0, "daily_nav": 1, "static_details": None, "holdings": None, "nav_repair": None,
+    }
+    assert jobs == {name: [] for name in quarantined}
+
+
 def test_master_failure_skips_every_later_stage(spark, tmp_path, monkeypatch):
     """The master gate: a failed master_sync skips the whole concurrent
     group and the repair pass (the reference's abort)."""

@@ -88,6 +88,23 @@ def test_daily_nav_merge_idempotent(spark, tmp_path):
     assert (s3.inserted, s3.updated) == (0, 1)
     assert str(spark.read.parquet(target).first().nav_price) == "11.0000"
 
+    # daily_nav.run counts its quarantine from the merge's own write: a batch
+    # with none invalid, an all-invalid batch and a header-only feed
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    header = "Ticker,Asset_Type,Source,nav_price,currency,as_of_date,scrape_date\n"
+    today = F.lit("2024-03-05").cast("date")
+    for body, expected in (
+        ("AAA,FUND,yf,12.0,USD,2024-03-01,2024-03-03\n", (0, 1, 0, 0)),
+        ("AAA,FUND,yf,13.0,USD,2024-03-09,2024-03-03\nBBB,FUND,,9.0,USD,2024-03-01,2024-03-03\n",
+         (0, 0, 1, 2)),  # Future Date, Missing Data
+        ("", (0, 0, 1, 0)),
+    ):
+        (landing / "nav.csv").write_text(header + body)
+        stats, quarantined = daily_nav.run(spark, [str(landing)], target, today)
+        assert (stats.inserted, stats.updated, stats.unchanged, quarantined) == expected
+    assert str(spark.read.parquet(target).first().nav_price) == "12.0000"
+
 
 def test_latest_nav_per_fund(spark):
     nav = spark.createDataFrame(
@@ -121,10 +138,12 @@ def test_master_sync_full_flow_and_lifecycle(spark, tmp_path):
         "ticker string, asset_type string, name string, status string, source string, date_added string",
     )
 
-    stats, invalid = master_sync.run(spark, [ft, yf], target, as_of=day1, today=day1)
-    assert stats.inserted == 2  # blank-ticker row quarantined, in-source dupe collapsed
-    assert invalid.count() == 1
-    assert "Missing Ticker" in invalid.first().validation_issues
+    stats, quarantined = master_sync.run(spark, [ft, yf], target, as_of=day1, today=day1)
+    # blank-ticker row quarantined, in-source dupe collapsed
+    assert (stats.inserted, stats.updated, stats.unchanged, quarantined) == (2, 0, 0, 1)
+    consolidated = master_sync.consolidate([master_sync.clean(ft), master_sync.clean(yf)])
+    _, invalid = master_sync.validate_split(consolidated)
+    assert [r.validation_issues for r in invalid.collect()] == ["Missing Ticker"]
 
     t = {(r.ticker, r.source): r for r in spark.read.parquet(target).collect()}
     vt = t[("VTSAX", "financial_times")]
@@ -140,14 +159,64 @@ def test_master_sync_full_flow_and_lifecycle(spark, tmp_path):
         [("SPY", "ETF", "SPDR S&P 500", "active", "yf", "2024-03-10")],
         ["ticker", "asset_type", "name", "status", "source", "date_added"],
     )
-    master_sync.run(spark, [yf2], target, as_of=day10, today=day10)
+    stats, quarantined = master_sync.run(spark, [yf2], target, as_of=day10, today=day10)
+    assert (stats.inserted, stats.updated, stats.unchanged, quarantined) == (0, 1, 1, 0)
     t2 = {(r.ticker, r.source): r for r in spark.read.parquet(target).collect()}
     assert t2[("VTSAX", "financial_times")].status == "inactive"
     assert t2[("VTSAX", "financial_times")].first_seen == D(2024, 3, 1)  # frozen (L1)
+    assert t2[("VTSAX", "financial_times")].last_seen == D(2024, 3, 1)
     spy2 = t2[("SPY", "yahoo_finance")]
+    assert spy2.status == "active"
     assert spy2.first_seen == D(2024, 3, 1)  # preserved across update
     assert spy2.last_seen == D(2024, 3, 10)  # refreshed (K5)
     assert spy2.name == "SPDR S&P 500"  # unconditional update took the new name
+
+    # the write's own observation counts the quarantine at the edges too:
+    # an all-invalid batch and an empty source frame leave nothing valid to
+    # join to the existing table, and an empty frame creates an empty one
+    ddl = "ticker string, asset_type string, name string, status string, source string, date_added string"
+    all_invalid = spark.createDataFrame(
+        [("", "FUND", "Blank ticker", None, "ft", "2024-03-10"),
+         ("QQQ", "BOND", "Bad asset type", None, "yf", "2024-03-10")],
+        ddl,
+    )
+    empty = spark.createDataFrame([], ddl)
+    for path, src, expected in (
+        (target, all_invalid, (0, 0, 2, 2)),
+        (target, empty, (0, 0, 2, 0)),
+        (str(tmp_path / "fresh"), empty, (0, 0, 0, 0)),
+    ):
+        stats, quarantined = master_sync.run(spark, [src], path, as_of=day10, today=day10)
+        assert (stats.inserted, stats.updated, stats.unchanged, quarantined) == expected
+    assert {(r.ticker, r.status) for r in spark.read.parquet(target).collect()} == {
+        ("VTSAX", "inactive"), ("SPY", "active"),
+    }
+
+
+def test_master_sync_swaps_its_table_once_per_run(spark, tmp_path, monkeypatch):
+    """The status transitions ride the load's one write: each master_sync
+    run moves its table into place with exactly one swap, on the create
+    path and against an existing table, so no crash can leave merged rows
+    whose statuses were never transitioned."""
+    swapped = []
+    swap_in = merge._swap_in
+
+    def counting(staged, live):
+        swapped.append(live)
+        swap_in(staged, live)
+
+    monkeypatch.setattr(merge, "_swap_in", counting)
+    target = str(tmp_path / "stg_security_master")
+    ddl = "ticker string, asset_type string, name string, status string, source string, date_added string"
+    for day, rows in (
+        ("2024-03-01", [("SPY", "ETF", None, None, "yf", "2024-03-01")]),
+        ("2024-03-02", [("SPY", "ETF", "SPDR S&P 500", None, "yf", "2024-03-01")]),
+    ):
+        swapped.clear()
+        as_of = F.lit(day).cast("date")
+        master_sync.run(spark, [spark.createDataFrame(rows, ddl)], target, as_of=as_of, today=as_of)
+        assert [str(p) for p in swapped] == [target]
+    assert spark.read.parquet(target).first().status == "active"  # L4 in the one write
 
 
 # ------------------------------------------------------------ price history
@@ -735,11 +804,11 @@ def test_master_sync_keeps_cross_source_rows_from_combined_frame(spark, tmp_path
         ],
         "ticker string, asset_type string, name string, status string, source string, date_added string",
     )
-    stats, invalid = master_sync.run(spark, [combined], str(tmp_path / "master"))
+    stats, quarantined = master_sync.run(spark, [combined], str(tmp_path / "master"))
     rows = spark.read.parquet(str(tmp_path / "master")).collect()
     sources = sorted(r.source for r in rows)
     assert sources == ["financial_times", "yahoo_finance"]  # both survive
-    assert stats.inserted == 2
+    assert (stats.inserted, quarantined) == (2, 0)
 
 
 def test_nav_stream_replay_clears_shrunken_quarantine(spark, tmp_path):
