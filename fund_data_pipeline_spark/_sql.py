@@ -1,16 +1,21 @@
-"""SQL-text spelling of names, string values and types.
+"""SQL-text spelling of names, string values, types and cleaning rules.
 
 The per-column builders (the merge kernel, ``conform``, the row hashes, the
-dedup window) hand their expressions to the JVM as SQL text: in PySpark
-classic every Column call is several py4j round trips, so a projection built
-one Column per table column costs thousands of round trips on a wide table,
-while ``selectExpr`` or one ``F.expr`` costs one message per expression
-string. Catalyst parses the text into the same expression trees. All SQL
-text in the package is quoted here, in one place.
+dedup window, the daily cleans) hand their expressions to the JVM as SQL
+text: in PySpark classic every Column call is several py4j round trips, so
+a projection built one Column per table column costs thousands of round
+trips on a wide table, while ``selectExpr`` or one ``F.expr`` costs one
+message per expression string. Catalyst parses the text into the same
+expression trees. All SQL text in the package is quoted here, in one place.
 """
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable, Iterable, Mapping
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -42,3 +47,28 @@ def sql_type(dt: T.DataType) -> str:
     if isinstance(dt, T.MapType):
         return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
     return dt.simpleString()
+
+
+def rule(text_rule: Callable[..., str]) -> Callable[..., Column]:
+    """A cleaning rule written once, as text: ``text_rule(e, *args)`` maps
+    the SQL expression text ``e`` to SQL expression text. The decorated name
+    is the rule over a column name (one ``F.expr``); ``name.sql`` is
+    ``text_rule`` itself, for composing rules into one projection."""
+
+    @functools.wraps(text_rule)
+    def over_column(name: str, *args, **kwargs) -> Column:
+        return F.expr(text_rule(ident(name), *args, **kwargs))
+
+    over_column.sql = text_rule
+    return over_column
+
+
+def select(df: DataFrame, exprs: Mapping[str, str]) -> DataFrame:
+    """One ``selectExpr``: output column name -> SQL expression text."""
+    return df.selectExpr(*[f"{e} AS {ident(name)}" for name, e in exprs.items()])
+
+
+def apply_rules(rules: Mapping[str, Callable[[str], str]], columns: Iterable[str]) -> dict[str, str]:
+    """Column name -> SQL text: each of ``columns`` through its rule in
+    ``rules`` (a function of the column's quoted name), or as itself."""
+    return {c: rules[c](ident(c)) if c in rules else ident(c) for c in columns}

@@ -11,9 +11,13 @@ Parity targets (reference file:line):
 - X1/X2 case+trim normalize: 00_master_list_cleaner.py:53-66
 - X3 value synonym maps: 00_master_list_cleaner.py:60,68-73
 
-All pure expressions — no UDFs, fully pushdown/codegen friendly.
-:func:`conform`, whose projection is as wide as the target schema, sends it
-to the JVM as SQL text in one ``selectExpr``: built as Column chains it cost
+The value rules (X1-X3, X9) each have one body, written as SQL text: the
+rule maps input expression text to output expression text (``rule.sql``),
+and the rule's name over a column name is the same rule as one ``F.expr``
+Column (``_sql.rule``). :data:`KEY_RULES` composes them into the
+natural-key normalization every daily clean shares. No UDFs; fully
+pushdown/codegen friendly. :func:`conform`, whose projection is as wide as
+the target schema, is one ``selectExpr``: built as Column chains it cost
 over 100 py4j round trips per column (about 7,700 for 60 columns) before
 the frame ever ran; the text costs one message per column and parses to the
 same expression trees.
@@ -21,13 +25,12 @@ same expression trees.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._sql import ident, lit, sql_type
+from ._sql import ident, lit, rule, select, sql_type
 
 #: string values that mean NULL in the reference's landing files
 NULL_SENTINELS = ("", "nan", "none", "null", "n/a", "na", "-")
@@ -99,75 +102,60 @@ def rename_synonyms(df: DataFrame, renames: Mapping[str, str] | None = None) -> 
     return df.withColumnsRenamed(effective)
 
 
-def null_sentinels_to_null(col: Column | str) -> Column:
+@rule
+def null_sentinels_to_null(e: str) -> str:
     """X9: '', 'nan', 'None', 'N/A', ... (case-insensitive, trimmed) -> NULL."""
-    c = F.col(col) if isinstance(col, str) else col
-    trimmed = F.trim(c)
-    return F.when(F.lower(trimmed).isin(*NULL_SENTINELS), F.lit(None)).otherwise(trimmed)
-
-
-def _null_sentinels_to_null_sql(name: str) -> str:
-    """:func:`null_sentinels_to_null` over the column ``name``, as SQL text."""
-    trimmed = f"trim({ident(name)})"
     sentinels = ", ".join(lit(v) for v in NULL_SENTINELS)
-    return f"CASE WHEN lower({trimmed}) IN ({sentinels}) THEN NULL ELSE {trimmed} END"
+    return f"CASE WHEN lower(trim({e})) IN ({sentinels}) THEN NULL ELSE trim({e}) END"
 
 
-def conform(
-    df: DataFrame,
-    schema: T.StructType,
-    renames: Mapping[str, str] | None = None,
-    clean_strings: bool = True,
-) -> DataFrame:
+def conform(df: DataFrame, schema: T.StructType, clean_strings: bool = True) -> DataFrame:
     """P3: produce exactly ``schema``'s columns in order.
 
+    ``df``'s headers are already normalized (:func:`normalize_headers`,
+    :func:`rename_synonyms`): every caller does that once, in its clean.
     Present columns are cast to the target type (string columns get the
     null-sentinel treatment first); missing columns appear as typed NULLs.
     Extra columns are dropped. One ``selectExpr`` — a single projection
     node that Catalyst folds into the scan, sent as SQL text (see the
     module docstring).
     """
-    df = rename_synonyms(normalize_headers(df), renames)
-    # the schema of the renamed frame: its first read is two py4j round
-    # trips, later reads are cached (the cost is per new DataFrame)
     present = {f.name: f.dataType for f in df.schema.fields}
-    exprs: list[str] = []
+    exprs: dict[str, str] = {}
     for field in schema.fields:
         typ = sql_type(field.dataType)
         if field.name in present:
             c = ident(field.name)
             if clean_strings and isinstance(present[field.name], T.StringType):
-                c = _null_sentinels_to_null_sql(field.name)
+                c = null_sentinels_to_null.sql(c)
             # try_cast: malformed values coerce to NULL (the reference's
             # errors='coerce' semantics), never fail the job (ANSI mode).
-            exprs.append(f"try_cast({c} AS {typ}) AS {ident(field.name)}")
+            exprs[field.name] = f"try_cast({c} AS {typ})"
         else:
-            exprs.append(f"CAST(NULL AS {typ}) AS {ident(field.name)}")
-    return df.selectExpr(*exprs)
+            exprs[field.name] = f"CAST(NULL AS {typ})"
+    return select(df, exprs)
 
 
-def upper_trim(col: Column | str) -> Column:
+@rule
+def upper_trim(e: str) -> str:
     """X1: ticker/asset_type normalize (upper + trim)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.upper(F.trim(c))
+    return f"upper(trim({e}))"
 
 
-def lower_trim(col: Column | str) -> Column:
+@rule
+def lower_trim(e: str) -> str:
     """X2: status normalize (lower + trim)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(F.trim(c))
+    return f"lower(trim({e}))"
 
 
-def map_values(col: Column | str, mapping: Mapping[str, str], default_passthrough: bool = True) -> Column:
-    """X3: value synonym map as chained when/otherwise (e.g. MUTUAL FUND->FUND)."""
-    c = F.col(col) if isinstance(col, str) else col
-    expr: Column | None = None
-    for src, dst in mapping.items():
-        cond = c == F.lit(src)
-        expr = F.when(cond, F.lit(dst)) if expr is None else expr.when(cond, F.lit(dst))
-    if expr is None:
-        return c
-    return expr.otherwise(c) if default_passthrough else expr
+@rule
+def map_values(e: str, mapping: Mapping[str, str]) -> str:
+    """X3: value synonym map as one CASE (e.g. MUTUAL FUND->FUND); values
+    outside the map pass through."""
+    if not mapping:
+        return e
+    branches = " ".join(f"WHEN {e} = {lit(src)} THEN {lit(dst)}" for src, dst in mapping.items())
+    return f"CASE {branches} ELSE {e} END"
 
 
 #: asset-type value synonyms (00_master_list_cleaner.py:60)
@@ -197,7 +185,11 @@ SOURCE_MAP = {
 }
 
 
-def select_available(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P6: project to the subset of ``columns`` that exist (pandas df[available])."""
-    have = set(df.columns)
-    return df.select(*[c for c in columns if c in have])
+#: The natural-key normalization every feed shares: X9 then X1 upper/trim on
+#: ticker; X9, X1 and the X3 asset-type map on asset_type; X9, X2 lower/trim
+#: and the source map on source.
+KEY_RULES = {
+    "ticker": lambda e: upper_trim.sql(null_sentinels_to_null.sql(e)),
+    "asset_type": lambda e: map_values.sql(upper_trim.sql(null_sentinels_to_null.sql(e)), ASSET_TYPE_MAP),
+    "source": lambda e: map_values.sql(lower_trim.sql(null_sentinels_to_null.sql(e)), SOURCE_MAP),
+}

@@ -71,16 +71,6 @@ def dedup_keyed(
     return out.filter(pred).drop("__rn", "__cnt")
 
 
-def dedup_any(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """D1/D4/D5 as the reference behaves when order is irrelevant: one
-    arbitrary row per key (Spark's ``dropDuplicates`` — no window, cheaper
-    map-side partial aggregation). Use :func:`dedup_keyed` when the surviving
-    row matters, or :func:`dedup_min` for a deterministic survivor at the
-    same aggregation cost — ``dedup_any`` is only safe when rows are
-    identical per key (e.g. the key covers every value column)."""
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_min(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """D5 with a DETERMINISTIC survivor at ``dropDuplicates`` cost.
 

@@ -1,30 +1,27 @@
-"""Row-hash change-detection expressions (SURVEY §2.10, H1-H10).
+"""Row-hash change-detection expressions (SURVEY §2.10, H2-H10).
 
-All are single Column expressions (md5/sha2 over concat), evaluated
-JVM-side, reproducing the reference's hash SHAPES (same columns, same
-separators, same null coercion rule). The hashes whose width is the
-table's (H2, v2, H6) are sent to the JVM as ONE SQL expression string
-(``F.expr``) when given column names: built as a Column chain they cost
-about 50 py4j round trips per hashed column (about 3,000 for 60 columns,
-before anything runs), as text one message. Catalyst parses the text into
-the same tree, so stored hashes do not change (pinned by
-``tests/test_sql_builders.py`` and the golden values in
-``tests/test_core.py``). Byte-parity scope — what a
-migration comparing hashes across systems must know:
+Every hash takes column names and is ONE SQL expression string
+(``F.expr``, md5/sha2 over concat), evaluated JVM-side, reproducing the
+reference's hash SHAPES (same columns, same separators, same null coercion
+rule). Built as a Column chain a hash cost about 50 py4j round trips per
+hashed column (about 3,000 for 60 columns, before anything runs), as text
+one message. Catalyst parses the text into the same tree, so stored hashes
+do not change (pinned by ``tests/test_sql_builders.py`` and the golden
+values in ``tests/test_core.py``). Byte-parity scope — what a migration
+comparing hashes across systems must know:
 
 - exact for STRING / integer / date-formatted inputs (the H2/H5/H7
   master and key hashes): str(value) agrees between engines there;
 - NOT exact where the reference stringified raw pandas floats (H3/H4
   over unconformed CSV floats: pandas emits '10.5' / 'nan' /
   '12345.0' where a conformed DECIMAL renders '10.5000' and NULL
-  coerces to '') or JSON (H1: json.dumps uses ', ' separators and
-  keeps nulls; Spark to_json is compact and drops null fields).
-  A migration from reference-produced H1/H3/H4 hashes must recompute
-  them once rather than compare bytes; within this engine every hash
-  is self-consistent and the merge guard behaves identically.
+  coerces to ''). A migration from reference-produced H3/H4 hashes
+  must recompute them once rather than compare bytes; within this
+  engine every hash is self-consistent and the merge guard behaves
+  identically. (H1, the reference's md5 of sorted-key JSON, has no
+  caller here: no table stores it.)
 
 Parity targets (paths relative to /root/reference/):
-- H1 md5 of sorted-key JSON: src/utils/hasher.py:8-11
 - H2 md5 of separator-less concat, None->'': src/utils/hasher.py:16-18
 - H3 sha256 of OHLCV concat: 02_performance_sync/02_history_hasher.py:31-36
 - H4 sha256 of ex_date+amount+type: 02_performance_sync/02_dividend_hasher.py:11-14
@@ -41,33 +38,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ._sql import ident, lit
+from .conform import lower_trim
 
 #: unit-separator used by the v2 (collision-safe) hash
 SAFE_SEP = "\x1f"
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def _str(name: str) -> str:
+    """str(value) with None -> '' — the reference's coercion — as SQL text."""
+    return f"coalesce(CAST({ident(name)} AS STRING), '')"
 
 
-def _as_str(col: Column | str) -> Column:
-    """str(value) with None -> '' — matches the reference's coercion."""
-    return F.coalesce(_c(col).cast("string"), F.lit(""))
+def _md5_over(cols: Sequence[str], sep: str | None) -> Column:
+    """md5 over the str-coerced ``cols``, joined by ``sep`` (None: plain concat)."""
+    parts = ", ".join(_str(c) for c in cols)
+    joined = f"concat({parts})" if sep is None else f"concat_ws({lit(sep)}, {parts})"
+    return F.expr(f"md5({joined})")
 
 
-def _md5_over(cols: Sequence[Column | str], sep: str | None) -> Column:
-    """md5 over the str-coerced ``cols``, joined by ``sep`` (None: plain
-    concat). Column names become one SQL expression; a list holding a
-    Column keeps the Column chain, since a Column has no SQL text."""
-    if all(isinstance(c, str) for c in cols):
-        parts = ", ".join(f"coalesce(CAST({ident(c)} AS STRING), '')" for c in cols)
-        joined = f"concat({parts})" if sep is None else f"concat_ws({lit(sep)}, {parts})"
-        return F.expr(f"md5({joined})")
-    strs = [_as_str(c) for c in cols]
-    return F.md5(F.concat(*strs) if sep is None else F.concat_ws(sep, *strs))
-
-
-def row_hash_concat(cols: Sequence[Column | str]) -> Column:
+def row_hash_concat(cols: Sequence[str]) -> Column:
     """H2: md5(''.join(str(a) if a is not None else '')) — byte-compatible.
 
     NOTE (inherited quirk): separator-less concat means ('ab','c') collides
@@ -77,19 +66,9 @@ def row_hash_concat(cols: Sequence[Column | str]) -> Column:
     return _md5_over(cols, None)
 
 
-def row_hash_safe(cols: Sequence[Column | str]) -> Column:
+def row_hash_safe(cols: Sequence[str]) -> Column:
     """v2 hash: md5 over unit-separator-joined values (collision-safe)."""
     return _md5_over(cols, SAFE_SEP)
-
-
-def row_hash_json(df_or_cols: DataFrame | Sequence[str]) -> Column:
-    """H1: md5 of json.dumps(row_dict, sort_keys=True, default=str).
-
-    Reproduced as md5(to_json(struct(*sorted(cols)))) — column order is the
-    sorted key order, matching ``sort_keys=True``.
-    """
-    names = sorted(df_or_cols.columns) if isinstance(df_or_cols, DataFrame) else sorted(df_or_cols)
-    return F.md5(F.to_json(F.struct(*[F.col(n) for n in names])))
 
 
 def ohlcv_hash(
@@ -102,12 +81,12 @@ def ohlcv_hash(
 ) -> Column:
     """H3: sha256 over OHLCV string-concat, missing -> ''."""
     cols = [open_col, high_col, low_col, close_col, adj_close_col, volume_col]
-    return F.sha2(F.concat(*[_as_str(c) for c in cols]), 256)
+    return F.expr(f"sha2(concat({', '.join(_str(c) for c in cols)}), 256)")
 
 
 def dividend_hash(ex_date: str = "ex_date", amount: str = "amount", type_col: str = "type") -> Column:
     """H4: sha256(str(ex_date) + str(amount) + str(type))."""
-    return F.sha2(F.concat(_as_str(ex_date), _as_str(amount), _as_str(type_col)), 256)
+    return F.expr(f"sha2(concat({_str(ex_date)}, {_str(amount)}, {_str(type_col)}), 256)")
 
 
 def normalized_key_hash(
@@ -123,17 +102,17 @@ def normalized_key_hash(
     collapse the field count and shift field boundaries — cross-field
     collisions, and never the reference's fixed five-part key
     (bulk_import_from_hashed.py:96-105)."""
-    amount_c = _c(amount).cast("double")
+    amount_c = f"CAST({ident(amount)} AS DOUBLE)"
     parts = [
-        F.coalesce(F.lower(F.trim(_c(ticker))), F.lit("")),
-        F.coalesce(F.lower(F.trim(_c(asset_type))), F.lit("")),
-        _as_str(source),
-        F.coalesce(F.date_format(_c(ex_date), "yyyy-MM-dd"), F.lit("")),
+        f"coalesce({lower_trim.sql(ident(ticker))}, '')",
+        f"coalesce({lower_trim.sql(ident(asset_type))}, '')",
+        _str(source),
+        f"coalesce(date_format({ident(ex_date)}, 'yyyy-MM-dd'), '')",
         # format_string('%.6f', NULL) yields the STRING 'null' (Java
         # String.format), not NULL — it must be guarded, not coalesced
-        F.when(amount_c.isNull(), F.lit("")).otherwise(F.format_string("%.6f", amount_c)),
+        f"CASE WHEN {amount_c} IS NULL THEN '' ELSE format_string('%.6f', {amount_c}) END",
     ]
-    return F.sha2(F.concat_ws("|", *parts), 256)
+    return F.expr(f"sha2(concat_ws('|', {', '.join(parts)}), 256)")
 
 
 def all_columns_hash(df: DataFrame, exclude: Sequence[str] = ("row_hash", "updated_at")) -> Column:
@@ -151,9 +130,3 @@ def with_row_hash(df: DataFrame, hash_expr: Column | None = None) -> DataFrame:
     in one projection."""
     expr = hash_expr if hash_expr is not None else all_columns_hash(df)
     return df.withColumns({"row_hash": expr, "updated_at": F.current_timestamp()})
-
-
-def degenerate_hash_guard(df: DataFrame, hash_col: str = "row_hash") -> bool:
-    """G4: detect a degenerate hash column (<=1 distinct value) cheaply."""
-    n = df.select(F.approx_count_distinct(hash_col).alias("n")).first()["n"]
-    return n <= 1

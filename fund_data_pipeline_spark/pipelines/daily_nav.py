@@ -27,9 +27,28 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import conform, dedup, hashing, merge, validate
+from .. import conform, dedup, hashing, merge, parse, validate
+from .._sql import apply_rules, select
 from ..schemas import DAILY_NAV, DAILY_NAV_KEY
 from ..sources.csv_landing import read_landing_csvs
+
+
+#: column -> cleaning rule (SQL text -> SQL text); other columns pass through.
+#: asset_type gets X1 upper/trim only: the performance cleaner
+#: (00_performance_data_cleaner.py) never maps MUTUAL FUND -> FUND, unlike
+#: the master and detail cleaners' shared key rule.
+RULES = {
+    **conform.KEY_RULES,
+    "asset_type": lambda e: conform.upper_trim.sql(conform.null_sentinels_to_null.sql(e)),
+    "nav_price": lambda e: f"try_cast({e} AS DECIMAL(18,4))",
+    "currency": lambda e: parse.default_if_null.sql(conform.null_sentinels_to_null.sql(e), "USD"),
+    "as_of_date": parse.parse_date_coerce.sql,
+    # scrape_date is a keep-last TIEBREAK column: it must order as a DATE,
+    # not as its raw string — lexicographic '2024-9-5' sorts after
+    # '2024-10-01' and picks the older scrape as the survivor (review r13;
+    # conform coerced it only AFTER the dedup)
+    "scrape_date": parse.parse_date_coerce.sql,
+}
 
 
 def clean(df: DataFrame, dedupe_order: Sequence[str] = ("scrape_date", "origin_file")) -> DataFrame:
@@ -47,24 +66,7 @@ def clean(df: DataFrame, dedupe_order: Sequence[str] = ("scrape_date", "origin_f
     keep_order = [c for c in dedupe_order if c in df.columns] + ["nav_price"]
     base = ["ticker", "asset_type", "source", "nav_price", "currency", "as_of_date"]
     extras = [c for c in dict.fromkeys([*keep_order, "scrape_date"]) if c in df.columns and c not in base]
-    df = df.select(
-        conform.upper_trim(conform.null_sentinels_to_null("ticker")).alias("ticker"),
-        conform.upper_trim(conform.null_sentinels_to_null("asset_type")).alias("asset_type"),
-        conform.map_values(
-            conform.lower_trim(conform.null_sentinels_to_null("source")), conform.SOURCE_MAP
-        ).alias("source"),
-        F.col("nav_price").try_cast("decimal(18,4)").alias("nav_price"),
-        F.coalesce(conform.null_sentinels_to_null("currency"), F.lit("USD")).alias("currency"),
-        F.col("as_of_date").try_cast("date").alias("as_of_date"),
-        # scrape_date is a keep-last TIEBREAK column: it must order as a
-        # DATE, not as its raw string — lexicographic '2024-9-5' sorts
-        # after '2024-10-01' and picks the older scrape as the survivor
-        # (review r13; conform coerced it only AFTER the dedup)
-        *[
-            (F.col(c).try_cast("date").alias(c) if c == "scrape_date" else F.col(c))
-            for c in extras
-        ],
-    )
+    df = select(df, apply_rules(RULES, [*base, *extras]))
     df = validate.drop_null_keys(df, ["ticker", "as_of_date"])
     df = dedup.dedup_keyed(df, DAILY_NAV_KEY, keep_order, keep="last")
     return validate.positive_filter(df, "nav_price")
@@ -82,7 +84,7 @@ def prepare_load(df: DataFrame) -> DataFrame:
     one (H2 family, collision-safe variant) so the merge can still elide
     unchanged rows — pure win at scale.
     """
-    df = conform.conform(df, DAILY_NAV, renames={})
+    df = conform.conform(df, DAILY_NAV)
     value_cols = [c for c in df.columns if c not in ("row_hash", "updated_at")]
     return hashing.with_row_hash(df, hashing.row_hash_safe(value_cols))
 

@@ -14,26 +14,28 @@ Rebuilds the reference's dividend side-chain (SURVEY §3):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import conform, dedup, hashing, merge, validate
+from .. import conform, dedup, hashing, merge, parse, validate
+from .._sql import apply_rules, lit, select
 from ..schemas import DIVIDEND_HISTORY, DIVIDEND_HISTORY_KEY
 from ..sources.csv_landing import read_per_entity_csvs
+
+
+#: column -> cleaning rule (SQL text -> SQL text); other columns pass through
+RULES = {"type": lambda e: parse.default_if_null.sql(conform.null_sentinels_to_null.sql(e), "Cash")}
 
 
 def clean(df: DataFrame, source: str = "yahoo_finance") -> DataFrame:
     """03_dividend_loader.py:37-85 conform: renames, defaults, key dedup."""
     df = conform.rename_synonyms(conform.normalize_headers(df))
-    if "source" not in df.columns:
-        df = df.withColumn("source", F.lit(source))
-    if "type" in df.columns:
-        df = df.withColumn("type", F.coalesce(conform.null_sentinels_to_null("type"), F.lit("Cash")))
-    else:
-        df = df.withColumn("type", F.lit("Cash"))
-    df = conform.conform(df, DIVIDEND_HISTORY, renames={})
+    exprs = apply_rules(RULES, df.columns)
+    exprs.setdefault("source", lit(source))
+    exprs.setdefault("type", lit("Cash"))
+    df = conform.conform(select(df, exprs), DIVIDEND_HISTORY)
     df = validate.drop_null_keys(df, ["ticker", "ex_date", "amount"])
-    # dedup_min, not dedup_any: the 7-column key doesn't cover `currency`,
-    # so an arbitrary survivor would make reruns non-idempotent (review r11)
+    # dedup_min, not an arbitrary survivor per key: the 7-column key doesn't
+    # cover `currency`, so an arbitrary survivor would make reruns
+    # non-idempotent (review r11)
     return dedup.dedup_min(df, DIVIDEND_HISTORY_KEY)
 
 

@@ -22,9 +22,9 @@ from __future__ import annotations
 import functools
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import conform, dedup, hashing, merge, parse, validate
+from .._sql import apply_rules, ident, lit, select
 from ..schemas import ALLOCATIONS, ALLOCATIONS_KEY, FUND_HOLDINGS, FUND_HOLDINGS_KEY
 from .orchestrator import _concurrently
 
@@ -32,28 +32,39 @@ from .orchestrator import _concurrently
 SUMMARY_ROW_MARKER = "per cent of portfolio"
 
 
+#: column -> cleaning rule (SQL text -> SQL text); other columns pass through
+HOLDINGS_RULES = {
+    "holding_percentage": parse.parse_percent.sql,
+    "holding_ticker": lambda e: parse.length_guard.sql(conform.null_sentinels_to_null.sql(e)),
+}
+ALLOCATIONS_RULES = dict.fromkeys(
+    ("value_net", "value_category_avg", "value_long", "value_short"), parse.parse_percent.sql
+)
+
+
+def _clean(df: DataFrame, rules, **extra: str) -> DataFrame:
+    """One ``selectExpr``: every column through its rule, then ``extra``
+    columns; ``as_of_date`` comes from the path's date directory (S4) when
+    the feed has no column for it."""
+    exprs = {**apply_rules(rules, df.columns), **extra}
+    if "as_of_date" not in exprs and "origin_file" in exprs:
+        exprs["as_of_date"] = parse.path_date.sql(ident("origin_file"))
+    return select(df, exprs)
+
+
 def clean_holdings(df: DataFrame) -> DataFrame:
     """Holdings cleaner + loader conform (00_holdings_data_cleaner.py,
     03_holdings_loader.py:30-79)."""
     df = conform.rename_synonyms(conform.normalize_headers(df))
-    if "as_of_date" not in df.columns and "origin_file" in df.columns:
-        df = df.withColumn("as_of_date", parse.path_date(F.col("origin_file")))
     if "holding_name" in df.columns:
-        df = df.filter(
-            ~F.lower(F.coalesce(F.col("holding_name"), F.lit(""))).contains(SUMMARY_ROW_MARKER)
-        )
-    if "holding_percentage" in df.columns:
-        df = df.withColumn("holding_percentage", parse.parse_percent("holding_percentage"))
-    if "holding_ticker" in df.columns:
-        df = df.withColumn(
-            "holding_ticker",
-            parse.length_guard(conform.null_sentinels_to_null("holding_ticker"), 20),
-        )
-    df = conform.conform(df, FUND_HOLDINGS, renames={})
+        marker = f"lower(coalesce({ident('holding_name')}, ''))"
+        df = df.filter(f"NOT contains({marker}, {lit(SUMMARY_ROW_MARKER)})")
+    df = conform.conform(_clean(df, HOLDINGS_RULES), FUND_HOLDINGS)
     df = validate.drop_null_keys(df, ["ticker", "holding_name", "as_of_date"])
-    # dedup_min, not dedup_any: non-key value columns (holding_ticker,
-    # holding_percentage) feed the all-columns hash — an arbitrary survivor
-    # re-fires the hash-guarded merge on a no-op rerun (review r11)
+    # dedup_min, not an arbitrary survivor per key: non-key value columns
+    # (holding_ticker, holding_percentage) feed the all-columns hash — an
+    # arbitrary survivor re-fires the hash-guarded merge on a no-op rerun
+    # (review r11)
     df = dedup.dedup_min(df, FUND_HOLDINGS_KEY)
     return hashing.with_row_hash(df, hashing.all_columns_hash(df))
 
@@ -66,13 +77,8 @@ def clean_allocations(df: DataFrame, allocation_type: str) -> DataFrame:
     # allocation path uses a rename map without those two entries.
     renames = {k: v for k, v in conform.DEFAULT_RENAMES.items() if k not in ("item_name", "value_net")}
     df = conform.rename_synonyms(conform.normalize_headers(df), renames)
-    df = df.withColumn("allocation_type", F.lit(allocation_type))
-    if "as_of_date" not in df.columns and "origin_file" in df.columns:
-        df = df.withColumn("as_of_date", parse.path_date(F.col("origin_file")))
-    for c in ("value_net", "value_category_avg", "value_long", "value_short"):
-        if c in df.columns:
-            df = df.withColumn(c, parse.parse_percent(c))
-    df = conform.conform(df, ALLOCATIONS, renames={})
+    df = _clean(df, ALLOCATIONS_RULES, allocation_type=lit(allocation_type))
+    df = conform.conform(df, ALLOCATIONS)
     df = validate.drop_null_keys(df, ["ticker", "item_name", "as_of_date"])
     # deterministic survivor for the same reason as clean_holdings (review r11)
     df = dedup.dedup_min(df, ALLOCATIONS_KEY)

@@ -28,13 +28,21 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import conform, dedup, hashing, lifecycle, merge, validate
+from .. import conform, dedup, hashing, lifecycle, merge, parse, validate
+from .._sql import ident, select
 from ..schemas import SECURITY_MASTER, SECURITY_MASTER_KEY
 
 #: the cleaner's 6-column scrape schema (01_ft_list_scraper.py:149)
 SCRAPE_COLUMNS = ["ticker", "asset_type", "name", "status", "source", "date_added"]
+
+#: column -> cleaning rule (SQL text -> SQL text); a missing column enters as NULL
+RULES = {
+    **conform.KEY_RULES,
+    "name": conform.null_sentinels_to_null.sql,
+    "status": lambda e: conform.lower_trim.sql(conform.null_sentinels_to_null.sql(e)),
+    "date_added": parse.parse_date_coerce.sql,
+}
 
 
 def clean(df: DataFrame) -> DataFrame:
@@ -53,20 +61,9 @@ def clean(df: DataFrame) -> DataFrame:
     arbitrary survivor.
     """
     df = conform.rename_synonyms(conform.normalize_headers(df))
-    for c in SCRAPE_COLUMNS:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("string"))
-    df = df.select(
-        conform.upper_trim(conform.null_sentinels_to_null("ticker")).alias("ticker"),
-        conform.map_values(
-            conform.upper_trim(conform.null_sentinels_to_null("asset_type")), conform.ASSET_TYPE_MAP
-        ).alias("asset_type"),
-        conform.null_sentinels_to_null("name").alias("name"),
-        conform.lower_trim(conform.null_sentinels_to_null("status")).alias("status"),
-        conform.map_values(
-            conform.lower_trim(conform.null_sentinels_to_null("source")), conform.SOURCE_MAP
-        ).alias("source"),
-        F.col("date_added").try_cast("date").alias("date_added"),
+    have = set(df.columns)
+    df = select(
+        df, {c: RULES[c](ident(c) if c in have else "CAST(NULL AS STRING)") for c in SCRAPE_COLUMNS}
     )
     return dedup.dedup_keyed(
         df, ["ticker", "asset_type", "source"], ["name", "status", "date_added"], keep="first"
@@ -110,7 +107,7 @@ def prepare_load(df: DataFrame, as_of: Column | None = None) -> DataFrame:
     """04_master_list_loader.py:43-67: conform to the table schema, stamp
     first/last_seen (L1 source side), attach the H7 row hash."""
     df = lifecycle.stamp_first_last_seen(df, as_of)
-    df = conform.conform(df, SECURITY_MASTER, renames={})
+    df = conform.conform(df, SECURITY_MASTER)
     return hashing.with_row_hash(df, hashing.master_row_hash())
 
 

@@ -17,11 +17,23 @@ Scale: the reference does O(files) driver round-trips; this does one scan
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import conform, dedup, hashing, merge, parse, validate
+from .._sql import apply_rules, lit, select
 from ..schemas import PRICE_HISTORY, PRICE_HISTORY_KEY
 from ..sources.csv_landing import read_per_entity_csvs
+
+
+#: column -> cleaning rule (SQL text -> SQL text); other columns pass through
+RULES = {
+    "volume": parse.parse_thousands.sql,  # X5
+    # X10 coerce BEFORE the keep-last dedup (review r13): the dedup key must
+    # be the COERCED date — two raw spellings of the same day ('2024-01-05'
+    # vs '2024-01-05T00:00:00') otherwise survive dedup as distinct keys,
+    # and when conform's cast later collapses them, 'latest origin_file
+    # wins' silently becomes merge-default-order-wins for that key
+    "date": lambda e: parse.parse_date_coerce.sql(conform.null_sentinels_to_null.sql(e)),
+}
 
 
 def clean(df: DataFrame) -> DataFrame:
@@ -31,23 +43,13 @@ def clean(df: DataFrame) -> DataFrame:
     fills source, coerces date (X10) and numerics, drops null-key rows (F1).
     """
     df = conform.rename_synonyms(conform.normalize_headers(df))
-    if "source" not in df.columns:
-        df = df.withColumn("source", F.lit("stock_analysis"))
-    if "volume" in df.columns:
-        df = df.withColumn("volume", parse.parse_thousands("volume"))  # X5
-    # X10 coerce BEFORE the keep-last dedup (review r13): the dedup key must
-    # be the COERCED date — two raw spellings of the same day ('2024-01-05'
-    # vs '2024-01-05T00:00:00') otherwise survive dedup as distinct keys,
-    # and when conform's cast later collapses them, 'latest origin_file
-    # wins' silently becomes merge-default-order-wins for that key
-    if "date" in df.columns:
-        df = df.withColumn(
-            "date", parse.parse_date_coerce(conform.null_sentinels_to_null("date"))
-        )
+    exprs = apply_rules(RULES, df.columns)
+    exprs.setdefault("source", lit("stock_analysis"))
+    df = select(df, exprs)
     # deterministic keep-last before the conform drops provenance (D2 analog)
     if "origin_file" in df.columns:
         df = dedup.dedup_keyed(df, PRICE_HISTORY_KEY, ["origin_file"], keep="last")
-    df = conform.conform(df, PRICE_HISTORY, renames={})
+    df = conform.conform(df, PRICE_HISTORY)
     return validate.drop_null_keys(df, ["ticker", "date"])
 
 

@@ -26,10 +26,10 @@ from __future__ import annotations
 import functools
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import conform, hashing, merge, parse, validate
+from .._sql import apply_rules, select
 from ..schemas import (
     FUND_FEES,
     FUND_FEES_KEY,
@@ -85,58 +85,55 @@ OUTLIER_NULL_COLS = tuple(dict.fromkeys((*RISK_METRIC_COLS, *POLICY_METRIC_COLS)
 PERCENT_PARSE_COLS = ("top_10_hold_pct", "holdings_turnover")
 
 
+def _pct(e: str) -> str:
+    return parse.parse_percent.sql(e)
+
+
+#: column -> cleaning rule (SQL text -> SQL text); 00_static_data_cleaner.py's
+#: per-column parsers plus bulk_import_from_hashed.py's AUM and outlier rules
+RULES = {
+    **conform.KEY_RULES,
+    # asset_type default 'ETF' (X13, 00_static_data_cleaner.py:95-99)
+    "asset_type": lambda e: parse.default_if_null.sql(conform.KEY_RULES["asset_type"](e), "ETF"),
+    # '842.33m USD' magnitude parse (bulk_import_from_hashed.py:155-176)
+    **dict.fromkeys(("assets_aum", "aum"), parse.parse_magnitude.sql),
+    **dict.fromkeys(PERCENT_SCALE_COLS, lambda e: parse.percent_rescale.sql(_pct(e))),
+    **dict.fromkeys(OUTLIER_NULL_COLS, lambda e: parse.outlier_to_null.sql(_pct(e))),
+    # replaces the entry above for its columns: /100 repair first
+    # (cleaner:111-117), then the |x|<1000 null (bulk:193-216) — a 150000
+    # input becomes 1500, still nulled
+    **dict.fromkeys(
+        OVERFLOW_REPAIR_COLS,
+        lambda e: parse.outlier_to_null.sql(parse.magnitude_overflow_repair.sql(_pct(e))),
+    ),
+    # moving_avg_200 is the ONE risk metric exempt from the outlier null
+    # (bulk:214-216 — a 200-day MA legitimately exceeds 1000)
+    **dict.fromkeys((*PERCENT_PARSE_COLS, "moving_avg_200"), _pct),
+    **dict.fromkeys(
+        ("holdings_count", "shares_out"), lambda e: f"CAST({parse.parse_thousands.sql(e)} AS DOUBLE)"
+    ),
+    **dict.fromkeys(("inception_date", "as_of_date"), parse.parse_date_coerce.sql),
+}
+
+
 def clean(df: DataFrame) -> DataFrame:
     """00_static_data_cleaner.py: the full scalar-parse pass, one projection.
 
-    Column repertoire is dynamic (scraped); every known numeric column gets
-    its parser, unknown columns pass through for the per-table conform to
-    drop. All pure expressions — one WholeStageCodegen span.
+    Column repertoire is dynamic (scraped): every known column gets its
+    rule, other string columns the null-sentinel rule (X9), the rest pass
+    through for the per-table conform to drop. One ``selectExpr``: one
+    projection node, whose build cost does not grow by a Column chain per
+    column.
     """
     df = conform.rename_synonyms(conform.normalize_headers(df))
-    cols: list = []
-    for c in df.columns:
-        col = F.col(c)
-        if c in ("ticker",):
-            col = conform.upper_trim(conform.null_sentinels_to_null(c))
-        elif c == "asset_type":
-            col = F.coalesce(
-                conform.map_values(
-                    conform.upper_trim(conform.null_sentinels_to_null(c)), conform.ASSET_TYPE_MAP
-                ),
-                F.lit("ETF"),
-            )
-        elif c == "source":
-            col = conform.map_values(
-                conform.lower_trim(conform.null_sentinels_to_null(c)), conform.SOURCE_MAP
-            )
-        elif c in ("assets_aum", "aum"):
-            # '842.33m USD' magnitude parse (bulk_import_from_hashed.py:155-176)
-            col = parse.parse_magnitude(c)
-        elif c in PERCENT_SCALE_COLS:
-            col = parse.percent_rescale(parse.parse_percent(c))
-        elif c in OVERFLOW_REPAIR_COLS:
-            # /100 repair first (cleaner:111-117), then the |x|<1000 null
-            # (bulk:193-216) — a 150000 input becomes 1500, still nulled
-            col = parse.outlier_to_null(parse.magnitude_overflow_repair(parse.parse_percent(c)))
-        elif c in OUTLIER_NULL_COLS:
-            col = parse.outlier_to_null(parse.parse_percent(c))
-        elif c in PERCENT_PARSE_COLS or c == "moving_avg_200":
-            # moving_avg_200 is the ONE risk metric exempt from the outlier
-            # null (bulk:214-216 — a 200-day MA legitimately exceeds 1000)
-            col = parse.parse_percent(c)
-        elif c in ("holdings_count", "shares_out"):
-            col = parse.parse_thousands(c).cast("double")
-        elif c in ("inception_date", "as_of_date"):
-            col = parse.parse_date_coerce(c)
-        elif isinstance(df.schema[c].dataType, T.StringType):
-            col = conform.null_sentinels_to_null(c)
-        cols.append(col.alias(c))
-    return df.select(*cols)
+    strings = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
+    rules = {**dict.fromkeys(strings, conform.null_sentinels_to_null.sql), **RULES}
+    return select(df, apply_rules(rules, df.columns))
 
 
 def _load_one(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Per-table conform + F1 key drop + H6 hash (02_static_hasher.py:23-28)."""
-    out = conform.conform(df, schema, renames={}, clean_strings=False)
+    out = conform.conform(df, schema, clean_strings=False)
     out = validate.drop_null_keys(out, ["ticker", "asset_type", "source"])
     return hashing.with_row_hash(out, hashing.all_columns_hash(out))
 

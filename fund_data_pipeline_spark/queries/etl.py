@@ -62,10 +62,10 @@ def conform_master_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("s_suppkey") % 3 == 1, F.lit("ETF"))
         .otherwise(F.lit("FUND"))
     )
-    df = supp.select(
+    df = supp.withColumns({"raw_type": raw_type, "raw_source": F.lit("yf")}).select(
         upper_trim("s_name").alias("ticker"),
-        map_values(raw_type, ASSET_TYPE_MAP).alias("asset_type"),
-        map_values(F.lit("yf"), SOURCE_MAP).alias("source"),
+        map_values("raw_type", ASSET_TYPE_MAP).alias("asset_type"),
+        map_values("raw_source", SOURCE_MAP).alias("source"),
         F.col("s_name").alias("name"),
         F.lit(None).cast("string").alias("status"),
         F.lit(None).cast("string").alias("currency"),
@@ -96,7 +96,7 @@ def null_sentinel_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("n_chars") % 4 == 2, F.lit("nan"))
         .otherwise(F.col("lang"))
     )
-    return docs.select("doc_id", null_sentinels_to_null(dirty).alias("cleaned"))
+    return docs.withColumn("dirty", dirty).select("doc_id", null_sentinels_to_null("dirty").alias("cleaned"))
 
 
 # ---------------------------------------------------------------------------
@@ -131,11 +131,11 @@ def numeric_string_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct_str = F.format_string("+%d.%02d%%", F.col("p_size"), F.col("p_partkey") % 100)
     thou_str = F.format_string("%d,%03d", F.col("p_size"), F.col("p_partkey") % 1000)
     mag_str = F.format_string("%d.%02dm USD", F.col("p_size"), F.col("p_partkey") % 100)
-    return part.select(
+    return part.withColumns({"pct_str": pct_str, "thou_str": thou_str, "mag_str": mag_str}).select(
         "p_partkey",
-        parse_percent(pct_str).alias("pct"),
-        parse_thousands(thou_str).alias("thou"),
-        parse_magnitude(mag_str).alias("mag"),
+        parse_percent("pct_str").alias("pct"),
+        parse_thousands("thou_str").alias("thou"),
+        parse_magnitude("mag_str").alias("mag"),
     )
 
 
@@ -161,15 +161,14 @@ FROM (
 def fee_rescale_and_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..parse import length_guard
 
-    part = table(spark, sf_dir, "part")
-    fee_raw = F.col("p_retailprice") / 1000.0
-    sd_raw = F.col("p_retailprice")
-    metric_raw = F.col("p_retailprice") - 500.0
+    part = table(spark, sf_dir, "part").withColumns(
+        {"fee_raw": F.col("p_retailprice") / 1000.0, "metric_raw": F.col("p_retailprice") - 500.0}
+    )
     return part.select(
         "p_partkey",
-        percent_rescale(fee_raw).alias("fee"),
-        magnitude_overflow_repair(sd_raw).alias("std_dev"),
-        outlier_to_null(metric_raw).alias("metric"),
+        percent_rescale("fee_raw").alias("fee"),
+        magnitude_overflow_repair("p_retailprice").alias("std_dev"),
+        outlier_to_null("metric_raw").alias("metric"),
         length_guard("p_name").alias("guarded_name"),
     )
 
@@ -190,11 +189,11 @@ FROM (
 """,
 )
 def date_parsing_and_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table(spark, sf_dir, "orders")
     date_str = F.date_format("o_orderdate", "MMM d, yyyy")
+    orders = table(spark, sf_dir, "orders").withColumn("date_str", date_str)
     return orders.select(
         "o_orderkey",
-        parse_date_coerce(date_str, "MMM d, yyyy").alias("parsed_date"),
+        parse_date_coerce("date_str", "MMM d, yyyy").alias("parsed_date"),
         F.date_add(F.col("o_orderdate").cast("date"), 30).alias("due_date"),
         F.date_sub(F.col("o_orderdate").cast("date"), 7).alias("grace_cutoff"),
         F.datediff(F.lit("2001-09-01").cast("date"), F.col("o_orderdate").cast("date")).alias("age_days"),
@@ -976,15 +975,14 @@ def string_compose_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = table(spark, sf_dir, "customer")
     composed = F.concat(F.col("c_mktsegment"), F.lit(":"), F.col("c_nationkey").cast("string"))
-    ticker, currency = split_ticker(composed)
     path = F.concat(F.lit("landing/"), F.col("c_name"), F.lit("_2024.csv"))
-    return cust.select(
+    segment = F.nullif(F.col("c_mktsegment"), F.lit("FURNITURE"))
+    ticker, currency = split_ticker("composed")
+    return cust.withColumns({"composed": composed, "path": path, "segment": segment}).select(
         "c_custkey",
         ticker.alias("ticker_part"),
         currency.alias("currency_part"),
         format_amount("c_acctbal", 2).alias("balance_fmt"),
-        default_if_null(F.nullif(F.col("c_mktsegment"), F.lit("FURNITURE")), "DEFAULT").alias(
-            "segment_defaulted"
-        ),
-        filename_stem_ticker(path).alias("stem_ticker"),
+        default_if_null("segment", "DEFAULT").alias("segment_defaulted"),
+        filename_stem_ticker("path").alias("stem_ticker"),
     )

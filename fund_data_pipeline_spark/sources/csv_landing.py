@@ -140,9 +140,9 @@ def read_per_entity_csvs(
     ``exclude_name_parts`` per call for trees with other sentinel names.)
     """
     df = read_landing_csvs(spark, [root], exclude_name_parts=exclude_name_parts)
-    df = df.withColumn("ticker", F.upper(filename_stem_ticker(F.col("origin_file"))))
+    df = df.withColumn("ticker", F.upper(filename_stem_ticker("origin_file")))
     if infer_asset_type:
-        df = df.withColumn("asset_type", asset_type_from_path(F.col("origin_file")))
+        df = df.withColumn("asset_type", asset_type_from_path("origin_file"))
     return df
 
 

@@ -1,4 +1,4 @@
-"""Validation split with reason annotation (SURVEY §2.4, F1-F8).
+"""Validation split with reason annotation (SURVEY §2.4, F1-F6).
 
 The reference validators split each batch into valid rows and an error
 side-channel annotated with a human-readable reason. Two styles exist:
@@ -135,7 +135,3 @@ def positive_filter(df: DataFrame, col: str) -> DataFrame:
     """F2: keep rows with col > 0."""
     return df.filter(F.col(col) > 0)
 
-
-def non_blank_filter(df: DataFrame, col: str) -> DataFrame:
-    """F8: keep rows where trim(coalesce(col,'')) != ''."""
-    return df.filter(F.trim(F.coalesce(F.col(col), F.lit(""))) != "")

@@ -93,11 +93,14 @@ def test_row_hash_concat_matches_reference_algorithm(spark):
 
 def test_stored_hashes_are_stable(spark):
     """H6 (``all_columns_hash``) and v2 (``row_hash_safe``) are stored in
-    every merged table and compared by the hash guard on the next load, so
-    their bytes may never drift across releases: a drift re-fires the guard
-    on every unchanged row. The golden values were captured from the
-    Column-chain builders these SQL-text builders replaced, over one row with
-    NULL, decimal, date and timestamp values (session time zone UTC)."""
+    every merged table, H3 (``ohlcv_hash``) and H4 (``dividend_hash``) in
+    the price and dividend tables, and compared by the hash guard on the
+    next load, so their bytes may never drift across releases: a drift
+    re-fires the guard on every unchanged row. H5 (``normalized_key_hash``)
+    is the cross-system key. The golden values were captured from the
+    Column-chain builders these SQL-text builders replaced, over rows with
+    NULL, decimal, double, long, date and timestamp values (session time
+    zone UTC)."""
     row = spark.sql(
         """SELECT 'VTSAX' AS ticker, CAST(NULL AS STRING) AS name,
            CAST('1234.5000' AS DECIMAL(18,4)) AS nav_price, DATE'2024-02-29' AS as_of_date,
@@ -113,6 +116,37 @@ def test_stored_hashes_are_stable(spark):
     assert got.h6 == hashlib.md5("".join(values).encode()).hexdigest()
     assert got.v2 == "d7136b1209858495af45be6798c5639b"
     assert got.v2 == hashlib.md5(hashing.SAFE_SEP.join(values).encode()).hexdigest()
+
+    # H3/H4/H5, captured from their Column-chain builders over decimal,
+    # double, long, date and NULL inputs
+    typed = spark.sql(
+        """SELECT CAST('10.5000' AS DECIMAL(18,4)) AS open, CAST(11.25 AS DOUBLE) AS high,
+           CAST(NULL AS DECIMAL(18,4)) AS low, CAST(10.9 AS DOUBLE) AS close,
+           DATE'2024-02-29' AS adj_close, CAST(12345 AS BIGINT) AS volume, 'Cash' AS type,
+           '  VtSaX ' AS ticker, CAST(NULL AS STRING) AS asset_type, 'yahoo_finance' AS source,
+           CAST(NULL AS DATE) AS no_date"""
+    )
+    got = typed.select(
+        hashing.ohlcv_hash().alias("h3"),
+        hashing.dividend_hash(ex_date="adj_close", amount="open", type_col="type").alias("h4"),
+        hashing.dividend_hash(ex_date="no_date", amount="high", type_col="asset_type").alias("h4_null"),
+        hashing.normalized_key_hash(ex_date="adj_close", amount="open").alias("h5"),
+        hashing.normalized_key_hash(ticker="volume", ex_date="no_date", amount="low").alias("h5_null"),
+    ).first()
+
+    def sha(text):
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    assert got.h3 == "494ffc7758da2109f5c1dfe8c061329cd291d399ab0389f8c20dc43815480f7c"
+    assert got.h3 == sha("10.5000" "11.25" "" "10.9" "2024-02-29" "12345")
+    assert got.h4 == "0e01a5c3c553d521ec5c3b56420423a2ae7d62fa5ec3ff2c2ce900ccb5073c7d"
+    assert got.h4 == sha("2024-02-29" "10.5000" "Cash")
+    assert got.h4_null == "0b07b115b1aeac12b99abdf24915446c0f85159a8c9a0e42c28a3860d0369905"
+    assert got.h4_null == sha("11.25")
+    assert got.h5 == "e0b92f105e0e4eaae10ad99a737369526b99add019b3943846ce4f19cf655a69"
+    assert got.h5 == sha("vtsax||yahoo_finance|2024-02-29|10.500000")
+    assert got.h5_null == "b9996a831970d43926ce20e9690ebddacf93887412fc62fdcf58b71743bca4bc"
+    assert got.h5_null == sha("12345||yahoo_finance||")
 
 
 def test_ohlcv_hash_matches_reference_algorithm(spark):
@@ -290,7 +324,7 @@ def test_r11_expression_review_fixes(spark):
     got = {
         r.m
         for r in df.select(
-            conform.map_values(conform.lower_trim("src"), conform.SOURCE_MAP).alias("m")
+            F.expr(conform.map_values.sql(conform.lower_trim.sql("src"), conform.SOURCE_MAP)).alias("m")
         ).collect()
     }
     assert got == {"financial_times", "stock_analysis", "yahoo_finance"}
@@ -332,8 +366,8 @@ def test_parse_path_helpers_edge_cases(spark):
     )
     t, c = split_ticker("full_ticker")
     rows = df.select(
-        filename_stem_ticker(F.col("path")).alias("stem"),
-        path_date(F.col("path")).alias("dt"),
+        filename_stem_ticker("path").alias("stem"),
+        path_date("path").alias("dt"),
         t.alias("tick"),
         c.alias("cur"),
     ).collect()

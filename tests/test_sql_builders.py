@@ -1,14 +1,16 @@
 """The per-column builders that emit SQL text vs their Column-API forms.
 
-The merge kernel, ``conform``, the row hashes and the dedup windows send
-their table-wide expressions to the JVM as SQL strings (``selectExpr`` /
-one ``F.expr``). The ``ref_*`` functions below are the same builders written
-as Column chains, one Column per table column, which is how they were built
-before; they differ only in quoting every name (``F.col("`a.b`")``), so a
-name with a dot or a backtick is one column and never a nested path. Over
-one fixture with awkward names, NULL keys and decimal, date, timestamp,
-array and struct columns, both forms must give the same rows, the same
-``row_hash`` bytes and the same ``MergeStats``.
+The merge kernel, ``conform``, the row hashes, the dedup windows and the
+daily cleans send their table-wide expressions to the JVM as SQL strings
+(``selectExpr`` / one ``F.expr``). The ``ref_*`` functions below are the
+same builders written as Column chains, one Column per table column, which
+is how they were built before; they differ only in quoting every name
+(``F.col("`a.b`")``), so a name with a dot or a backtick is one column and
+never a nested path. Over one fixture with awkward names, NULL keys and
+decimal, date, timestamp, array and struct columns, both forms must give
+the same rows, the same ``row_hash`` bytes and the same ``MergeStats``;
+over one landed fixture of dirty strings, every daily clean must give the
+same rows and the same optimized plan as its Column chains.
 """
 
 from __future__ import annotations
@@ -21,8 +23,31 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fund_data_pipeline_spark import _sql, conform, dedup, hashing, merge
+from fund_data_pipeline_spark import _sql, conform, dedup, hashing, merge, parse, validate
 from fund_data_pipeline_spark.hashing import SAFE_SEP
+from fund_data_pipeline_spark.pipelines import (
+    daily_nav,
+    dividends,
+    holdings,
+    master_sync,
+    price_history,
+    static_details,
+)
+from fund_data_pipeline_spark.schemas import (
+    ALLOCATIONS,
+    ALLOCATIONS_KEY,
+    DAILY_NAV_KEY,
+    DIVIDEND_HISTORY,
+    DIVIDEND_HISTORY_KEY,
+    FUND_FEES,
+    FUND_HOLDINGS,
+    FUND_HOLDINGS_KEY,
+    FUND_INFO,
+    FUND_POLICY,
+    FUND_RISK,
+    PRICE_HISTORY,
+    PRICE_HISTORY_KEY,
+)
 
 # ---------------------------------------------------------------------------
 # reference builders: one Column per table column
@@ -62,11 +87,213 @@ def ref_conform(df, schema, renames=None, clean_strings=True):
         if field.name in df.columns:
             c = _col(field.name)
             if clean_strings and isinstance(df.schema[field.name].dataType, T.StringType):
-                c = conform.null_sentinels_to_null(c)
+                c = ref_null_sentinels_to_null(c)
             cols.append(c.try_cast(field.dataType).alias(field.name))
         else:
             cols.append(F.lit(None).cast(field.dataType).alias(field.name))
     return df.select(*cols)
+
+
+# the cleaning rules as Column chains (X1-X10, X13, F9, F10, S4)
+
+
+def ref_null_sentinels_to_null(c):
+    trimmed = F.trim(c)
+    return F.when(F.lower(trimmed).isin(*conform.NULL_SENTINELS), F.lit(None)).otherwise(trimmed)
+
+
+def ref_map_values(c, mapping):
+    expr = None
+    for src, dst in mapping.items():
+        cond = c == F.lit(src)
+        expr = F.when(cond, F.lit(dst)) if expr is None else expr.when(cond, F.lit(dst))
+    return c if expr is None else expr.otherwise(c)
+
+
+def ref_parse_percent(c):
+    return F.regexp_replace(F.trim(c), r"[%,+]", "").try_cast("double")
+
+
+def ref_parse_thousands(c):
+    return F.regexp_replace(F.trim(c), ",", "").try_cast("double").try_cast("long")
+
+
+def ref_parse_magnitude(c):
+    s = F.lower(F.trim(c))
+    num = F.regexp_replace(F.regexp_extract(s, r"(-?[\d,]*\.?\d+)", 1), ",", "").try_cast("double")
+    suffix = F.regexp_extract(s, r"-?[\d,]*\.?\d+[ \t\n\x0B\f\r]*([kmbt])", 1)
+    return (
+        F.when(suffix == "k", num * 1e3)
+        .when(suffix == "m", num * 1e6)
+        .when(suffix == "b", num * 1e9)
+        .when(suffix == "t", num * 1e12)
+        .otherwise(num)
+    )
+
+
+def ref_percent_rescale(c):
+    return F.when(c > 1.0, c / 100.0).otherwise(c)
+
+
+def ref_magnitude_overflow_repair(c, limit=999.99):
+    return F.when(F.abs(c) > F.lit(limit), c / 100.0).otherwise(c)
+
+
+def ref_outlier_to_null(c, bound=1000.0):
+    return F.when(F.abs(c) < F.lit(bound), c)
+
+
+def ref_length_guard(c, max_len=20):
+    return F.when(F.length(c) <= max_len, c)
+
+
+def ref_path_date(c):
+    return F.regexp_extract(c, r"(?:^|/)(\d{4}-\d{2}-\d{2})(?=/|$)", 1).try_cast("date")
+
+
+def ref_ticker(c):
+    return F.upper(F.trim(ref_null_sentinels_to_null(c)))
+
+
+def ref_asset_type(c):
+    return ref_map_values(ref_ticker(c), conform.ASSET_TYPE_MAP)
+
+
+def ref_source(c):
+    return ref_map_values(F.lower(F.trim(ref_null_sentinels_to_null(c))), conform.SOURCE_MAP)
+
+
+# the daily cleans as they were built before, one Column chain per column
+
+
+def ref_master_clean(df):
+    df = conform.rename_synonyms(conform.normalize_headers(df))
+    for c in master_sync.SCRAPE_COLUMNS:
+        if c not in df.columns:
+            df = df.withColumn(c, F.lit(None).cast("string"))
+    df = df.select(
+        ref_ticker(_col("ticker")).alias("ticker"),
+        ref_asset_type(_col("asset_type")).alias("asset_type"),
+        ref_null_sentinels_to_null(_col("name")).alias("name"),
+        F.lower(F.trim(ref_null_sentinels_to_null(_col("status")))).alias("status"),
+        ref_source(_col("source")).alias("source"),
+        _col("date_added").try_cast("date").alias("date_added"),
+    )
+    return dedup.dedup_keyed(
+        df, ["ticker", "asset_type", "source"], ["name", "status", "date_added"], keep="first"
+    )
+
+
+def ref_nav_clean(df, dedupe_order=("scrape_date", "origin_file")):
+    df = conform.rename_synonyms(conform.normalize_headers(df))
+    keep_order = [c for c in dedupe_order if c in df.columns] + ["nav_price"]
+    base = ["ticker", "asset_type", "source", "nav_price", "currency", "as_of_date"]
+    extras = [c for c in dict.fromkeys([*keep_order, "scrape_date"]) if c in df.columns and c not in base]
+    df = df.select(
+        ref_ticker(_col("ticker")).alias("ticker"),
+        ref_ticker(_col("asset_type")).alias("asset_type"),
+        ref_source(_col("source")).alias("source"),
+        _col("nav_price").try_cast("decimal(18,4)").alias("nav_price"),
+        F.coalesce(ref_null_sentinels_to_null(_col("currency")), F.lit("USD")).alias("currency"),
+        _col("as_of_date").try_cast("date").alias("as_of_date"),
+        *[(_col(c).try_cast("date") if c == "scrape_date" else _col(c)).alias(c) for c in extras],
+    )
+    df = validate.drop_null_keys(df, ["ticker", "as_of_date"])
+    df = dedup.dedup_keyed(df, DAILY_NAV_KEY, keep_order, keep="last")
+    return validate.positive_filter(df, "nav_price")
+
+
+def ref_details_clean(df):
+    df = conform.rename_synonyms(conform.normalize_headers(df))
+    cols = []
+    for c in df.columns:
+        col = _col(c)
+        if c == "ticker":
+            col = ref_ticker(col)
+        elif c == "asset_type":
+            col = F.coalesce(ref_asset_type(col), F.lit("ETF"))
+        elif c == "source":
+            col = ref_source(col)
+        elif c in ("assets_aum", "aum"):
+            col = ref_parse_magnitude(col)
+        elif c in static_details.PERCENT_SCALE_COLS:
+            col = ref_percent_rescale(ref_parse_percent(col))
+        elif c in static_details.OVERFLOW_REPAIR_COLS:
+            col = ref_outlier_to_null(ref_magnitude_overflow_repair(ref_parse_percent(col)))
+        elif c in static_details.OUTLIER_NULL_COLS:
+            col = ref_outlier_to_null(ref_parse_percent(col))
+        elif c in static_details.PERCENT_PARSE_COLS or c == "moving_avg_200":
+            col = ref_parse_percent(col)
+        elif c in ("holdings_count", "shares_out"):
+            col = ref_parse_thousands(col).cast("double")
+        elif c in ("inception_date", "as_of_date"):
+            col = col.try_cast("date")
+        elif isinstance(df.schema[c].dataType, T.StringType):
+            col = ref_null_sentinels_to_null(col)
+        cols.append(col.alias(c))
+    return df.select(*cols)
+
+
+def ref_clean_holdings(df):
+    df = conform.rename_synonyms(conform.normalize_headers(df))
+    if "as_of_date" not in df.columns and "origin_file" in df.columns:
+        df = df.withColumn("as_of_date", ref_path_date(_col("origin_file")))
+    if "holding_name" in df.columns:
+        df = df.filter(
+            ~F.lower(F.coalesce(_col("holding_name"), F.lit(""))).contains(holdings.SUMMARY_ROW_MARKER)
+        )
+    if "holding_percentage" in df.columns:
+        df = df.withColumn("holding_percentage", ref_parse_percent(_col("holding_percentage")))
+    if "holding_ticker" in df.columns:
+        df = df.withColumn(
+            "holding_ticker", ref_length_guard(ref_null_sentinels_to_null(_col("holding_ticker")), 20)
+        )
+    df = ref_conform(df, FUND_HOLDINGS, renames={})
+    df = validate.drop_null_keys(df, ["ticker", "holding_name", "as_of_date"])
+    df = dedup.dedup_min(df, FUND_HOLDINGS_KEY)
+    return ref_with_row_hash(df, ref_all_columns_hash(df))
+
+
+def ref_clean_allocations(df, allocation_type):
+    renames = {k: v for k, v in conform.DEFAULT_RENAMES.items() if k not in ("item_name", "value_net")}
+    df = conform.rename_synonyms(conform.normalize_headers(df), renames)
+    df = df.withColumn("allocation_type", F.lit(allocation_type))
+    if "as_of_date" not in df.columns and "origin_file" in df.columns:
+        df = df.withColumn("as_of_date", ref_path_date(_col("origin_file")))
+    for c in ("value_net", "value_category_avg", "value_long", "value_short"):
+        if c in df.columns:
+            df = df.withColumn(c, ref_parse_percent(_col(c)))
+    df = ref_conform(df, ALLOCATIONS, renames={})
+    df = validate.drop_null_keys(df, ["ticker", "item_name", "as_of_date"])
+    df = dedup.dedup_min(df, ALLOCATIONS_KEY)
+    return ref_with_row_hash(df, ref_all_columns_hash(df))
+
+
+def ref_price_clean(df):
+    df = conform.rename_synonyms(conform.normalize_headers(df))
+    if "source" not in df.columns:
+        df = df.withColumn("source", F.lit("stock_analysis"))
+    if "volume" in df.columns:
+        df = df.withColumn("volume", ref_parse_thousands(_col("volume")))
+    if "date" in df.columns:
+        df = df.withColumn("date", ref_null_sentinels_to_null(_col("date")).try_cast("date"))
+    if "origin_file" in df.columns:
+        df = dedup.dedup_keyed(df, PRICE_HISTORY_KEY, ["origin_file"], keep="last")
+    df = ref_conform(df, PRICE_HISTORY, renames={})
+    return validate.drop_null_keys(df, ["ticker", "date"])
+
+
+def ref_dividends_clean(df, source="yahoo_finance"):
+    df = conform.rename_synonyms(conform.normalize_headers(df))
+    if "source" not in df.columns:
+        df = df.withColumn("source", F.lit(source))
+    if "type" in df.columns:
+        df = df.withColumn("type", F.coalesce(ref_null_sentinels_to_null(_col("type")), F.lit("Cash")))
+    else:
+        df = df.withColumn("type", F.lit("Cash"))
+    df = ref_conform(df, DIVIDEND_HISTORY, renames={})
+    df = validate.drop_null_keys(df, ["ticker", "ex_date", "amount"])
+    return dedup.dedup_min(df, DIVIDEND_HISTORY_KEY)
 
 
 def ref_dedup_keyed(df, keys, order_by, keep="first"):
@@ -268,7 +495,7 @@ def test_conform_matches_column_builder(spark):
         ]
     )
     for clean in (True, False):
-        new = conform.conform(raw, schema, renames={}, clean_strings=clean)
+        new = conform.conform(conform.normalize_headers(raw), schema, clean_strings=clean)
         ref = ref_conform(raw, schema, renames={}, clean_strings=clean)
         assert new.schema == ref.schema == schema
         assert _rows(new) == _rows(ref)
@@ -352,6 +579,194 @@ def test_merge_as_dataframe_matches_column_builder(spark, null_safe_keys):
 
 
 # ---------------------------------------------------------------------------
+# daily cleans: SQL-text rule tables vs the Column chains
+# ---------------------------------------------------------------------------
+
+#: every NULL sentinel, in mixed case and with padding
+SENTINELS = ["", "  NaN ", "None", " NULL", "N/A ", " na", " - "]
+#: MUTUAL FUND variants, and every SOURCE_MAP key in mixed case with padding
+ASSET_TYPES = ["mutual fund", " Mutual Fund ", "MUTUALFUND", "Mutual_Fund", "etf", " fund", "bond", "n/a"]
+SOURCES = [k.title() if i % 2 else f" {k.upper()} " for i, k in enumerate(conform.SOURCE_MAP)] + ["other", " - "]
+#: '%', '+' and ',' in numbers, k/m/b/t suffixes before currency text, and
+#: values on either side of 999.99 and 1000
+NUMBERS = [
+    "+1,234.5%", "12.3%", " 45 ", "0.45", "842.33m USD", "1.2b EUR", "5K usd", "3t", "-3.5 M gbp",
+    "999.99", "999.98", "-999.995", "1000", "1000.0", "-1000", "1000.01", "150000", "99999",
+    "1,234,567", "abc", "n/a", "",
+]
+DATES = ["2024-01-05", "2024-01-05T00:00:00", "2024-13-45", "not a date", "2024-02-30", " 2024-02-29 ", "N/A"]
+TEXTS = ["Fund 1 Growth", "  padded  ", "Per Cent of Portfolio total", "ok", *SENTINELS]
+#: the 20-character guard and one character past it
+HOLDING_TICKERS = ["AAPL", "A" * 20, "B" * 21, " n/a ", "MSFT "]
+
+DETAIL_COLUMNS = [
+    c
+    for c in dict.fromkeys(f.name for s in (FUND_INFO, FUND_FEES, FUND_RISK, FUND_POLICY) for f in s.fields)
+    if c not in ("row_hash", "updated_at")
+]
+
+
+def _values(header):
+    """The fixture's values for a landed column, picked by its header."""
+    h = header.strip().lower()
+    if h in ("symbol", "ticker"):
+        return [" vtsax ", "VTSAX", "brk.b", " Fxaix", "", "N/A"]
+    if h == "asset_type":
+        return ASSET_TYPES
+    if h == "source":
+        return SOURCES
+    if h == "holding_ticker":
+        return HOLDING_TICKERS
+    if h == "status":
+        return [" Active", "INACTIVE ", "new", "", "None", "pending"]
+    if "date" in h or h == "date":
+        return DATES
+    if h in ("fund name", "item_name", "type", "currency", "category", "name", "odd col", "odd.col"):
+        return TEXTS
+    return NUMBERS
+
+
+def _landed(spark, headers, rows=66):
+    """A landed frame: string columns named ``headers`` plus a per-row
+    ``origin_file`` whose path carries a date directory (or none). Every
+    column takes each of its values in turn, shifted by the column's
+    position on each pass, so keys repeat with differing values."""
+    cols = {h: _values(h) for h in headers}
+    data = []
+    for i in range(rows):
+        row = [vals[(i + k * (i // len(vals))) % len(vals)] for k, vals in enumerate(cols.values())]
+        day = ("2024-05-05", "export-2020-01-01/2024-05-06", "nodate")[i % 3]
+        data.append((*row, f"/land/{day}/feed_{i:02d}.csv"))
+    return spark.createDataFrame(data, T.StructType([T.StructField(h, T.StringType()) for h in [*headers, "origin_file"]]))
+
+
+CLEANS = {
+    "master_sync": (
+        master_sync.clean, ref_master_clean,
+        ["Symbol", "asset_type", "Fund Name", " Status", "source", "date_added"],
+    ),
+    "master_sync_missing_columns": (master_sync.clean, ref_master_clean, ["Symbol", "source"]),
+    "daily_nav": (
+        daily_nav.clean, ref_nav_clean,
+        ["  Ticker ", "Asset_Type", "Source", "nav_price", "currency", "as_of_date", "scrape_date"],
+    ),
+    "static_details": (
+        static_details.clean, ref_details_clean,
+        ["Symbol", "Fund Name", "odd col", "odd.col"]
+        + [c for c in DETAIL_COLUMNS if c not in ("ticker", "name")],
+    ),
+    "holdings": (
+        holdings.clean_holdings, ref_clean_holdings,
+        ["ticker", "asset_type", "source", "Item_Name", "holding_ticker", "Value_Net"],
+    ),
+    "holdings_dated": (
+        holdings.clean_holdings, ref_clean_holdings,
+        ["ticker", "asset_type", "source", "item_name", "holding_ticker", "value_net", "as_of_date"],
+    ),
+    "allocations": (
+        lambda df: holdings.clean_allocations(df, "sector"),
+        lambda df: ref_clean_allocations(df, "sector"),
+        ["ticker", "asset_type", "source", "item_name", "value_net", "Value_Long", "value_short"],
+    ),
+    "price_history": (
+        price_history.clean, ref_price_clean,
+        ["ticker", "asset_type", "Date", "Open", "High", "Low", "Close", "Adj. Close", "Volume"],
+    ),
+    "dividends": (
+        dividends.clean, ref_dividends_clean,
+        ["ticker", "asset_type", "ex_dividend_date", "pay_date", "cash_amount", "type", "currency"],
+    ),
+    "dividends_untyped": (
+        dividends.clean, ref_dividends_clean,
+        ["ticker", "asset_type", "source", "ex_date", "Dividend", "currency"],
+    ),
+}
+
+
+def _plan(df):
+    """The optimized plan with expression ids and the run's clock masked."""
+    import re
+
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"#\d+L?", "#", text)
+
+
+@pytest.mark.parametrize("case", list(CLEANS))
+def test_daily_cleans_match_column_builders(spark, case):
+    """Each daily clean, built as one ``selectExpr`` from its column -> rule
+    table, gives the rows, the schema and the optimized plan of the Column
+    chains it replaced (the plan comparison catches a literal typed
+    DECIMAL where the chain had a double)."""
+    clean, ref_clean, headers = CLEANS[case]
+    raw = _landed(spark, headers)
+    new, ref = clean(raw), ref_clean(raw)
+    if "updated_at" in new.columns:  # the run's clock
+        new, ref = new.drop("updated_at"), ref.drop("updated_at")
+    assert new.schema == ref.schema
+    assert _rows(new) == _rows(ref)
+    assert new.count() > 0
+    assert _plan(new) == _plan(ref)
+
+
+def test_rules_match_column_builders_on_typed_inputs(spark):
+    """The numeric rules over DECIMAL, double, long and string inputs give
+    the Column chains' types, values and plans: a rule's double constant
+    written as a bare ``100.0`` (a DECIMAL in SQL) would turn a DECIMAL
+    input's result into a DECIMAL."""
+    df = spark.sql(
+        """SELECT * FROM VALUES
+           (CAST(45.5 AS DECIMAL(12,2)), 45.5D, 45L, ' 12,345.5% '),
+           (CAST(-1234.56 AS DECIMAL(12,2)), 999.99D, 1000L, 'n/a'),
+           (CAST(0.5 AS DECIMAL(12,2)), -1000.0D, -999L, '1.5m usd'),
+           (CAST(NULL AS DECIMAL(12,2)), CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT), CAST(NULL AS STRING))
+           AS t(d, x, n, s)"""
+    )
+    numeric, text = ["d", "x", "n"], ["s"]
+    rules = [
+        (parse.percent_rescale, ref_percent_rescale, numeric),
+        (parse.magnitude_overflow_repair, ref_magnitude_overflow_repair, numeric),
+        (parse.outlier_to_null, ref_outlier_to_null, numeric),
+        (parse.parse_percent, ref_parse_percent, text),
+        (parse.parse_thousands, ref_parse_thousands, text),
+        (parse.parse_magnitude, ref_parse_magnitude, text),
+        (parse.length_guard, ref_length_guard, text),
+    ]
+    new = df.select([new(c).alias(f"{i}_{c}") for i, (new, _, cols) in enumerate(rules) for c in cols])
+    ref = df.select([ref(_col(c)).alias(f"{i}_{c}") for i, (_, ref, cols) in enumerate(rules) for c in cols])
+    assert new.schema == ref.schema
+    assert new.schema["0_d"].dataType == T.DoubleType()
+    assert _rows(new) == _rows(ref)
+    assert _plan(new) == _plan(ref)
+
+
+def test_clean_fixture_reaches_every_rule(spark):
+    """The fixture is not vacuous: after the cleans, sentinels are NULL,
+    keys are normalized, numbers parse on both sides of each bound, the
+    length guard and the summary-row filter fire."""
+    master = master_sync.clean(_landed(spark, CLEANS["master_sync"][2])).collect()
+    assert {r.asset_type for r in master} >= {"FUND", "ETF", "BOND", None}
+    assert {r.source for r in master} >= set(conform.SOURCE_MAP.values()) | {"other", None}
+    assert {r.ticker for r in master} >= {"VTSAX", "BRK.B", "FXAIX", None}
+    nav = daily_nav.clean(_landed(spark, CLEANS["daily_nav"][2])).collect()
+    assert "MUTUAL FUND" in {r.asset_type for r in nav}  # X1 only: no X3 map on the NAV feed
+    details = static_details.clean(_landed(spark, CLEANS["static_details"][2])).collect()
+
+    def got(col):
+        return {None if r[col] is None else round(r[col], 6) for r in details}
+
+    assert got("assets_aum") >= {842_330_000.0, 1.2e9, 5e3, 3e12, -3.5e6}
+    assert got("expense_ratio") >= {12.345, 0.123, 0.45}  # X7: /100 above 1
+    assert got("standard_dev_3y") >= {999.99, 10.0, -9.99995, None}  # X8 then F9
+    assert got("sharpe_ratio_1y") >= {999.99, -999.995, None}  # F9 only
+    assert got("holdings_count") >= {1_234_567.0, None}
+    held = holdings.clean_holdings(_landed(spark, CLEANS["holdings"][2])).collect()
+    assert {r.holding_ticker for r in held} >= {"AAPL", "A" * 20, None}
+    assert "B" * 21 not in {r.holding_ticker for r in held}
+    assert all("per cent of portfolio" not in r.holding_name.lower() for r in held)
+    assert {str(r.as_of_date) for r in held} == {"2024-05-05", "2024-05-06"}
+
+
+# ---------------------------------------------------------------------------
 # round-trip guard
 # ---------------------------------------------------------------------------
 
@@ -360,9 +775,10 @@ def test_wide_builders_cost_no_round_trips_per_column(spark, py4j_round_trips):
     """Building (not running) a merge, a ``conform`` and an all-columns hash
     over 60 columns costs what it costs over 6, plus py4j's transfer of the
     expression-string lists: py4j sends a Python list to the JVM one element
-    per message, and three lists here grow with the width (the kernel's
-    projection, ``conform``'s header rename and its projection). As Column
-    chains the same builds cost about 240 more round trips per column."""
+    per message, and two lists here grow with the width (the kernel's
+    projection and ``conform``'s; ``conform`` no longer re-renames the
+    headers its callers normalized). As Column chains the same builds cost
+    about 240 more round trips per column."""
 
     def frame(width):
         schema = T.StructType(
@@ -374,11 +790,24 @@ def test_wide_builders_cost_no_round_trips_per_column(spark, py4j_round_trips):
 
     def build(df, schema):
         merge.merge_as_dataframe(df, df, ["id"])
-        conform.conform(df, schema, renames={})
+        conform.conform(df, schema)
         hashing.with_row_hash(df, hashing.all_columns_hash(df))
 
     narrow, wide = frame(6), frame(60)
     build(*narrow)  # warm-up: first calls look up JVM classes and functions
     n6 = py4j_round_trips(lambda: build(*narrow))
     n60 = py4j_round_trips(lambda: build(*wide))
-    assert n60 <= n6 + 3 * (60 - 6) + 20, (n6, n60)
+    assert n60 <= n6 + 2 * (60 - 6) + 20, (n6, n60)
+
+
+def test_static_details_clean_build_cost(spark, py4j_round_trips):
+    """Building (not running) ``static_details.clean`` over the 74 detail
+    columns costs at most a tenth of the 7,195 py4j round trips it cost
+    when every rule was a Column chain (about 97 per column). What is left
+    grows by a few messages per column: py4j's one-message-per-element
+    transfer of the header rename's and the ``selectExpr``'s lists."""
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in DETAIL_COLUMNS])
+    static_details.clean(spark.createDataFrame([], schema))  # warm-up
+    df = spark.createDataFrame([], schema)
+    n = py4j_round_trips(lambda: static_details.clean(df))
+    assert n <= 7195 // 10, n
