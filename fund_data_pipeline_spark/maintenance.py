@@ -130,7 +130,10 @@ def vacuum_snapshots(table_path: str, keep_last: int | None = None) -> list[str]
     snapshot write and the manifest repoint leaves an orphan ``_v_NNNNN``
     directory the pointer never referenced. This removes snapshots with a
     version STRICTLY BELOW the live pointer's and returns the deleted
-    names.
+    names in version order. It is the same prune each manifest write runs
+    after its swap (``merge._prune_snapshots``); a zero-byte manifest
+    (crash mid-create) is a no-op, and a directory that another process
+    removed first is not counted.
 
     ``keep_last``: how many trailing versions (live included) to leave on
     disk. The default ``None`` honors the retention the table itself
@@ -147,38 +150,9 @@ def vacuum_snapshots(table_path: str, keep_last: int | None = None) -> list[str]
     read-grace period — an in-flight reader may still be scanning a
     directory the pointer abandoned moments ago.
     """
-    from .merge import MANIFEST_NAME, _persisted_retention
+    from .merge import _prune_snapshots
 
-    path = Path(table_path)
-    mf = path / MANIFEST_NAME
-    if not mf.exists():
-        return []
-    if keep_last is None:
-        keep_last = _persisted_retention(path) or 1
-    # a zero-byte manifest (crash mid-create) parses as no live version
-    live = (mf.read_text().splitlines() or [""])[0].strip()
-    try:
-        live_version = int(live.rsplit("_", 1)[-1])
-    except ValueError:
-        return []
-    removed = []
-    for snap in sorted(path.glob("_v_*")):
-        try:
-            version = int(snap.name.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        if snap.is_dir() and version <= live_version - max(1, keep_last):
-            # A concurrent writer prunes the snapshot it just superseded
-            # (_manifest_write); if both it and this janitor reach the same
-            # directory, one rmtree loses the race mid-walk. Either way the
-            # directory ends up gone, so a vanished path is success, not
-            # failure — but only count it as removed if this process did it.
-            try:
-                shutil.rmtree(snap)
-            except FileNotFoundError:
-                continue
-            removed.append(snap.name)
-    return removed
+    return _prune_snapshots(Path(table_path), keep_last)
 
 
 def write_range_clustered(
@@ -235,7 +209,7 @@ def delete_keys(
     use for COW deletes: one column-pruned scan (key + partition columns
     only) finds which partitions contain victims, then ONLY those
     partitions are rewritten via anti-join and swapped in
-    (:func:`~fund_data_pipeline_spark.merge._partition_swap_write`); every
+    (:func:`~fund_data_pipeline_spark.merge.swap_partitions_dropping_absent`); every
     other partition's files stay byte-identical. A partition left empty is
     dropped entirely. At 100 TB an erasure request touches the handful of
     partitions the subject's rows live in, not the table. The rewrite is
@@ -247,9 +221,10 @@ def delete_keys(
     subjects, not billions); for a huge key set drop the hint and let AQE
     pick the join side.
 
-    Both rename layouts swap through the merge module's one swap helper,
-    and the entry prologue it shares with ``merge_upsert`` heals a crashed
-    earlier swap before the victims are looked up.
+    Every layout publishes through the merge module's one writer
+    (``merge._write_table``, shared with ``merge_upsert``), and the entry
+    prologue it shares with ``merge_upsert`` heals a crashed earlier swap
+    before the victims are looked up.
 
     Works on every merge layout: hive-partitioned (pass ``partition_col``),
     plain directories (rewritten whole through ``merge._atomic_write``),
@@ -264,15 +239,7 @@ def delete_keys(
     """
     from pyspark.sql import functions as F
 
-    from .merge import (
-        _atomic_write,
-        _guard_and_heal,
-        _manifest_write,
-        detect_layout,
-        read_table,
-        swap_partitions_dropping_absent,
-        touched_partition_filter,
-    )
+    from .merge import _guard_and_heal, _write_table, detect_layout, read_table, touched_partition_filter
 
     path = Path(table_path)
     layout = detect_layout(path)
@@ -288,35 +255,24 @@ def delete_keys(
         else ("manifest" if layout == "manifest" else "flat")
     )
     _guard_and_heal(path, intended, partition_col)
-    keys_df = keys_df.select(*key_cols).dropDuplicates(key_cols)
+    keys_df = F.broadcast(keys_df.select(*key_cols).dropDuplicates(key_cols))
     df = read_table(spark, table_path)
+    victims = df.join(keys_df, key_cols, "left_semi")
+    touched = None
     if partition_col is None:
-        n_deleted = df.join(F.broadcast(keys_df), key_cols, "left_semi").count()
-        if n_deleted == 0:
-            return 0
-        survivors = df.join(F.broadcast(keys_df), key_cols, "left_anti")
-        if layout == "manifest":
-            _manifest_write(survivors, path, history=history)
-        else:
-            _atomic_write(survivors, path)
-        return n_deleted
-
-    # ONE column-pruned discovery scan yields both the victim count and the
-    # partitions holding victims (a NULL partition value groups under None
-    # and is rewritten like any other — plain isin would silently skip it)
-    victim_stats = (
-        df.join(F.broadcast(keys_df), key_cols, "left_semi")
-        .groupBy(partition_col)
-        .count()
-        .collect()
-    )
-    n_deleted = sum(r["count"] for r in victim_stats)
-    if n_deleted == 0:
-        return 0
-    touched = [r[partition_col] for r in victim_stats]
-    pruned = df.filter(touched_partition_filter(partition_col, touched))
-    survivors = pruned.join(F.broadcast(keys_df), key_cols, "left_anti")
-    swap_partitions_dropping_absent(survivors, path, partition_col, touched)
+        n_deleted = victims.count()
+    else:
+        # ONE column-pruned discovery scan yields both the victim count and
+        # the partitions holding victims (a NULL partition value groups
+        # under None and is rewritten like any other — plain isin would
+        # silently skip it)
+        victim_stats = victims.groupBy(partition_col).count().collect()
+        n_deleted = sum(r["count"] for r in victim_stats)
+        touched = [r[partition_col] for r in victim_stats]
+        df = df.filter(touched_partition_filter(partition_col, touched))
+    if n_deleted:
+        survivors = df.join(keys_df, key_cols, "left_anti")
+        _write_table(survivors, path, layout, partition_col, touched, history)
     return n_deleted
 
 

@@ -42,6 +42,19 @@ Write discipline — three layouts, one merge:
   ``partition_col`` to be one of ``keys`` (true for daily tables keyed
   (entity, date)) so a key can never silently move partitions.
 
+One writer, :func:`_write_table`, dispatches the three layouts for the
+merge and for ``maintenance.delete_keys``; its hive branch,
+:func:`swap_partitions_dropping_absent`, also drops a touched partition
+left with no rows. Manifest snapshots are named ``_v_NNNNN``; one parser
+reads those names and one prune serves both the post-swap cleanup and the
+``maintenance.vacuum_snapshots`` janitor.
+
+Keyed changes all run on the one kernel: :func:`diff_frames` (and
+:func:`table_changes` on it) is the kernel between two relations, filtered
+to the changed rows; :func:`apply_changes` is one merge build, with the
+feed's delete keys anti-joined out of the target it reads, and one write,
+so each feed is one commit on every layout.
+
 Scale notes (100 TB):
 - The join shuffles both sides by the natural key — unavoidable for a keyed
   merge without a transactional format; on a cluster, bucketed tables on the
@@ -82,10 +95,6 @@ class MergeStats:
     #: next (rollup refresh, compaction targeting) read them here instead of
     #: re-running the distinct+collect. None only for an unpartitioned merge.
     touched_partitions: list | None = None
-
-
-def _null_safe_ne(left: Column, right: Column) -> Column:
-    return ~left.eqNullSafe(right)
 
 
 def merge_upsert(
@@ -174,13 +183,21 @@ def _build_merge(
     partition_col: str | None = None,
     layout: str = "rename",
     allow_new_columns: bool = False,
+    *,
+    deletes: DataFrame | None = None,
 ) -> tuple[DataFrame, list | None]:
     """The first half of :func:`merge_upsert`: heal and guard the target,
     dedup the batch, collect its touched partitions and build the merged
     relation, which carries ``__action`` for :func:`_write_merge`. Returns
     ``(merged, touched)``; nothing is written. A caller may map ``merged``
     row by row (keeping ``__action``) before writing it, as
-    ``master_sync.run`` does with the status transitions."""
+    ``master_sync.run`` does with the status transitions.
+
+    ``deletes`` (:func:`apply_changes`' delete keys, ``keys`` columns only)
+    are anti-joined null-safely out of the target before the kernel runs,
+    and their partition values join ``touched``, so one write publishes a
+    feed's deletes and upserts together; a partition the deletes empty is
+    dropped by the swap."""
     keys = list(keys)
     if layout not in ("rename", "manifest"):
         raise ValueError(f"unknown layout {layout!r}; use 'rename' or 'manifest'")
@@ -210,8 +227,10 @@ def _build_merge(
         # their directories. The create path reports the list too, so a
         # streaming loader's FIRST micro-batch is not the one case the field
         # is absent.
-        parts = source.select(partition_col).distinct()
-        touched = [r[0] for r in parts.collect()]
+        parts = source.select(partition_col)
+        if deletes is not None:
+            parts = parts.union(deletes.select(partition_col))
+        touched = [r[0] for r in parts.distinct().collect()]
     if not _table_exists(path, layout):
         _refuse_reserved(source.columns)
         return source.withColumn("__action", F.lit("insert")), touched
@@ -219,6 +238,9 @@ def _build_merge(
         target = _touched_target(spark, path, source, partition_col, touched)
     else:
         target = read_table(spark, str(path))
+    if deletes is not None:
+        match = F.expr(_keys_match(keys, "<=>", "t", "d"))
+        target = target.alias("t").join(deletes.alias("d"), match, "left_anti")
     merged = _merge_kernel(
         target,
         source,
@@ -246,7 +268,6 @@ def _write_merge(
     ``Observation`` on the written frame counts from it. The partition swap
     observes after its repartition: below it, an ``Observation`` over a
     statically empty batch raises on ``get`` instead of returning zeros."""
-    path = Path(target_path)
     action = F.col("__action")
     obs = Observation()
 
@@ -258,12 +279,7 @@ def _write_merge(
             F.count(F.when(action.isin("unchanged", "keep"), 1)).alias("unchanged"),
         ).drop("__action")
 
-    if layout == "manifest":
-        _manifest_write(observe(merged), path, history=history)
-    elif partition_col is not None:
-        _partition_swap_write(merged, path, partition_col, observe)
-    else:
-        _atomic_write(observe(merged), path)
+    _write_table(merged, Path(target_path), layout, partition_col, touched, history, observe)
     got = obs.get
     return MergeStats(
         got["inserted"], got["updated"], got["unchanged"], touched_partitions=touched
@@ -326,6 +342,14 @@ def _refuse_reserved(columns: Sequence[str]) -> None:
         raise ValueError(f"column names reserved by the merge: {clash}")
 
 
+def _keys_match(keys: Sequence[str], eq: str, left: str, right: str) -> str:
+    """The keyed join condition as SQL text: one left-deep conjunction of
+    ``left.k <eq> right.k``."""
+    return reduce(
+        lambda a, b: f"({a}) AND ({b})", [f"{left}.{ident(k)} {eq} {right}.{ident(k)}" for k in keys]
+    )
+
+
 def _merge_kernel(
     target: DataFrame,
     source: DataFrame,
@@ -362,10 +386,7 @@ def _merge_kernel(
     # insert (preserve_cols taken from source, stats wrong).
     t = target.withColumn("__t_present", F.lit(True)).alias("t")
     s = source.withColumn("__s_present", F.lit(True)).alias("s")
-    eq = "<=>" if null_safe_keys else "="
-    cond = reduce(
-        lambda a, b: f"({a}) AND ({b})", [f"t.{ident(k)} {eq} s.{ident(k)}" for k in keys]
-    )
+    cond = _keys_match(keys, "<=>" if null_safe_keys else "=", "t", "s")
     joined = t.join(s, F.expr(cond), "full_outer")
 
     s_present = "(s.__s_present IS NOT NULL)"
@@ -425,15 +446,33 @@ def _merge_kernel(
 MANIFEST_NAME = "_MANIFEST"
 
 
+def _manifest_lines(path: Path) -> list[str] | None:
+    """The lines of the manifest pointer, or None for plain-directory
+    tables. The first names the live snapshot (empty after a crash
+    mid-create); a second may carry ``retention=N``."""
+    mf = path / MANIFEST_NAME
+    return mf.read_text().splitlines() if mf.exists() else None
+
+
+def _snapshot_version(name: str) -> int | None:
+    """N of a ``_v_NNNNN`` snapshot name, or None for any other name. The
+    zero padding widens past 99999, so versions order by this number, never
+    by name."""
+    digits = name.removeprefix("_v_")
+    if digits == name or not (digits.isascii() and digits.isdigit()):
+        return None
+    return int(digits)
+
+
 def _live_snapshot(path: Path) -> Path | None:
     """Resolve the manifest pointer, or None for plain-directory tables."""
-    mf = path / MANIFEST_NAME
-    if mf.exists():
-        head = (mf.read_text().splitlines() or [""])[0].strip()
-        if not head:
-            raise ValueError(f"corrupt manifest table: empty {mf}")
-        return path / head
-    return None
+    lines = _manifest_lines(path)
+    if lines is None:
+        return None
+    head = (lines or [""])[0].strip()
+    if not head:
+        raise ValueError(f"corrupt manifest table: empty {path / MANIFEST_NAME}")
+    return path / head
 
 
 def _persisted_retention(path: Path) -> int | None:
@@ -441,10 +480,7 @@ def _persisted_retention(path: Path) -> int | None:
     (``retention=N`` on its second line, Delta-table-property style), or
     None when the table has never declared one (legacy single-line
     manifests)."""
-    mf = path / MANIFEST_NAME
-    if not mf.exists():
-        return None
-    for line in mf.read_text().splitlines()[1:]:
+    for line in (_manifest_lines(path) or [])[1:]:
         if line.startswith("retention="):
             try:
                 return int(line.split("=", 1)[1])
@@ -552,26 +588,46 @@ def touched_partition_filter(partition_col: str, touched) -> Column:
 
 
 def swap_partitions_dropping_absent(
-    out: DataFrame, path: Path, partition_col: str, touched
+    out: DataFrame,
+    path: Path,
+    partition_col: str,
+    touched,
+    observe: Callable[[DataFrame], DataFrame] = lambda df: df,
 ) -> None:
-    """Swap ``out``'s partitions into the table and remove the directory of
-    every ``touched`` partition that produced no rows (a partition whose
-    content disappeared entirely — the case plain swap can't express).
-    The present set is derived from the staging directories the swap
-    actually wrote — ``out`` is evaluated exactly once, so a
+    """Swap ONLY the partition directories present in ``out`` into the
+    table root, and remove the directory of every ``touched`` partition
+    that produced no rows (a partition whose content disappeared entirely —
+    the case a plain swap can't express); every other partition's files
+    are left byte-untouched. The present set is the staging directories
+    the write produced — ``out`` is evaluated exactly once, so a
     non-deterministic source cannot produce a present set that disagrees
     with the dirs on disk (which would delete a just-written partition or
     keep a stale one). Stale directory names go through
     :func:`hive_partition_dir` so NULL and escaped values are found on
-    disk. Shared by ``rollup.refresh_rollup`` and
-    ``maintenance.delete_keys``."""
-    swapped = _partition_swap_write(out, path, partition_col)
+    disk. ``observe`` maps the repartitioned frame to the one written (see
+    :func:`_write_merge`). The hive branch of :func:`_write_table`, so it
+    serves the partition-pruned merge, ``apply_changes``,
+    ``maintenance.delete_keys`` and ``rollup.refresh_rollup``."""
+    staging = _fresh_staging(path)
+    # shuffle rows to their partition before the partitioned write: without
+    # this every task emits a file into every partition (tasks x partitions
+    # small files — the classic scan-killer). One task per partition is right
+    # for daily-merge-sized partitions; a table with huge partitions would
+    # add a within-partition split key here.
+    observe(out.repartition(F.col(partition_col))).write.mode(
+        "overwrite"
+    ).partitionBy(partition_col).parquet(str(staging))
+    path.mkdir(parents=True, exist_ok=True)
+    _heal_partition_backups(path, partition_col)
+    swapped: set[str] = set()
+    for part_dir in sorted(staging.glob(f"{partition_col}=*")):
+        _swap_in(part_dir, path / part_dir.name)
+        swapped.add(part_dir.name)
+    shutil.rmtree(staging)
     for value in touched:
         dirname = hive_partition_dir(partition_col, value)
-        if dirname not in swapped:
-            stale = path / dirname
-            if stale.exists():
-                shutil.rmtree(stale)
+        if dirname not in swapped and (path / dirname).exists():
+            shutil.rmtree(path / dirname)
 
 
 def read_table(
@@ -625,6 +681,28 @@ def _table_exists(path: Path, layout: str) -> bool:
     # treating it as one would send the merge down the read path and die
     # on schema inference over zero files
     return detect_layout(path) in ("hive", "flat")
+
+
+def _write_table(
+    df: DataFrame,
+    path: Path,
+    layout: str | None,
+    partition_col: str | None = None,
+    touched=None,
+    history: int | None = None,
+    observe: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> None:
+    """Publish ``df`` as the table at ``path`` in its layout: a new
+    manifest snapshot, a swap of the touched partitions (dropping those
+    left empty), or a whole-directory swap. ``observe`` maps the frame to
+    the one written. The one layout dispatch of :func:`_write_merge` and
+    ``maintenance.delete_keys``."""
+    if layout == "manifest":
+        _manifest_write(observe(df), path, history=history)
+    elif partition_col is not None:
+        swap_partitions_dropping_absent(df, path, partition_col, touched, observe)
+    else:
+        _atomic_write(observe(df), path)
 
 
 def _atomic_write(df: DataFrame, path: Path, partition_by: str | None = None) -> None:
@@ -764,7 +842,7 @@ def _manifest_write(df: DataFrame, path: Path, history: int | None = None) -> No
     if history is None:
         history = _persisted_retention(path) or 1
     current = _live_snapshot(path)
-    version = int(current.name.rsplit("_", 1)[-1]) + 1 if current is not None else 1
+    version = _snapshot_version(current.name) + 1 if current is not None else 1
     snap = path / f"_v_{version:05d}"
     if snap.exists():
         shutil.rmtree(snap)  # failed previous attempt; manifest never pointed here
@@ -773,34 +851,51 @@ def _manifest_write(df: DataFrame, path: Path, history: int | None = None) -> No
     pointer = snap.name if history <= 1 else f"{snap.name}\nretention={history}"
     tmp.write_text(pointer)
     os.replace(tmp, path / MANIFEST_NAME)
-    cutoff = version - max(1, history)
-    for old in sorted(path.glob("_v_*")):
-        try:
-            old_version = int(old.name.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        if old.is_dir() and old_version <= cutoff:
-            # a concurrent vacuum_snapshots janitor may prune the superseded
-            # snapshot first; losing that race is fine — the directory is gone
-            shutil.rmtree(old, ignore_errors=True)
+    _prune_snapshots(path, history)
+
+
+def _snapshots(path: Path) -> list[tuple[int, Path]]:
+    """``(version, dir)`` of every ``_v_NNNNN`` entry under ``path``, in
+    version order."""
+    found = ((_snapshot_version(p.name), p) for p in path.glob("_v_*"))
+    return sorted((v, p) for v, p in found if v is not None)
+
+
+def _prune_snapshots(path: Path, keep: int | None = None) -> list[str]:
+    """Delete every snapshot ``_v_N`` of the manifest table at ``path`` with
+    N <= live - max(1, keep), in version order, and return the names this
+    call removed. ``keep`` None is the table's persisted retention (1 when
+    undeclared). Only versions below the live pointer are ever selected, so
+    a concurrent writer's snapshot (always above it) is safe; a missing or
+    zero-byte manifest is a no-op. The post-swap prune of
+    :func:`_manifest_write` and ``maintenance.vacuum_snapshots``."""
+    live = _snapshot_version((_manifest_lines(path) or [""])[0].strip())
+    if live is None:
+        return []
+    if keep is None:
+        keep = _persisted_retention(path) or 1
+    removed = []
+    for version, snap in _snapshots(path):
+        if snap.is_dir() and version <= live - max(1, keep):
+            # the writer's own prune and a janitor may reach the same
+            # directory; one rmtree loses the race mid-walk. Either way the
+            # directory is gone, so a vanished path is success — but it is
+            # counted only by the process that removed it.
+            try:
+                shutil.rmtree(snap)
+            except FileNotFoundError:
+                continue
+            removed.append(snap.name)
+    return removed
 
 
 def list_versions(table_path: str) -> list[int]:
     """Version numbers of the snapshots currently on disk (ascending); the
     live version is the last entry. Empty for non-manifest tables."""
     path = Path(table_path)
-    if not (path / MANIFEST_NAME).exists():
+    if _manifest_lines(path) is None:
         return []
-    out = []
-    for snap in path.glob("_v_*"):
-        try:
-            out.append(int(snap.name.rsplit("_", 1)[-1]))
-        except ValueError:
-            continue
-    # sort the PARSED ints, not the names: the zero-padded %05d widens past
-    # 99999, where lexicographic order breaks the documented "live version
-    # is the last entry" contract (review r11)
-    return sorted(out)
+    return [v for v, _ in _snapshots(path)]
 
 
 def table_changes(
@@ -838,74 +933,17 @@ def diff_frames(
 ) -> DataFrame:
     """Pure-DataFrame CDC kernel behind :func:`table_changes`: classify each
     key as insert / update / delete between two relations, unchanged rows
-    omitted. Inserts/updates carry the ``new`` row, deletes the ``old`` row;
-    keys join null-safely (matching the merge's own semantics)."""
-    keys = list(keys)
-    reserved = {"__o_present", "__n_present"}
-    old_cols, new_cols = set(old.columns), new.columns
-    clash = reserved & (old_cols | set(new_cols))
-    if clash:
-        raise ValueError(f"column names reserved by diff_frames: {sorted(clash)}")
-    cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in keys]
-    o = old.withColumn("__o_present", F.lit(True)).alias("o")
-    n = new.withColumn("__n_present", F.lit(True)).alias("n")
-    joined = o.join(n, cond, "full_outer")
-    o_present = F.col("o.__o_present").isNotNull()
-    n_present = F.col("n.__n_present").isNotNull()
-    changed = _null_safe_ne(F.col(f"o.{hash_col}"), F.col(f"n.{hash_col}"))
-    change_type = (
-        F.when(~o_present, F.lit("insert"))
-        .when(~n_present, F.lit("delete"))
-        .when(changed, F.lit("update"))
-        .otherwise(F.lit(None))
-    )
-    # row-presence CASE, not per-column coalesce: an update whose NEW value
-    # is legitimately NULL must emit that NULL, not silently backfill the
-    # old value (caught by the round-trip property test)
-    cols = [
-        F.when(n_present, F.col(f"n.{c}")).otherwise(F.col(f"o.{c}")).alias(c)
-        if c in old_cols
-        else F.col(f"n.{c}").alias(c)
-        for c in new_cols
-        if c != "__n_present"
-    ]
-    return (
-        joined.select(*cols, change_type.alias("_change_type"))
-        .filter(F.col("_change_type").isNotNull())
-    )
-
-
-def _partition_swap_write(
-    df: DataFrame,
-    path: Path,
-    partition_col: str,
-    observe: Callable[[DataFrame], DataFrame] = lambda df: df,
-) -> set[str]:
-    """Swap ONLY the partition directories present in ``df`` into the table
-    root; every other partition's files are left byte-untouched. The merge
-    result contains exactly the touched partitions (pruned target subset
-    full-outer source), so staging emits exactly those ``<pcol>=`` dirs.
-    Returns the set of swapped partition dir names (``<pcol>=<escaped>``) so
-    callers can reason about what was actually written — the staging glob is
-    the ground truth, not a second evaluation of ``df``. ``observe`` maps
-    the repartitioned frame to the one written (see :func:`_write_merge`)."""
-    staging = _fresh_staging(path)
-    # shuffle rows to their partition before the partitioned write: without
-    # this every task emits a file into every partition (tasks x partitions
-    # small files — the classic scan-killer). One task per partition is right
-    # for daily-merge-sized partitions; a table with huge partitions would
-    # add a within-partition split key here.
-    observe(df.repartition(F.col(partition_col))).write.mode(
-        "overwrite"
-    ).partitionBy(partition_col).parquet(str(staging))
-    path.mkdir(parents=True, exist_ok=True)
-    _heal_partition_backups(path, partition_col)
-    swapped: set[str] = set()
-    for part_dir in sorted(staging.glob(f"{partition_col}=*")):
-        _swap_in(part_dir, path / part_dir.name)
-        swapped.add(part_dir.name)
-    shutil.rmtree(staging)
-    return swapped
+    omitted, in ``new``'s columns plus ``_change_type``. Inserts/updates
+    carry the ``new`` row, deletes the ``old`` row. It is the merge's own
+    kernel with ``old`` as the target and ``new`` as the batch: keys join
+    null-safely, "update" is the hash guard's verdict, and a target row the
+    batch lacks (``keep``) is a delete."""
+    merged = _merge_kernel(old, new, list(keys), hash_col, allow_new_columns=True)
+    return merged.selectExpr(
+        *[ident(c) for c in new.columns],
+        "CASE __action WHEN 'keep' THEN 'delete' WHEN 'unchanged' THEN NULL "
+        "ELSE __action END AS _change_type",
+    ).filter("_change_type IS NOT NULL")
 
 
 def merge_as_dataframe(
@@ -950,108 +988,55 @@ def apply_changes(
 ) -> None:
     """Apply a change feed (the :func:`table_changes` / :func:`diff_frames`
     shape: rows + ``_change_type``) to a replica table — the CDC consumer
-    side. Deletes are removed by keyed anti-join, inserts/updates are
-    upserted through the hash-guarded merge, so applying
-    ``table_changes(v1, v2)`` to a replica at v1 state yields exactly the
-    v2 state (``test_apply_changes_syncs_replica``). Idempotent: re-applying
-    the same feed is a no-op (deletes find nothing, upserts hash-match).
-
-    Feed recompute contract (ADVICE r12): the feed is persisted and eagerly
-    materialized before the first target rewrite, but persisted blocks are
-    NOT replicated — an executor lost mid-apply recomputes them from the
-    feed's lineage. A ``table_changes()`` feed recomputes identically (it
-    reads immutable snapshots); a feed hand-built by scanning THIS
-    rename/hive-layout target in place does not (its files are replaced
-    mid-apply) and would produce silently wrong upserts on recompute —
-    such a caller must break the lineage first (``localCheckpoint()`` or a
-    staging write).
-
-    One pass each way: the delete is an anti-join rewrite, the upsert one
-    keyed merge — at scale, both shuffle on the key once. Feeds spanning
-    several versions must be applied in order (or pre-collapsed to
-    latest-per-key with ``dedupe_order``).
+    side — as one hash-guarded merge and one write: the delete keys are
+    anti-joined out of the replica the merge reads, and the inserts and
+    updates are the merge's batch. Applying ``table_changes(v1, v2)`` to a
+    replica at v1 state yields exactly the v2 state
+    (``test_apply_changes_syncs_replica``). Idempotent: re-applying the same
+    feed leaves the same rows (deletes find nothing, upserts hash-match).
+    Feeds spanning several versions must be applied in order (or
+    pre-collapsed to latest-per-key).
 
     The write follows the replica's on-disk layout: pass ``partition_col``
-    for a hive-partitioned replica (both the delete and the upsert then
-    touch only the victim/batch partitions); manifest replicas are
-    auto-detected. A mismatched shape (e.g. no ``partition_col`` against a
-    hive replica) is refused by the layout guard rather than corrupting
-    the table.
+    for a hive-partitioned replica (only the partitions the feed touches
+    are rewritten, and one its deletes leave empty is dropped); manifest
+    replicas are auto-detected. A mismatched shape (e.g. no
+    ``partition_col`` against a hive replica, ``layout="manifest"`` against
+    a flat one) is refused by the layout guard before anything is written.
 
-    Commit granularity: an existing MANIFEST replica gets the deletes and
-    upserts folded into ONE snapshot commit — a concurrent reader (or time
-    travel/CDC) never observes an intermediate delete-only state, and the
-    replica gains exactly one version per feed applied. Rename/hive
-    replicas publish the delete and the upsert as two separate swaps; a
-    reader between them sees the delete-only state, and a crash between
-    them leaves it until the feed is re-applied (idempotent).
+    Each feed is one commit on every layout: one swap (one per touched
+    partition on a hive replica) or one manifest snapshot, so a reader
+    never sees a delete-only state, and a manifest replica gains exactly
+    one version per feed applied. Deletes against a replica that does not
+    exist yet are no-ops: the replica is created from the upserts.
     """
-    from .maintenance import delete_keys
-
     keys = list(keys)
     # pin the feed ONCE: the change feed is typically table_changes(...) —
-    # a full keyed diff of two snapshots — and without the pin the three
-    # isEmpty() probes plus the delete and upsert consumers would each
-    # re-run that diff join, ~5 evaluations of the dominant shuffle per
-    # feed applied (review r11). persist(), not localCheckpoint(): there is
-    # no iteration here needing lineage truncation, and checkpoint blocks
+    # a full keyed diff of two snapshots — and without the pin the no-op
+    # probe, the touched-partition collect and the write would each re-run
+    # that diff join (review r11). persist(), not localCheckpoint(): there
+    # is no iteration here needing lineage truncation, and checkpoint blocks
     # are non-replicated — one lost executor would kill the whole apply,
     # while persisted blocks recompute from the feed (ADVICE r11; the same
     # rationale applied in scrub_boilerplate_segments). Cache size is the
-    # feed, not a table. Recompute safety: a table_changes() feed reads
-    # immutable manifest snapshots, so an evicted block recomputes
-    # identically even while this apply rewrites the target; a caller who
-    # hand-builds a feed by scanning a rename/hive-layout target IN PLACE
-    # must materialize it first (those files are replaced mid-apply).
+    # feed, not a table.
     changes = changes.persist()
     try:
-        # Eager materialization (ADVICE r12): populate the whole cache
-        # BEFORE the first target rewrite. Without it, a block evicted (or
-        # an executor lost) after delete_keys has replaced target files
-        # would recompute a hand-built in-place feed from the REWRITTEN
-        # table — silently wrong upserts. The count doubles as the no-op
-        # probe. Executor loss after this point can still force a
-        # recompute (persisted blocks are not replicated), which is why
-        # the docstring contract below additionally requires hand-built
-        # in-place feeds to be checkpointed by the caller.
         if changes.count() == 0:
             return  # no-op feed: burn no snapshot version, touch nothing
         if detect_layout(target_path) == "manifest":
             layout = "manifest"  # replica is a manifest table: follow its layout
-        deletes = changes.filter(F.col("_change_type") == "delete").select(*keys)
-        upserts = changes.filter(F.col("_change_type") != "delete").drop("_change_type")
-        if layout == "manifest" and detect_layout(target_path) == "manifest":
-            # single-commit path: one read, one anti-join, one pure-DataFrame
-            # merge, one snapshot publish — no intermediate delete-only version.
-            # No broadcast hint on the delete set: a CDC feed can carry an
-            # unbounded delete set (GDPR sweeps), so let AQE pick broadcast vs
-            # shuffled anti-join from the observed size.
-            path = Path(target_path)
-            current = read_table(spark, target_path)
-            survivors = current.join(deletes.dropDuplicates(keys), keys, "left_anti")
-            batch = dedup_keyed(upserts, keys, _dedupe_order(upserts, keys, None), keep="last")
-            merged = merge_as_dataframe(survivors, batch, keys, hash_col=hash_col)
-            _manifest_write(merged, path, history=history)
-            return
-        # bootstrap replay: a feed applied to a not-yet-existing replica has
-        # nothing to delete from — skip straight to the upserts instead of
-        # crashing inside delete_keys' read of the missing path
-        if not Path(target_path).exists():
-            deletes = deletes.limit(0)
-        if not deletes.isEmpty():
-            delete_keys(
-                spark, target_path, deletes, keys, partition_col=partition_col, history=history
-            )
-        if not upserts.isEmpty():
-            merge_upsert(
-                spark,
-                target_path,
-                upserts,
-                keys,
-                hash_col=hash_col,
-                layout=layout,
-                partition_col=partition_col,
-                history=history,
-            )
+        kind = F.col("_change_type")
+        merged, touched = _build_merge(
+            spark,
+            target_path,
+            changes.filter(kind != "delete").drop("_change_type"),
+            keys,
+            hash_col,
+            partition_col=partition_col,
+            layout=layout,
+            deletes=changes.filter(kind == "delete").select(*keys),
+        )
+        _write_merge(merged, target_path, touched, layout, partition_col, history)
     finally:
         changes.unpersist()

@@ -8,7 +8,7 @@ continuous aggregate does: the rollup table is hive-partitioned by the SAME
 partition column as the base table, and a refresh recomputes ONLY the
 touched partitions' aggregate rows from a partition-pruned base scan, then
 swaps exactly those partition directories into the rollup (reusing the
-merge engine's :func:`~fund_data_pipeline_spark.merge._partition_swap_write`
+merge engine's :func:`~fund_data_pipeline_spark.merge.swap_partitions_dropping_absent`
 — untouched rollup partitions stay byte-identical on disk).
 
 Correctness requires nothing from the aggregate beyond per-partition

@@ -764,15 +764,20 @@ def test_merge_default_dedupe_order_skips_unorderable_columns(spark, tmp_path):
 def test_list_versions_sorts_numerically(spark, tmp_path):
     """Version order must be numeric, not lexicographic: _v_100000 (6
     digits, written once %05d widens) sorts before _v_99999 by name, and
-    the documented 'live version is the last entry' breaks (review r11)."""
+    the documented 'live version is the last entry' breaks (review r11).
+    The janitor walks the same order, so it reports what it removed by
+    version too."""
     from fund_data_pipeline_spark.merge import MANIFEST_NAME, list_versions
 
     path = tmp_path / "t"
     path.mkdir()
-    (path / MANIFEST_NAME).write_text("{}")
-    for v in (99999, 100000, 7):
+    (path / MANIFEST_NAME).write_text("_v_100001")
+    for v in (99999, 100000, 7, 100001):
         (path / f"_v_{v:05d}").mkdir()
-    assert list_versions(str(path)) == [7, 99999, 100000]
+    assert list_versions(str(path)) == [7, 99999, 100000, 100001]
+    removed = maintenance.vacuum_snapshots(str(path), keep_last=1)
+    assert removed == ["_v_00007", "_v_99999", "_v_100000"]
+    assert list_versions(str(path)) == [100001]
 
 
 def test_partition_swap_heals_foreign_orphan_backup(spark, tmp_path):
@@ -872,12 +877,133 @@ def test_apply_changes_bootstraps_missing_replica_with_deletes(spark, tmp_path):
 
 
 def test_diff_frames_rejects_reserved_columns(spark):
+    """diff_frames runs on the merge kernel, so it refuses the kernel's
+    reserved names on either side."""
     from fund_data_pipeline_spark.merge import diff_frames
 
-    df = spark.createDataFrame([(1, True)], "k long, __n_present boolean")
-    clean = spark.createDataFrame([(1, "x")], "k long, v string")
-    with pytest.raises(ValueError, match="reserved by diff_frames"):
-        diff_frames(clean, df, ["k"])
+    clean = spark.createDataFrame([(1, "h")], "k long, row_hash string")
+    for name in ("__t_present", "__s_present", "__action"):
+        df = clean.withColumn(name, F.lit(True))
+        for old, new in ((clean, df), (df, clean)):
+            with pytest.raises(ValueError, match="reserved by the merge"):
+                diff_frames(old, new, ["k"])
+
+
+def _feed(spark, rows):
+    """A change feed over ``(ticker, dt, value)`` rows with their
+    ``_change_type``."""
+    df = spark.createDataFrame(rows, "ticker string, dt string, value double, _change_type string")
+    return df.withColumn(
+        "row_hash", F.md5(F.concat_ws("|", "ticker", "dt", F.col("value").cast("string")))
+    )
+
+
+def _count_swaps(monkeypatch):
+    from fund_data_pipeline_spark import merge
+
+    swapped = []
+    real = merge._swap_in
+
+    def counting(staged, live):
+        swapped.append(live.name)
+        real(staged, live)
+
+    monkeypatch.setattr(merge, "_swap_in", counting)
+    return swapped
+
+
+def test_apply_changes_flat_replica_is_one_swap(spark, tmp_path, monkeypatch):
+    """A feed with deletes and upserts is one merge and one write on a flat
+    replica: the table directory is swapped once, so no reader sees the
+    delete-only state."""
+    from fund_data_pipeline_spark.merge import apply_changes
+
+    replica = str(tmp_path / "replica")
+    merge_upsert(spark, replica, _snapshot(spark, [("A", "d1", 1.0), ("B", "d1", 2.0)]), keys=["ticker"])
+    feed = _feed(spark, [("A", "d1", 1.0, "delete"), ("B", "d1", 5.0, "update"), ("C", "d1", 3.0, "insert")])
+    swapped = _count_swaps(monkeypatch)
+    apply_changes(spark, replica, feed, keys=["ticker"])
+    assert swapped == ["replica"]
+    got = sorted((r.ticker, r.value) for r in read_table(spark, replica).collect())
+    assert got == [("B", 5.0), ("C", 3.0)]
+
+
+def test_apply_changes_hive_replica_swaps_each_touched_partition_once(spark, tmp_path, monkeypatch):
+    """On a hive replica the feed's deletes and upserts of one partition
+    land in one swap of that partition; untouched partitions are not
+    swapped."""
+    from fund_data_pipeline_spark.merge import apply_changes
+
+    replica = tmp_path / "replica"
+    base = [("A", "2024-01", 1.0), ("B", "2024-01", 2.0), ("C", "2024-02", 3.0)]
+    hive = {"keys": ["ticker", "dt"], "partition_col": "dt"}
+    merge_upsert(spark, str(replica), _snapshot(spark, base), **hive)
+    feed = _feed(
+        spark,
+        [
+            ("A", "2024-01", 9.0, "update"),
+            ("B", "2024-01", 2.0, "delete"),
+            ("D", "2024-03", 4.0, "insert"),
+        ],
+    )
+    swapped = _count_swaps(monkeypatch)
+    apply_changes(spark, str(replica), feed, **hive)
+    assert sorted(swapped) == ["dt=2024-01", "dt=2024-03"]
+    got = sorted((r.ticker, r.dt, r.value) for r in read_table(spark, str(replica)).collect())
+    assert got == [("A", "2024-01", 9.0), ("C", "2024-02", 3.0), ("D", "2024-03", 4.0)]
+
+
+def test_apply_changes_hive_deletes_drop_emptied_partition(spark, tmp_path):
+    """Deletes that empty a partition no upsert touches leave no directory
+    for it."""
+    from fund_data_pipeline_spark.merge import apply_changes
+
+    replica = tmp_path / "replica"
+    base = [("A", "2024-01", 1.0), ("B", "2024-02", 2.0), ("C", "2024-02", 3.0)]
+    hive = {"keys": ["ticker", "dt"], "partition_col": "dt"}
+    merge_upsert(spark, str(replica), _snapshot(spark, base), **hive)
+    feed = _feed(
+        spark,
+        [
+            ("B", "2024-02", 2.0, "delete"),
+            ("C", "2024-02", 3.0, "delete"),
+            ("A", "2024-01", 7.0, "update"),
+        ],
+    )
+    apply_changes(spark, str(replica), feed, **hive)
+    assert not (replica / "dt=2024-02").exists()
+    got = [(r.ticker, r.dt, r.value) for r in read_table(spark, str(replica)).collect()]
+    assert got == [("A", "2024-01", 7.0)]
+
+
+def test_apply_changes_deletes_null_key_row(spark, tmp_path):
+    """diff_frames matches keys null-safely, like the merge, so a feed can
+    carry the delete of a NULL-key row; applying it removes that row and the
+    replica reaches the primary's state."""
+    from fund_data_pipeline_spark.merge import apply_changes, diff_frames
+
+    v1 = _snapshot(spark, [(None, "d1", 1.0), ("A", "d1", 2.0)])
+    v2 = _snapshot(spark, [("A", "d1", 3.0)])
+    replica = str(tmp_path / "replica")
+    merge_upsert(spark, replica, v1, keys=["ticker"])
+    apply_changes(spark, replica, diff_frames(v1, v2, ["ticker"]), keys=["ticker"])
+    got = [(r.ticker, r.value) for r in read_table(spark, replica).collect()]
+    assert got == [("A", 3.0)]
+
+
+def test_apply_changes_manifest_on_flat_replica_refuses_before_writing(spark, tmp_path):
+    """layout="manifest" against an existing flat replica is refused by the
+    layout guard before any of the feed is written: the deletes must not
+    commit ahead of the refused upserts."""
+    from fund_data_pipeline_spark.merge import apply_changes
+
+    replica = str(tmp_path / "replica")
+    merge_upsert(spark, replica, _snapshot(spark, [("A", "d1", 1.0), ("B", "d1", 2.0)]), keys=["ticker"])
+    before = sorted(tuple(r) for r in read_table(spark, replica).collect())
+    feed = _feed(spark, [("A", "d1", 1.0, "delete"), ("C", "d1", 3.0, "insert")])
+    with pytest.raises(ValueError, match="existing flat-layout table"):
+        apply_changes(spark, replica, feed, keys=["ticker"], layout="manifest")
+    assert sorted(tuple(r) for r in read_table(spark, replica).collect()) == before
 
 
 def test_build_rollup_recovers_from_crashed_swap(spark, tmp_path):

@@ -1,7 +1,7 @@
 """The per-column builders that emit SQL text vs their Column-API forms.
 
-The merge kernel, ``conform``, the row hashes, the dedup windows and the
-daily cleans send their table-wide expressions to the JVM as SQL strings
+The merge kernel (and ``diff_frames`` on it), ``conform``, the row hashes,
+the dedup windows and the daily cleans send their table-wide expressions to the JVM as SQL strings
 (``selectExpr`` / one ``F.expr``). The ``ref_*`` functions below are the
 same builders written as Column chains, one Column per table column, which
 is how they were built before; they differ only in quoting every name
@@ -371,6 +371,35 @@ def ref_merge_kernel(
     return joined.select(*merged, action.alias("__action"))
 
 
+def ref_diff_frames(old, new, keys, hash_col="row_hash"):
+    # diff_frames as it was before it ran on the merge kernel: its own
+    # presence markers and Column-chain classifier
+    old_cols, new_cols = set(old.columns), new.columns
+    cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in keys]
+    o = old.withColumn("__o_present", F.lit(True)).alias("o")
+    n = new.withColumn("__n_present", F.lit(True)).alias("n")
+    joined = o.join(n, cond, "full_outer")
+    o_present = F.col("o.__o_present").isNotNull()
+    n_present = F.col("n.__n_present").isNotNull()
+    changed = ~F.col(f"o.{hash_col}").eqNullSafe(F.col(f"n.{hash_col}"))
+    change_type = (
+        F.when(~o_present, F.lit("insert"))
+        .when(~n_present, F.lit("delete"))
+        .when(changed, F.lit("update"))
+        .otherwise(F.lit(None))
+    )
+    cols = [
+        F.when(n_present, F.col(f"n.{c}")).otherwise(F.col(f"o.{c}")).alias(c)
+        if c in old_cols
+        else F.col(f"n.{c}").alias(c)
+        for c in new_cols
+    ]
+    return (
+        joined.select(*cols, change_type.alias("_change_type"))
+        .filter(F.col("_change_type").isNotNull())
+    )
+
+
 # ---------------------------------------------------------------------------
 # fixture
 # ---------------------------------------------------------------------------
@@ -576,6 +605,60 @@ def test_merge_as_dataframe_matches_column_builder(spark, null_safe_keys):
     ).drop("__action")
     assert new.columns == ref.columns == target.columns
     assert _rows(new) == _rows(ref)
+
+
+#: diff_frames cases: (old rows, old schema, new rows, new schema); the
+#: hash is over the value column(s) as text, so a NULL value hashes apart
+DIFF_CASES = {
+    "null_keys": (
+        [(None, "x", 1), (None, "y", 2), (1, None, 3), (2, "z", 4)],
+        "k1 int, k2 string, v int",
+        [(None, "x", 1), (None, "y", 9), (1, None, 3), (3, None, 5)],
+        "k1 int, k2 string, v int",
+    ),
+    "update_to_null": (
+        [(1, None, 1), (2, None, 2), (3, None, 3)],
+        "k1 int, k2 string, v int",
+        [(1, None, None), (2, None, 2), (4, None, None)],
+        "k1 int, k2 string, v int",
+    ),
+    "one_sided_columns": (
+        [(1, "a", 1, "gone"), (2, "b", 2, "gone"), (3, "c", 3, "gone")],
+        "k1 int, k2 string, v int, only_old string",
+        [(1, "a", 1, 10.5), (2, "b", 7, None), (4, "d", 4, 0.25)],
+        "k1 int, k2 string, v int, only_new double",
+    ),
+    "int_vs_bigint": (
+        [(1, "a", 1), (2, "b", 2), (3, "c", 3)],
+        "k1 int, k2 string, v int",
+        [(1, "a", 1), (2, "b", 2 ** 40), (4, "d", 4)],
+        "k1 bigint, k2 string, v bigint",
+    ),
+    "no_changes": (
+        [(1, "a", 1), (None, "b", None)],
+        "k1 int, k2 string, v int",
+        [(None, "b", None), (1, "a", 1)],
+        "k1 int, k2 string, v int",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(DIFF_CASES))
+def test_diff_frames_matches_column_builder(spark, case):
+    """diff_frames on the merge kernel gives the rows and the schema of the
+    Column-chain classifier it replaced."""
+    old_rows, old_schema, new_rows, new_schema = DIFF_CASES[case]
+
+    def frame(rows, schema):
+        df = spark.createDataFrame(rows, schema)
+        return df.withColumn("row_hash", F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in df.columns])))
+
+    old, new = frame(old_rows, old_schema), frame(new_rows, new_schema)
+    got = merge.diff_frames(old, new, ["k1", "k2"])
+    ref = ref_diff_frames(old, new, ["k1", "k2"])
+    assert got.schema == ref.schema
+    assert _rows(got) == _rows(ref)
+    assert (case == "no_changes") == got.isEmpty()
 
 
 # ---------------------------------------------------------------------------
