@@ -465,13 +465,15 @@ def _snapshot_version(name: str) -> int | None:
 
 
 def _live_snapshot(path: Path) -> Path | None:
-    """Resolve the manifest pointer, or None for plain-directory tables."""
+    """Resolve the manifest pointer, or None for plain-directory tables.
+    A pointer that names no ``_v_NNNNN`` snapshot (zero bytes after a crash
+    mid-create) raises."""
     lines = _manifest_lines(path)
     if lines is None:
         return None
     head = (lines or [""])[0].strip()
-    if not head:
-        raise ValueError(f"corrupt manifest table: empty {path / MANIFEST_NAME}")
+    if _snapshot_version(head) is None:
+        raise ValueError(f"corrupt manifest table: {path / MANIFEST_NAME} names no snapshot ({head!r})")
     return path / head
 
 
@@ -939,6 +941,8 @@ def diff_frames(
     null-safely, "update" is the hash guard's verdict, and a target row the
     batch lacks (``keep``) is a delete."""
     merged = _merge_kernel(old, new, list(keys), hash_col, allow_new_columns=True)
+    # NULL-then-filter, not a filter on __action: it keeps _change_type the
+    # nullable string column that CDC consumers have always been handed
     return merged.selectExpr(
         *[ident(c) for c in new.columns],
         "CASE __action WHEN 'keep' THEN 'delete' WHEN 'unchanged' THEN NULL "
