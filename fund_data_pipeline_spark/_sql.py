@@ -12,7 +12,7 @@ expression trees. All SQL text in the package is quoted here, in one place.
 from __future__ import annotations
 
 import functools
-from collections.abc import Callable, Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +29,17 @@ def lit(value: str) -> str:
     """``value`` as a SQL string literal (Spark's default string-literal
     parsing, where backslash escapes are processed)."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def keys_match(keys: Sequence[str], eq: str, left: str, right: str) -> str:
+    """The keyed join condition as SQL text: one left-deep conjunction of
+    ``left.k <eq> right.k``. Every keyed match in the package (the merge
+    kernel, its deletes, ``delete_keys``, ``scd2_apply``) is spelled here
+    with ``<=>``, so a NULL key part matches a NULL; only
+    ``merge_as_dataframe(null_safe_keys=False)`` passes ``=``."""
+    return functools.reduce(
+        lambda a, b: f"({a}) AND ({b})", [f"{left}.{ident(k)} {eq} {right}.{ident(k)}" for k in keys]
+    )
 
 
 def sql_type(dt: T.DataType) -> str:

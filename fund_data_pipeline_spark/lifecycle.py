@@ -12,14 +12,19 @@ Parity targets (paths relative to /root/reference/):
 All transitions are conditional column rewrites — a narrow table rewrite on
 Parquet, an UPDATE on a transactional format. No shuffles: the transforms
 are per-row (map-only), so they scale linearly.
+
+The SCD Type-2 extension, :func:`scd2_apply`, is the module's one keyed
+operation: one full-outer join of the open versions against a snapshot,
+with keys matched null-safely by the merge's own rule
+(``_sql.keys_match``), classified by one projection over that join.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ._sql import ident, keys_match, lit
 
 INACTIVE_THRESHOLD_DAYS = 7  # status_manager.py:13
 
@@ -109,8 +114,9 @@ def scd2_apply(
     version. ``snapshot`` is the entity state observed at date ``as_of``
     (one row per key — enforce upstream with dedup_keyed).
 
-    Transition rules, all decided row-wise from ONE full-outer join of the
-    current slice against the snapshot (closed history rides through
+    Transition rules, all decided row-wise from ONE null-safe full-outer
+    join of the current slice against the snapshot, matched on ``keys``
+    the way the merge matches them (closed history rides through
     untouched — at scale, partition the table on is_current or store the
     current slice separately so this join never scans closed versions):
 
@@ -120,6 +126,11 @@ def scd2_apply(
     - key only in snapshot (new entity)    -> open first version
     - key only in history (disappeared)    -> keep open, or close when
       ``close_missing=True`` (hard-delete semantics)
+
+    One ``selectExpr`` over the join emits each joined row's versions
+    through one ``inline``: the history version it keeps or closes, and
+    the version it opens, so the join runs once (three filtered selects
+    over it planned as three joins). A NULL key part matches a NULL.
 
     Re-applying the same snapshot at the same date is a no-op (idempotent),
     because unchanged attrs take the keep branch and a re-observed change on
@@ -140,51 +151,26 @@ def scd2_apply(
 
     closed = history.filter(~F.col("is_current"))
     current = history.filter(F.col("is_current"))
-
-    t = current.alias("t")
-    s = snap.withColumn("__s_present", F.lit(True)).alias("s")
-    joined = t.join(s, [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys], "full_outer")
-    t_present = F.col("t.is_current").isNotNull()
-    s_present = F.col("s.__s_present").isNotNull()
+    s = snap.withColumn("__s_present", F.lit(True))
+    joined = current.alias("t").join(s.alias("s"), F.expr(keys_match(keys, "<=>", "t", "s")), "full_outer")
+    s_present = "(s.__s_present IS NOT NULL)"
     # empty tracked_cols = presence-only SCD2 (track key existence): a
     # re-observed key is never "changed", only appearance/disappearance moves
-    changed = (
-        reduce(
-            lambda a, b: a | b,
-            [~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in tracked_cols],
-        )
-        if tracked_cols
-        else F.lit(False)
-    )
+    changed = "(" + (" OR ".join(f"(NOT (t.{ident(c)} <=> s.{ident(c)}))" for c in tracked_cols) or "false") + ")"
+    closes = f"IF({s_present}, {changed}, {'true' if close_missing else 'false'})"
 
-    def pick(c):
-        return F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")) if c in keys else F.col(f"s.{c}")
+    def version(side: str, valid_from: str, valid_to: str, is_current: str) -> str:
+        fields = [f"{lit(c)}, {side}.{ident(c)}" for c in cols]
+        fields += [f"'valid_from', {valid_from}", f"'valid_to', {valid_to}", f"'is_current', {is_current}"]
+        return f"named_struct({', '.join(fields)})"
 
-    # surviving open versions: unchanged matches, plus disappeared keys
-    # (kept open unless close_missing)
-    keep_open = joined.filter(
-        (t_present & s_present & ~changed) | (t_present & ~s_present & F.lit(not close_missing))
-    ).select(
-        *[F.col(f"t.{c}").alias(c) for c in cols],
-        F.col("t.valid_from").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
+    kept = version("t", "t.valid_from", f"IF({closes}, __as_of, CAST(NULL AS DATE))", f"(NOT {closes})")
+    opened = version("s", "__as_of", "CAST(NULL AS DATE)", "true")
+    # every joined row holds a history version, a snapshot row, or both;
+    # literal arrays of non-NULL structs keep the columns' nullability
+    versions = (
+        f"CASE WHEN (t.is_current IS NULL) THEN array({opened}) "
+        f"WHEN ({s_present} AND {changed}) THEN array({kept}, {opened}) "
+        f"ELSE array({kept}) END"
     )
-    # versions closed today: changed matches, plus disappeared keys under
-    # close_missing
-    close_now = joined.filter(
-        (t_present & s_present & changed) | (t_present & ~s_present & F.lit(close_missing))
-    ).select(
-        *[F.col(f"t.{c}").alias(c) for c in cols],
-        F.col("t.valid_from").alias("valid_from"),
-        as_of.alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-    # versions opened today: changed matches and brand-new keys
-    open_now = joined.filter(s_present & (~t_present | changed)).select(
-        *[pick(c).alias(c) for c in cols],
-        as_of.alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    return closed.unionByName(keep_open).unionByName(close_now).unionByName(open_now)
+    return closed.unionByName(joined.withColumn("__as_of", as_of).selectExpr(f"inline({versions})"))

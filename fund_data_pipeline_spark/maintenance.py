@@ -203,19 +203,24 @@ def delete_keys(
 ) -> int:
     """Keyed hard delete (GDPR erasure / blocklist purge): remove every row
     whose ``key_cols`` tuple appears in ``keys_df``; returns the number of
-    rows removed.
+    rows removed. Keys match null-safely, the way the merge matches them
+    (``merge._keyed_join``): a NULL key part erases the rows holding NULL
+    there.
 
     Copy-on-write with partition pruning — the same strategy Delta/Iceberg
-    use for COW deletes: one column-pruned scan (key + partition columns
-    only) finds which partitions contain victims, then ONLY those
-    partitions are rewritten via anti-join and swapped in
+    use for COW deletes: ONE column-pruned discovery job counts the victims
+    per partition (one total on an unpartitioned table), then ONLY the
+    partitions holding victims are rewritten via anti-join and swapped in
     (:func:`~fund_data_pipeline_spark.merge.swap_partitions_dropping_absent`); every
     other partition's files stay byte-identical. A partition left empty is
     dropped entirely. At 100 TB an erasure request touches the handful of
     partitions the subject's rows live in, not the table. The rewrite is
     pruned with the same null-safe
     :func:`~fund_data_pipeline_spark.merge.touched_partition_filter` at any
-    width: the swap already walks the touched list on the driver.
+    width: the swap already walks the touched list on the driver. The count
+    is a job before the write, not an ``Observation`` on it, so an erasure
+    that finds no victims writes nothing: no table rewrite, no manifest
+    version.
 
     ``keys_df`` is broadcast (erasure batches are small — thousands of
     subjects, not billions); for a huge key set drop the hint and let AQE
@@ -239,7 +244,7 @@ def delete_keys(
     """
     from pyspark.sql import functions as F
 
-    from .merge import _guard_and_heal, _write_table, detect_layout, read_table, touched_partition_filter
+    from .merge import _guard_and_heal, _keyed_join, _write_table, detect_layout, read_table, touched_partition_filter
 
     path = Path(table_path)
     layout = detect_layout(path)
@@ -255,23 +260,19 @@ def delete_keys(
         else ("manifest" if layout == "manifest" else "flat")
     )
     _guard_and_heal(path, intended, partition_col)
-    keys_df = F.broadcast(keys_df.select(*key_cols).dropDuplicates(key_cols))
+    keys_df = F.broadcast(keys_df.select(*key_cols))
     df = read_table(spark, table_path)
-    victims = df.join(keys_df, key_cols, "left_semi")
+    # a NULL partition value groups under None and is rewritten like any
+    # other (plain isin would silently skip it)
+    parts = [partition_col] if partition_col else []
+    victim_stats = _keyed_join(df, keys_df, key_cols, "left_semi").groupBy(*parts).count().collect()
+    n_deleted = sum(r["count"] for r in victim_stats)
     touched = None
-    if partition_col is None:
-        n_deleted = victims.count()
-    else:
-        # ONE column-pruned discovery scan yields both the victim count and
-        # the partitions holding victims (a NULL partition value groups
-        # under None and is rewritten like any other — plain isin would
-        # silently skip it)
-        victim_stats = victims.groupBy(partition_col).count().collect()
-        n_deleted = sum(r["count"] for r in victim_stats)
+    if partition_col is not None:
         touched = [r[partition_col] for r in victim_stats]
         df = df.filter(touched_partition_filter(partition_col, touched))
     if n_deleted:
-        survivors = df.join(keys_df, key_cols, "left_anti")
+        survivors = _keyed_join(df, keys_df, key_cols, "left_anti")
         _write_table(survivors, path, layout, partition_col, touched, history)
     return n_deleted
 

@@ -53,7 +53,10 @@ Keyed changes all run on the one kernel: :func:`diff_frames` (and
 :func:`table_changes` on it) is the kernel between two relations, filtered
 to the changed rows; :func:`apply_changes` is one merge build, with the
 feed's delete keys anti-joined out of the target it reads, and one write,
-so each feed is one commit on every layout.
+so each feed is one commit on every layout. Every keyed match in the
+package (the kernel's join, those deletes through :func:`_keyed_join`,
+``maintenance.delete_keys`` and ``lifecycle.scd2_apply``) is the one
+null-safe condition ``_sql.keys_match`` spells.
 
 Scale notes (100 TB):
 - The join shuffles both sides by the natural key — unavoidable for a keyed
@@ -69,13 +72,12 @@ import os
 import shutil
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
-from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ._sql import ident, sql_type
+from ._sql import ident, keys_match, sql_type
 from .dedup import dedup_keyed
 
 @dataclass
@@ -239,8 +241,7 @@ def _build_merge(
     else:
         target = read_table(spark, str(path))
     if deletes is not None:
-        match = F.expr(_keys_match(keys, "<=>", "t", "d"))
-        target = target.alias("t").join(deletes.alias("d"), match, "left_anti")
+        target = _keyed_join(target, deletes, keys, "left_anti")
     merged = _merge_kernel(
         target,
         source,
@@ -342,12 +343,12 @@ def _refuse_reserved(columns: Sequence[str]) -> None:
         raise ValueError(f"column names reserved by the merge: {clash}")
 
 
-def _keys_match(keys: Sequence[str], eq: str, left: str, right: str) -> str:
-    """The keyed join condition as SQL text: one left-deep conjunction of
-    ``left.k <eq> right.k``."""
-    return reduce(
-        lambda a, b: f"({a}) AND ({b})", [f"{left}.{ident(k)} {eq} {right}.{ident(k)}" for k in keys]
-    )
+def _keyed_join(df: DataFrame, keys_df: DataFrame, keys: Sequence[str], how: str) -> DataFrame:
+    """The rows of ``df`` whose ``keys`` tuple matches (``how="left_semi"``)
+    or matches no (``"left_anti"``) row of ``keys_df``, null-safely: a key
+    part that is NULL on both sides matches, as in the merge kernel. The
+    delete half of :func:`_build_merge` and ``maintenance.delete_keys``."""
+    return df.alias("t").join(keys_df.alias("d"), F.expr(keys_match(keys, "<=>", "t", "d")), how)
 
 
 def _merge_kernel(
@@ -386,7 +387,7 @@ def _merge_kernel(
     # insert (preserve_cols taken from source, stats wrong).
     t = target.withColumn("__t_present", F.lit(True)).alias("t")
     s = source.withColumn("__s_present", F.lit(True)).alias("s")
-    cond = _keys_match(keys, "<=>" if null_safe_keys else "=", "t", "s")
+    cond = keys_match(keys, "<=>" if null_safe_keys else "=", "t", "s")
     joined = t.join(s, F.expr(cond), "full_outer")
 
     s_present = "(s.__s_present IS NOT NULL)"

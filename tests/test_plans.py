@@ -258,6 +258,32 @@ def test_scd2_history_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
+def test_scd2_apply_classifies_in_one_join(spark):
+    """scd2_apply reads its keyed full-outer join once: the executed plan
+    holds one join operator. Filtering the join once per transition
+    branch lets the optimizer plan one join per branch."""
+    from datetime import date
+
+    from fund_data_pipeline_spark.lifecycle import scd2_apply
+
+    d1, d2 = date(2024, 1, 1), date(2024, 2, 1)
+    history = spark.createDataFrame(
+        [("a", "x", d1, None, True), ("b", "y", d1, None, True), ("c", "w", d1, d1, False)],
+        "k string, v string, valid_from date, valid_to date, is_current boolean",
+    )
+    snapshot = spark.createDataFrame([("a", "z"), ("b", "y"), ("d", "w")], "k string, v string")
+    df = scd2_apply(history, snapshot, ["k"], ["v"], d2)
+    df.collect()
+    # after execution the adaptive plan prints its final plan first, then
+    # the initial one
+    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    joins = [
+        line for line in plan.splitlines()
+        if any(j in line for j in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
+    ]
+    assert len(joins) == 1, plan
+
+
 #: queries whose plan legitimately contains BroadcastNestedLoopJoin: each
 #: crossJoins a literally-1-row broadcast relation (scalar total / probe
 #: vector), which executes as O(n) — not a pair blowup. Anything NEW that

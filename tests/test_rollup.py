@@ -7,6 +7,7 @@ from __future__ import annotations
 import shutil
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from fund_data_pipeline_spark.merge import merge_upsert
@@ -279,6 +280,46 @@ def test_delete_keys_erases_null_partition_victims(spark, tmp_path):
     # not dropped
     assert left.filter(F.col("dt").isNull()).count() == 1
     assert left.count() == 2
+
+
+@pytest.mark.parametrize("layout", ["flat", "manifest", "hive"])
+def test_delete_keys_matches_null_keys_null_safely(spark, tmp_path, layout):
+    """A NULL key part erases the rows holding NULL there, as the merge
+    matches keys (a plain equi-join never matches NULL, so the erasure
+    found nothing and left every row). On every layout, also for a
+    two-column key with one NULL part; a rerun finds no victims and writes
+    nothing, so a manifest table gains no version."""
+    from fund_data_pipeline_spark.maintenance import delete_keys
+    from fund_data_pipeline_spark.merge import list_versions, read_table
+
+    rows = [(None, "x", "d1", 1), (None, "y", "d1", 2), ("A", None, "d2", 3), ("A", "x", None, 4)]
+    df = spark.createDataFrame(rows, "k1 string, k2 string, dt string, v long")
+    path = str(tmp_path / layout)
+    partition_col = "dt" if layout == "hive" else None
+    if layout == "manifest":
+        merge_upsert(spark, path, df.withColumn("row_hash", F.lit("h")), keys=["k1", "k2"], layout="manifest")
+    elif layout == "hive":
+        df.write.partitionBy("dt").parquet(path)
+    else:
+        df.write.parquet(path)
+
+    def left():
+        return {(r.k1, r.k2, r.v) for r in read_table(spark, path).collect()}
+
+    one = spark.createDataFrame([(None,)], "k1 string")
+    assert delete_keys(spark, path, one, ["k1"], partition_col=partition_col) == 2
+    assert left() == {("A", None, 3), ("A", "x", 4)}
+
+    two = spark.createDataFrame([("A", None), (None, "x")], "k1 string, k2 string")
+    assert delete_keys(spark, path, two, ["k1", "k2"], partition_col=partition_col) == 1
+    assert left() == {("A", "x", 4)}
+
+    versions = list_versions(path) if layout == "manifest" else None
+    assert delete_keys(spark, path, two, ["k1", "k2"], partition_col=partition_col) == 0
+    assert left() == {("A", "x", 4)}
+    if layout == "manifest":
+        assert versions[-1] == 3  # each erasure above published one version
+        assert list_versions(path) == versions
 
 
 def test_delete_keys_escaped_partition_value_dir_handling(spark, tmp_path):

@@ -1,6 +1,6 @@
 """The per-column builders that emit SQL text vs their Column-API forms.
 
-The merge kernel (and ``diff_frames`` on it), ``conform``, the row hashes,
+The merge kernel (and ``diff_frames`` on it), ``scd2_apply``, ``conform``, the row hashes,
 the dedup windows and the daily cleans send their table-wide expressions to the JVM as SQL strings
 (``selectExpr`` / one ``F.expr``). The ``ref_*`` functions below are the
 same builders written as Column chains, one Column per table column, which
@@ -17,13 +17,14 @@ from __future__ import annotations
 
 import datetime as dt
 from decimal import Decimal
+from functools import reduce
 
 import pytest
-from pyspark.sql import Window
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fund_data_pipeline_spark import _sql, conform, dedup, hashing, merge, parse, validate
+from fund_data_pipeline_spark import _sql, conform, dedup, hashing, lifecycle, merge, parse, validate
 from fund_data_pipeline_spark.hashing import SAFE_SEP
 from fund_data_pipeline_spark.pipelines import (
     daily_nav,
@@ -400,6 +401,67 @@ def ref_diff_frames(old, new, keys, hash_col="row_hash"):
     )
 
 
+def ref_scd2_apply(history, snapshot, keys, tracked_cols, as_of, close_missing=False):
+    # lifecycle.scd2_apply as it was before it classified in one pass: a
+    # Column-chain full-outer join read through three filtered selects
+    as_of = as_of if isinstance(as_of, Column) else F.lit(as_of)
+    as_of = as_of.cast("date")
+    cols = keys + tracked_cols
+    snap = snapshot.select(*cols)
+
+    if history is None:
+        return snap.select(
+            *cols,
+            as_of.alias("valid_from"),
+            F.lit(None).cast("date").alias("valid_to"),
+            F.lit(True).alias("is_current"),
+        )
+
+    closed = history.filter(~F.col("is_current"))
+    current = history.filter(F.col("is_current"))
+
+    t = current.alias("t")
+    s = snap.withColumn("__s_present", F.lit(True)).alias("s")
+    joined = t.join(s, [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys], "full_outer")
+    t_present = F.col("t.is_current").isNotNull()
+    s_present = F.col("s.__s_present").isNotNull()
+    changed = (
+        reduce(
+            lambda a, b: a | b,
+            [~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in tracked_cols],
+        )
+        if tracked_cols
+        else F.lit(False)
+    )
+
+    def pick(c):
+        return F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")) if c in keys else F.col(f"s.{c}")
+
+    keep_open = joined.filter(
+        (t_present & s_present & ~changed) | (t_present & ~s_present & F.lit(not close_missing))
+    ).select(
+        *[F.col(f"t.{c}").alias(c) for c in cols],
+        F.col("t.valid_from").alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
+        F.lit(True).alias("is_current"),
+    )
+    close_now = joined.filter(
+        (t_present & s_present & changed) | (t_present & ~s_present & F.lit(close_missing))
+    ).select(
+        *[F.col(f"t.{c}").alias(c) for c in cols],
+        F.col("t.valid_from").alias("valid_from"),
+        as_of.alias("valid_to"),
+        F.lit(False).alias("is_current"),
+    )
+    open_now = joined.filter(s_present & (~t_present | changed)).select(
+        *[pick(c).alias(c) for c in cols],
+        as_of.alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
+        F.lit(True).alias("is_current"),
+    )
+    return closed.unionByName(keep_open).unionByName(close_now).unionByName(open_now)
+
+
 # ---------------------------------------------------------------------------
 # fixture
 # ---------------------------------------------------------------------------
@@ -659,6 +721,62 @@ def test_diff_frames_matches_column_builder(spark, case):
     assert got.schema == ref.schema
     assert _rows(got) == _rows(ref)
     assert (case == "no_changes") == got.isEmpty()
+
+
+#: scd2_apply cases: (keys, tracked_cols, history rows or None, snapshot
+#: rows); a history row is keys + tracked + (valid_from, valid_to,
+#: is_current), and every case runs at as_of = V3
+V1, V2, V3 = dt.date(2024, 1, 1), dt.date(2024, 2, 1), dt.date(2024, 3, 1)
+SCD2_CASES = {
+    "no_history": (["k"], ["v"], None, [("a", "x"), (None, "y")]),
+    "null_key": (
+        ["k"], ["v"],
+        [(None, "x", V1, None, True), ("a", "x", V1, None, True), ("b", "x", V1, None, True)],
+        [(None, "z"), ("a", "x"), ("c", "w")],
+    ),
+    "null_tracked": (
+        ["k"], ["v"],
+        [("a", None, V1, None, True), ("b", None, V1, None, True), ("c", "x", V1, None, True)],
+        [("a", None), ("b", "y"), ("c", None)],
+    ),
+    "presence_only": (
+        ["k"], [],
+        [("a", V1, None, True), (None, V1, None, True), ("b", V1, V2, False)],
+        [("a",), ("c",)],
+    ),
+    "empty_snapshot": (
+        ["k"], ["v"], [("a", "x", V1, None, True), (None, "y", V1, None, True)], [],
+    ),
+    "two_column_key": (
+        ["k1", "k2"], ["v"],
+        [(None, "x", "1", V1, None, True), ("a", None, "2", V1, None, True), ("a", "b", "3", V1, None, True)],
+        [(None, "x", "9"), ("a", None, "2"), (None, None, "4")],
+    ),
+    "closed_history": (
+        ["k"], ["v"],
+        [("a", "w", V1, V2, False), ("a", "x", V2, None, True), ("b", "y", V1, V2, False), ("c", "y", V2, None, True)],
+        [("a", "z"), ("b", "y"), ("c", "y")],
+    ),
+}
+
+
+@pytest.mark.parametrize("close_missing", [False, True])
+@pytest.mark.parametrize("case", list(SCD2_CASES))
+def test_scd2_apply_matches_column_builder(spark, case, close_missing):
+    """scd2_apply's one-pass classifier gives the rows and the schema of
+    the three-select Column-chain form it replaced."""
+    keys, tracked, history_rows, snap_rows = SCD2_CASES[case]
+    cols = ", ".join(f"{c} string" for c in keys + tracked)
+    snap = spark.createDataFrame(snap_rows, cols)
+    history = None
+    if history_rows is not None:
+        history = spark.createDataFrame(
+            history_rows, f"{cols}, valid_from date, valid_to date, is_current boolean"
+        )
+    got = lifecycle.scd2_apply(history, snap, keys, tracked, V3, close_missing)
+    ref = ref_scd2_apply(history, snap, keys, tracked, V3, close_missing)
+    assert got.schema == ref.schema
+    assert _rows(got) == _rows(ref)
 
 
 # ---------------------------------------------------------------------------
