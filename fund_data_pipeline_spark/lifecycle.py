@@ -129,8 +129,9 @@ def scd2_apply(
 
     One ``selectExpr`` over the join emits each joined row's versions
     through one ``inline``: the history version it keeps or closes, and
-    the version it opens, so the join runs once (three filtered selects
-    over it planned as three joins). A NULL key part matches a NULL.
+    the version it opens. The join therefore runs once; one filtered
+    select per branch would let the optimizer plan one join per branch. A
+    NULL key part matches a NULL.
 
     Re-applying the same snapshot at the same date is a no-op (idempotent),
     because unchanged attrs take the keep branch and a re-observed change on
@@ -156,7 +157,8 @@ def scd2_apply(
     s_present = "(s.__s_present IS NOT NULL)"
     # empty tracked_cols = presence-only SCD2 (track key existence): a
     # re-observed key is never "changed", only appearance/disappearance moves
-    changed = "(" + (" OR ".join(f"(NOT (t.{ident(c)} <=> s.{ident(c)}))" for c in tracked_cols) or "false") + ")"
+    changed = " OR ".join(f"(NOT (t.{ident(c)} <=> s.{ident(c)}))" for c in tracked_cols)
+    changed = f"({changed or 'false'})"
     closes = f"IF({s_present}, {changed}, {'true' if close_missing else 'false'})"
 
     def version(side: str, valid_from: str, valid_to: str, is_current: str) -> str:
@@ -173,4 +175,5 @@ def scd2_apply(
         f"WHEN ({s_present} AND {changed}) THEN array({kept}, {opened}) "
         f"ELSE array({kept}) END"
     )
+    # as_of may be any date Column, so the text reads it as a column
     return closed.unionByName(joined.withColumn("__as_of", as_of).selectExpr(f"inline({versions})"))
