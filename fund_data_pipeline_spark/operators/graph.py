@@ -12,7 +12,7 @@ runs until no label changes, i.e. graph-diameter iterations. Near-dup
 graphs are unions of small dense blobs (diameter 2-4), so 3-5 iterations
 is typical regardless of row count. For graphs that DON'T converge fast —
 long chains, threaded near-dup runs — propagation hands off after
-``star_fallback_after`` rounds to alternating large-star/small-star
+``_CC_PROPAGATION_ROUNDS`` rounds to alternating large-star/small-star
 contraction on the edge set (Kiveris et al., "Connected Components in
 MapReduce and Beyond", SoCC'14): O(log^2 n) rounds worst case, ~log n in
 practice, each round two grouped joins over the current edge relation.
@@ -61,12 +61,21 @@ def _canon(e: DataFrame) -> DataFrame:
 #: driver in one numpy pass instead of shuffle-per-round iteration. 2M
 #: bigint pairs cross as ~32 MB of Arrow — the same size class as a
 #: broadcast-join build side (guide §3.1), with the same failure mode
-#: (driver memory), which is why the bound exists (per call:
-#: ``driver_collect_max_edges``; 0 disables the driver path).
+#: (driver memory), which is why the bound exists.
 CC_COLLECT_MAX_EDGES = 2_000_000
 
+#: Propagation rounds before the switch to star contraction. Near-dup blobs
+#: (diameter 2-4) converge inside it; a graph still changing after it is
+#: long-diameter, where contraction's ~log n rounds beat propagation's
+#: ~diameter rounds.
+_CC_PROPAGATION_ROUNDS = 5
 
-def _host_min_labels(pdf, src_name: str = "src", dst_name: str = "dst"):
+#: Round cap over both distributed phases together. Reaching it raises:
+#: unconverged labels would silently split components.
+_CC_MAX_ROUNDS = 50
+
+
+def _host_min_labels(pdf):
     """Min-reachable-id labels for a COLLECTED edge list: vectorized
     union-find (min-label propagation with full path compression per pass,
     numpy ``minimum.at`` over the edge arrays — O(E) per pass, ~log
@@ -81,8 +90,8 @@ def _host_min_labels(pdf, src_name: str = "src", dst_name: str = "dst"):
     import numpy as np
     import pandas as pd
 
-    a = pdf[src_name].to_numpy()
-    b = pdf[dst_name].to_numpy()
+    a = pdf["src"].to_numpy()
+    b = pdf["dst"].to_numpy()
     arr = np.concatenate([a, b])
     uniq, inv = np.unique(arr, return_inverse=True)
     ia, ib = inv[: len(a)], inv[len(a):]
@@ -109,7 +118,7 @@ def _labels_from_host_pairs(
     singletons (no mapping row) label themselves, exactly as the
     propagation seed does. ``union_endpoints`` adds the mapping keys to the
     seed (callers whose seed already contains every edge endpoint skip the
-    extra union+distinct pass)."""
+    extra union+distinct pass). Returns (node, cluster_id)."""
     from pyspark.sql import types as T
 
     host = _host_min_labels(pdf)
@@ -123,7 +132,7 @@ def _labels_from_host_pairs(
     if union_endpoints:
         seed = seed.select("node").union(mapping.select("node")).distinct()
     return seed.join(F.broadcast(mapping), "node", "left").select(
-        "node", F.coalesce("__cc_label", F.col("node")).alias("label")
+        "node", F.coalesce("__cc_label", F.col("node")).alias("cluster_id")
     )
 
 
@@ -152,83 +161,59 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _canon(rewired.union(centers))
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iterations: int = 50,
-    strict: bool = True,
-    star_fallback_after: int = 5,
-    driver_collect_max_edges: int = CC_COLLECT_MAX_EDGES,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Return (node, cluster_id): min reachable node id per component.
 
-    ``nodes``: one row per node id (singletons allowed — they become their
-    own cluster). ``edges``: undirected pairs; symmetrized internally.
-    Edge endpoints missing from ``nodes`` are added to the label seed
-    (review r10: an endpoint without a label row silently broke every
-    path through it — propagation "converged" with the component split,
-    while the star fallback would have merged it, so the answer depended
-    on which phase happened to finish).
+    ``nodes``: one row per ``node`` id (singletons allowed — they become
+    their own cluster). ``edges``: undirected ``src``/``dst`` pairs;
+    symmetrized internally. Edge endpoints missing from ``nodes`` are added
+    to the label seed (review r10: an endpoint without a label row silently
+    broke every path through it — propagation "converged" with the
+    component split, while the star fallback would have merged it, so the
+    answer depended on which phase happened to finish).
 
-    Plain min-label propagation needs ~graph-diameter rounds — right for
-    near-dup blobs (diameter 2-4), pathological for chain-shaped graphs. If
-    it has not converged after ``star_fallback_after`` rounds, the operator
-    switches to alternating large-star/small-star contraction on the edge
-    set (Kiveris et al., SoCC'14): provably convergent to per-component
-    stars centered at the component minimum in O(log^2 n) rounds (~log n
-    observed), independent of diameter. Both phases produce the identical
-    fixpoint — every node labeled with the min reachable id.
+    The route is chosen from the graph alone:
 
-    If both phases together exhaust ``max_iterations`` rounds the labels
-    are NOT converged — components would be silently split. With
-    ``strict=True`` (default) that raises; ``strict=False`` downgrades to a
-    warning for callers that accept approximate clusters.
+    - Driver union-find (r17, guide §1.2 "the distributed algorithm" +
+      §3.1 broadcast sizing): the edge relation is the id-only PROXY of
+      the corpus — after LSH blocking it is orders of magnitude lighter
+      than the rows it deduplicates — so whenever the canonical edge set
+      fits :data:`CC_COLLECT_MAX_EDGES`, the component structure is
+      resolved in ONE vectorized union-find on the driver and re-attached
+      with ONE broadcast join, the cost model of a broadcast hash join
+      build side.
+    - Above the bound, min-label propagation runs first. It needs
+      ~graph-diameter rounds — right for near-dup blobs (diameter 2-4),
+      pathological for chain-shaped graphs.
+    - If propagation has not converged within its round budget, the
+      operator switches to alternating large-star/small-star contraction on
+      the edge set (Kiveris et al., SoCC'14): provably convergent to
+      per-component stars centered at the component minimum in O(log^2 n)
+      rounds (~log n observed), independent of diameter. Every contraction
+      round re-probes the driver bound: star rounds only shrink the edge
+      set toward per-component stars, so a graph that starts with billions
+      of candidate edges still finishes on the driver once contraction
+      brings the survivor set under the bound — only a graph whose
+      FIXPOINT star set exceeds the bound ever runs the full distributed
+      loop.
 
-    Bounded driver-side fast path (r17, guide §1.2 "the distributed
-    algorithm" + §3.1 broadcast sizing): the edge relation is the
-    id-only PROXY of the corpus — after LSH blocking it is orders of
-    magnitude lighter than the rows it deduplicates — and whenever the
-    canonical edge set fits ``driver_collect_max_edges`` (default
-    :data:`CC_COLLECT_MAX_EDGES`, 0 disables), the component structure is
-    resolved in ONE vectorized union-find on the driver and re-attached
-    with ONE broadcast join — replacing shuffle-per-round iteration
-    (propagation paid 3 shuffle boundaries + a checkpoint + a count PER
-    ROUND) with a single bounded collect, the exact cost model of a
-    broadcast hash join build side.
-    Above the bound, propagation and star contraction run as before, and
-    every star round's (checkpointed) edge count is probed so the driver
-    path also terminates the CONTRACTION loop early: star rounds only
-    shrink the edge set toward per-component stars, so a graph that starts
-    with billions of candidate edges still finishes on the driver once
-    contraction brings the survivor set under the bound — only a graph
-    whose FIXPOINT star set exceeds the bound (billions of nodes inside
-    non-singleton components) ever runs the full distributed loop. All
-    three routes produce the identical fixpoint (min reachable id), pinned
-    by the phase-equivalence tests.
+    All routes produce the identical fixpoint (min reachable id), pinned by
+    the route-equivalence tests. A run that reaches the round cap without
+    a fixpoint raises: its components would be silently split.
     """
-    import warnings
-
-    pairs = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    bound = CC_COLLECT_MAX_EDGES
+    spark = edges.sparkSession
     # NULL endpoints and self-loops are dropped once, here
-    canon = _canon(pairs)
+    canon = _canon(edges)
     # greatest/least coerce src and dst to the wider of their types (the
     # symmetric relation below inherits them), so the driver mapping holds
     # every id
     edge_type = canon.schema["src"].dataType
-    if driver_collect_max_edges > 0:
-        probe = canon.limit(driver_collect_max_edges + 1).toPandas()
-        if len(probe) <= driver_collect_max_edges:
-            labels = _labels_from_host_pairs(
-                edges.sparkSession,
-                nodes.select(F.col(node_col).alias("node")),
-                probe,
-                edge_type,
-                union_endpoints=True,
-            )
-            return labels.withColumnRenamed("label", "cluster_id")
+    probe = canon.limit(bound + 1).toPandas()
+    if len(probe) <= bound:
+        return _labels_from_host_pairs(
+            spark, nodes.select("node"), probe, edge_type, union_endpoints=True
+        )
 
     # pinned only once the probe overflows, so the driver route caches
     # nothing; the symmetric relation and the star seed both read the pin.
@@ -244,17 +229,14 @@ def connected_components(
     # vanished when the fallback ran — the exact phase-dependence the r10
     # endpoint-seeding fix closed for propagation (review r11)
     seed_nodes = (
-        nodes.select(F.col(node_col).alias("node"))
-        .union(endpoints)
-        .distinct()
-        .localCheckpoint(eager=False)
+        nodes.select("node").union(endpoints).distinct().localCheckpoint(eager=False)
     )
     labels = seed_nodes.select("node", F.col("node").alias("label"))
 
-    converged = False
-    rounds_used = 0
-    for _ in range(min(star_fallback_after, max_iterations)):
-        rounds_used += 1
+    max_rounds = _CC_MAX_ROUNDS
+    rounds = 0
+    while rounds < min(_CC_PROPAGATION_ROUNDS, max_rounds):
+        rounds += 1
         neighbor_min = (
             sym.join(labels, sym.dst == labels.node)
             .groupBy("src")
@@ -273,58 +255,42 @@ def connected_components(
         n_changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.drop("__changed")
         if n_changed == 0:
-            converged = True
-            break
+            return labels.withColumnRenamed("label", "cluster_id")
 
-    if not converged:
-        # Star-contraction fallback: operates on the edge set alone, so the
-        # partial propagation labels are discarded (they cost a few cheap
-        # rounds, nothing more). Each round is checkpointed — bounded plans
-        # regardless of round count.
-        e = canon
-        while rounds_used < max_iterations:
-            rounds_used += 1
-            new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-            # contraction only shrinks the edge set toward per-component
-            # stars (connectivity and the node set are round-invariant),
-            # so the moment it fits the driver bound the remainder is one
-            # union-find + broadcast join instead of more shuffle rounds
-            # and the expensive exceptAll fixpoint probe
-            if 0 < driver_collect_max_edges and (
-                new_e.count() <= driver_collect_max_edges
-            ):
-                labels = _labels_from_host_pairs(
-                    edges.sparkSession,
-                    seed_nodes,
-                    new_e.toPandas(),
-                    edge_type,
-                    union_endpoints=False,  # seed_nodes already holds every endpoint
-                )
-                return labels.withColumnRenamed("label", "cluster_id")
-            if new_e.exceptAll(e).union(e.exceptAll(new_e)).isEmpty():
-                converged = True
-                break
-            e = new_e
-        if converged:
+    # Star contraction: operates on the edge set alone, so the partial
+    # propagation labels are discarded (they cost a few cheap rounds,
+    # nothing more). Each round is checkpointed — bounded plans regardless
+    # of round count.
+    e = canon
+    while rounds < max_rounds:
+        rounds += 1
+        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        # contraction only shrinks the edge set toward per-component stars
+        # (connectivity and the node set are round-invariant), so the
+        # moment it fits the driver bound the remainder is one union-find +
+        # broadcast join instead of more shuffle rounds and the expensive
+        # exceptAll fixpoint probe
+        if new_e.count() <= bound:
+            return _labels_from_host_pairs(
+                spark,
+                seed_nodes,
+                new_e.toPandas(),
+                edge_type,
+                union_endpoints=False,  # seed_nodes already holds every endpoint
+            )
+        if new_e.exceptAll(e).union(e.exceptAll(new_e)).isEmpty():
             # fixpoint edges are stars (v, component_min); nodes without
             # edges are their own cluster
             roots = e.groupBy("src").agg(F.min("dst").alias("root"))
-            labels = (
-                seed_nodes.join(roots, F.col("node") == F.col("src"), "left")
-                .select("node", F.coalesce("root", F.col("node")).alias("label"))
+            return seed_nodes.join(roots, F.col("node") == F.col("src"), "left").select(
+                "node", F.coalesce("root", F.col("node")).alias("cluster_id")
             )
+        e = new_e
 
-    if not converged:
-        msg = (
-            f"connected_components did not reach a fixpoint within "
-            f"{max_iterations} rounds (propagation + star contraction) — "
-            f"cluster ids would be split. Raise max_iterations."
-        )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, stacklevel=2)
-
-    return labels.withColumnRenamed("label", "cluster_id")
+    raise RuntimeError(
+        f"connected_components did not reach a fixpoint within {max_rounds} "
+        f"rounds (propagation + star contraction) — cluster ids would be split"
+    )
 
 
 def flatten_hierarchy(
@@ -334,7 +300,6 @@ def flatten_hierarchy(
     nodes: DataFrame | None = None,
     node_col: str = "node",
     max_depth: int = 64,
-    strict: bool = True,
     validate: bool = True,
 ) -> DataFrame:
     """Resolve every node of a parent-pointer forest to its root and depth
@@ -359,15 +324,15 @@ def flatten_hierarchy(
     composition), each round is one keyed equi-join + localCheckpoint
     (lineage stays O(1)), and the driver sees only the unresolved COUNT.
 
-    A cycle (corrupt edge data) never resolves: after the round budget,
-    unresolved rows raise with ``strict=True`` (default) or are dropped
-    with a warning otherwise — a silent infinite loop is not an option.
+    A cycle (corrupt edge data) never resolves, and neither does a chain
+    deeper than ``max_depth``: after the round budget any unresolved row
+    raises — neither a silent infinite loop nor a silently shortened
+    result is an option.
     ``validate=True`` (default) also refuses a child with two parent rows
     up front (one extra aggregation over the edge set; disable when the
     feed is already constrained).
     """
     import math
-    import warnings
 
     e = edges.select(
         F.col(child_col).alias("node"), F.col(parent_col).alias("anc")
@@ -445,18 +410,13 @@ def flatten_hierarchy(
         )
         resolved_parts.append(stepped.filter(F.col("done")))
         pending = stepped.filter(~F.col("done"))
-    unresolved = pending
-    ptr = pending
-    for part in resolved_parts:
-        ptr = ptr.union(part)
-    if not unresolved.isEmpty():
-        msg = (
+    if not pending.isEmpty():
+        raise RuntimeError(
             f"flatten_hierarchy: nodes unresolved after {rounds} doubling rounds "
             f"(chase bound 2^{rounds}) — a cycle in the edge data or depth > "
             f"max_depth={max_depth}"
         )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, stacklevel=2)
-        ptr = ptr.filter(F.col("done"))
+    ptr = resolved_parts[0]
+    for part in resolved_parts[1:]:
+        ptr = ptr.union(part)
     return ptr.select("node", F.col("anc").alias("root"), F.col("depth").cast("int").alias("depth"))

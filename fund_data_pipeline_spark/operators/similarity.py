@@ -434,9 +434,10 @@ def simhash_pairs(
 ) -> DataFrame:
     """SimHash candidate pairs with a CORPUS-SIZED signature width.
 
-    The catalog query ``simhash_near_dup`` pins the signature at 60 bits /
-    four 15-bit bands — the widest form both engines can hold in one signed
-    64-bit column, i.e. the SQL-expressible correctness pin. A 15-bit band
+    The catalog query ``simhash_near_dup`` is this operator at
+    ``n_words=1``: 60 bits / four 15-bit bands — the widest form both
+    engines can hold in one signed 64-bit column, i.e. the SQL-expressible
+    correctness pin. A 15-bit band
     has 32,768 values, so RANDOM band collisions between unrelated
     documents grow as n^2/2^15 — measured superlinear (top-decade p=1.74)
     on the r13 wide fixture at 500 k docs, where the candidate relation is
@@ -445,7 +446,7 @@ def simhash_pairs(
     bit-identical to the catalog signature; word ``w`` draws the 15 hex
     chars starting at 1+16w of the same token digest — 1-indexed as in SQL
     ``substring``, i.e. the 0-indexed Python slice ``[16w, 16w+15)`` that
-    scripts/verify_sf1_simhash.py's replay uses), banded into ``n_bands``
+    the hashlib replay test uses), banded into ``n_bands``
     equal slices, so at the default 120 bits / 30-bit bands random
     collisions fall to n^2/2^30 — negligible through ~10^8 docs, and one
     more word per ~2^15x corpus growth after that.

@@ -869,10 +869,9 @@ def changelog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("price"),
     )
     feed = e1.unionByName(e2).unionByName(e3)
-    w = Window.partitionBy("key").orderBy(F.col("epoch").desc())
     return (
-        feed.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "D"))
+        dedup_keyed(feed, ["key"], ["epoch"], keep="last")
+        .filter(F.col("op") != "D")
         .select("key", F.col("epoch").alias("last_epoch"), F.col("price").alias("final_price"))
     )
 

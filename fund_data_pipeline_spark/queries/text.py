@@ -13,8 +13,6 @@ of exact integers (bit-identical).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -518,9 +516,11 @@ _HAMMING_MAX = 3
 @register(
     "simhash_near_dup",
     doc="SimHash near-dup: 60-bit signature (per-bit +/-1 vote over "
-    "md5(token) bits, distinct tokens), banded 4x8 for candidate blocking, "
-    "exact Hamming filter. One explode->aggregate builds all 60 bit "
-    "sums in a single shuffle; the band self-join is equi-keyed.",
+    "md5(token) bits, distinct tokens), banded 4x15 bits for candidate "
+    "blocking, exact Hamming filter — operators/similarity.py::"
+    "simhash_pairs at one signature word. One explode->aggregate builds "
+    "all 60 bit sums in a single shuffle; the band self-join is "
+    "equi-keyed and skew-bounded.",
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok FROM documents
@@ -549,61 +549,19 @@ FROM pairs WHERE bit_count(xor(sim_a, sim_b)) <= {_HAMMING_MAX}
 """,
 )
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(F.array_distinct(_tokens())).alias("tok"))
-    hv = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    # all 60 per-bit vote sums in ONE aggregation (no 60-way explode)
-    bit_sums = toks.select("doc_id", hv.alias("hv")).groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("hv"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"s{i}")
-            for i in range(_SIMHASH_BITS)
-        ]
-    )
-    simhash = reduce(
-        lambda acc, i: acc
-        + F.when(F.col(f"s{i}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long")),
-        range(1, _SIMHASH_BITS),
-        F.when(F.col("s0") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-    )
-    sig = bit_sums.select("doc_id", simhash.alias("simhash"))
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), 15 * b).bitwiseAND(F.lit(32767)).alias("band_val"),
-                    )
-                    for b in range(_SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.band_val").alias("band_val"))
-    # skew-bounded grid self-join (identical pair set to the naive form the
-    # oracle uses): a hot band_val (mass boilerplate sharing a 15-bit band)
-    # would otherwise put m^2/2 comparisons in ONE task, and the plain
-    # self-equi-join re-ran the 60-column vote aggregation once per side;
-    # blocked_self_join localCheckpoints the banding relation so both sides
-    # read the same materialized rows (review r9 — same fix as minhash).
-    from ..operators.similarity import blocked_self_join
+    # one 60-bit word is exactly this signature, banding and Hamming filter;
+    # the band self-join is skew-bounded (identical pair set to the naive
+    # form the oracle uses)
+    from ..operators.similarity import simhash_pairs
 
-    joined = blocked_self_join(bands, ["band", "band_val"], "doc_id", payload_cols=["simhash"])
-    pairs = (
-        joined.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
+    pairs = simhash_pairs(
+        table(spark, sf_dir, "documents"),
+        n_words=1,
+        n_bands=_SIMHASH_BANDS,
+        hamming_max=_HAMMING_MAX,
     )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return pairs.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= _HAMMING_MAX
+    return pairs.select(
+        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"), "hamming"
     )
 
 
@@ -1654,7 +1612,7 @@ def record_linkage_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).selectExpr(
         "dirty_key", "dirty_name", f"{d_b1} AS block1", f"{d_b2} AS block2"
     )
-    from pyspark.sql import Window
+    from ..dedup import dedup_keyed
 
     cols = ["dirty_key", "dirty_name", "master_key", "master_name"]
     cand = (
@@ -1662,17 +1620,12 @@ def record_linkage_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(b.join(a, "block2").select(*cols))
         .distinct()
     )
-    w = Window.partitionBy("dirty_key").orderBy("dist", "master_key")
-    return (
-        cand.select(
-            "dirty_key",
-            "master_key",
-            F.levenshtein("dirty_name", "master_name").alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("dirty_key", "master_key", "dist")
+    scored = cand.select(
+        "dirty_key",
+        "master_key",
+        F.levenshtein("dirty_name", "master_name").alias("dist"),
     )
+    return dedup_keyed(scored, ["dirty_key"], ["dist", "master_key"])
 
 
 @register(

@@ -155,24 +155,19 @@ def test_compact_partition_refuses_partitioned_root(spark, tmp_path):
         maintenance.compact_partition(spark, str(root))
 
 
-def test_connected_components_unconverged_raises(spark):
-    from fund_data_pipeline_spark.operators.graph import connected_components
+def test_connected_components_unconverged_raises(spark, monkeypatch):
+    from fund_data_pipeline_spark.operators import graph
 
     nodes = spark.range(0, 6).withColumnRenamed("id", "node")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "src long, dst long"
     )
-    # driver_collect_max_edges=0 keeps the distributed path: the driver
-    # union-find would solve the chain outright and never hit the cap
+    # a bound of 0 keeps the distributed path: the driver union-find would
+    # solve the chain outright and never hit the cap
+    monkeypatch.setattr(graph, "CC_COLLECT_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "_CC_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(
-            nodes, chain, max_iterations=1, driver_collect_max_edges=0
-        ).collect()
-    with pytest.warns(UserWarning, match="fixpoint"):
-        labels = connected_components(
-            nodes, chain, max_iterations=1, strict=False, driver_collect_max_edges=0
-        )
-        labels.collect()
+        graph.connected_components(nodes, chain).collect()
 
 
 def test_vacuum_snapshots_removes_orphans_only(spark, tmp_path):

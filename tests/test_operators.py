@@ -90,36 +90,61 @@ def test_connected_components_transitive(spark):
     assert cc == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6}
 
 
-def test_connected_components_endpoint_only_nodes_phase_independent(spark):
+def _cc(nodes, edges, monkeypatch, bound=None, cap=None):
+    """Sorted (node, cluster_id) rows of one ``connected_components`` call,
+    with the driver bound and/or the round cap substituted for the call.
+    The route follows from the graph's shape under those two values:
+    ``cap=0`` succeeds only on the driver route (no distributed round
+    runs), ``bound=0`` sends every non-empty graph down the distributed
+    path, and ``cap=_CC_PROPAGATION_ROUNDS`` succeeds there only when
+    propagation converges within its budget."""
+    from fund_data_pipeline_spark.operators import graph
+
+    with monkeypatch.context() as m:
+        if bound is not None:
+            m.setattr(graph, "CC_COLLECT_MAX_EDGES", bound)
+        if cap is not None:
+            m.setattr(graph, "_CC_MAX_ROUNDS", cap)
+        return sorted(tuple(r) for r in graph.connected_components(nodes, edges).collect())
+
+
+def _broom(ids):
+    """A 10-clique over ``ids[:10]`` plus a 7-edge tail ``ids[9..16]``: 52
+    canonical edges. With the smallest id in ``ids[:9]`` it sits 8 hops
+    from the tail's end, so propagation needs 9 rounds and cannot converge
+    within its 5-round budget; one contraction round shrinks the clique to
+    its 9-edge star."""
+    clique = [(ids[i], ids[j]) for i in range(10) for j in range(i + 1, 10)]
+    return clique + [(ids[i], ids[i + 1]) for i in range(9, 16)]
+
+
+def test_connected_components_endpoint_only_nodes_phase_independent(spark, monkeypatch):
     """An edge endpoint absent from ``nodes`` must appear in the result
     with the same label whichever phase finishes: the star fallback
     previously rebuilt labels from ``nodes`` alone, so the row existed
     under converged propagation but vanished when the fallback ran
     (review r11 — the same phase-dependence class as the r10
-    endpoint-seed fix)."""
+    endpoint-seed fix). Each phase is reached through the graph's shape
+    with the driver bound at 0: a diameter-3 path converges under
+    propagation, a diameter-9 path outlasts the propagation budget and
+    runs star contraction to its fixpoint."""
     from fund_data_pipeline_spark.operators import graph
 
-    # chain 0-1-...-9 where only even ids are declared nodes; odd ids
-    # exist solely as edge endpoints. Diameter 9 with fallback after 2
-    # rounds forces the star-contraction path.
-    nodes = spark.createDataFrame([(i,) for i in range(0, 10, 2)], "node long")
-    edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "src long, dst long")
-    via_fallback = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(
-            nodes, edges, star_fallback_after=2, driver_collect_max_edges=0
-        ).collect()
-    }
-    via_propagation = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(
-            nodes, edges, star_fallback_after=30, driver_collect_max_edges=0
-        ).collect()
-    }
-    via_driver = {
-        r.node: r.cluster_id for r in graph.connected_components(nodes, edges).collect()
-    }
-    assert via_fallback == via_propagation == via_driver == {i: 0 for i in range(10)}
+    budget = graph._CC_PROPAGATION_ROUNDS
+    # only even ids are declared nodes; odd ids exist solely as endpoints
+    for n, converges in ((4, True), (10, False)):
+        nodes = spark.createDataFrame([(i,) for i in range(0, n, 2)], "node long")
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+        )
+        via_driver = _cc(nodes, edges, monkeypatch, cap=0)
+        assert via_driver == [(i, 0) for i in range(n)]
+        if converges:
+            assert _cc(nodes, edges, monkeypatch, bound=0, cap=budget) == via_driver
+        else:
+            with pytest.raises(RuntimeError, match="fixpoint"):
+                _cc(nodes, edges, monkeypatch, bound=0, cap=budget)
+            assert _cc(nodes, edges, monkeypatch, bound=0) == via_driver
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -467,15 +492,13 @@ def test_trained_ivf_codebook_beats_first_n_on_skewed_corpus(spark, tmp_path):
     assert len(trained & planted) >= len(first_n & planted)
 
 
-def test_connected_components_1000_node_path_star_contraction(spark):
+def test_connected_components_1000_node_path_star_contraction(spark, monkeypatch):
     """A 1000-node path has diameter 999: plain propagation would need ~999
     rounds and previously raised at the 50-round cap. Star contraction must
     reach the fixpoint in ~log n contraction rounds — well under 25 — and still
     produce the exact component min for every node, under a permuted id
     assignment (labels must flow against the id order too)."""
     import random
-
-    from fund_data_pipeline_spark.operators import graph
 
     rng = random.Random(13)
     ids = list(range(1000))
@@ -484,21 +507,44 @@ def test_connected_components_1000_node_path_star_contraction(spark):
     edges = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(999)], "src long, dst long"
     )
-    cc = graph.connected_components(
-        nodes, edges, max_iterations=25, driver_collect_max_edges=0
-    ).collect()
-    assert len(cc) == 1000
-    assert all(r.cluster_id == 0 for r in cc)
+    assert _cc(nodes, edges, monkeypatch, bound=0, cap=25) == [(i, 0) for i in range(1000)]
 
 
-def test_connected_components_driver_path_matches_distributed(spark):
+def test_connected_components_blob_graph_propagation_matches_driver(spark, monkeypatch):
+    """Near-dup blobs (cliques of 2-8 members, ids scattered) converge
+    under propagation within its budget — the run succeeds with the round
+    cap at the budget, which leaves contraction no round — and give the
+    driver route's labels, singletons included."""
+    import random
+
+    from fund_data_pipeline_spark.operators import graph
+
+    rng = random.Random(7)
+    ids = list(range(300))
+    rng.shuffle(ids)
+    pairs, i = [], 0
+    while i < 280:
+        size = rng.randint(2, 8)
+        blob = ids[i : i + size]
+        pairs += [(blob[a], blob[b]) for a in range(len(blob)) for b in range(a + 1, len(blob))]
+        i += size
+    nodes = spark.createDataFrame([(n,) for n in ids], "node long")
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    via_driver = _cc(nodes, edges, monkeypatch, cap=0)
+    assert len(via_driver) == 300 and {c for _, c in via_driver} != set(ids)
+    budget = graph._CC_PROPAGATION_ROUNDS
+    assert _cc(nodes, edges, monkeypatch, bound=0, cap=budget) == via_driver
+
+
+def test_connected_components_driver_path_matches_distributed(spark, monkeypatch):
     """The r17 bounded driver-side union-find must produce the identical
-    (node, cluster_id) fixpoint as both distributed phases — on a permuted
-    path (labels flow against id order), with endpoint-only nodes, string
-    ids (np.unique code-point order == Spark UTF8_BINARY min), an int src
-    with a bigint dst, and singletons — and the star loop's opportunistic
-    collect (bound hit only AFTER contraction shrinks the edge set) must
-    agree too."""
+    (node, cluster_id) fixpoint as the distributed phases — on a permuted
+    path (labels flow against id order), with endpoint-only nodes, NULL
+    endpoints, string ids (np.unique code-point order == Spark UTF8_BINARY
+    min), an int src with a bigint dst, and singletons — both at the
+    up-front collect (the whole graph fits the bound) and at star
+    contraction's mid-loop handoff (the bound is hit only AFTER contraction
+    shrinks the edge set)."""
     import random
 
     from fund_data_pipeline_spark.operators import graph
@@ -516,85 +562,63 @@ def test_connected_components_driver_path_matches_distributed(spark):
         [(ids[i],) for i in range(0, 60, 2)], "node long"
     )
     edges = spark.createDataFrame(edges_rows, "src long, dst long")
-    via_driver = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(nodes, edges).collect()
-    }
-    via_dist = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(
-            nodes, edges, driver_collect_max_edges=0
-        ).collect()
-    }
-    assert via_driver == via_dist
-    assert ids[43] not in via_driver and via_driver[ids[44]] == ids[44]
-
-    # opportunistic star-loop collect needs a graph whose canonical edge
-    # set actually SHRINKS under contraction (a path keeps ~n-1 edges every
-    # round, so the bound would never be re-hit): a 10-clique starts at 45
-    # canonical edges (over the bound of 20) and one large+small star round
-    # contracts it to the 9-edge star — exercising the mid-loop driver
-    # handoff. star_fallback_after=0 skips propagation (which would
-    # converge a diameter-1 clique in one round without ever contracting).
-    cnodes = spark.createDataFrame([(i,) for i in range(10)], "node long")
-    cedges = spark.createDataFrame(
-        [(i, j) for i in range(10) for j in range(i + 1, 10)], "src long, dst long"
-    )
-    via_star_collect = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(
-            cnodes, cedges, star_fallback_after=0, driver_collect_max_edges=20
-        ).collect()
-    }
-    via_clique_dist = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(
-            cnodes, cedges, driver_collect_max_edges=0
-        ).collect()
-    }
-    assert via_star_collect == via_clique_dist == {i: 0 for i in range(10)}
+    via_driver = _cc(nodes, edges, monkeypatch, cap=0)
+    assert _cc(nodes, edges, monkeypatch, bound=0) == via_driver
+    labels = dict(via_driver)
+    assert ids[43] not in labels and labels[ids[44]] == ids[44]
 
     # string ids: lexicographic min must match Spark's UTF8_BINARY min
     snodes = spark.createDataFrame([("b",), ("x",), ("Z",)], "node string")
     sedges = spark.createDataFrame([("x", "b"), ("x", "Z")], "src string, dst string")
-    via_driver_s = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(snodes, sedges).collect()
-    }
-    via_dist_s = {
-        r.node: r.cluster_id
-        for r in graph.connected_components(
-            snodes, sedges, driver_collect_max_edges=0
-        ).collect()
-    }
-    assert via_driver_s == via_dist_s == {"b": "Z", "x": "Z", "Z": "Z"}
+    via_driver_s = _cc(snodes, sedges, monkeypatch, cap=0)
+    assert _cc(snodes, sedges, monkeypatch, bound=0) == via_driver_s
+    assert via_driver_s == [("Z", "Z"), ("b", "Z"), ("x", "Z")]
 
-    # int src, bigint dst: the driver mapping takes the wider type, at the
-    # up-front collect and at the star-loop handoff (a 6-clique: 15
-    # canonical edges, over the bound of 6, contract to its 5-edge star)
+    # int src, bigint dst: the driver mapping takes the wider type
     big = 3_000_000_000
-    clique = [0, 1, 2, 3, 4, big]
-    cases = [
-        ([1, 2, big], [(1, 2), (2, big)], {}),
-        (
-            clique,
-            [(i, j) for i in clique for j in clique if i < j],
-            {"star_fallback_after": 0, "driver_collect_max_edges": 6},
-        ),
+    mnodes = spark.createDataFrame([(i,) for i in (1, 2, big)], "node long")
+    medges = spark.createDataFrame([(1, 2), (2, big)], "src int, dst long")
+    via_driver_m = _cc(mnodes, medges, monkeypatch, cap=0)
+    assert _cc(mnodes, medges, monkeypatch, bound=0) == via_driver_m
+    assert via_driver_m == [(1, 1), (2, 1), (big, 1)]
+
+    # the mid-loop handoff: a broom outlasts propagation's budget, and one
+    # contraction round brings its 52 canonical edges under a bound of 20.
+    # The cap of budget + 1 leaves contraction a single round, so these
+    # calls succeed only through the handoff (contraction alone needs a
+    # second round just to see its fixpoint)
+    handoff = {"bound": 20, "cap": graph._CC_PROPAGATION_ROUNDS + 1}
+    perm = list(range(1, 17))
+    rng.shuffle(perm)
+    perm = [0] + perm
+    bnodes = spark.createDataFrame([(i,) for i in perm[::2]], "node long")
+    bedges = spark.createDataFrame(
+        _broom(perm) + [(perm[3], None), (None, 99)], "src long, dst long"
+    )
+    via_driver_b = _cc(bnodes, bedges, monkeypatch, cap=0)
+    assert via_driver_b == [(i, 0) for i in range(17)]
+    assert _cc(bnodes, bedges, monkeypatch, **handoff) == via_driver_b
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        _cc(bnodes, bedges, monkeypatch, bound=0, cap=handoff["cap"])
+
+    names = [f"n{i:02d}" for i in perm]
+    snodes = spark.createDataFrame([(n,) for n in names], "node string")
+    sedges = spark.createDataFrame(_broom(names), "src string, dst string")
+    via_driver_s = _cc(snodes, sedges, monkeypatch, cap=0)
+    assert via_driver_s == [(n, "n00") for n in sorted(names)]
+    assert _cc(snodes, sedges, monkeypatch, **handoff) == via_driver_s
+
+    # int src, bigint dst at the handoff: every edge's smaller id fits an
+    # int, the tail alternates through ids above the int range
+    wide = list(range(10)) + [big + 1, 10, big + 2, 11, big + 3, 12, big + 4]
+    wedges = [
+        (min(a, b), max(a, b)) for a, b in _broom([big] + wide[1:10] + wide[10:])
     ]
-    for ids, pairs, kw in cases:
-        mnodes = spark.createDataFrame([(i,) for i in ids], "node long")
-        medges = spark.createDataFrame(pairs, "src int, dst long")
-        via_driver_m = sorted(
-            tuple(r) for r in graph.connected_components(mnodes, medges, **kw).collect()
-        )
-        via_dist_m = sorted(
-            tuple(r)
-            for r in graph.connected_components(
-                mnodes, medges, driver_collect_max_edges=0
-            ).collect()
-        )
-        assert via_driver_m == via_dist_m == [(i, ids[0]) for i in ids]
+    wnodes = spark.createDataFrame([(i,) for i in {i for e in wedges for i in e}], "node long")
+    wedges = spark.createDataFrame(wedges, "src int, dst long")
+    via_driver_w = _cc(wnodes, wedges, monkeypatch, cap=0)
+    assert {c for _, c in via_driver_w} == {1}
+    assert _cc(wnodes, wedges, monkeypatch, **handoff) == via_driver_w
 
 
 def test_chunk_by_tokens_overlap_and_boundaries(spark):
@@ -1382,11 +1406,9 @@ def test_record_linkage_blocks_on_observed_value_and_recovers(spark, sf_dir):
 def test_flatten_hierarchy_edge_table_doubling_and_guards(spark):
     """VERDICT r6 item 4: the library flatten must walk a REAL edge table.
     Pointer doubling resolves a 300-deep chain well inside its
-    ceil(log2(max_depth))+1 round budget; cycles raise under strict (and
-    drop with a warning otherwise); a duplicate-parent child is refused;
-    a dangling parent resolves as a terminal instead of vanishing."""
-    import warnings
-
+    ceil(log2(max_depth))+1 round budget; cycles raise; a duplicate-parent
+    child is refused; a dangling parent resolves as a terminal instead of
+    vanishing."""
     from fund_data_pipeline_spark.operators.graph import flatten_hierarchy
 
     # forest: two trees + an isolated root
@@ -1411,13 +1433,10 @@ def test_flatten_hierarchy_edge_table_doubling_and_guards(spark):
     rows = {r.node: (r.root, r.depth) for r in deep.collect()}
     assert rows[300] == (0, 300) and rows[1] == (0, 1) and rows[0] == (0, 0)
 
-    # cycle: strict raises; non-strict warns and drops the cyclic nodes
+    # cycle: node 9 chases INTO it too, so nothing resolves and the call raises
     cyc = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (9, 1)], "child long, parent long")
     with pytest.raises(RuntimeError, match="cycle"):
         flatten_hierarchy(cyc).collect()
-    with pytest.warns(UserWarning, match="cycle"):
-        kept = flatten_hierarchy(cyc, strict=False).collect()
-    assert kept == []  # node 9 chases INTO the cycle, so nothing resolves
 
     # two parents for one child is refused up front
     dup = spark.createDataFrame([(1, 2), (1, 3)], "child long, parent long")
@@ -2559,14 +2578,14 @@ def test_simhash_df_cap_fallback_is_per_document(spark):
 
 
 # ---------------------------------------------------------------------------
-# minhash banding: hashlib golden replay (third derivation)
+# minhash banding: hashlib golden replay (second derivation)
 # ---------------------------------------------------------------------------
 
 
 def test_minhash_bands_hashlib_replay(spark):
-    """Pin minhash_bands against a pure-Python hashlib replay — a THIRD
+    """Pin minhash_bands against a pure-Python hashlib replay — an
     independent derivation of the signature scheme, alongside the DuckDB
-    oracle (minhash_bands_sql) and scripts/verify_sf1_pipeline.py. This
+    oracle (minhash_bands_sql). This
     is the regression tripwire for the r16 explode+codegen rewrite: the
     formulation changed (HOF fold -> explode + partial-min aggregate),
     the VALUES must not have. Covers: a doc under 3 tokens (no band
