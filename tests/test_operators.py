@@ -510,6 +510,49 @@ def test_connected_components_1000_node_path_star_contraction(spark, monkeypatch
     assert _cc(nodes, edges, monkeypatch, bound=0, cap=25) == [(i, 0) for i in range(1000)]
 
 
+def test_host_union_find_matches_python_model():
+    """The driver route's vectorized union-find gives every endpoint its
+    component's minimum id, like a plain Python union-find: on permuted
+    long paths (where hooking endpoints instead of roots needed ~diameter
+    passes), random multigraphs with self-loops, string ids and an empty
+    edge list."""
+    import random
+
+    import pandas as pd
+
+    from fund_data_pipeline_spark.operators.graph import _host_min_labels
+
+    def model(pairs):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {x: find(x) for x in parent}
+
+    rng = random.Random(3)
+    cases = []
+    for n in (2, 50, 5000):
+        ids = list(range(n))
+        rng.shuffle(ids)
+        cases.append([(ids[i], ids[i + 1]) for i in range(n - 1)])
+    for _ in range(5):
+        cases.append([(rng.randrange(200), rng.randrange(200)) for _ in range(rng.randrange(1, 300))])
+    cases.append([(f"s{rng.randrange(40)}", f"s{rng.randrange(40)}") for _ in range(60)])
+    cases.append([])
+    for pairs in cases:
+        pdf = pd.DataFrame(pairs, columns=["src", "dst"])
+        got = dict(zip(*(_host_min_labels(pdf)[c].tolist() for c in ("node", "label"))))
+        assert got == model(pairs)
+
+
 def test_connected_components_blob_graph_propagation_matches_driver(spark, monkeypatch):
     """Near-dup blobs (cliques of 2-8 members, ids scattered) converge
     under propagation within its budget — the run succeeds with the round
