@@ -2428,9 +2428,10 @@ def test_asof_headline_query_null_user_carries_nothing(spark, tmp_path):
 
 
 def test_simhash_pairs_word0_matches_catalog_query(spark, sf_dir):
-    """simhash_pairs(n_words=1) is the catalog query's exact pair set: word
-    0 is bit-identical to simhash_near_dup's 60-bit signature and the
-    15-bit banding is the same pigeonhole structure."""
+    """simhash_pairs(n_words=1) is the catalog query's exact pair set:
+    simhash_near_dup runs it and only renames the pair columns, so the
+    DuckDB oracle that pins the query's 60-bit signature and 15-bit
+    banding pins word 0 of the wide form too."""
     from fund_data_pipeline_spark.operators.similarity import simhash_pairs
     from fund_data_pipeline_spark.queries.text import simhash_near_dup
 
